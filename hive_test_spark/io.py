@@ -138,12 +138,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def scratch_path(*parts: str) -> str:
-    p = os.path.join(SCRATCH_DIR, *parts)
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    return p
-
-
 def scratch_dir(*parts: str) -> str:
     """Path for a scratch output directory (parent pre-created)."""
     p = os.path.join(SCRATCH_DIR, *parts)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import attach_side, load_table
+from hive_test_spark.llm.pipeline import bucket_pairs
 from hive_test_spark.registry import register
 from hive_test_spark.session import fanout, tune
 
@@ -215,31 +216,19 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nb", F.size("bkt"))
     )
 
-    # Candidate pairs, SINGLE-SIDED (r12 optimization round, guide
-    # §2.4/§2.5): each (table, hashval) bucket collects its sorted
-    # (doc_id, nb) members once and emits ordered pairs by nested
-    # explode. The old (t, hval) equi-self-join evaluated the whole
-    # scan→HashingTF→MinHashLSH subtree twice (the exchange-reuse miss
-    # across the join boundary) and its tiny post-agg probe side was
-    # AQE-coalesced to ~1 partition, pinning the 124M-collision-row
-    # explosion and the pre-distinct partial aggregate to one core.
-    # Carrying nb (the doc's distinct-HashingTF-bucket count — the same
-    # quantity the rescore's na/nb uses) lets the value-identical
+    # Candidate pairs from the (table, hashval) buckets (see
+    # pipeline.bucket_pairs for the single-sided shape). Carrying nb
+    # (the doc's distinct-HashingTF-bucket count — the same quantity the
+    # rescore's na/nb uses) lets the value-identical
     # size-ratio prefilter run BEFORE the distinct: fjac <=
     # min(na,nb)/max(na,nb) exactly (correctly-rounded quotients of
     # exact integers, rounding monotone), so a dropped pair can never
     # pass the fjac > 0.5 rescore below.
-    buckets = (
-        sigs.join(bkts.select("doc_id", "nb"), "doc_id")
-        .groupBy("t", "hval")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "nb"))).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .repartition(fanout(spark))
-    )
     cand = (
-        buckets.select(F.posexplode("ids").alias("i", "a"), "ids")
-        .select(
-            "a", F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("b")
+        bucket_pairs(
+            sigs.join(bkts.select("doc_id", "nb"), "doc_id"),
+            ["t", "hval"],
+            F.struct("doc_id", "nb"),
         )
         .filter(
             F.least(F.col("a.nb"), F.col("b.nb")).cast("double")
@@ -579,25 +568,11 @@ def llm_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"shiftright(simhash, band * {_SH_BAND_BITS}) & {_SH_BAND_MASK}"
         ).alias("bval"),
     )
-    # SINGLE-SIDED candidate generation (r13 — the _candidate_pairs
-    # shape): the old (band, bval) equi-self-join evaluated the whole
-    # fingerprint chain twice (exchange reuse dies at the broadcast
-    # boundary) and ran the pair explosion on the AQE-coalesced tiny
-    # post-agg layout. Buckets collect their sorted (doc_id, simhash)
-    # members once, re-spread, and emit each ordered pair by nested
-    # explode — identical DISTINCT pair set (array_sort orders the
-    # structs by doc_id, so a < b holds per emission).
-    buckets = (
-        bands.groupBy("band", "bval")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .repartition(fanout(spark))
-    )
+    # Candidate pairs from the (band, bval) buckets (see
+    # pipeline.bucket_pairs): the (doc_id, simhash) structs sort by
+    # doc_id, so a < b holds per emission.
     cand = (
-        buckets.select(F.posexplode("ids").alias("i", "a"), "ids")
-        .select(
-            "a", F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("b")
-        )
+        bucket_pairs(bands, ["band", "bval"], F.struct("doc_id", "simhash"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

@@ -17,7 +17,7 @@ driver-side collect.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -182,19 +182,11 @@ def _minhash_sig_from(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     return toks, sig
 
 
-def _band_keys(sig: DataFrame) -> DataFrame:
-    """Default-config band keys over a signature frame."""
-    return sig.groupBy(
-        "doc_id", (F.col("k") / _BAND_ROWS).cast("int").alias("band")
-    ).agg(F.array_join(F.array_sort(F.collect_list("mh")), "|").alias("bkey"))
-
-
 def _bands_from_wide(mins: DataFrame) -> DataFrame:
     """Banded LSH index built straight from the wide signature frame:
     (doc_id, n, band, bkey), one row per (doc, band), no aggregation —
     each band key is array_sort of its _BAND_ROWS min-hash COLUMNS
-    joined '|', bitwise what _band_keys' collect_list+array_sort emits
-    (collection order is irrelevant under the sort)."""
+    joined '|' (collection order is irrelevant under the sort)."""
     n_bands = _MINHASH_K // _BAND_ROWS
     return mins.select(
         "doc_id",
@@ -223,32 +215,36 @@ def _bands_from_wide(mins: DataFrame) -> DataFrame:
     ).select("doc_id", "n", F.col("s.band").alias("band"), F.col("s.bkey").alias("bkey"))
 
 
-def _candidate_pairs(bands: DataFrame) -> DataFrame:
-    """Ordered candidate pairs from a banded index — bucket-bounded,
-    never all-pairs.
+def bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member: str | Column,
+    pair: tuple[str, str] = ("a", "b"),
+) -> DataFrame:
+    """Ordered pairs ``(a, b)``, a < b, of ``member`` values that share a
+    bucket (``rows`` grouped by ``keys``) — the shared single-sided LSH
+    candidate step, bucket-bounded, never all-pairs. ``pair`` names the
+    two output columns.
 
-    Optimization-round shape (guide §2.4/§2.5, r12): SINGLE-SIDED. The
-    old (band, bkey) equi-self-join evaluated the whole signature
-    subtree twice (the BroadcastExchange boundary defeats exchange
-    reuse), and its tiny post-agg probe side was AQE-coalesced to ~1
-    partition, so the quadratic pair explosion and the pre-distinct
-    partial aggregate ran on one core (the 1-split disease, SCALE.md
-    §9y). Buckets now collect their sorted doc_ids once, are re-spread
-    across cores, and emit ordered pairs by nested explode — one
-    signature pass, parallel explosion, identical pair set."""
+    Each bucket collects its sorted members once, buckets of one are
+    dropped, and the rest are re-spread across cores before every
+    ordered pair is emitted by nested explode. A (bucket key)
+    equi-self-join would evaluate the whole signature subtree twice (the
+    BroadcastExchange boundary defeats exchange reuse), and the tiny
+    post-agg table would be AQE-coalesced to ~1 partition, running the
+    quadratic explosion on one core (the 1-split disease, SCALE.md §9y).
+    A struct ``member`` sorts field by field, so struct pairs are ordered
+    by their first field. A pair repeats once per shared bucket; callers
+    prefilter, project and ``distinct`` themselves."""
     buckets = (
-        bands.groupBy("band", "bkey")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(member)).alias("ids"))
         .filter(F.size("ids") > 1)
-        .repartition(fanout(bands.sparkSession))
+        .repartition(fanout(rows.sparkSession))
     )
-    return (
-        buckets.select(F.posexplode("ids").alias("i", "doc_a"), "ids")
-        .select(
-            "doc_a",
-            F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("doc_b"),
-        )
-        .distinct()
+    a, b = pair
+    return buckets.select(F.posexplode("ids").alias("i", a), "ids").select(
+        a, F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias(b)
     )
 
 
@@ -290,20 +286,9 @@ def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as |A|+|B|-|A∩B| (exact integers, tokens are distinct) instead of
     re-hashing array_distinct(concat(...)) per pair."""
     toks, mins = _minhash_wide(load_table(spark, sf_dir, "documents"))
-    bands = _bands_from_wide(mins)
-    buckets = (
-        bands.groupBy("band", "bkey")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ids"))
-        .filter(F.size("ids") > 1)
-        # Tiny post-agg table: without a re-spread, AQE coalesces it to
-        # ~1 partition and the quadratic explode below runs on one core
-        # (the 1-split disease, SCALE.md §9y).
-        .repartition(fanout(spark))
-    )
     pairs = (
-        buckets.select(F.posexplode("ids").alias("i", "a"), "ids")
-        .select(
-            "a", F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("b")
+        bucket_pairs(
+            _bands_from_wide(mins), ["band", "bkey"], F.struct("doc_id", "n")
         )
         .filter(
             F.least(F.col("a.n"), F.col("b.n")).cast("double")
@@ -1348,13 +1333,6 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |A∪B| = |A|+|B|−|A∩B| (exact: token arrays are distinct) instead of
     # array_distinct(concat(...)) per pair.
     toks, mins = _minhash_wide(d)
-    buckets = (
-        _bands_from_wide(mins)
-        .groupBy("band", "bkey")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .repartition(fanout(spark))
-    )
     # Value-identical prefilter at the sweep's FLOOR tau with a rounding
     # margin: a dropped pair has fl(jac) <= fl(min/max) < 0.6999 (the r8
     # monotone-rounding proof), so even its ROUND(jac, 6) stays < 0.7 =
@@ -1362,9 +1340,8 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never-hit pairs are dropped, every aggregate is unchanged.
     _pre = min(_SWEEP_TAUS) - 1e-4
     pairs = (
-        buckets.select(F.posexplode("ids").alias("i", "a"), "ids")
-        .select(
-            "a", F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("b")
+        bucket_pairs(
+            _bands_from_wide(mins), ["band", "bkey"], F.struct("doc_id", "n")
         )
         .filter(
             F.least(F.col("a.n"), F.col("b.n")).cast("double")
@@ -1486,7 +1463,9 @@ def llm_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks, mins = _minhash_wide(d)
     toks = toks.localCheckpoint(eager=True)
     mins = mins.localCheckpoint(eager=True)
-    cand = _candidate_pairs(_bands_from_wide(mins))
+    cand = bucket_pairs(
+        _bands_from_wide(mins), ["band", "bkey"], "doc_id", ("doc_a", "doc_b")
+    ).distinct()
     # r12 (guide §2.3): the match fraction compares the K signature
     # COLUMNS of the wide frame row-to-row — one row per pair — instead
     # of exploding each pair into K (doc, k, mh) rows, joining twice and

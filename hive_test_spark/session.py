@@ -90,14 +90,8 @@ def fanout(spark: SparkSession) -> int:
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session. Idempotent, cheap."""
     for k, v in _RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not settable on this build — non-fatal
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions(spark)))
-    except Exception:
-        pass
+        spark.conf.set(k, v)
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions(spark)))
     _ship_package(spark)
     return spark
 

@@ -1,8 +1,8 @@
-"""Partition-order determinism probe for not-yet-driver-tested keys.
+"""Partition-order determinism probe for registered keys.
 
-The driver re-executes each staged key in ITS OWN session; a key whose
-output depends on shuffle-partition order (float summation order,
-un-sorted collect_list, rank ties broken by arrival) could pass one
+The driver re-executes each key in ITS OWN session; a key whose output
+depends on shuffle-partition order (float summation order, un-sorted
+collect_list, rank ties broken by arrival) could pass one
 pre-verification and still land red in the driver round. This tool runs
 each key TWICE in one process — once under the repo-standard
 spark.sql.shuffle.partitions=32 and once under a deliberately different
@@ -15,8 +15,9 @@ promises for every registered key.
 Usage:
     python tools/determinism_probe.py [--sf /root/testdata/sf0.01] [key ...]
 
-Default key set: every registered key with no CORRECTNESS_r*.json row
-(the staged round-9/10 windows plus anything never exposed).
+Default key set: every registered key. Exits non-zero when any key is
+layout-dependent or errors, or when the key set is empty (a probe that
+checks nothing must not read as stable).
 """
 
 from __future__ import annotations
@@ -39,11 +40,13 @@ def main() -> int:
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args()
 
-    from hive_test_spark import registry as reg
     from hive_test_spark.api import queries
 
     qs = queries()
-    keys = args.keys or [k for k in qs if k not in reg.DRIVER_SEEN]
+    keys = args.keys or list(qs)
+    if not keys:
+        print("no keys to probe")
+        return 1
     spark = get_spark("determinism-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
