@@ -4,10 +4,22 @@ All ten tables (TESTDATA.md) load as parquet DataFrames. Loads are lazy
 plan nodes; Catalyst pushes filters/column pruning into the vectorized
 parquet reader, so callers should never pre-materialize.
 
+Schema cache (metastore semantics): ``spark.read.parquet(path)`` runs one
+Spark job to infer the schema from the file footers, on every call. So
+``read_parquet`` infers a path's raw schema the first time a session
+reads it and afterwards passes it through ``spark.read.schema(...)``,
+which runs no job. The cache holds metadata only — every query still
+scans the data. It lives on the SparkSession, because inference depends
+on session confs, and its key is the path plus the current
+``spark.sql.legacy.parquet.nanosAsLong`` value (the events ``ts`` vintage
+switch). Each entry carries a stamp of (inode, mtime_ns, size) for every
+file of the table; a changed stamp re-infers. The schema stays the RAW
+one, so ``_normalize_ts`` still sees which ``ts`` vintage is on disk.
+
 Scale notes: at 100 TB each "table" is a directory of many files (or an
-external catalog table); ``load_table`` only depends on
-``spark.read.parquet(path)`` which handles both. Partition-pruned reads
-come for free when the warehouse layout is ``partitionBy`` -ed.
+external catalog table); ``read_parquet`` handles both, and the stamp
+covers every file under a directory table. Partition-pruned reads come
+for free when the warehouse layout is ``partitionBy`` -ed.
 """
 
 from __future__ import annotations
@@ -15,6 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = [
     "region",
@@ -31,6 +44,9 @@ TABLES = [
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+# Session conf that reads TIMESTAMP(NANOS) parquet columns as raw longs.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 # Scratch area for sink/round-trip operators (inside the repo; gitignored).
 SCRATCH_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
@@ -42,22 +58,47 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from the session's
+    cache (module docstring), so no inference job runs once it is warm."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Raw parquet schema of ``path`` as this session infers it, inferred
+    once per (path, nanosAsLong) and again only when a file changes."""
+    cache = getattr(spark, "_hts_parquet_schemas", None)
+    if cache is None:
+        cache = spark._hts_parquet_schemas = {}
+    key = (path, spark.conf.get(NANOS_AS_LONG))
+    # Stamp BEFORE inferring: a file rewritten mid-inference re-infers next time.
+    stamp = tuple((f, st.st_ino, st.st_mtime_ns, st.st_size) for f, st in _table_files(path))
+    hit = cache.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    cache[key] = (stamp, schema)
+    return schema
+
+
+def _table_files(path: str) -> list[tuple[str, os.stat_result]]:
+    """(file, stat) for each file of a table: the file itself, or every
+    file under a directory table, in path order."""
+    if not os.path.isdir(path):
+        return [(path, os.stat(path))]
+    files = sorted(os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs)
+    return [(f, os.stat(f)) for f in files]
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk bytes of a fixture table (single file at fixture scale, a
     directory of files at warehouse scale). Unknown/missing reads as
     'huge' so size-gated broadcasts fail SAFE (never broadcast)."""
-    p = table_path(sf_dir, name)
     try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(p)
-                for f in fs
-            )
-        return os.path.getsize(p)
+        return sum(st.st_size for _, st in _table_files(table_path(sf_dir, name)))
     except OSError:
         return 1 << 62
 
@@ -99,8 +140,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     and plain timestamp[us], which Spark 4 infers as TIMESTAMP_NTZ. Both
     normalize to session-tz TimestampType (session tz is pinned UTC, so
     the NTZ cast is wall-clock-identical)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    spark.conf.set(NANOS_AS_LONG, "true")
+    df = read_parquet(spark, table_path(sf_dir, "events"))
     return df.withColumn("ts", _normalize_ts(df.schema["ts"].dataType))
 
 
@@ -116,7 +157,6 @@ def _normalize_ts(dtype):
     (1990..2100, i.e. ~6.3e17..4.1e18) raise instead of silently
     mis-scaling a future micros/millis vintage."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     if isinstance(dtype, T.LongType):
         return F.when(

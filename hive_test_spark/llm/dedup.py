@@ -117,9 +117,12 @@ def llm_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the per-pair array work ran for BOTH orderings of every pair.
     # Explicit conjunct order (id test → 2-int ratio → arrays) halves
     # the intersect evaluations; measured 9.8 s → 6.0 s at sf0.1, same
-    # 8 926 373 rows. The jac conjunct still compares the UNROUNDED
-    # value, exactly as the oracle's WHERE does — filtering the rounded
-    # column would admit pairs in [tau - 5e-7, tau) that DuckDB drops.
+    # 8 926 373 rows. The order is empirical, measured on Spark 4.1: the
+    # optimizer does not guarantee to keep conjuncts as written, so
+    # re-measure after a Spark upgrade. The jac conjunct still compares
+    # the UNROUNDED value, exactly as the oracle's WHERE does — filtering
+    # the rounded column would admit pairs in [tau - 5e-7, tau) that
+    # DuckDB drops.
     return (
         a.join(
             b,

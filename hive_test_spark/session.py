@@ -15,6 +15,7 @@ shuffle-partition coalescing and skew-join splitting, and
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -127,8 +128,13 @@ def _ship_package(spark: SparkSession) -> None:
                     z.write(full, os.path.relpath(full, root))
     try:
         sc.addPyFile(zpath)
-    except Exception:
-        pass  # e.g. a session that forbids addPyFile — workers then need PYTHONPATH
+    except Exception as e:  # e.g. a session that forbids addPyFile
+        warnings.warn(
+            f"could not ship hive_test_spark to Python workers ({type(e).__name__}: {e}); "
+            "UDF-tier operators then need the package on the workers' PYTHONPATH",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     sc._hts_pkg_shipped = True
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_test_spark.io import load_table, scratch_dir, table_path
+from hive_test_spark.io import load_table, scratch_dir
 from hive_test_spark.registry import register
 from hive_test_spark.session import tune
 
@@ -52,7 +52,7 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized columnar parquet scan: reads exactly 2 columns
     (ReadSchema pruning) regardless of table width."""
     tune(spark)
-    li = spark.read.parquet(table_path(sf_dir, "lineitem"))
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("l_extendedprice"), 6).alias("total"),

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_test_spark.io import scratch_dir, table_path
+from hive_test_spark.io import NANOS_AS_LONG, parquet_schema, scratch_dir, table_path
 from hive_test_spark.llm.pipeline import _INCR_MINHASH_ORACLE
 from hive_test_spark.registry import register
 from hive_test_spark.session import tune
@@ -56,11 +56,12 @@ def _events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str
 
 
 def _events_raw_schema(spark: SparkSession, src: str) -> T.StructType:
-    """readStream needs an explicit schema; take it from a static read of
-    the same files so it matches the fixture vintage (ts as long nanos vs
-    µs TIMESTAMP_NTZ) instead of hard-coding one layout."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(src).schema
+    """readStream needs an explicit schema; take the raw one of ``src``
+    (the events fixture, whose copies the stream sources hold) so it
+    matches the fixture vintage (ts as long nanos vs µs TIMESTAMP_NTZ)
+    instead of hard-coding one layout. Inferred once per session."""
+    spark.conf.set(NANOS_AS_LONG, "true")
+    return parquet_schema(spark, src)
 
 
 def _normalize_stream_ts(raw: DataFrame) -> DataFrame:
@@ -71,7 +72,8 @@ def _normalize_stream_ts(raw: DataFrame) -> DataFrame:
 
 def _read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
     src = _events_stream_dir(spark, sf_dir, copies)
-    raw = spark.readStream.schema(_events_raw_schema(spark, src)).parquet(src)
+    schema = _events_raw_schema(spark, table_path(sf_dir, "events"))
+    raw = spark.readStream.schema(schema).parquet(src)
     return _normalize_stream_ts(raw)
 
 
@@ -444,8 +446,9 @@ def _read_events_stream_throttled(
     """Like _read_events_stream but one file per micro-batch, so
     AvailableNow runs `copies` incremental batches instead of one."""
     src = _events_stream_dir(spark, sf_dir, copies)
+    schema = _events_raw_schema(spark, table_path(sf_dir, "events"))
     raw = (
-        spark.readStream.schema(_events_raw_schema(spark, src))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -675,7 +678,8 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a restart neither re-counts A nor drops it."""
     tune(spark)
     # Deterministic two-half split of events, cached like the stream srcs.
-    st = os.stat(table_path(sf_dir, "events"))
+    events = table_path(sf_dir, "events")
+    st = os.stat(events)
     tag = os.path.basename(os.path.normpath(sf_dir))
     base = scratch_dir("ckpt_rec", "_anchor")
     parent = os.path.dirname(base)
@@ -685,10 +689,12 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = os.path.join(parent, sib)
         if sib.startswith(prefix) and p != halves and os.path.isdir(p):
             shutil.rmtree(p, ignore_errors=True)
+    # The halves hold the fixture's rows as read with nanosAsLong, so
+    # their raw schema is the fixture's.
+    schema = _events_raw_schema(spark, events)
     marker = os.path.join(halves, ".ready")
     if not os.path.exists(marker):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        full = spark.read.parquet(table_path(sf_dir, "events"))
+        full = spark.read.schema(schema).parquet(events)
         for side, pred in (("a", "event_id % 2 = 0"), ("b", "event_id % 2 = 1")):
             full.filter(pred).coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(halves, f"half_{side}")
@@ -708,7 +714,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
     def _run_once(qname: str) -> None:
-        raw = spark.readStream.schema(_events_raw_schema(spark, src)).parquet(src)
+        raw = spark.readStream.schema(schema).parquet(src)
         agg = (
             _normalize_stream_ts(raw)
             .groupBy("event_type")
