@@ -664,7 +664,7 @@ def interop_arrow_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority", "o_totalprice"
     )
     return (
-        o.join(F.broadcast(dim), "o_orderpriority")
+        o.join(dim, "o_orderpriority")
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),

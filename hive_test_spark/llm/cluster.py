@@ -692,7 +692,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb")
     ).localCheckpoint(eager=True)
     d = (
-        e.crossJoin(F.broadcast(sel))
+        e.crossJoin(sel)
         .select(
             "vec_id",
             "emb",
@@ -721,7 +721,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb")
         )
         d = (
-            d.crossJoin(F.broadcast(new_c))
+            d.crossJoin(new_c)
             .select(
                 "vec_id",
                 "emb",
@@ -828,7 +828,7 @@ def llm_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nrm = None
     for _ in range(_PCA_ITERS):
-        av = e.crossJoin(F.broadcast(v)).select(
+        av = e.crossJoin(v).select(
             "emb", F.expr(_PCA_DOT.format(a="emb", b="v")).alias("av")
         )
         t = (
@@ -838,7 +838,7 @@ def llm_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         nrm = t.agg(F.sqrt(F.sum(F.col("t") * F.col("t"))).alias("nrm"))
         v = (
-            t.crossJoin(F.broadcast(nrm))
+            t.crossJoin(nrm)
             .select("pos", F.round(F.col("t") / F.col("nrm"), 6).alias("c"))
             .agg(
                 F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc")
@@ -852,8 +852,8 @@ def llm_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.range(1, _PCA_DIM + 1)
         .select(F.col("id").cast("int").alias("pos"))
         .crossJoin(F.broadcast(v))
-        .crossJoin(F.broadcast(nrm))
-        .crossJoin(F.broadcast(fro))
+        .crossJoin(nrm)
+        .crossJoin(fro)
     )
     return final.select(
         "pos",
@@ -986,7 +986,7 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str):
     )
     w_cell = Window.partitionBy("probe_id").orderBy(F.col("cs").desc(), "label")
     cells = (
-        probes.crossJoin(F.broadcast(cents))
+        probes.crossJoin(cents)
         .select("probe_id", "label", cos.alias("cs"))
         .select("*", F.row_number().over(w_cell).alias("rn"))
         .filter(F.col("rn") <= IVFPQ_NPROBE)
@@ -1236,7 +1236,7 @@ def llm_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("o")
     )
     return (
-        per_c.crossJoin(F.broadcast(overall))
+        per_c.crossJoin(overall)
         .select(
             "cluster",
             "n_members",
@@ -1382,7 +1382,7 @@ def llm_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         worst.join(F.broadcast(scatter), "cluster")
-        .crossJoin(F.broadcast(db))
+        .crossJoin(db)
         .select(
             "cluster",
             "n_members",
@@ -1487,8 +1487,8 @@ def llm_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     s = (
-        sum_cells.crossJoin(F.broadcast(sum_rows))
-        .crossJoin(F.broadcast(sum_cols))
+        sum_cells.crossJoin(sum_rows)
+        .crossJoin(sum_cols)
     )
     npairs = F.col("n") * (F.col("n") - 1) / 2.0
     expected = (F.col("sum_rows") * 1.0 * F.col("sum_cols")) / npairs

@@ -215,7 +215,7 @@ def llm_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = tok.agg(F.count(F.lit(1)).alias("t"))
     return (
         per_doc.join(corpus, "tok")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_tokens"),
@@ -356,14 +356,12 @@ def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rnk"),
         F.sum("c").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
     )
-    tiers = F.broadcast(
-        spark.range(1).select(
-            F.explode(F.array(*[F.lit(k) for k in _VOCAB_TIERS])).alias("k_tier")
-        )
+    tiers = spark.range(1).select(
+        F.explode(F.array(*[F.lit(k) for k in _VOCAB_TIERS])).alias("k_tier")
     )
     return (
         ranked.crossJoin(tiers)
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .filter(F.col("rnk") <= F.col("k_tier"))
         .groupBy("k_tier")
         .agg(
@@ -491,7 +489,7 @@ def llm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tok").alias("total_tokens"),
     )
     m = per.agg(F.avg("total_tokens").alias("mean_tok"))
-    return per.crossJoin(F.broadcast(m)).select(
+    return per.crossJoin(m).select(
         "shard",
         "n_docs",
         "total_tokens",
@@ -742,9 +740,9 @@ def llm_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cr") + 1.0) / (F.col("r_tot") + _DSIR_BUCKETS)
     )
     return (
-        doc_b.join(F.broadcast(raw), "bucket")
-        .join(F.broadcast(tgt), "bucket", "left")
-        .crossJoin(F.broadcast(totals))
+        doc_b.join(raw, "bucket")
+        .join(tgt, "bucket", "left")
+        .crossJoin(totals)
         .groupBy("doc_id")
         .agg(F.round(F.sum(F.col("n") * log_ratio) / F.sum("n"), 6).alias("dsir_weight"))
     )
@@ -829,7 +827,7 @@ def llm_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select("stage", F.coalesce(F.sum("n").over(w_off), F.lit(0)).alias("off"))
     )
-    return ranked.join(F.broadcast(offsets), "stage").select(
+    return ranked.join(offsets, "stage").select(
         "doc_id",
         "stage",
         "stage_rank",
@@ -879,9 +877,7 @@ def llm_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     epochs = docs.crossJoin(
-        F.broadcast(
-            spark.range(_N_EPOCHS).select(F.col("id").cast("int").alias("epoch"))
-        )
+        spark.range(_N_EPOCHS).select(F.col("id").cast("int").alias("epoch"))
     ).select(
         "doc_id",
         "epoch",
@@ -1636,7 +1632,7 @@ def llm_pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ctx = F.col("ctx_len").cast("double")
     unpacked = (
-        toks.crossJoin(F.broadcast(grid))
+        toks.crossJoin(grid)
         .groupBy("ctx_len")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1659,7 +1655,7 @@ def llm_pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     packed = (
-        shard_tot.crossJoin(F.broadcast(grid))
+        shard_tot.crossJoin(grid)
         .groupBy("ctx_len")
         .agg(
             F.round(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import attach_side, load_table
+from hive_test_spark.io import load_table, side
 from hive_test_spark.llm.pipeline import bucket_pairs
 from hive_test_spark.registry import register
 from hive_test_spark.session import fanout, tune
@@ -213,7 +213,7 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Size-gated (r13): the vocab map spans the corpus vocabulary —
         # broadcast at fixture scale, shuffle join at web-scale vocab
         # (the docstring's schedule).
-        .join(attach_side(vmap, sf_dir), "t")
+        .join(side(vmap, sf_dir, "documents"), "t")
         .groupBy("doc_id")
         .agg(F.collect_set("bucket").alias("bkt"))
         .withColumn("nb", F.size("bkt"))
@@ -373,11 +373,12 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
     tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("tok").alias("tok_b"))
     cand_jac = (
-        # Size-gated attach (r13): io.attach_side broadcasts ONLY while
+        # Size-gated attach (r13): io.side broadcasts ONLY while
         # the corpus is dimension-sized; the rescore is part of the
         # 100 TB leg, where these flip to doc_id-keyed shuffled hash
         # joins (the scale rule this file documents).
-        cand.join(attach_side(ta, sf_dir), "doc_a").join(attach_side(tb, sf_dir), "doc_b")
+        cand.join(side(ta, sf_dir, "documents"), "doc_a")
+        .join(side(tb, sf_dir, "documents"), "doc_b")
         .select(
             (
                 F.size(F.array_intersect("tok_a", "tok_b")).cast("double")
@@ -894,8 +895,8 @@ def llm_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_a, n_b = F.size("sh_a"), F.size("sh_b")
     return (
         # Size-gated attach (r13): shingle sets span the corpus too.
-        cand.join(attach_side(sa, sf_dir), "doc_a")
-        .join(attach_side(sb, sf_dir), "doc_b")
+        cand.join(side(sa, sf_dir, "documents"), "doc_a")
+        .join(side(sb, sf_dir, "documents"), "doc_b")
         .select(
             "doc_a",
             "doc_b",

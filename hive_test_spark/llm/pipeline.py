@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hive_test_spark.io import attach_side, load_table
+from hive_test_spark.io import load_table, side
 from hive_test_spark.registry import register
 from hive_test_spark.session import fanout, tune
 
@@ -312,8 +312,8 @@ def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join at scale — an unconditional broadcast HINT would override
     # the size threshold and pin the whole corpus to the driver.
     return (
-        cand.join(attach_side(ta, sf_dir), F.col("doc_a") == F.col("_ida"))
-        .join(attach_side(tb, sf_dir), F.col("doc_b") == F.col("_idb"))
+        cand.join(side(ta, sf_dir, "documents"), F.col("doc_a") == F.col("_ida"))
+        .join(side(tb, sf_dir, "documents"), F.col("doc_b") == F.col("_idb"))
         .filter(jac >= _MINHASH_VERIFY_TAU)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -504,7 +504,7 @@ def _probe_band_index(
         # scan's few partitions — the verify ran near-single-core
         # (measured 55 s vs 9 s at sf0.1).
         cand.join(te.hint("shuffle_hash"), F.col("ex_id") == F.col("te.doc_id"))
-        .join(F.broadcast(ti), F.col("in_id") == F.col("ti.doc_id"))
+        .join(ti, F.col("in_id") == F.col("ti.doc_id"))
         .filter(jac >= _MINHASH_VERIFY_TAU)
         .select("in_id", "ex_id", jac.alias("jac"))
     )
@@ -787,7 +787,7 @@ def llm_stopword_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split("text", " ")
     kept = F.filter(toks, lambda x: ~F.array_contains(F.col("stoplist"), x))
     return (
-        d.crossJoin(F.broadcast(stop))
+        d.crossJoin(stop)
         .select(
             "doc_id",
             F.size(toks).cast("long").alias("n_orig"),
@@ -1102,7 +1102,7 @@ def llm_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         + " AS t(bands, rows_per_band)"
     )
     banded = (
-        sig.crossJoin(F.broadcast(configs))
+        sig.crossJoin(configs)
         .groupBy(
             "bands",
             "rows_per_band",
@@ -1359,10 +1359,10 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("tok_a") + F.size("tok_b") - F.size(F.array_intersect("tok_a", "tok_b"))
     )
     scored = (
-        # Size-gated attach (r13): see io.attach_side — broadcast at
+        # Size-gated attach (r13): see io.side — broadcast at
         # fixture scale, doc_id-keyed shuffled hash join at 100 TB.
-        cand.join(attach_side(ta, sf_dir), "doc_a")
-        .join(attach_side(tb, sf_dir), "doc_b")
+        cand.join(side(ta, sf_dir, "documents"), "doc_a")
+        .join(side(tb, sf_dir, "documents"), "doc_b")
         .select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
         .localCheckpoint(eager=True)
     )
@@ -1375,13 +1375,13 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = F.when(F.col("jaccard") >= F.col("tau"), 1)
     hit_doc = F.when(F.col("jaccard") >= F.col("tau"), F.col("doc_b"))
     return (
-        scored.crossJoin(F.broadcast(taus))
+        scored.crossJoin(taus)
         .groupBy("tau")
         .agg(
             F.count(hit).alias("n_pairs"),
             F.countDistinct(hit_doc).alias("n_docs_dropped"),
         )
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .select(
             "tau",
             "n_pairs",
@@ -1487,8 +1487,8 @@ def llm_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = (
         # Size-gated attach (r13): the wide signature table spans the
         # corpus — broadcast only while it is provably dimension-sized.
-        cand.join(attach_side(ma, sf_dir), "doc_a")
-        .join(attach_side(mb, sf_dir), "doc_b")
+        cand.join(side(ma, sf_dir, "documents"), "doc_a")
+        .join(side(mb, sf_dir, "documents"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -1506,8 +1506,8 @@ def llm_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        est.join(attach_side(ta, sf_dir), "doc_a")
-        .join(attach_side(tb, sf_dir), "doc_b")
+        est.join(side(ta, sf_dir, "documents"), "doc_a")
+        .join(side(tb, sf_dir, "documents"), "doc_b")
         .select(
             "doc_a",
             "doc_b",

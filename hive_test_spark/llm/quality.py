@@ -262,7 +262,7 @@ def llm_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = tok.agg(F.count(F.lit(1)).alias("t"))
     xent = (
         per_doc.join(corpus, "tok")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .groupBy("doc_id", "lang")
         .agg(
             F.round(
@@ -615,7 +615,7 @@ def llm_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     totals = grams.groupBy("doc_id").agg(F.sum("c").alias("n_bigrams"))
     overlap = (
-        F.broadcast(pairs)
+        pairs
         .join(r, "ref_id")
         .join(
             cgr,
@@ -1325,7 +1325,7 @@ def llm_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     n_players = w.agg(F.count(F.lit(1)).alias("np"))
-    p = w.crossJoin(F.broadcast(n_players)).select(
+    p = w.crossJoin(n_players).select(
         "i", F.round(F.lit(1.0) / F.col("np"), 8).alias("p")
     )
     for _ in range(_BT_ITERS):
@@ -1472,7 +1472,7 @@ def llm_best_of_n_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT * FROM VALUES {_BON_VALUES} AS t(n, i, w)"
     )
     return (
-        ranked.join(F.broadcast(weights), F.col("i") == F.col("rk"))
+        ranked.join(weights, F.col("i") == F.col("rk"))
         .groupBy("problem_id", "n")
         .agg(F.round(F.sum(F.col("w") * F.col("score")), 6).alias("expected_best"))
         .orderBy("problem_id", "n")
@@ -1644,7 +1644,7 @@ def llm_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ece")
     )
     return (
-        per_bin.crossJoin(F.broadcast(ece))
+        per_bin.crossJoin(ece)
         .select(
             "bin",
             "n",

@@ -329,7 +329,7 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("p_norm"),
     )
     routed = (
-        probes.crossJoin(F.broadcast(centroids))
+        probes.crossJoin(centroids)
         .select(
             "probe_id", "p_emb", "p_norm", "label",
             # round-before-argmin (the cluster.py _assign guard): centroid
@@ -607,7 +607,7 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     routed = (
         e.select("vec_id", "embedding", "norm")
-        .crossJoin(F.broadcast(centroids.withColumnRenamed("label", "c_label")))
+        .crossJoin(centroids.withColumnRenamed("label", "c_label"))
         .select(
             "vec_id", "embedding", "norm", "c_label",
             # round-before-argmin: see llm_ann_ivf's routing guard.
@@ -1035,11 +1035,11 @@ def _bm25_lex_scores(spark: SparkSession, sf_dir: str, qtokens: int) -> DataFram
         (1.0 - _BM25_B) + _BM25_B * F.col("dl") / F.col("avg_dl")
     )
     return (
-        F.broadcast(queries)
+        queries
         .join(tf, "token")
         .join(docfreq, "token")
         .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .filter(F.col("doc_id") != F.col("query_id"))
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(idf * F.col("tf") * (_BM25_K1 + 1.0) / norm), 6).alias("score"))
@@ -1331,7 +1331,7 @@ def llm_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: D
         F.count(F.when(F.col("in_degree") == 0, 1)).alias("n_orphans"),
     )
     return (
-        alln.crossJoin(F.broadcast(stats))
+        alln.crossJoin(stats)
         .select(
             "vec_id",
             "in_degree",
@@ -1606,7 +1606,7 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_sim").desc(), "label"
     )
     routed = (
-        probes.crossJoin(F.broadcast(cents))
+        probes.crossJoin(cents)
         .select(
             "probe_id",
             "p_emb",
@@ -1677,7 +1677,7 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("hit").alias("n_found"),
                 F.round(F.count("hit") / F.count(F.lit(1)), 6).alias("recall_at_k"),
             )
-            .crossJoin(F.broadcast(n_cand))
+            .crossJoin(n_cand)
         )
         out = row if out is None else out.unionByName(row)
     return out.orderBy("nprobe")
@@ -1803,7 +1803,7 @@ def llm_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1))
         ).alias("mrr")
     )
-    return per_q.crossJoin(F.broadcast(tot)).select(
+    return per_q.crossJoin(tot).select(
         "query_id",
         "first_rel_rank",
         "rr",

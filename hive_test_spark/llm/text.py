@@ -92,7 +92,7 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corpus vocabulary (10^8+ at 100 TB — a guaranteed OOM if forced).
         # AQE picks broadcast at runtime when df is genuinely small.
         tf.join(df, "token")
-        .crossJoin(F.broadcast(n_df))
+        .crossJoin(n_df)
         .select(
             "doc_id",
             "token",
@@ -481,7 +481,7 @@ def llm_topic_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
         src.filter(F.col("c") >= 5)
         .join(src_tot, "source")
         .join(corp, "tok")
-        .crossJoin(F.broadcast(corp_tot))
+        .crossJoin(corp_tot)
         .select(
             "source",
             "tok",
@@ -772,8 +772,8 @@ def llm_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = st.groupBy("token").agg(F.sum("c").alias("ct"))
     grand = vocab.agg(F.sum("ct").alias("n"))
     grid = (
-        src_tot.crossJoin(F.broadcast(vocab))
-        .crossJoin(F.broadcast(grand))
+        src_tot.crossJoin(vocab)
+        .crossJoin(grand)
         .join(st, ["source", "token"], "left")
         .na.fill({"c": 0})
     )
@@ -1122,11 +1122,11 @@ def _bm25_score_frames(
         1.0 - b + b * F.col("dl") / F.col("avg_dl")
     )
     return (
-        F.broadcast(queries)
+        queries
         .join(tf, "token")
         .join(docfreq, "token")
         .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("query_id", "doc_id")
         .agg(
             F.round(
@@ -1286,8 +1286,8 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         big.join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(btot))
+        .crossJoin(tot)
+        .crossJoin(btot)
         .select(
             "w1",
             "w2",
@@ -1501,7 +1501,7 @@ def llm_prefix_cache_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
         + ", ".join(f"({x})" for x in _PREFIX_DEPTHS)
         + " AS t(depth)"
     )
-    pfx = toks.crossJoin(F.broadcast(depths)).select(
+    pfx = toks.crossJoin(depths).select(
         "depth",
         F.expr("array_join(slice(t, 1, depth), ' ')").alias("prefix"),
         F.least(F.size("t"), F.col("depth")).alias("pfx_len"),
@@ -1600,7 +1600,7 @@ def llm_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(feedback)
         .join(tf, "doc_id")
         .join(docfreq, "token")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .join(queries, ["query_id", "token"], "left_anti")
         .groupBy("query_id", "token")
         .agg(
@@ -1838,7 +1838,7 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         cur = (
-            cur.crossJoin(F.broadcast(best))
+            cur.crossJoin(best)
             .select(
                 F.replace(
                     F.col("s"),
@@ -1950,7 +1950,7 @@ def llm_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("k_fit"),
         F.round(F.regr_r2(F.log("v"), F.log("first_pos")), 4).alias("r2"),
     )
-    return fit.crossJoin(F.broadcast(total)).select(
+    return fit.crossJoin(total).select(
         "vocab_size", "total_tokens", "beta", "k_fit", "r2"
     )
 

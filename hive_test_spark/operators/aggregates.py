@@ -768,7 +768,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     counters = (
-        li.crossJoin(F.broadcast(rows_))
+        li.crossJoin(rows_)
         .groupBy("r", bucket(F.col("key"), F.col("r")).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)
@@ -782,7 +782,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r").alias("c_r"), F.col("bucket").alias("c_bucket"), "c"
     )
     est = (
-        probes.crossJoin(F.broadcast(rows_))
+        probes.crossJoin(rows_)
         .join(
             ctr,
             (F.col("c_r") == F.col("r"))

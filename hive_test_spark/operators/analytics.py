@@ -208,7 +208,7 @@ def evt_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence("d0", "d1", F.expr("INTERVAL 1 DAY"))).alias("event_day")
     )
     types = ev.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(spine_days))
+    spine = types.crossJoin(spine_days)
     daily = (
         ev.filter(F.col("value") > 200)
         .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("event_day"))
@@ -404,7 +404,7 @@ def evt_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     anchor = o.agg(F.max("o_orderdate").alias("mx"))
     base = (
-        o.crossJoin(F.broadcast(anchor))
+        o.crossJoin(anchor)
         .groupBy("o_custkey")
         .agg(
             F.datediff(F.first("mx"), F.max("o_orderdate")).alias("recency_days"),
@@ -567,7 +567,7 @@ def evt_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     types = ev.select("event_type").distinct()
     grid = (
-        types.crossJoin(F.broadcast(users))
+        types.crossJoin(users)
         .join(
             conv,
             (types.event_type == conv.event_type)
@@ -741,8 +741,8 @@ def evt_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = ud.agg(F.max("d").alias("last_day"))
     return (
         dau.join(wau, "wday")
-        .crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
+        .crossJoin(lo)
+        .crossJoin(hi)
         .filter(
             (F.col("wday") >= F.col("first_full")) & (F.col("wday") <= F.col("last_day"))
         )
@@ -929,7 +929,7 @@ def evt_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = arms.agg(F.sum("n_users").alias("n_total"))
     chi = (
-        arms.crossJoin(F.broadcast(tot))
+        arms.crossJoin(tot)
         .select(
             (
                 (F.col("n_users") - F.col("n_total") / 2.0)
@@ -939,7 +939,7 @@ def evt_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("term").alias("chi2"))
     )
-    return arms.crossJoin(F.broadcast(chi)).select(
+    return arms.crossJoin(chi).select(
         "arm",
         "n_users",
         F.round("chi2", 6).alias("chi2"),
@@ -1245,8 +1245,8 @@ def evt_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("type_b"), F.col("n").alias("n_b")
     )
     return (
-        pairs.join(F.broadcast(ta), "type_a")
-        .join(F.broadcast(tb), "type_b")
+        pairs.join(ta, "type_a")
+        .join(tb, "type_b")
         .select(
             "type_a",
             "type_b",
@@ -1320,7 +1320,7 @@ def evt_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        by_dec.crossJoin(F.broadcast(tot))
+        by_dec.crossJoin(tot)
         .select(
             "decile",
             "n_users",
@@ -1479,7 +1479,7 @@ def evt_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     mad = j1.groupBy("event_type").agg(
         F.expr("percentile(abs(value - med), 0.5)").alias("mad")
     )
-    j2 = j1.join(F.broadcast(mad.filter(F.col("mad") > 0)), "event_type")
+    j2 = j1.join(mad.filter(F.col("mad") > 0), "event_type")
     z = F.abs(0.6745 * (F.col("value") - F.col("med")) / F.col("mad"))
     return j2.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1971,7 +1971,7 @@ def evt_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pair.join(ia, "item_a")
         .join(ib, "item_b")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "item_a",
             "item_b",
@@ -2053,7 +2053,7 @@ def evt_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("day").alias("b_day"), F.col("rev").alias("b_rev")
     ).alias("b")
     return (
-        a.crossJoin(F.broadcast(lags))
+        a.crossJoin(lags)
         .join(b, F.col("b_day") == F.date_add(F.col("a.day"), F.col("lag")))
         .groupBy("lag")
         .agg(
@@ -2465,8 +2465,8 @@ def evt_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p50_total_latency_s"),
     )
     return (
-        nv.crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(np_))
+        nv.crossJoin(nc)
+        .crossJoin(np_)
         .select(
             "n_view",
             "n_click",
@@ -2716,7 +2716,7 @@ def evt_anova_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = daily.agg(F.count(F.lit(1)).alias("n"), F.avg("rev").alias("grand_mean"))
     ssb_df = (
-        g.crossJoin(F.broadcast(tot))
+        g.crossJoin(tot)
         .agg(
             F.sum(
                 F.col("n_g")
@@ -2736,7 +2736,7 @@ def evt_anova_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        ssb_df.crossJoin(F.broadcast(ssw_df))
+        ssb_df.crossJoin(ssw_df)
         .select(
             F.col("k").alias("n_groups"),
             F.col("n").alias("n_days"),
@@ -3130,7 +3130,7 @@ def evt_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     states = m.select("from_type").distinct()
     n_states = states.agg(F.count(F.lit(1)).alias("n_states"))
-    pi = states.crossJoin(F.broadcast(n_states)).select(
+    pi = states.crossJoin(n_states).select(
         F.col("from_type").alias("state"),
         F.round(F.lit(1.0) / F.col("n_states"), 8).alias("pi"),
     )
@@ -3950,7 +3950,7 @@ def evt_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_add(F.to_date(F.min("ts")), _CUPED_PRE_DAYS).alias("cutoff")
     )
     per_user = (
-        ev.crossJoin(F.broadcast(cutoff))
+        ev.crossJoin(cutoff)
         .groupBy("user_id")
         .agg(
             F.coalesce(
@@ -3976,7 +3976,7 @@ def evt_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("th"),
         F.avg("pre_value").alias("mu_pre"),
     )
-    adj = per_user.crossJoin(F.broadcast(theta)).select(
+    adj = per_user.crossJoin(theta).select(
         (F.col("user_id") % 2).alias("variant"),
         "post_value",
         (
@@ -4224,7 +4224,7 @@ def evt_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULLIF guard on the cohort sizes: an empty cohort makes Spark's
     # division NULL but DuckDB's IEEE double division inf — the
     # evt_survival divergence class; both must agree on NULL.
-    dmax = cum.crossJoin(F.broadcast(tot)).agg(
+    dmax = cum.crossJoin(tot).agg(
         F.max(
             F.abs(
                 F.col("cum_a").cast("double") / F.expr("NULLIF(na, 0)")
@@ -4232,7 +4232,7 @@ def evt_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("d")
     )
-    lamt = tot.crossJoin(F.broadcast(dmax)).select(
+    lamt = tot.crossJoin(dmax).select(
         F.col("na").alias("n_a"),
         F.col("nb").alias("n_b"),
         "d",
@@ -4466,8 +4466,8 @@ def evt_chi2_cramers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = obs.groupBy("dow").agg(F.sum("o").alias("c_tot"))
     n = obs.agg(F.sum("o").alias("n"))
     grid = (
-        rt.crossJoin(F.broadcast(ct))
-        .crossJoin(F.broadcast(n))
+        rt.crossJoin(ct)
+        .crossJoin(n)
         .join(obs, ["event_type", "dow"], "left")
         .select(
             "event_type",
@@ -4485,7 +4485,7 @@ def evt_chi2_cramers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("event_type").cast("bigint").alias("r_levels"),
         F.countDistinct("dow").cast("bigint").alias("c_levels"),
     )
-    return stat.crossJoin(F.broadcast(n)).select(
+    return stat.crossJoin(n).select(
         F.col("n").cast("bigint").alias("n"),
         "r_levels",
         "c_levels",
@@ -4825,7 +4825,7 @@ def evt_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     cohort = days.groupBy("user_id").agg(F.min("d").alias("d0"))
     dmin = cohort.agg(F.min("d0").alias("dmin"))
-    c0 = cohort.join(F.broadcast(dmin), F.col("d0") == F.col("dmin")).select(
+    c0 = cohort.join(dmin, F.col("d0") == F.col("dmin")).select(
         "user_id", "d0"
     )
     n0 = c0.agg(F.count(F.lit(1)).alias("cohort_n"))
@@ -4847,7 +4847,7 @@ def evt_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pts = (
         ret.filter(F.col("n_retained") > 0)
-        .crossJoin(F.broadcast(n0))
+        .crossJoin(n0)
         .select(
             "k",
             "n_retained",
@@ -4865,7 +4865,7 @@ def evt_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("x") / F.count(F.lit(1))).alias("xbar"),
     )
     return (
-        pts.crossJoin(F.broadcast(fit))
+        pts.crossJoin(fit)
         .select(
             F.col("k").alias("day_k"),
             "n_retained",
@@ -5158,7 +5158,7 @@ def evt_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap = F.col("t_mu") - F.col("c_mu")
     eff = gap - F.col("pre_gap")
     return (
-        wide.crossJoin(F.broadcast(base))
+        wide.crossJoin(base)
         .select(
             "rel_week",
             F.col("t_n").cast("long").alias("n_treated"),
@@ -5407,7 +5407,7 @@ def evt_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("w_stat"),
     )
     return (
-        g.crossJoin(F.broadcast(w))
+        g.crossJoin(w)
         .select(
             "event_type",
             F.col("n").cast("long").alias("n"),
@@ -5856,7 +5856,7 @@ def evt_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     full_days = (
         s.groupBy("day")
         .agg(F.count(F.lit(1)).alias("c"))
-        .join(F.broadcast(k_types), F.col("c") == F.col("n_types"))
+        .join(k_types, F.col("c") == F.col("n_types"))
         .select("day")
     )
     b = s.join(F.broadcast(full_days), "day")
@@ -6039,9 +6039,9 @@ def evt_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = base.agg(F.count(F.lit(1)).cast("long").alias("n"))
     t = (
-        pairs.crossJoin(F.broadcast(tie_x))
-        .crossJoin(F.broadcast(tie_y))
-        .crossJoin(F.broadcast(n))
+        pairs.crossJoin(tie_x)
+        .crossJoin(tie_y)
+        .crossJoin(n)
     )
     nd = F.col("n").cast("double")
     cd = F.col("conc") - F.col("disc")
@@ -6502,7 +6502,7 @@ def evt_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         c["k"] * c["sxx"] - c["sx"] * c["sx"]
     )
     return (
-        xy.crossJoin(F.broadcast(fit))
+        xy.crossJoin(fit)
         .select(
             "m",
             "n_chunks",
@@ -6577,7 +6577,7 @@ def evt_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_run = Window.orderBy("lag").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    terms = acf.crossJoin(F.broadcast(nn)).select(
+    terms = acf.crossJoin(nn).select(
         "lag",
         "acf",
         "n",
@@ -6718,7 +6718,7 @@ def evt_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     census = (
         a.join(
-            F.broadcast(b),
+            b,
             (F.col("et2") == F.col("et")) & (F.col("d2") > F.col("d1")),
         )
         .groupBy(F.col("et").alias("event_type"))
@@ -7085,7 +7085,7 @@ def evt_pairwise_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n") - 1)
         ).alias("vb"),
     )
-    pairs = a.join(F.broadcast(b), F.col("dow_a") < F.col("dow_b"))
+    pairs = a.join(b, F.col("dow_a") < F.col("dow_b"))
     se2 = F.col("va") / F.col("na") + F.col("vb") / F.col("nb")
     t = (F.col("ma") - F.col("mb")) / F.sqrt(se2)
     df_w = F.pow(se2, 2) / (
@@ -7213,8 +7213,8 @@ def evt_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(h_of("cc")).cast("string").cast("double").alias("h_dow"))
     )
     return (
-        terms.crossJoin(F.broadcast(hx))
-        .crossJoin(F.broadcast(hy))
+        terms.crossJoin(hx)
+        .crossJoin(hy)
         .select(
             F.col("n").cast("long").alias("n_events"),
             F.round("mi", 6).alias("mi_nats"),
@@ -7287,7 +7287,7 @@ def evt_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = s.filter(F.col("event_type") == "purchase").select(
         F.col("rev").alias("yr")
     )
-    census = x.crossJoin(F.broadcast(y)).agg(
+    census = x.crossJoin(y).agg(
         F.sum(F.when(F.col("xr") > F.col("yr"), 1).otherwise(0))
         .cast("long")
         .alias("n_gt"),
@@ -7574,7 +7574,7 @@ def evt_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = g.filter(F.col("event_type") == "purchase").select(
         F.col("n").alias("n2"), mean.alias("m2"), var.alias("v2")
     )
-    t = a.crossJoin(F.broadcast(b)).select(
+    t = a.crossJoin(b).select(
         "n1",
         "n2",
         "m1",
@@ -7788,7 +7788,7 @@ def evt_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sd"),
     )
     d_dbl = F.col("a").cast("double") - F.col("b").cast("double")
-    census = paired.crossJoin(F.broadcast(lim)).agg(
+    census = paired.crossJoin(lim).agg(
         F.sum(
             F.when(
                 (d_dbl > F.col("bias") + _Z_95 * F.col("sd"))
@@ -7799,7 +7799,7 @@ def evt_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_outside")
     )
-    return lim.crossJoin(F.broadcast(census)).select(
+    return lim.crossJoin(census).select(
         F.col("n").cast("long").alias("n_days"),
         F.round("bias", 6).alias("bias"),
         F.round("sd", 6).alias("sd_diff"),
@@ -7900,7 +7900,7 @@ def evt_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("mid")
     )
-    evs = ev.crossJoin(F.broadcast(split)).localCheckpoint(eager=True)
+    evs = ev.crossJoin(split).localCheckpoint(eager=True)
     train = (
         evs.filter(F.col("day") <= F.col("mid"))
         .groupBy("dow")
@@ -7921,7 +7921,7 @@ def evt_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_k").cast("long").alias("n"),
         F.sum("s_k").cast("long").alias("s"),
     )
-    j = test.join(F.broadcast(train), "dow").crossJoin(F.broadcast(tot))
+    j = test.join(train, "dow").crossJoin(tot)
     ybar_k = F.col("s_k") * 1.0 / F.col("n_k")
     ybar = F.col("s") * 1.0 / F.col("n")
     dec = lambda c: F.sum(

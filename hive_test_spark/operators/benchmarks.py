@@ -72,7 +72,7 @@ def bench_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
             F.round(
@@ -234,11 +234,11 @@ def bench_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("supp_nation") == _Q7_N1) & (F.col("cust_nation") == _Q7_N2)
     ) | ((F.col("supp_nation") == _Q7_N2) & (F.col("cust_nation") == _Q7_N1))
     return (
-        li.join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        li.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("n1_key") == F.col("s_nationkey"))
-        .join(F.broadcast(n2), F.col("n2_key") == F.col("c_nationkey"))
+        .join(n1, F.col("n1_key") == F.col("s_nationkey"))
+        .join(n2, F.col("n2_key") == F.col("c_nationkey"))
         .filter(pair_ok)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"))
@@ -290,8 +290,8 @@ def bench_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_suppkey").alias("bad_key"))
     )
     return (
-        li.join(F.broadcast(bad), F.col("bad_key") == F.col("l_suppkey"), "left_anti")
-        .join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        li.join(bad, F.col("bad_key") == F.col("l_suppkey"), "left_anti")
+        .join(p, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -340,9 +340,9 @@ def bench_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey")
     )
     return (
-        c.crossJoin(F.broadcast(avg_bal))
+        c.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("a"))
-        .join(F.broadcast(early), F.col("o_custkey") == F.col("c_custkey"), "left_anti")
+        .join(early, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
@@ -392,7 +392,7 @@ def bench_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("n_nationkey")
     )
     s = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
+        n, F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
@@ -406,7 +406,7 @@ def bench_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     threshold = v.agg((F.sum("val") * F.lit(_Q11_FRACTION)).alias("thr"))
     return (
-        v.crossJoin(F.broadcast(threshold))
+        v.crossJoin(threshold)
         .filter(F.col("val") > F.col("thr"))
         .select("l_partkey", F.round("val", 4).alias("part_value"))
         .orderBy(F.col("part_value").desc(), "l_partkey")
@@ -463,9 +463,9 @@ def bench_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     qmax = revenue.groupBy("qtr").agg(F.max("total_revenue").alias("max_rev"))
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
-        revenue.join(F.broadcast(qmax), "qtr")
+        revenue.join(qmax, "qtr")
         .filter(F.col("total_revenue") == F.col("max_rev"))
-        .join(F.broadcast(s), revenue.l_suppkey == s.s_suppkey)
+        .join(s, revenue.l_suppkey == s.s_suppkey)
         .select(
             "qtr",
             "s_suppkey",
@@ -514,7 +514,7 @@ def bench_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
-    branded = li.join(F.broadcast(p), li.l_partkey == F.col("p_partkey"))
+    branded = li.join(p, li.l_partkey == F.col("p_partkey"))
     part_avg = branded.groupBy(F.col("l_partkey").alias("a_partkey")).agg(
         (F.avg("l_quantity") * 0.5).alias("half_avg_qty")
     )
@@ -573,7 +573,7 @@ def bench_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit(_Q20_YEAR_END).cast("date"))
     )
     movers = (
-        li.join(F.broadcast(p), li.l_partkey == F.col("p_partkey"), "left_semi")
+        li.join(p, li.l_partkey == F.col("p_partkey"), "left_semi")
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("qty"))
         .filter(F.col("qty") > _Q20_QTY)
@@ -636,7 +636,7 @@ def bench_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = (
         load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", "s_name")
     )
     o = (
@@ -679,7 +679,7 @@ def bench_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        waited.join(F.broadcast(s), waited.l_suppkey == s.s_suppkey)
+        waited.join(s, waited.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.col("numwait").desc(), "s_name")
@@ -739,7 +739,7 @@ def bench_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = (
         load_table(spark, sf_dir, "nation")
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("n_nationkey", "n_name")
     )
     s = (
@@ -776,7 +776,7 @@ def bench_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             (cost.l_partkey == pmin.m_partkey)
             & (cost.unit_cost == pmin.min_cost),
         )
-        .join(F.broadcast(p), cost.l_partkey == p.p_partkey)
+        .join(p, cost.l_partkey == p.p_partkey)
         .join(F.broadcast(s), cost.l_suppkey == s.s_suppkey)
         .select(
             "p_partkey",
@@ -836,7 +836,7 @@ def bench_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFram
     )
     n = (
         load_table(spark, sf_dir, "nation")
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("n_nationkey", "n_name")
     )
     s = (
@@ -970,7 +970,7 @@ def bench_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("r_regionkey")
     )
     n1 = nat.join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
+        r, F.col("n_regionkey") == F.col("r_regionkey")
     ).select(F.col("n_nationkey").alias("c_natkey"))
     n2 = nat.select(
         F.col("n_nationkey").alias("s_natkey"), F.col("n_name").alias("supp_nation")
@@ -985,12 +985,12 @@ def bench_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     vol = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(n1), c.c_nationkey == F.col("c_natkey"))
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n2), s.s_nationkey == F.col("s_natkey"))
+        .join(n1, c.c_nationkey == F.col("c_natkey"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n2, s.s_nationkey == F.col("s_natkey"))
         .select(
             F.year("o_orderdate").alias("o_year"),
             (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"),
@@ -1057,10 +1057,10 @@ def bench_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _Q9_COST_FRACTION
     ) * F.col("p_retailprice") * F.col("l_quantity")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .join(n, F.col("s_nationkey") == n.n_nationkey)
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("o_year"),
@@ -1119,7 +1119,7 @@ def bench_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
             F.round(
@@ -1288,7 +1288,7 @@ def bench_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(0.0)
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             F.round(F.lit(100.0) * F.sum(promo) / F.sum(rev), 6).alias(
                 "promo_revenue"
@@ -1351,7 +1351,7 @@ def bench_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         cond = leg if cond is None else (cond | leg)
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .filter(cond)
         .agg(
             F.round(

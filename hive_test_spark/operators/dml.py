@@ -254,7 +254,7 @@ def dml_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = c.filter(F.col("c_custkey") % 7 == 0).select(
         "c_custkey", F.round(F.col("c_acctbal") + 100.0, 2).alias("acctbal")
     )
-    dkeys = F.broadcast(delta.select("c_custkey"))
+    dkeys = delta.select("c_custkey")
     closed = base.join(dkeys, "c_custkey", "left_semi").select(
         "c_custkey",
         "acctbal",
@@ -516,7 +516,7 @@ def dml_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rows_erased"),
     ).select(F.lit("customer").alias("table_name"), "rows_before", "rows_erased")
     o_marked = orders.join(
-        F.broadcast(erase_cust.withColumn("erased", F.lit(1))),
+        erase_cust.withColumn("erased", F.lit(1)),
         orders["o_custkey"] == F.col("c_custkey"),
         "left",
     )
@@ -525,7 +525,7 @@ def dml_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.coalesce(F.col("erased"), F.lit(0))).alias("rows_erased"),
     ).select(F.lit("orders").alias("table_name"), "rows_before", "rows_erased")
     erase_ord = (
-        orders.join(F.broadcast(erase_cust), orders["o_custkey"] == F.col("c_custkey"))
+        orders.join(erase_cust, orders["o_custkey"] == F.col("c_custkey"))
         .select("o_orderkey")
     )
     l_marked = li.join(

@@ -532,7 +532,7 @@ def scale_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("l_orderkey").alias("rb_sum"),
         )
         parts.append(
-            rb.crossJoin(F.broadcast(src_agg)).select(
+            rb.crossJoin(src_agg).select(
                 F.lit(codec).alias("codec"),
                 "n_rows",
                 (F.col("n_rows") == F.col("src_n")).alias("rows_ok"),

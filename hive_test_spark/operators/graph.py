@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, side
 from hive_test_spark.registry import register
 from hive_test_spark.session import tune
 
@@ -67,25 +67,9 @@ def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _node_side(df: DataFrame, sf_dir: str):
-    """Size-gated broadcast for NODE-BOUNDED per-round frames (BFS
-    frontier, propagation labels, k-core survivor set): their row count
-    is bounded by |customers| + |suppliers|, so broadcast while those
-    dimension tables are provably small, shuffle-hash at scale.
-
-    Why a hint at all (r13): per-round localCheckpoint frames surface
-    as LogicalRDD leaves whose size estimate is unknown, so the planner
-    falls back to sort-merge — sorting the million-row edge list every
-    round to join a 16k-row frontier (BFS loop measured 5.8–8.7 s
-    default vs 4.0–4.3 s broadcast at sf0.1, identical results)."""
-    from hive_test_spark.io import _BROADCAST_BYTES_LIMIT, table_bytes
-
-    if (
-        table_bytes(sf_dir, "customer") + table_bytes(sf_dir, "supplier")
-        <= _BROADCAST_BYTES_LIMIT
-    ):
-        return F.broadcast(df)
-    return df.hint("shuffle_hash")
+# Tables bounding every per-round node frame (BFS frontier, propagation
+# labels, k-core survivors): |nodes| <= |customers| + |suppliers|.
+_NODES = ("customer", "supplier")
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,8 +141,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
         .cache()
     )
-    n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))  # 1-row plan, broadcast below
-    ranks = deg.crossJoin(F.broadcast(n_nodes)).select(
+    n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
+    ranks = deg.crossJoin(n_nodes).select(
         F.col("src").alias("node"), (F.lit(1.0) / F.col("n_nodes")).alias("rank")
     )
     for _ in range(_ITERS):
@@ -167,7 +151,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
         )
-        ranks = contribs.crossJoin(F.broadcast(n_nodes)).select(
+        ranks = contribs.crossJoin(n_nodes).select(
             F.col("dst").alias("node"),
             (F.lit(0.15) / F.col("n_nodes") + F.lit(_DAMP) * F.col("contrib")).alias("rank"),
         )
@@ -232,7 +216,10 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("hops"),
     )
     for _ in range(_BFS_ITERS):
-        step = edges.join(_node_side(dist, sf_dir), edges.src == dist.node).select(
+        # Size gate (io.side): without it the planner sort-merges the
+        # edge list against the stats-less frontier every level (BFS loop
+        # 5.8–8.7 s vs 4.0–4.3 s broadcast at sf0.1, identical results).
+        step = edges.join(side(dist, sf_dir, *_NODES), edges.src == dist.node).select(
             F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
         )
         dist = (
@@ -409,10 +396,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds = [labels.select(F.lit(0).alias("round"), "label")]
     for i in range(_LP_ITERS):
         nb = (
-            # _node_side (r13): `labels` is a checkpointed LogicalRDD
-            # with unknown stats — without the gate the planner
-            # sort-merges the edge list against it every round.
-            edges.join(_node_side(labels, sf_dir), edges.src == labels.node)
+            # Size gate (io.side): `labels` is a checkpointed LogicalRDD
+            # with unknown stats — without it the planner sort-merges
+            # the edge list against it every round.
+            edges.join(side(labels, sf_dir, *_NODES), edges.src == labels.node)
             .groupBy(F.col("dst").alias("nb_node"))
             .agg(F.min("label").alias("minl"))
         )
@@ -503,12 +490,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src")
         )
         nxt = (
-            # _node_side (r13): the survivor set is node-bounded and
+            # Size gate (io.side): the survivor set is node-bounded and
             # `prev` is a stats-less checkpoint leaf — gate-broadcast
             # the small side of both semi-joins.
-            prev.join(_node_side(surv, sf_dir), "src", "left_semi")
+            prev.join(side(surv, sf_dir, *_NODES), "src", "left_semi")
             .join(
-                _node_side(surv.select(F.col("src").alias("dst")), sf_dir),
+                side(surv.select(F.col("src").alias("dst")), sf_dir, *_NODES),
                 "dst",
                 "left_semi",
             )
@@ -579,7 +566,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dmin rides in as a broadcast 1-row scalar (not a whole-table
     # window, which would force a single partition over the degrees).
     mind = degs.agg(F.min("degree").alias("dmin"))
-    fit = degs.crossJoin(F.broadcast(mind)).agg(
+    fit = degs.crossJoin(mind).agg(
         F.count(F.lit(1)).alias("n_nodes_total"),
         F.max("dmin").alias("dmin"),
         F.round(
@@ -590,7 +577,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("alpha_mle"),
     )
     hist = degs.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
-    return hist.crossJoin(F.broadcast(fit)).select(
+    return hist.crossJoin(fit).select(
         "degree", "n_nodes", "n_nodes_total", "dmin", "alpha_mle"
     ).orderBy("degree")
 
@@ -757,7 +744,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("supp"), F.col("s_nationkey").alias("s_comm")
     )
-    comm = pairs.join(F.broadcast(cust), "cust").join(F.broadcast(supp), "supp")
+    comm = pairs.join(cust, "cust").join(supp, "supp")
     # Edge total as a 1-row frame (no driver-side count — llm_tfidf rule).
     m = comm.agg(F.count(F.lit(1)).alias("m"))
     within = (
@@ -781,7 +768,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     contrib = (
         deg.join(within, "comm", "left")
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
         .select(
             F.col("comm").alias("nationkey"),
             e_w.alias("e_within"),
@@ -850,7 +837,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = deg.join(tri, "l_partkey", "left").filter(F.col("degree") >= 2)
     mean = joined.agg(F.round(F.avg(cc), 6).alias("avg_cc"))
     return (
-        joined.crossJoin(F.broadcast(mean))
+        joined.crossJoin(mean)
         .select(
             "l_partkey",
             F.col("degree").cast("long").alias("degree"),
@@ -951,7 +938,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("a").alias("h"))
         )
         hn = hr.agg(F.sqrt(F.sum(F.col("h") * F.col("h"))).alias("nrm"))
-        h = hr.crossJoin(F.broadcast(hn)).select(
+        h = hr.crossJoin(hn).select(
             "cust", F.round(F.col("h") / F.col("nrm"), 6).alias("h")
         )
     auth = a.join(ad, "supp").select(

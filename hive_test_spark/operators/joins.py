@@ -242,7 +242,7 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
     c = load_table(spark, sf_dir, "customer").select("c_acctbal")
     return (
-        c.join(F.broadcast(s), s.s_acctbal > c.c_acctbal)
+        c.join(s, s.s_acctbal > c.c_acctbal)
         .groupBy("s_suppkey")
         .agg(F.count(F.lit(1)).alias("richer_than_suppliers"))
     )
@@ -276,7 +276,7 @@ def join_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        o.join(F.broadcast(bands), (o.o_totalprice >= bands.lo) & (o.o_totalprice < bands.hi))
+        o.join(bands, (o.o_totalprice >= bands.lo) & (o.o_totalprice < bands.hi))
         .groupBy("band_id")
         .agg(
             F.count(F.lit(1)).alias("num_orders"),
@@ -377,7 +377,7 @@ def join_star_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash relation and never broadcast (the previous c⋈o-first order
     let the static planner broadcast-build the fact, which inverts at
     scale); the date-filtered orders, customer, supplier sides build,
-    nation/region broadcast explicitly. Catalyst pushes the region
+    nation/region broadcast under the size threshold. Catalyst pushes the region
     filter through the join chain and prunes everything else. At 100 TB
     orders outgrows any threshold and AQE turns that first join into a
     keyed shuffle — the code stays the same."""
@@ -395,8 +395,8 @@ def join_star_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, c.c_custkey == o.o_custkey)
         .join(s, (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6).alias("revenue")
@@ -678,7 +678,7 @@ def join_temporal_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = v1.unionAll(v2)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
     joined = o.join(
-        F.broadcast(dim),
+        dim,
         (F.col("c_custkey") == F.col("o_custkey"))
         & (F.col("o_orderdate") >= F.col("valid_from"))
         & (F.col("o_orderdate") < F.col("valid_to")),

@@ -231,7 +231,7 @@ def dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("orphans"))
         # reuse the 1-row o_row aggregate (already computes the orders
         # count) instead of launching a second full count job.
-        .crossJoin(F.broadcast(o_row.select("n_checked")))
+        .crossJoin(o_row.select("n_checked"))
         .select(
             F.lit("fk_orders_customer").alias("constraint_name"),
             "n_checked",
@@ -241,7 +241,7 @@ def dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fk_lo = (
         li.join(o.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey"), "left_anti")
         .agg(F.count(F.lit(1)).alias("orphans"))
-        .crossJoin(F.broadcast(li_row.select("n_checked")))
+        .crossJoin(li_row.select("n_checked"))
         .select(
             F.lit("fk_lineitem_orders").alias("constraint_name"),
             "n_checked",
@@ -305,7 +305,7 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ts").alias("last_ts"),
     )
     lag_us = F.unix_micros(F.col("a")) - F.unix_micros(F.col("last_ts"))
-    return per_type.crossJoin(F.broadcast(anchor)).select(
+    return per_type.crossJoin(anchor).select(
         "event_type",
         "n_events",
         "last_ts",
@@ -464,7 +464,7 @@ def dq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_orphans")
         )
         per_edge.append(
-            n_child.crossJoin(F.broadcast(n_orph)).select(
+            n_child.crossJoin(n_orph).select(
                 F.lit(edge).alias("edge"), "n_child", "n_orphans"
             )
         )
@@ -550,7 +550,7 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     years = b.select("yr").distinct()
     bins = spark.range(_PSI_BINS).select(F.col("id").cast("int").alias("bin"))
-    grid = years.crossJoin(F.broadcast(bins))
+    grid = years.crossJoin(bins)
     cnts = b.groupBy("yr", "bin").agg(F.count(F.lit(1)).alias("c"))
     g = grid.join(cnts, ["yr", "bin"], "left").select(
         "yr", "bin", F.coalesce(F.col("c"), F.lit(0)).alias("c")

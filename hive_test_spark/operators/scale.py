@@ -226,7 +226,7 @@ def scale_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return (
-        fact.join(F.broadcast(years), fact.l_shipyear == years.o_year)
+        fact.join(years, fact.l_shipyear == years.o_year)
         .groupBy(F.col("l_shipyear").cast("long").alias("l_shipyear"))
         .agg(
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6).alias(
@@ -691,7 +691,7 @@ def scale_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = nat_rev.agg(F.max("rev").alias("top_rev"))
     return (
-        nat_rev.crossJoin(F.broadcast(top))
+        nat_rev.crossJoin(top)
         .filter(F.col("rev") >= 0.8 * F.col("top_rev"))
         .select("c_nationkey", "rev", F.round("top_rev", 4).alias("top_rev"))
     )
@@ -1062,7 +1062,7 @@ def scale_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rk"),
     ).filter(F.col("rk") <= _SKEW_TOPK)
     return (
-        hot.crossJoin(F.broadcast(stats))
+        hot.crossJoin(stats)
         .select(
             "rk",
             "user_id",

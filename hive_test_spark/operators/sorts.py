@@ -184,7 +184,7 @@ def sort_within_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bool_and("sorted_ok").alias("all_partitions_sorted"),
             F.sum("n_keys").alias("sum_part_keys"),
         )
-        .crossJoin(F.broadcast(globals_))
+        .crossJoin(globals_)
         .select(
             "total_rows",
             "all_partitions_sorted",

@@ -206,7 +206,7 @@ def subq_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("p_retailprice").alias("mn"), F.max("p_retailprice").alias("mx")
     )
     return (
-        p.crossJoin(F.broadcast(ref))
+        p.crossJoin(ref)
         .filter(F.col("p_retailprice") > F.col("mn"))
         .select(
             "p_partkey",

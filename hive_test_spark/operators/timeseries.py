@@ -1055,7 +1055,7 @@ def evt_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").cast("int").alias("lag")
     )
     return (
-        x.crossJoin(F.broadcast(lags))
+        x.crossJoin(lags)
         .join(y, F.col("yday") == F.date_add(F.col("xday"), F.col("lag")))
         .groupBy("lag")
         .agg(

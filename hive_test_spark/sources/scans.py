@@ -519,7 +519,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         | F.col("o_totalprice").isNotNull()
         | F.col("o_orderstatus").isNotNull()
     ).agg(F.count(F.lit(1)).alias("n_dropmalformed"))
-    return perm_row.crossJoin(F.broadcast(drop_row)).select(
+    return perm_row.crossJoin(drop_row).select(
         "n_good", "n_corrupt", "n_dropmalformed", "sum_price_good"
     )
 

@@ -1130,7 +1130,7 @@ def meta_show_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(f,) for f in _FN_PROBES], "probe string"
     )
     listed = (
-        F.broadcast(expected)
+        expected
         .join(listing, F.col("probe") == F.col("fn"), "left")
         .select(
             F.concat(F.lit("listed:"), F.col("probe")).alias("element"),
@@ -1433,7 +1433,7 @@ def meta_show_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected = spark.createDataFrame(
         [("hts_v_open_orders",), ("hts_v_rev_by_nation",)], "name string"
     )
-    probed = F.broadcast(expected).join(
+    probed = expected.join(
         views, F.col("name") == F.col("vn"), "left"
     )
     listed = probed.select(

@@ -95,7 +95,11 @@ def _run_to_memory(
     stream_dedup 2.0 s → 1.2 s at sf0.1, identical sink fingerprints).
     Callers must pass False ONLY when the final batch provably emits no
     rows; anything append-mode that emits ON watermark advance (window
-    aggs, outer joins) must keep the default."""
+    aggs, outer joins) must keep the default.
+
+    A started query keeps the session confs it was started with, so the
+    session-global conf is set only around ``start()`` and restored as
+    soon as it returns, not held for the run."""
     spark = df.sparkSession
     name = f"hts_mem_{uuid.uuid4().hex[:12]}"
     ckpt = scratch_dir("ckpt", name)
@@ -112,17 +116,17 @@ def _run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
     finally:
         if not final_watermark_batch:
             if saved is None:
                 spark.conf.unset(conf_key)
             else:
                 spark.conf.set(conf_key, saved)
+    try:
+        q.awaitTermination(300)
+    finally:
+        if q.isActive:
+            q.stop()
     shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 

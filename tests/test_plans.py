@@ -71,7 +71,7 @@ def test_unpivot_is_shuffle_free(spark, registry):
 
 
 def test_gapfill_has_no_cartesian_fallback(spark, registry):
-    """The spine cross join is tiny×tiny and explicitly broadcast; the
+    """The spine cross join is tiny×tiny and planned as a broadcast; the
     fact-side joins are all equi-joins."""
     f = _facts(spark, registry, "evt_gapfill")
     assert f.cartesian <= 1, "only the intentional tiny spine cross join"

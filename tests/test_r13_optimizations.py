@@ -6,9 +6,9 @@ at sf0.001 so the whole file stays in seconds:
 - the probe's size-ratio prefilter can never change the decision rows;
 - the banded index keeps the per-doc token count the prefilter needs;
 - the wide-form SimHash equals the old crossJoin(bits) formulation;
-- io.attach_side gates broadcast on real on-disk bytes;
 - skipping the trailing no-data micro-batch leaves the dedup sink
-  identical.
+  identical, and the conf that skips it is restored once the query
+  has started.
 """
 
 from __future__ import annotations
@@ -116,28 +116,6 @@ def test_simhash_wide_equals_crossjoin_form(spark):
     assert _fp(new, "doc_id", "simhash") == _fp(old, "doc_id", "simhash")
 
 
-def test_attach_side_gates_on_bytes(spark, monkeypatch):
-    """io.attach_side broadcasts only under the byte limit; over it, the
-    frame comes back hinted shuffle_hash, never broadcast (the r12
-    scale-unsafety this round fixed)."""
-    import hive_test_spark.io as io
-
-    df = spark.range(10).select(F.col("id").alias("doc_id"))
-
-    small = io.attach_side(df, SF_DIR, "documents")
-    plan_small = small._jdf.queryExecution().logical().toString()
-    assert "UnresolvedHint broadcast" in plan_small or "ResolvedHint" in plan_small
-
-    monkeypatch.setattr(io, "_BROADCAST_BYTES_LIMIT", 0)
-    big = io.attach_side(df, SF_DIR, "documents")
-    plan_big = big._jdf.queryExecution().logical().toString()
-    assert "shuffle_hash" in plan_big.lower()
-    assert "broadcast" not in plan_big.lower()
-
-    # unknown table fails SAFE (treated as huge)
-    assert io.table_bytes(SF_DIR, "no_such_table") > (1 << 60)
-
-
 def test_stream_dedup_sink_identical_without_final_batch(spark):
     """final_watermark_batch=False may only be used where the trailing
     no-data batch emits nothing: prove the dedup sink is identical
@@ -154,3 +132,35 @@ def test_stream_dedup_sink_identical_without_final_batch(spark):
         )
 
     assert run(True) == run(False)
+
+
+def test_final_batch_conf_restored_once_started(spark, monkeypatch):
+    """final_watermark_batch=False restores the session-global
+    noDataMicroBatches conf as soon as start() returns, and the started
+    query keeps the value it was started with: a watermarked append-mode
+    window count emits only in the final no-data batch, so it stays empty
+    without that batch and is non-empty with it."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from hive_test_spark.streaming.live import _read_events_stream, _run_to_memory
+
+    conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(conf_key, None)
+    during = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def spy(self, timeout=None):
+        during.append(spark.conf.get(conf_key, None))
+        return await_termination(self, timeout)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+
+    def run(flag):
+        ev = _read_events_stream(spark, SF_DIR)
+        agg = ev.withWatermark("ts", "10 minutes").groupBy(F.window("ts", "10 minutes")).count()
+        return _run_to_memory(agg, "append", final_watermark_batch=flag).count()
+
+    assert run(True) > 0
+    assert run(False) == 0
+    assert during == [before, before]
+    assert spark.conf.get(conf_key, None) == before
