@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -29,7 +28,6 @@ from hive_test_spark.session import tune
 )
 def udtf_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW explode: flatten token arrays → word counts."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
@@ -53,7 +51,6 @@ def udtf_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def udtf_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW posexplode: flatten with ordinal, keep first 5 tokens."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token"))
@@ -73,7 +70,6 @@ def udtf_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def udtf_json_tuple(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW json_tuple: multi-field JSON extraction from props."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.select("event_type", F.json_tuple(F.col("props"), "k").alias("k"))
@@ -103,7 +99,6 @@ def udtf_json_tuple(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def udtf_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stack(n, ...) — unpivot wide aggregates into (metric, val) rows."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
@@ -147,7 +142,6 @@ def udtf_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     array is built from already-read columns, so scan pruning is
     unaffected; keep the carried key columns narrow because they are
     duplicated per emitted row."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 50 == 0)
     arr = F.array(
         F.struct(F.lit("priority").alias("attr"), F.col("o_orderpriority").alias("val")),
@@ -186,7 +180,6 @@ def udtf_explode_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     count aggregate, which map-side combines on low-cardinality pairs).
     This beats regex-per-key extraction N-fold: one parse emits all
     keys, instead of one full-column regex pass per property."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     mstr = F.concat(
         F.lit("type="), F.col("event_type"),
@@ -234,7 +227,6 @@ def udtf_parse_url_tuple(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: stays entirely inside codegen (no Python, no shuffle);
     for web-corpus provenance this is the host/path normalization step
     feeding per-domain dedup and quality priors (llm_domain_cap)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"), F.col("source"), F.lit(".example.com/docs/"),

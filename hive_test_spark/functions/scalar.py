@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -43,7 +42,6 @@ from hive_test_spark.session import tune
 def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family: upper/lower/length/substr/concat_ws/lpad/reverse/
     repeat/trim/instr/replace."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -75,7 +73,6 @@ def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex family: regexp_extract / regexp_replace (replace-all) /
     rlike / translate."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -104,7 +101,6 @@ def fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date family: year/month/day/date_trunc/last_day/datediff/add_months/
     unix_timestamp. DATE-typed outputs rendered as strings (hash rule)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -144,7 +140,6 @@ def fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math family: round/floor/ceil/abs/pow/sqrt/ln/log10/exp/sign/
     greatest/least/pmod."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
@@ -179,7 +174,6 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional family: if/nvl/nullif/coalesce/isnull."""
-    tune(spark)
     s = load_table(spark, sf_dir, "supplier")
     return s.select(
         "s_suppkey",
@@ -208,7 +202,6 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array family + higher-order functions: size/element_at/transform/
     filter/aggregate — the JVM-side vector-math primitives reused by the
     LLM similarity operators (§2.L)."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings")
     as_dbl = "transform(embedding, x -> CAST(x AS DOUBLE))"
     return e.select(
@@ -239,7 +232,6 @@ def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     is engine-specific — SURVEY.md §2 flags this family as order-sensitive).
     Keys/values are '|'-serialized to scalar strings because the driver's
     pandas canonicalizer cannot sort ndarray cells."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
     m = F.create_map(
         F.lit("type"), F.col("event_type"), F.lit("user"), F.col("user_id").cast("string")
@@ -265,7 +257,6 @@ def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON family: get_json_object + from_json (schema'd struct access)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     parsed = F.from_json(F.col("props"), "k BIGINT")
     return ev.select(
@@ -288,7 +279,6 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash family: md5 / sha2-256 (content fingerprints for dedup §2.L)."""
-    tune(spark)
     n = load_table(spark, sf_dir, "nation")
     return n.select(
         "n_nationkey",
@@ -315,7 +305,6 @@ def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise family [Hive-public: &, |, ^, ~, shiftleft/shiftright] —
     used in practice for hash-bucket math and bitmap flags; all JVM-side
     codegen'd integer ops."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_orderkey") < 100).select(
         "l_orderkey",
@@ -345,7 +334,6 @@ def fn_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a key=value string for the driver compare (pandas canonicalizer
     cannot sort struct/Row cells). Structs are columnar-shredded in
     parquet, so nested projection still prunes at the reader."""
-    tune(spark)
     s = load_table(spark, sf_dir, "supplier")
     info = F.struct(
         F.col("s_nationkey").alias("nation"),
@@ -384,7 +372,6 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     with portable regexes (DuckDB has no parse_url). URLs are synthesized
     deterministically from fixture columns (web-corpus provenance columns
     are the 100 TB use case: per-host dedup, domain quality priors)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"),
@@ -416,7 +403,6 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean aggregates [Hive-public: min/max over booleans; ANSI
     bool_and/bool_or] + FILTERed count — all map-side combinable."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.bool_and(F.col("l_quantity") > 1).alias("all_qty_gt1"),
@@ -470,7 +456,6 @@ def fn_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB note: decimal aggs are map-side combinable like any sum; Spark
     promotes sum precision (22,2) to avoid overflow — no extra shuffle.
     """
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     dec_price = F.round("l_extendedprice", 2).cast("decimal(12,2)")
     tie = (F.col("l_quantity") * F.lit(0.005)).cast("decimal(12,3)").cast("decimal(12,2)")
@@ -514,7 +499,6 @@ def fn_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen-friendly — this is the redaction tier you run before text
     corpora leave the warehouse (cousin of llm_pii_redact, which handles
     free-text patterns instead of whole columns)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -555,7 +539,6 @@ def fn_date_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``next_day(d,'Mon')`` is strictly-after, reconstructed in DuckDB from
     isodow arithmetic. DATE outputs are rendered as strings (hash rule).
     All JVM-side, codegen-friendly, map-only."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     d = F.col("o_orderdate").cast("date")
     return o.select(
@@ -603,7 +586,6 @@ def fn_try_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     try_divide(x, 0) → NULL has no DuckDB spelling (it raises), so the
     oracle encodes the same contract as the explicit CASE — which is
     precisely the rewrite Hive semantics imply."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     t = ev.select(
         "event_type",
@@ -651,7 +633,6 @@ def fn_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint cast: Spark's double→bigint CAST truncates toward zero while
     DuckDB's rounds to nearest. Map-only; scan-pruned to a bounded key
     range."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 500)
     return o.select(
         "o_orderkey",
@@ -695,7 +676,6 @@ def fn_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: parse_json runs once per row in codegen; each additional
     extracted field is a cheap binary probe instead of a fresh JSON text
     scan — column-count-independent ingest cost."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 7 == 0)
     v = ev.withColumn("v", F.parse_json("props"))
     return v.select(
@@ -743,7 +723,6 @@ def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: collation participates in hashing, so a UTF8_LCASE
     group-by/join shuffles case-variants to the SAME reducer — lower()
     wrappers do the same but defeat dictionary-encoding pushdown."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         F.when(F.col("c_custkey") % 3 == 0, F.upper("c_mktsegment"))
@@ -793,7 +772,6 @@ def fn_sql_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression in place. At 100 TB that inlining is the point: a macro
     library adds no Python round-trip and no black-box UDF barrier to
     pushdown or constant folding."""
-    tune(spark)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION hts_disc_price(p DOUBLE, d DOUBLE) "
         "RETURNS DOUBLE RETURN p * (1 - d)"
@@ -862,7 +840,6 @@ def fn_timezone(spark: SparkSession, sf_dir: str) -> DataFrame:
     a tz-typed column per market would 25× the storage and break
     cross-region joins; the conversion is a per-row expression, never a
     shuffle."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 11 == 0)
     ny = F.from_utc_timestamp("ts", "America/New_York")
     return ev.select(
@@ -900,7 +877,6 @@ def fn_binary_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     it. Map-only codegen expressions; at 100 TB these run at scan
     bandwidth (the reason binary payloads ride BASE64 text columns
     through Hive tables at all)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 13 == 0)
     name_bin = F.encode("c_name", "UTF-8")
     return c.select(
@@ -948,7 +924,6 @@ def fn_crypto(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan bandwidth — no shuffle participation (but an encrypted column
     can't be pushed down or dictionary-pruned: filter before
     encrypting)."""
-    tune(spark)
     n = load_table(spark, sf_dir, "nation")
     enc = F.expr(f"aes_encrypt(n_name, '{_AES_KEY}', 'ECB')")
     return n.select(
@@ -1007,7 +982,6 @@ def fn_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse ONCE to a struct column (from_json/variant idioms) instead of
     N xpath calls re-parsing N times — this op is the migration surface
     for legacy HiveQL, not the recommended storage design."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 7 == 0)
     xml = F.concat(
         F.lit("<c><k>"),
@@ -1063,7 +1037,6 @@ def fn_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm_chunk_split) without a Python tokenizer hop; the
     array<array<string>> stays columnar (no explode) until a consumer
     actually fans out."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     synth = F.concat(
         F.lit("Alpha "), F.col("source"), F.lit(" scan. Beta "),
@@ -1119,7 +1092,6 @@ def fn_context_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the explode+shuffle, so the aggregate state is |followers of
     context|, not |bigrams|; the final top-k is a TakeOrdered, not a
     global sort."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(F.flatten(F.sentences(F.col("text"))).alias("t")).filter(
         F.size("t") >= 2
@@ -1168,7 +1140,6 @@ def fn_bround(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding mode is a correctness choice, not a performance one, but
     divergent modes across engines are a classic silent reconciliation
     bug, which is exactly what the cross-engine oracle pins."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 200)
     return li.select(
         "l_orderkey",
@@ -1204,7 +1175,6 @@ def fn_elt_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: pure codegen'd expressions, no shuffle; these matter
     only because migrated HiveQL uses them — the engine must accept the
     surface, and constant-folding eliminates most uses at plan time."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 500)
     return o.select(
         "o_orderkey",

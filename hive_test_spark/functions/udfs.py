@@ -27,7 +27,6 @@ from pyspark.sql.functions import pandas_udf
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 # ---- row-at-a-time scalar UDF (the Hive `CREATE FUNCTION` analogue) ----
@@ -64,7 +63,6 @@ def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-at-a-time Python UDF, registered for SQL too. Covers Hive's
     custom-UDF surface; 10-100× slower than pandas_udf — never in a hot
     path, and this dict lookup would be a CASE expression in production."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     prio_udf = F.udf(_priority_rank, T.IntegerType())
     spark.udf.register("hts_priority_rank", _priority_rank, T.IntegerType())
@@ -93,7 +91,6 @@ def _net_price(price: pd.Series, disc: pd.Series, tax: pd.Series) -> pd.Series:
 )
 def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized (Arrow) scalar UDF: Series→Series per batch."""
-    tune(spark)
     # pandas_udf built here, not at import time: type resolution needs an
     # active session, and the driver imports this module before creating one.
     net_price_pdf = pandas_udf(_net_price, T.DoubleType())
@@ -128,7 +125,6 @@ def _weighted_avg_price(price: pd.Series, qty: pd.Series) -> float:
 def udaf_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom UDAF via grouped-agg pandas_udf (SNIPPETS.md:49-58 pattern):
     whole group's columns arrive as Series, returns one scalar."""
-    tune(spark)
     from pyspark.sql.functions import PandasUDFType
 
     wavg = pandas_udf(_weighted_avg_price, T.DoubleType(), functionType=PandasUDFType.GROUPED_AGG)
@@ -170,7 +166,6 @@ def udtf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-transform (Hive UDTF analogue): applyInPandas z-score
     normalization per nation — arbitrary pandas logic per group, schema
     declared up front."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     schema = "c_custkey long, c_nationkey int, bal_z double"
     return c.select("c_custkey", "c_nationkey", "c_acctbal").groupBy("c_nationkey").applyInPandas(
@@ -208,7 +203,6 @@ def udf_map_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-stream transform: mapInPandas iterates Arrow batches —
     the plumbing tier used for multimodal decode (§2.L). Deterministic
     row-wise features, so the oracle is still exact SQL."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     schema = "doc_id long, n_tokens long, n_uniq_tokens long, mentions_spark boolean"
     return d.select("doc_id", "text").mapInPandas(_doc_features, schema)
@@ -263,7 +257,6 @@ def transform_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB note: this is a map-only op — no shuffle, scales linearly;
     per-batch framing cost is the same O(rows) a real pipe would pay,
     minus the process-spawn and context-switch overhead."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     schema = "c_custkey long, seg_lower string, bal_band string"
     return c.select("c_custkey", "c_mktsegment", "c_acctbal").mapInPandas(
@@ -286,7 +279,6 @@ def interop_reflect(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the executor JVM, so it costs reflection dispatch but never
     serialization. Still codegen-opaque: prefer a built-in when one
     exists; reflect is for the long tail."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 500)
     return o.select(
         "o_orderkey",
@@ -320,7 +312,6 @@ def udtf_python_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batches flow executor→worker→executor partition-locally."""
     from pyspark.sql.functions import udtf
 
-    tune(spark)
 
     @udtf(returnType="token: string, token_len: int")
     class LongTokens:
@@ -385,7 +376,6 @@ def interop_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist (no Python worker hop)."""
     import pyspark.sql.datasource as pyds
 
-    tune(spark)
 
     class _Part(pyds.InputPartition):
         def __init__(self, start: int, end: int) -> None:
@@ -469,7 +459,6 @@ def interop_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyspark.pandas as ps
 
-    tune(spark)
     psdf = ps.read_parquet(
         os.path.join(sf_dir, "orders.parquet"), index_col="o_orderkey"
     )
@@ -518,7 +507,6 @@ def interop_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tune(spark)
 
     def _line_revenue(batches):
         for batch in batches:
@@ -584,7 +572,6 @@ def interop_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_test_spark.io import scratch_dir
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "A")
     obs = Observation("qa")
     observed = li.observe(
@@ -649,7 +636,6 @@ def interop_arrow_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow INTO the driver = config; Arrow ON executors = data."""
     import pyarrow as pa
 
-    tune(spark)
     weights = pa.table(
         {
             "o_orderpriority": pa.array(

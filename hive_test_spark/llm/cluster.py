@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 KMEANS_K = 8
 
@@ -150,7 +149,6 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign pipeline as chained CTEs, so the comparison covers the full
     Lloyd arithmetic — init means, both argmin rounds, and the
     intermediate centroid update — not just the final regrouping."""
-    tune(spark)
     e, c1 = _lloyd_chain(spark, sf_dir)
     a2 = _assign(e, c1)
     sizes = a2.groupBy("cluster").agg(F.count(F.lit(1)).alias("cluster_n"))
@@ -279,7 +277,6 @@ def llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-subspace train/encode pipeline as chained CTEs — init means,
     both argmin rounds, the centroid update, and the final code
     pivot."""
-    tune(spark)
     subs = _pq_subvectors(spark, sf_dir)
     _, a2 = _pq_train_encode(subs)
     # Encode: pivot the M codes wide + total quantization error.
@@ -398,7 +395,6 @@ def llm_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     × corpus pass that every recall gate pays for ground truth. Both
     legs rank on 6dp-rounded distances with vec_id tie-breaks, so both
     engines pick identical top-k sets."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
@@ -504,7 +500,6 @@ def llm_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment's own keying); the cell matrix is k×|labels| — tiny —
     and the majority pick is a window over that matrix. Everything
     upstream is the proven Lloyd shape."""
-    tune(spark)
     e, c1 = _lloyd_chain(spark, sf_dir)
     a2 = _assign(e, c1)
     labels = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
@@ -584,7 +579,6 @@ def llm_active_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-k compiles to TakeOrderedAndProject. Centroid training
     reuses the first Lloyd round (one update), sharing its cost with
     the kmeans/purity exhibits."""
-    tune(spark)
     e, c1 = _lloyd_chain(spark, sf_dir)
     scored = e.crossJoin(F.broadcast(c1)).select(
         "vec_id",
@@ -682,7 +676,6 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the llm_mmr_diversify lineage rule: each step references the
     previous frame twice). K is a constant, so the whole selection is
     K linear passes."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
@@ -816,7 +809,6 @@ def llm_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles. Fixed iteration count keeps lineage shallow (the
     graph_pagerank rule); a convergence-driven variant would
     localCheckpoint every ~10 rounds like llm_dedup_clusters."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
@@ -951,7 +943,6 @@ def llm_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization loss in one number), per index family alongside
     llm_ann_ivf_recall / llm_ann_pq_recall; llm_ann_nprobe_curve
     prices the nprobe knob."""
-    tune(spark)
     _, adc = _ivfpq_adc(spark, sf_dir)
     w_rank = Window.partitionBy("probe_id").orderBy("adc_dist", "neighbor_id")
     return (
@@ -1069,7 +1060,6 @@ def llm_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass every recall gate pays (probes are an eval panel, never the
     corpus). Both engines rank on 6dp-rounded distances with id
     tie-breaks, and the recall join is pair-keyed."""
-    tune(spark)
     e, adc = _ivfpq_adc(spark, sf_dir)
     probes = e.filter(F.col("vec_id") < _ivfpq_nprobes()).select(
         F.col("vec_id").alias("probe_id"), F.col("emb").alias("p_emb")
@@ -1195,7 +1185,6 @@ def llm_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Parity note: a(i) > 0 always holds here (no member sits ON its
     centroid at 6dp), so GREATEST never sees the 0/0 guard case."""
-    tune(spark)
     e, c1 = _lloyd_chain(spark, sf_dir)
     a2 = _assign(e, c1).localCheckpoint(eager=True)
     c2 = _centroids(a2)
@@ -1313,7 +1302,6 @@ def llm_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     scatter rollup; the pair matrix is k x k — metadata-sized. The
     shape is identical for k in the tens of thousands (the pair
     matrix then shards by cluster-id range)."""
-    tune(spark)
     e, c1 = _lloyd_chain(spark, sf_dir)
     a2 = _assign(e, c1).localCheckpoint(eager=True)
     c2 = _centroids(a2).localCheckpoint(eager=True)
@@ -1450,7 +1438,6 @@ def llm_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment), the contingency is k x |labels| — tiny — and the
     pair-count sums are combinable integer rollups over it.
     Everything upstream is the proven Lloyd shape."""
-    tune(spark)
     e, c1 = _lloyd_chain(spark, sf_dir)
     a2 = _assign(e, c1)
     labels = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 # 4-token shingles; benchmark probe set = every 53rd doc (deterministic,
 # ~2% of corpus — the size class of a real eval suite vs a crawl). 5-grams
@@ -81,7 +80,6 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     suites are bounded (MBs) no matter how big the crawl is, so the join
     is map-side against 100 TB of train shingles — no shuffle of the big
     side at all. The n-gram count per doc is len(t) - k + 1, linear."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", "source", F.split(F.lower("text"), " ").alias("t"))
     sh = (
@@ -150,7 +148,6 @@ def llm_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000-executor packing job must run (a single ORDER BY over 100 TB of
     docs would serialize on one reducer). Shard count becomes the output
     shard manifest; determinism comes from the (shard, doc_id) order."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
@@ -207,7 +204,6 @@ def llm_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB — the llm_tfidf lesson); AQE may still choose broadcast at
     small scale. The corpus total is a 1-row plan, broadcast-crossed, not
     an eager .count() (no second pass over the data)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
     per_doc = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
@@ -277,7 +273,6 @@ def llm_dataset_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same expression applied as a FILTER instead of a report is the
     production sampler. 16-bit hash slice keeps the uniform exact in both
     engines (no float64 precision loss)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     rate = _tier_weight()
     u = (
@@ -345,7 +340,6 @@ def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     by count bucket and rank within (the documented RFM/percent_rank
     rewrite). Tier membership is a broadcast 4-row cross — every tier
     reads the one ranked pass."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
     cnt = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
@@ -411,7 +405,6 @@ def llm_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale) — the heavy data contributes exactly one aggregate pass.
     Deterministic; pairs with llm_dataset_mix's md5 sampler to make
     the full temperature pipeline reproducible."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     n = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     wall = Window.partitionBy()
@@ -474,7 +467,6 @@ def llm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row broadcast. In production the same expression feeds
     df.write.partitionBy(shard) / repartition(shard) so manifest and
     layout can never disagree."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     assign = d.select(
         (
@@ -534,7 +526,6 @@ def llm_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gram join keys on xxhash64(ng) (fixed 8 bytes, not the span text)
     and the gram→count table stays shuffled, never broadcast (vocabulary-
     sized — the llm_tfidf lesson)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split(F.lower("text"), " ").alias("t")).filter(
         F.size("t") >= _SPAN_N
@@ -591,7 +582,6 @@ def llm_entropy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_repetition_filter. Two map-side-combinable aggregates keyed on
     (doc_id, char) then doc_id — alphabet size bounds state, so the
     second agg is ≤ |alphabet| rows per doc regardless of doc length."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     cc = (
         d.select("doc_id", F.explode(F.split("text", "")).alias("c"))
@@ -635,7 +625,6 @@ def llm_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots. One window shuffle on the cap key. At 100 TB, rank with a
     two-level top-k (per-partition heap then per-key merge) when a single
     domain's rows exceed one task — the win_topk_per_group rewrite."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.md5("text"), F.col("doc_id"))
     return (
@@ -668,7 +657,6 @@ def llm_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size, so at 100 TB this is one
     map-side-combinable aggregate over the token stream — the iterative
     merge loop re-runs it on the re-paired stream per merge round."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     words = d.select(F.explode(F.split(F.lower("text"), " ")).alias("w")).filter(
         F.length("w") >= 2
@@ -725,7 +713,6 @@ def llm_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — the llm_tfidf lesson does not apply when the feature space is
     hashed to a fixed width). Everything else is two map-side-combinable
     aggregates and one bucket-keyed join."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     bk = (
         d.select("doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
@@ -800,7 +787,6 @@ def llm_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     (3) global_pos = per-stage rank + the stage's offset from a 4-row
     cumulative-sum window joined back via broadcast. No single-partition
     window ever touches the corpus-sized side."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     th = docs.agg(
         F.percentile("n_chars", F.lit(0.25)).alias("q1"),
@@ -874,7 +860,6 @@ def llm_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window; shard routing is the hash itself, so the
     write is one partitionBy(epoch, shard) with files already in final
     order."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     epochs = docs.crossJoin(
         spark.range(_N_EPOCHS).select(F.col("id").cast("int").alias("epoch"))
@@ -938,7 +923,6 @@ def llm_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     id (here doc_id; in production the text digest) keeps membership
     stable under re-crawls — positional ids would reassign on any
     upstream reorder."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -1008,7 +992,6 @@ def llm_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     size. The bucket boundary is a static CASE ladder, not
     pow(2, ceil(log2(n))): integer-exact on every engine, immune to the
     log-of-power-of-two FP boundary bug."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     cap = _LEN_BUCKETS[-1]
     n_tok = F.least(F.size(F.split("text", " ")).cast("long"), F.lit(cap))
@@ -1076,7 +1059,6 @@ def llm_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     trafilatura-class parsers) needs the Arrow-batched mapInPandas
     path (llm/multimodal.py pattern) because it is library code, not
     an expression."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     wrapped = d.select(
         "source",
@@ -1156,7 +1138,6 @@ def llm_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoint choice with dual row_number CTEs (the evt_ohlc pattern).
     At 100 TB 'source' is the prompt/domain key (millions of groups,
     unskewed agg) — never a per-group sort or window over the corpus."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = F.split("text", " ")
     q = d.select(
@@ -1228,7 +1209,6 @@ def llm_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     then pure arithmetic. Pairs
     with llm_dataset_mix (the sampler that realizes the plan) and
     llm_epoch_shuffle (the order within each epoch)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     weight = _tier_weight()
     re_t = F.size(F.expr("regexp_extract_all(text, '[a-z]+|[0-9]+', 0)"))
@@ -1342,7 +1322,6 @@ def llm_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count keyed on the canonical hash, the cheapest dedup in the whole
     pipeline, which is exactly why real crawls run it first (every URL
     dropped here never reaches MinHash)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.when(F.col("doc_id") % 4 == 0, F.lit("HTTPS")).otherwise(F.lit("https")),
@@ -1438,7 +1417,6 @@ def llm_badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     into whatever scan precedes it; emitting the (doc_id, keep, frac)
     verdict instead of dropping rows lets the downstream mix audit
     count what the filter removed (the llm_gopher_rules convention)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tokens = F.size(toks)
@@ -1521,7 +1499,6 @@ def llm_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so re-running on the same snapshot yields byte-identical
     clean_text (the checkpoint-stability requirement in the module
     docstring)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("t"))
     segs = toks.select(
@@ -1618,7 +1595,6 @@ def llm_pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossed with the fixed 3-row ctx grid (broadcast), plus a
     shard-level (8-row) rollup for the packed side — no shuffle grows
     with ctx choices, and the curve costs one corpus pass."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         (F.col("doc_id") % 8).alias("shard"),

@@ -43,7 +43,6 @@ def llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     must shuffle *every* row and sort each hash partition. At 100 TB
     that's the difference between shuffling unique-digest counts and
     shuffling the whole corpus."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     digest = F.md5(F.lower(F.trim(F.col("text"))))
     return (
@@ -88,7 +87,6 @@ def llm_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
       per doc (the arrays are distinct, so this is an identity), instead
       of materializing array_distinct(concat(...)) per PAIR — that was
       half the per-pair array work."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -310,7 +308,6 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact all-pairs leg is the FIXTURE-SCALE acceptance gate (the
     same pattern as llm_ann_recall); at 100 TB only the LSH leg runs —
     signatures per-row, band-bucket equi-join, rescore candidates only."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -468,7 +465,6 @@ def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixes (bucketed Hamming search — llm_simhash_hamming), not
     all-pairs.
     """
-    tune(spark)
     return _simhash_frame(spark, sf_dir)
 
 
@@ -558,7 +554,6 @@ def llm_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     join output — the cheapest near-dup verify in the whole dedup
     deck. Radius {_SH_RADIUS} of {_SIMHASH_BITS} bits ~= 94% bit
     agreement, the standard crawl-dedup operating point."""
-    tune(spark)
     sim = _simhash_frame(spark, sf_dir)
     bands = sim.select(
         "doc_id",
@@ -644,7 +639,6 @@ def llm_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash-bucketed corpus."""
     from pyspark.sql import Window
 
-    tune(spark)
     base = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars", "text"
     )
@@ -720,7 +714,6 @@ def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch before the shuffle when the corpus is orders of magnitude
     larger than the batch — the incremental property is what makes
     dedup affordable per-ingest instead of per-corpus."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     digest = F.md5(F.lower(F.trim(F.col("text"))))
     corpus = (
@@ -779,7 +772,6 @@ def llm_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(DISTINCT text) inside a digest group only ever sees the
     handful of rows sharing a 128-bit digest. Run it per ingest batch;
     alert on n_collisions > 0."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "source", F.md5("text").alias("digest"), "text"
     )
@@ -861,7 +853,6 @@ def llm_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     generate pairs, the opposite failure mode of LSH's hot buckets —
     and exact scoring touches candidate pairs alone (broadcast at
     this SF; doc-keyed shuffles at scale)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     sh = d.filter(
         F.size(F.split("text", " ")) >= _CONT_W

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 def decode_image_real(payload: bytes) -> dict:
@@ -90,7 +89,6 @@ def llm_multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     `format` is fake-decoder-internal (md5-bit parity) — excluded from the
     verified projection, asserted in tests instead.
     """
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     binary = d.select(
         "doc_id",
@@ -192,7 +190,6 @@ def llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel map work — no shuffle; batch size is bounded
     by spark.sql.execution.arrow.maxRecordsPerBatch so a partition of
     large blobs never materializes at once."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     binary = d.select("doc_id", F.encode(F.col("text"), "utf-8").alias("payload"))
     schema = (

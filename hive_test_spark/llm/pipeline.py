@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from hive_test_spark.io import load_table, side
 from hive_test_spark.registry import register
-from hive_test_spark.session import fanout, tune
+from hive_test_spark.session import fanout
 
 
 # ---------------------------------------------------------------------------
@@ -45,7 +45,6 @@ def llm_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. At scale this is a narrow per-row filter — no shuffle, fully
     pushed into the scan stage, and the sample rate tunes by widening the
     digit set (k/16) or taking more md5 chars (k/256, ...)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.filter(F.substring(F.md5("text"), 1, 1).isin("0", "1")).select(
         "doc_id", "lang", "n_chars"
@@ -71,7 +70,6 @@ def llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.sampleBy, is seeded-random and not reproducible across engines).
     At 100 TB: rates usually come from a small per-stratum config dim —
     broadcast-join it and compare the hash digit against the row's rate."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     digit = F.substring(F.md5("text"), 1, 1)
     keep = F.when(F.col("lang") == "en", digit == "0").otherwise(
@@ -343,7 +341,6 @@ def llm_minhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
       components (llm_dedup_clusters below) and emits one representative
       per cluster instead of all pairs.
     """
-    tune(spark)
     return _minhash_verified_pairs(spark, sf_dir)
 
 
@@ -410,7 +407,6 @@ def llm_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm_minhash_det) runs once to bootstrap; this op is every
     subsequent ingest tick. Index freshness: accepted docs append
     their band rows (insert-only, no rebuild)."""
-    tune(spark)
     toks, bands = _minhash_bands(spark, sf_dir)
     # Materialized once (r13): both probe sides filter from ONE banded
     # index, so the corpus-wide signature aggregation runs once instead
@@ -592,7 +588,6 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence check is an aggregate (one boolean), not a collect of
     data rows.
     """
-    tune(spark)
     # Materialized once (r13): the CC loop issues ~2 jobs per round and
     # each re-optimized the full candidate+verify lineage behind the
     # persisted edge cache; a checkpoint leaf cuts that replanning
@@ -714,7 +709,6 @@ def llm_chunk_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode → substring. Narrow (no shuffle); output row count is
     len/stride per doc, so the stage streams at any scale. Token-based
     chunking swaps substring for slice() over the split-token array."""
-    tune(spark)
     # Guard: an empty text gives n_chunks_minus1 = -1, where Spark's
     # sequence(0, -1) DESCENDS to [0, -1] (two bogus rows) while the
     # oracle's generate_series is empty — the llm_rouge_overlap
@@ -772,7 +766,6 @@ def llm_stopword_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pass 1 is an explode + map-side-combinable count + global
     top-K (tiny result); pass 2 is a broadcast cross-join of a 1-row
     stoplist — no shuffle touches the corpus itself."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     counts = (
         d.select(F.explode(F.split("text", " ")).alias("token"))
@@ -829,7 +822,6 @@ def llm_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended first (a pure projection) — the redaction stage itself is
     exactly what runs on real data. Narrow per-row regex work, JVM-side
     (codegen'd), no Python in the loop; at 100 TB this is scan-bound."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.col("text"),
@@ -903,7 +895,6 @@ def llm_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     and output is a narrow per-row expansion. frame_idx is the source
     frame number, so downstream temporal ops (clip assembly, scene splits)
     keep their anchor."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     binary = d.select("doc_id", F.encode("text", "utf-8").alias("payload"))
     schema = "doc_id long, frame_idx long, frame_md5 string, frame_len long"
@@ -926,7 +917,6 @@ def llm_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     committing a destructive dedup — at 100 TB you look at this table
     (tiny: one row per distinct cluster size) before dropping petabytes.
     Two map-side-combinable aggregations over the cluster labels."""
-    tune(spark)
     labels = llm_dedup_clusters(spark, sf_dir)
     sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -989,7 +979,6 @@ def llm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fingerprint, then lang) — no stage needs the full corpus on one
     node, and checkpointing between stages is a cache() choice, not a
     rewrite."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower("text"), " ")
     quality = 0.5 * F.least(F.col("n_chars") / 300.0, F.lit(1.0)) + 0.5 * (
@@ -1088,7 +1077,6 @@ def llm_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates come from the (band, bkey) equi-self-join per config —
     bucket-bounded, never all-pairs, identical to the production
     near-dedup shape it tunes."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     # One signature build (the shared _minhash_sig_from chain) feeds all
     # three configs: checkpoint it.
@@ -1210,7 +1198,6 @@ def llm_dedup_method_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg by unioning another pair frame."""
     from hive_test_spark.llm.similarity import _with_norm, cosine
 
-    tune(spark)
     tok = _minhash_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
     a = e.select(
@@ -1325,7 +1312,6 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     steepening drop_share between adjacent τ values is the signal the
     threshold sits on a duplicate-density cliff — exactly what you
     want to know before deleting 10% of a corpus."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     # r13: the sweep now rides the WIDE signature chain (one aggregation,
     # band keys by projection — the llm_minhash_det shape) instead of the
@@ -1458,7 +1444,6 @@ def llm_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one row, K columns) signature table — candidate-bounded like every
     stage of the chain, no K× row blow-up; the exact leg exists only
     for the audit and is exactly the cost the estimator would remove."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks, mins = _minhash_wide(d)
     toks = toks.localCheckpoint(eager=True)
@@ -1554,7 +1539,6 @@ def llm_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a left-join + combinable count on the doc key. Feeds
     llm_domain_cap (the enforcement half) and llm_dataset_mix (the
     reweighting half)."""
-    tune(spark)
     pairs = _minhash_verified_pairs(spark, sf_dir)
     dup_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -1619,7 +1603,6 @@ def llm_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     is on doc_id (the storage key). Beyond the CC labels the op adds
     ONE shuffle. Weights are exact reciprocals of integers, rounded at
     emission — engine-independent by construction."""
-    tune(spark)
     labels = llm_dedup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
@@ -1691,7 +1674,6 @@ def llm_cluster_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded) verified-pair set and the label table, then a rollup on
     the tiny cluster-size domain — nothing quadratic beyond what the
     LSH candidate generation already bounded."""
-    tune(spark)
     # ONE verified-pairs pass (r12): checkpointed, then shared by the CC
     # labels and the density numerator — previously the whole candidate
     # + verify chain ran twice (once inside llm_dedup_clusters, once

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
+from hive_test_spark.operators.analytics import midrank
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 # Repetition thresholds (Gopher App. A uses duplicate-n-gram fractions;
 # tuned to the fixture corpus so the flag actually discriminates:
@@ -111,7 +111,6 @@ def llm_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc key, so 100 TB of text never shuffles more than its gram counts.
     The two signal branches join on doc_id (co-partitioned aggregates;
     AQE picks the local strategy)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split(F.lower("text"), " ").alias("t"))
     ng2 = toks.filter(F.size("t") >= 2).select(
@@ -178,7 +177,6 @@ def llm_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map pass; the rollup is a single map-side-combinable aggregate
     on the low-cardinality source key. At 100 TB this is scan-bound, the
     optimal shape."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     t = F.split(F.lower("text"), " ")
     wc = F.size(t)
@@ -252,7 +250,6 @@ def llm_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000 executors the per-language sorts parallelize; skew (en >> rest)
     is bounded by per-language volume, the same skew CCNet itself
     shards by."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("tok")
@@ -330,7 +327,6 @@ def llm_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     dequantized value round(x/s)*s is recomputed from x inline rather
     than materializing a second array column — cheaper than shuffling
     two copies of every vector."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = F.transform("embedding", lambda x: x.cast("double"))
     v = emb.select("label", e.alias("e"))
@@ -409,7 +405,6 @@ def llm_embed_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined). This audit is the cheap precondition that makes the
     expensive ops trustworthy — run it per ingest batch, diff the
     norm envelope across batches to catch encoder drift."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings")
     sq = F.aggregate(
         "embedding",
@@ -479,7 +474,6 @@ def llm_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is a pure map stage that fuses into whatever scan or
     filter precedes it; per-row cost is O(tokens x |lexicon|) with the
     lexicon in L1."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     kw_arr = ", ".join(f"'{k}'" for k in _CODE_KWS)
     t = d.select(
@@ -568,7 +562,6 @@ def llm_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bounded, so the joined mass is |pairs|·doc_len, never
     corpus-wide. The F.broadcast on the pairs frame keeps the gram-side
     scan shuffle-free."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     ids = d.select("doc_id")
     pairs = (
@@ -717,7 +710,6 @@ def llm_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute-domain product, not row count, so the second stage is
     dimension-sized. The FILTER-ed aggregates compile to
     count(CASE WHEN) — no second scan per metric."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     qi = c.select(
         "c_mktsegment",
@@ -802,7 +794,6 @@ def llm_judge_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — scan-bound; the kappa arithmetic is a 1-row epilogue. The
     same dataflow scores (human, model) or (model, model) label pairs
     by swapping the rater expressions for label columns."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     j1, j2 = _judge_preds()
     rated = d.select(
@@ -883,7 +874,6 @@ def llm_ensemble_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     (item, judge, label) long-form model outputs turns the map into a
     pivot on the item key (the agg_pivot shape) with no other
     change."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     j1, j2 = _judge_preds()
     votes = d.select(
@@ -959,7 +949,6 @@ def llm_eval_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; the interval math adds zero distributed work. Swapping the
     rule verdict for a model-grade column reports real eval runs with
     no other change."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     j1, _ = _judge_preds()
     rated = d.select("lang", j1.cast("int").alias("pass"))
@@ -1047,7 +1036,6 @@ def llm_otsu_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤{_OTSU_BINS} rows). This is the general recipe for
     histogram-functional optimization (Otsu, entropy thresholds,
     quantile sketches): reduce once, optimize on the reduction."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     t = F.split(F.lower("text"), " ")
     score = F.size(F.filter(t, lambda x: x.isin(*_STOPWORDS))).cast("double") / F.size(t)
@@ -1147,7 +1135,6 @@ def llm_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a per-group epilogue on exact integers — bit-identical in both
     engines, no floating accumulation at all until the final
     division chain."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     problems = d.filter(F.col("doc_id") % _PAK_PROBLEM_MOD == 0).select(
         F.col("doc_id").alias("problem_id"),
@@ -1283,7 +1270,6 @@ def llm_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: battles reduce to the player-pair dimension before any
     iteration (map-side combinable); every MM round runs on |players|²
     rows — leaderboard-sized however many battles stream in."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     t = F.split(F.lower("text"), " ")
     q = F.size(F.filter(t, lambda x: x.isin(*_STOPWORDS))).cast("double") / F.size(t)
@@ -1433,7 +1419,6 @@ def llm_best_of_n_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank is a per-problem window over N rows, the weight join is a
     broadcast of ≤|sweep|·N literal rows, and the curve reduces
     map-side per (problem, n)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     problems = d.filter(F.col("doc_id") % _PAK_PROBLEM_MOD == 0).select(
         F.col("doc_id").alias("problem_id")
@@ -1529,7 +1514,6 @@ def llm_judge_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant moment state per judge, so the scorecard is scan-bound
     (the evt_power_analysis shape). Swapping rule verdicts for model
     grades audits real judges unchanged."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     j1, j2 = _judge_preds()
     rated = d.select(
@@ -1612,7 +1596,6 @@ def llm_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the evt_benford shape); the ECE epilogue runs over the bin
     dimension. Swapping conf/label for model scores and graded truth
     audits real classifiers unchanged."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     _, _, stop_frac, _ = _text_signals()
     j1, _ = _judge_preds()
@@ -1703,7 +1686,6 @@ def llm_eval_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: scan-bound single aggregate — and the shape is the
     point: paired eval comparison at corpus scale needs ONE pass over
     the joined verdicts, never per-item driver loops."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     j1, j2 = _judge_preds()
     rated = d.select(j1.cast("int").alias("a"), j2.cast("int").alias("b"))
@@ -1784,7 +1766,6 @@ def llm_grpo_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combinable (S, Q) rollup keyed on prompt_id followed
     by a same-key join back — with prompt-bucketed rollout storage the
     join co-locates and the whole normalization is shuffle-once."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     prompts = d.filter(F.col("doc_id") % _GRPO_PROMPT_MOD == 0).select(
         F.col("doc_id").alias("prompt_id"),
@@ -1913,7 +1894,6 @@ def llm_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe. With a continuous score, bin to fixed precision first
     (the rollup already rounds to 6 decimals), which bounds the
     ordered pass by the grid size, not the corpus."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     _, _, stop_frac, _ = _text_signals()
     j1, _ = _judge_preds()
@@ -1926,15 +1906,7 @@ def llm_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.sum("label").alias("n_pos"))
     )
     # Bounded ordered pass over the distinct-score grid (never the corpus).
-    rank_win = Window.orderBy("conf").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_score.select(
-        "n",
-        "n_pos",
-        (
-            F.coalesce(F.sum("n").over(rank_win), F.lit(0))
-            + (F.col("n") + 1) / 2.0
-        ).alias("avg_rank"),
-    )
+    ranked = per_score.select("n", "n_pos", midrank("n", "conf").alias("avg_rank"))
     tot = ranked.agg(
         F.sum("n_pos").cast("bigint").alias("n1"),
         F.sum(F.col("n") - F.col("n_pos")).cast("bigint").alias("n0"),
@@ -2004,7 +1976,6 @@ def llm_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group map over |lang x source| rows. Per-release epsilon and
     sensitivity ride along as the budget-ledger columns an auditor
     sums across releases."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     noise = _DP_NOISE.format(eps=_DP_EPS, u=_DP_U_SPARK)
     return (

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import fanout, tune
+from hive_test_spark.session import fanout
 
 # JVM-side vector math over array<float> (cast to double element-wise).
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
@@ -192,7 +192,6 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic tie-break on neighbor_id."""
     from pyspark.sql import Window
 
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
     scored = _probe_cosines(e, N_PROBES, "probe_id", "neighbor_id")
     w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
@@ -222,7 +221,6 @@ def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffle on label, pairs only within block)."""
     from pyspark.sql import Window
 
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
     a = e.select(
         F.col("vec_id").alias("query_id"), "label",
@@ -258,7 +256,6 @@ def llm_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings are weakly clustered, max intra-label cos ≈ 0.475), blocked by
     label. At 100 TB the same query runs per LSH/IVF bucket instead of
     per label — identical DataFrame shape, coarser blocking key."""
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
     a = e.select(
         F.col("vec_id").alias("vec_a"), "label",
@@ -318,7 +315,6 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
 
     centroids = _label_centroids(spark, sf_dir)
@@ -439,7 +435,6 @@ def llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs, so total cost is O(N) + O(collisions), never O(N^2).
     Hyperplanes are derived from a pure integer formula (no RNG), which is
     what makes the whole pipeline oracle-able and re-runnable."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings")
     sig = e.select(
         "vec_id",
@@ -532,7 +527,6 @@ def llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is pair-keyed and tiny. Evaluating on a sampled probe panel
     instead of the full corpus is exactly how recall is estimated at
     scale."""
-    tune(spark)
     lsh = llm_ann_lsh(spark, sf_dir).select("id_a", "id_b")
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
     exact = (
@@ -600,7 +594,6 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     into sub-clusters — the same op applied within the cell."""
     from pyspark.sql import Window
 
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
 
     centroids = _label_centroids(spark, sf_dir)
@@ -699,7 +692,6 @@ def llm_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, turning O(anchors x N) into O(anchors x bucket). Label
     lookup is carried on the scored row so positives/negatives split
     without a second join."""
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
     scored = _probe_cosines(
         e,
@@ -774,7 +766,6 @@ def llm_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed plan itself; the eval join is (probe, neighbor)-keyed and
     k x |panel| rows. Recall@k on a sampled probe panel is exactly how
     an index build is accepted before a 100 TB backfill trusts it."""
-    tune(spark)
     exact = llm_cosine_topk(spark, sf_dir).select("probe_id", "neighbor_id")
     ivf = llm_ann_ivf(spark, sf_dir).select(
         "probe_id", "neighbor_id", F.lit(1).alias("hit")
@@ -895,7 +886,6 @@ def llm_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream shape."""
     from pyspark.sql import Window
 
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
     rels = _probe_cosines(
         e, N_PROBES, "query_id", "vec_id", sim="rel", d_keep=("v_emb", "v_norm")
@@ -1110,7 +1100,6 @@ def llm_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     real-system contract (rankers return pools, fusion sees pools)."""
     from pyspark.sql import Window
 
-    tune(spark)
     lex_scored = _bm25_lex_scores(spark, sf_dir, _RRF_QTOKENS)
     w_lex = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
     lex = (
@@ -1215,7 +1204,6 @@ def llm_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     swaps the gains CTE for the label join — no shape change."""
     from pyspark.sql import Window
 
-    tune(spark)
     lex_scored = _bm25_lex_scores(spark, sf_dir, _NDCG_QTOKENS)
     w_lex = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
     lex = (
@@ -1306,7 +1294,6 @@ def llm_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: D
     neighbor key either way."""
     from pyspark.sql import Window
 
-    tune(spark)
     e = _with_norm(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", "norm"
     )
@@ -1384,7 +1371,6 @@ def llm_embed_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: the explode is width×rows but each row is (int,
     double); the aggregate reduces to dim-count rows before the
     shuffle. Scan-bound — the optimal shape."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings")
     comp = e.select(F.posexplode("embedding").alias("pos0", "v")).select(
         (F.col("pos0") + 1).alias("pos"), F.col("v").cast("double").alias("v")
@@ -1466,7 +1452,6 @@ def llm_mixup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle family, no products); the blend and norms are narrow
     higher-order expressions. A cross-label mix fraction falls out of
     the same_label column for label-smoothing bookkeeping."""
-    tune(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -1592,7 +1577,6 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the k × |panel| ground-truth rows. The sweep reuses one routed
     ranking, so the whole curve costs one routing pass plus
     len(sweep) cell scans."""
-    tune(spark)
     from pyspark.sql import Window
 
     e = _with_norm(load_table(spark, sf_dir, "embeddings"))
@@ -1755,7 +1739,6 @@ def llm_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     label join — no shape change."""
     from pyspark.sql import Window
 
-    tune(spark)
     lex_scored = _bm25_lex_scores(spark, sf_dir, _MRR_QTOKENS)
     w_lex = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), "doc_id"
@@ -1891,7 +1874,6 @@ def llm_precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     label join, unchanged shape."""
     from pyspark.sql import Window
 
-    tune(spark)
     lex_scored = _bm25_lex_scores(spark, sf_dir, _PRK_QTOKENS)
     w_lex = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), "doc_id"

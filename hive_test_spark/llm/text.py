@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -36,7 +35,6 @@ from hive_test_spark.session import tune
 def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus statistics per (lang, source): doc counts, token counts,
     length distribution."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     ntok = F.size(F.split("text", " "))
     return d.groupBy("lang", "source").agg(
@@ -76,7 +74,6 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     two hash-aggs + one broadcast-able df join — linear at scale."""
     from pyspark.sql import Window
 
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     # N as a broadcast 1-row plan (no separate driver-side count job —
     # at 100 TB an eager .count() would be a second full pass).
@@ -130,7 +127,6 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality gate: length bounds, language allowlist, charset
     check, minimum lexical diversity — all pushdown-friendly predicates."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.filter(
         F.col("n_chars").between(150, 400)
@@ -159,7 +155,6 @@ def llm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score: length saturation, lexical diversity,
     stopword ratio — the standard pretraining-corpus heuristics."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     ntok = F.size(toks).cast("double")
@@ -212,7 +207,6 @@ def _marker_sql(lang: str) -> str:
 def llm_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic: marker-token hit counts with a deterministic
     priority argmax (en > es > de on ties, 'und' when no markers hit)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
 
     def hits(lang: str):
@@ -249,7 +243,6 @@ def llm_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace split vs BPE-ish regex tokenizer
     ([a-z]+|[0-9]+ word pieces), plus chars-per-token — the standard
     pretraining budget metric."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     re_tokens = F.size(F.expr("regexp_extract_all(text, '[a-z]+|[0-9]+', 0)"))
     return d.select(
@@ -290,7 +283,6 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: minimum 48-bit md5 hash over 3-token shingles
     (1-permutation MinHash / winnowing-style). Shared fingerprint ⇒
     near-dup candidate bucket. Pure JVM array HOFs, narrow pipeline."""
-    tune(spark)
     # Guard: Spark's sequence(0, n-3) DESCENDS for <3-token docs (and a
     # negative i crashes slice), while DuckDB's range(1, n-1) is empty —
     # the llm_rouge_overlap divergence class. Filter both sides.
@@ -337,7 +329,6 @@ def llm_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable, and the final top-k compiles to TakeOrderedAndProject —
     per-partition heaps, no global sort shuffle. Spark arrays are
     0-indexed vs DuckDB's 1-indexed; both sides index explicitly."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(F.split(F.col("text"), " ").alias("t")).filter(F.size("t") >= 2)
     bigrams = toks.select(
@@ -394,7 +385,6 @@ def llm_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     are VOCABULARY-sized and deliberately not broadcast (the llm_tfidf
     lesson); AQE may still broadcast at toy scale. Everything shuffles
     counts, never text."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split(F.lower("text"), " ").alias("t"))
     bg = toks.filter(F.size("t") >= 2).select(
@@ -470,7 +460,6 @@ def llm_topic_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg is vocabulary-sized, not corpus-sized."""
     from pyspark.sql import Window
 
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
     src = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
@@ -573,7 +562,6 @@ def llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     with thousands of merges would fold the merge loop into one
     executor-side trie pass (pandas_udf) — same plan shape, the map
     stage just gets a constant factor heavier."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w"))
@@ -620,7 +608,6 @@ def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     three times. The token proxy stays a codegen'd string expression;
     swapping in a real tokenizer moves it to llm_token_count's path
     without touching this plan."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     return (
         d.rollup("source", "lang")
@@ -681,7 +668,6 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (10^5-10^6 rows) — the global rank window is a dimension-scale
     sort, and the regr_* aggregates are single-pass partial+final, so
     no stage touches corpus-cardinality data twice."""
-    tune(spark)
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
@@ -761,7 +747,6 @@ def llm_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus frequency first (the tail contributes negligibly to JS).
     The two cross joins are broadcast marginals, audited intentional —
     never corpus×corpus."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     st = (
         d.select("source", F.explode(F.split("text", " ")).alias("token"))
@@ -832,7 +817,6 @@ def llm_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     application, so run it on every labeled holdout shard. The same
     long-form matrix shape serves any classifier gate (quality,
     toxicity, format) with a labeled sample."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
 
     def hits(lang: str):
@@ -929,7 +913,6 @@ def llm_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bucketed shape as llm_span_dedup; at 100 TB the fingerprint
     groupBy is map-side combinable and the join back to docs is an
     equi-shuffle on a high-entropy hash key (no skew by construction)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("tok")).filter(
         F.size("tok") >= _WINNOW_K + _WINNOW_W - 1
@@ -1000,7 +983,6 @@ def llm_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow projection (lang, three token counters) — one shuffle of
     |langs| rows. Ratio-of-sums (not avg-of-ratios) on both sides, so
     long docs weigh proportionally."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     ws = F.size(F.split("text", " "))
     re_t = F.size(F.expr("regexp_extract_all(text, '[a-z]+|[0-9]+', 0)"))
@@ -1177,7 +1159,6 @@ def llm_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     force-broadcast, the llm_tfidf OOM lesson."""
     from pyspark.sql import Window
 
-    tune(spark)
     scored, _, _, _, _ = _bm25_corpus_scored(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
     return (
@@ -1252,7 +1233,6 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a broadcast candidate; AQE may still elect one at small SF).
     The two 1-row totals ride broadcast nested loops. Top-k compiles
     to TakeOrderedAndProject."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(F.split("text", " ").alias("t")).filter(F.size("t") >= 2)
     # uni feeds three branches (total + both marginals) and big_all two
@@ -1348,7 +1328,6 @@ def llm_prompt_template_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash, no shuffle at all; the template rides into the plan as a
     literal. Composes upstream of llm_pack_sequences (budgeting) and
     llm_chunk_split (long docs)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     sys_msg = F.expr(f"replace('{_TMPL_SYSTEM}', '{{lang}}', lang)")
     user_msg = F.expr(
@@ -1406,7 +1385,6 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; the join keys on the gram dimension and stays un-broadcast
     (web-scale gram vocabularies are not broadcast candidates — the
     llm_tfidf rule); final rollup re-keys on doc_id."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     dg = (
         # Guard: sequence(1, n-1) DESCENDS for <2-token docs in Spark
@@ -1493,7 +1471,6 @@ def llm_prefix_cache_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
     |depths|, not token count. At serving scale the same query runs
     over the request log stream (stream_tumbling_window's shape) with
     the prefix hashed (xxhash64) instead of carried verbatim."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("t"))
     depths = spark.sql(
@@ -1585,7 +1562,6 @@ def llm_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a left-anti join on (query, token)."""
     from pyspark.sql import Window
 
-    tune(spark)
     scored, tf, docfreq, stats, queries = _bm25_corpus_scored(spark, sf_dir)
     idf = F.log(
         (F.col("n_docs") - F.col("dfreq") + 0.5) / (F.col("dfreq") + 0.5) + 1.0
@@ -1673,7 +1649,6 @@ def llm_watermark_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_ngram_stats shape; the z arithmetic is per-group constant
     work. A real deployment swaps md5 for the watermark key's PRF and
     runs the same plan over candidate scraped corpora."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     pairs = d.filter(F.size(F.split("text", " ")) >= 2).select(
         "doc_id",
@@ -1788,7 +1763,6 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     table every few hundred rounds and skip recount via pair-delta
     updates (only words containing the merged pair change — the
     SentencePiece optimization)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1913,7 +1887,6 @@ def llm_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics, like agg_corr_matrix."""
     from pyspark.sql import Window
 
-    tune(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("t")
     )
@@ -2007,7 +1980,6 @@ def llm_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrites → concat-compare) followed by one combinable 1-row
     rollup; zero shuffles before the final reduce, no Python
     anywhere."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w"))
@@ -2112,7 +2084,6 @@ def llm_bm25_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scores are 6dp-rounded before ranks; ties break on doc_id."""
     from pyspark.sql import Window
 
-    tune(spark)
     frames = _bm25_index_frames(spark, sf_dir)
     legs = []
     for k1, b in _BM25_GRID:
@@ -2248,7 +2219,6 @@ def llm_rank_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe panel, never the corpus."""
     from pyspark.sql import Window
 
-    tune(spark)
     frames = _bm25_index_frames(spark, sf_dir)
     queries = frames[4]
 
@@ -2346,7 +2316,6 @@ def llm_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit (type counts, then the per-unit census); the token-count
     frame is the one llm_tfidf/llm_zipf_fit already shuffle. No
     windows, no joins, nothing driver-side."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     uni = d.select(

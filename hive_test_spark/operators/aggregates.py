@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -38,7 +37,6 @@ from hive_test_spark.session import tune
 )
 def agg_groupby_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash group-by with count/sum/avg/min/max (partial+final agg)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("num_orders"),
@@ -62,7 +60,6 @@ def agg_groupby_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple exact DISTINCT aggregates (Expand-based multi-distinct plan)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("distinct_parts"),
@@ -104,7 +101,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB only the sketch runs (drop the exact column): partials
     are fixed-size register arrays merged on the 3-value flag key,
     versus COUNT(DISTINCT)'s expand + |parts|-sized shuffle."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     est = F.approx_count_distinct("l_partkey", rsd=_HLL_RSD)
     exact = F.count_distinct(F.col("l_partkey"))
@@ -144,7 +140,6 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     to '|'-joined strings: the driver's canonicalizer sorts result frames in
     pandas, and array cells (numpy.ndarray) are unhashable there — scalar
     string outputs keep the comparison exact (SURVEY.md §5.3 rule 3)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     return c.groupBy("c_nationkey").agg(
         F.array_join(F.array_sort(F.collect_list("c_mktsegment")), "|").alias("segments_all"),
@@ -167,7 +162,6 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS via the SQL front end (SURVEY.md §3.2 path 2) —
     single Expand node, one shuffle for all three grouping sets."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -197,7 +191,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH ROLLUP hierarchical subtotals via DataFrame API."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("int").alias("g_flag"),
@@ -220,7 +213,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH CUBE all-combination subtotals via DataFrame API."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("int").alias("g_flag"),
@@ -244,7 +236,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles (percentile_cont interpolation). At 100 TB use
     approx_percentile (t-digest) — exact percentile sorts each group."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_quantity", F.lit(0.25)), 6).alias("q25"),
@@ -268,7 +259,6 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical UDAF family: stddev/variance/corr/covar."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
@@ -289,7 +279,6 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAVING = post-aggregation filter over aggregate expressions."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
@@ -321,7 +310,6 @@ PIVOT_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY
 def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot-wide (Hive expresses this as a CASE-WHEN matrix). Explicit
     value list avoids the extra distinct-values job — mandatory at scale."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     piv = (
         c.groupBy("c_nationkey")
@@ -359,7 +347,6 @@ def agg_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n, Σx, Σy, Σxx, Σxy — all map-side-combinable partials), so a
     100 TB regression costs exactly one combinable agg pass: the whole
     point of in-engine OLS vs collect-and-fit."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT)").alias("n"),
@@ -411,7 +398,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition."""
     from pyspark.sql import Window
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     w = li.select(
         "l_returnflag",
@@ -463,7 +449,6 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     native mode() with unspecified tie-breaking cannot."""
     from pyspark.sql import Window
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     c = li.groupBy("l_returnflag", F.col("l_quantity").alias("v")).agg(
         F.count(F.lit(1)).alias("n")
@@ -504,7 +489,6 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     string is unbounded in group size — LISTAGG belongs on
     dimension-scale groups (here: 5 nations per region), never on fact
     keys; for fact-scale use the top-k window + join shape instead."""
-    tune(spark)
     n = load_table(spark, sf_dir, "nation")
     n.createOrReplaceTempView("hts_listagg_nation")
     return spark.sql(
@@ -548,7 +532,6 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand (4 replicas here) + one shuffle; gid is computed inside the
     Expand for free. The alternative (4 separate aggregates unioned)
     scans the fact 4 times."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.groupingSets(
@@ -593,7 +576,6 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     This key is the acceptance gate that makes the swap safe."""
     from pyspark.sql import Window
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
     approx = li.groupBy("l_returnflag").agg(
         F.approx_percentile("l_quantity", F.lit(0.5), F.lit(_APPROX_PCT_ACC)).alias("a50"),
@@ -656,7 +638,6 @@ def agg_histogram_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: O(b) state per group, map-side combinable — the reason
     it exists instead of exact bucketing when the domain is unknown;
     b controls the accuracy/state trade like HLL precision."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
     h = li.groupBy("l_returnflag").agg(
         F.expr(f"histogram_numeric(l_quantity, {_HN_BINS})").alias("bins"),
@@ -743,7 +724,6 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partials compress to ≤ d·w rows per partition); probes join the
     tiny counter table. Merging shards = summing counter tables —
     the same agg again."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("key")
     )
@@ -834,7 +814,6 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot runs on that single row, i.e. driver-free and shuffle-free.
     This is the in-engine alternative to collect-and-np.corrcoef, which
     dies at exactly the scale this repo targets."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     pairs = [(x, y) for i, x in enumerate(cols) for y in cols[i + 1 :]]
@@ -892,7 +871,6 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean²/variance ratio is O(1); for near-constant columns the
     streaming (Welford/co-moment) builtins are the right tool and
     agg_stats exhibits them."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("double")
     s = li.groupBy("l_returnflag").agg(
@@ -946,7 +924,6 @@ def agg_mean_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable like any AVG; the per-group finish is O(1) algebra.
     The positivity guard (x > 0) is a pushed-down scan predicate,
     keeping ln/reciprocal total-function-safe without ANSI traps."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
     x = F.col("l_quantity").cast("double")
     return li.groupBy("l_returnflag").agg(

@@ -9,12 +9,24 @@ codegen'd) with full DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
+
+
+def midrank(tie: str, order: str, *partition: str) -> Column:
+    """Tied-rank rule over a per-distinct-value frame: the rows before this
+    value (the prefix sum of ``tie`` in ``order``, per ``partition``) plus
+    ``(tie + 1) / 2``. Every rank is an exact multiple of 0.5, so rank sums
+    are exact in IEEE double whatever the partition order."""
+    w = (
+        Window.partitionBy(*partition)
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return F.coalesce(F.sum(tie).over(w), F.lit(0)) + (F.col(tie) + 1) / 2.0
 
 
 @register(
@@ -41,7 +53,6 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregations + one equi-join on user_id with a pushed time
     range — at 100 TB both sides shuffle on user_id once; the events scan
     prunes to the two event types at the reader (predicate pushdown)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     fv = (
         ev.filter(F.col("event_type") == "view")
@@ -92,7 +103,6 @@ def evt_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and self-joined on (user_id, day+1) — one shuffle each on the
     dedup and the join; day-bucketing keys are low-cardinality so the
     final aggregates broadcast."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("d")
@@ -139,7 +149,6 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the whole profile one map-side-combinable aggregation; at
     100 TB this is the standard first-pass distribution profile before
     choosing range-partition bounds."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(
@@ -198,7 +207,6 @@ def evt_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     portably via the grouped-carry trick (running COUNT of non-nulls as a
     group id, then MAX within the group) — same results as Spark's
     last(ignorenulls=True)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.date_trunc("day", F.min("ts")).alias("d0"),
@@ -260,7 +268,6 @@ def evt_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     event log by user_id and this becomes shuffle-free), then a tiny
     (|event_types|^2)-row aggregate; the probability window runs on that
     matrix, not on the raw events. Deterministic tie-break on event_id."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -317,7 +324,6 @@ def evt_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning — bucket by user_id at 100 TB and it's shuffle-free),
     both attribution columns ride the same window frame, then a tiny
     3-row rollup. Deterministic tie-break on event_id."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -400,7 +406,6 @@ def evt_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     -sized, ~10^8 at 100 TB: a single-key range partition sort, the
     documented percent_rank/approx-quantile rewrite applies beyond
     that); the raw 10^10-row order log never enters a global sort."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     anchor = o.agg(F.max("o_orderdate").alias("mx"))
     base = (
@@ -474,7 +479,6 @@ def evt_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling window runs on that tiny series partitioned by type. At
     100 TB the window input is still KBs; the plan's one real shuffle
     is the daily rollup."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -555,7 +559,6 @@ def evt_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after the first rollup is KB-sized. The per-arm user
     totals are a 2-row broadcast. No window, no skew (parity is
     uniform)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     users = ev.groupBy((F.col("user_id") % 2).alias("u_variant")).agg(
         F.countDistinct("user_id").alias("n_users")
@@ -654,7 +657,6 @@ def evt_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     event op here reuses), and all three horizons come from ONE joined
     pass via CASE — at 100 TB, 3 horizons cost the same shuffle as 1.
     The distinct-user count rides the cohort rollup."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     firstday = (
         ev.filter(F.col("event_type") == "purchase")
@@ -721,7 +723,6 @@ def evt_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies that SMALL dedup set, not the log. Both rollups shuffle
     on the day key; bounds are 1-row broadcasts. At 100 TB this is the
     textbook replacement for a per-day 7-day re-scan."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # ud feeds four branches (coverage, dau, both date bounds):
     # checkpoint once, scan the corpus once.
@@ -794,7 +795,6 @@ def evt_error_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     service/region key the moment one exists, as every other evt_* op
     here does). The FILTER-ed count shares the scan with the total —
     one pass, no self-join."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.count(F.lit(1)).alias("n_total"),
@@ -854,7 +854,6 @@ def evt_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     would shuffle the log twice more); the path rollup is
     |types|³-bounded (125 here), so the final top-k ranks a tiny
     table. Tie-break on path string."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -911,7 +910,6 @@ def evt_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the user_id shuffle) produces a 2-row arm table; the chi-square is
     driver-free 2-row arithmetic via broadcast cross join. Nothing
     scales with event volume except the first aggregate."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     arms = (
         ev.select(
@@ -1004,7 +1002,6 @@ def evt_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     hold in mind whenever a 'pipeline' is really a linear dataflow —
     fuse first, checkpoint only where reuse is real (llm_pipeline_e2e's
     docstring makes the same argument for the curation chain)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.select(
@@ -1120,7 +1117,6 @@ def evt_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-scale — same shape as evt_anomaly_zscore's
     rollup-before-window rule: NEVER window the raw log when the
     grouped series is bounded."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.col("ts").cast("date").alias("d"),
@@ -1218,7 +1214,6 @@ def evt_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the type alphabet, the classic safe self-join shape. The two
     totals joins are type-cardinality dimensions (broadcast). Same
     bounded-alphabet rule as evt_path_topk's |types|³ rollup."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # tu feeds three branches (tot + both join sides): checkpoint once,
     # scan the corpus once (the evt_market_basket convention).
@@ -1302,7 +1297,6 @@ def evt_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     (approx_percentile on n_ev, then a broadcast bucket join — the
     agg_approx_percentile contract covers the swap). The decile
     cumulative window is 10 rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_ev"))
     ranked = per_user.select(
@@ -1381,7 +1375,6 @@ def evt_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     series, partitioned by series key (one shuffle family, no global
     windows). For millions of series this is the map-reduce CUSUM: a
     per-key sort of ~10² points each."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1468,7 +1461,6 @@ def evt_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile (t-digest, mergeable, one pass, map-side combine)
     — the plan shape is otherwise identical, which is why the exact form
     is the oracle."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
@@ -1543,7 +1535,6 @@ def evt_covisitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^5 items would emit 5·10^9 pairs from a single task. A
     production variant lowers the cap or samples pairs per user;
     either way the bound is enforced BEFORE the join, never after."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     items = (
         ev.select(
@@ -1620,7 +1611,6 @@ def evt_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     user; no window function, no join, and a hot abuser with millions
     of events still reduces inside their partitions first. The
     streaming twin is stream_tumbling_window + a stateful flag."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     b = (
         ev.groupBy(
@@ -1701,7 +1691,6 @@ def evt_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     window repartitions on conv_id (second shuffle, rows already
     path-compressed), and the final channel rollup is map-side
     combinable on a tiny key domain."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     conv = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
@@ -1790,7 +1779,6 @@ def evt_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     a window over those 9 rows (one extra exchange of 9 rows, not a
     second scan). Nothing here grows with data volume except the scan
     itself."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
     digit = F.substring(
         F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1
@@ -1858,7 +1846,6 @@ def evt_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     evt_pareto_share documents). Ties carry identical revenue so block
     permutations cannot change the Σ(i·x_i) term; the final aggregate
     reduces to one row."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice"), 2).alias("revenue")
@@ -1936,7 +1923,6 @@ def evt_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk, and the DISTINCT-then-cap pattern from evt_covisitation is
     the documented escape hatch. Final top-20 compiles to
     TakeOrderedAndProject."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # Four branches (pair a/b, marginals, order total) reference the
     # basket frame; without truncation each re-scans lineitem (audit
@@ -2034,7 +2020,6 @@ def evt_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     event log. Spark's corr and DuckDB's corr are both sample Pearson,
     and the coefficient is rounded to 6dp to absorb summation-order
     float noise in the per-day sums."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # The self-join references the series twice; without truncation each
     # reference re-scans the raw events (audit showed two corpus passes).
@@ -2111,7 +2096,6 @@ def evt_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-bound, the optimal shape; the arithmetic is per-group
     constant work. stddev_samp is Spark's and DuckDB's shared
     definition (n−1 denominator)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_obs"),
@@ -2199,7 +2183,6 @@ def evt_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     evt_pareto_share trade-off; at true scale the sweep shards by
     coarse time range with per-shard carry-in offsets (a 2-pass
     prefix-sum — the evt_drawdown family note)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w_u = Window.partitionBy("user_id").orderBy("ts", "event_id")
     g = ev.select(
@@ -2283,7 +2266,6 @@ def evt_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is user-keyed (no broadcast needed, both sides user-dimension
     after reduction) and the final day rollup has a calendar-bounded
     key domain."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
     first_seen = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_day"))
@@ -2342,7 +2324,6 @@ def evt_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the 5-value type key; exact quantile buffers are bounded by
     per-group gap counts — at true scale swap percentile for
     approx_percentile (the agg_approx_percentile contract)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -2415,7 +2396,6 @@ def evt_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames only shrink (funnel survivors are monotone), and the final
     scorecard is a 1-row reduce. The ordering predicates are residual
     conditions on the equi-join, never driving a range join."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # Each stage frame feeds both the next stage and its own count
     # branch; checkpoint the user-dimension rollups so the event log is
@@ -2518,7 +2498,6 @@ def evt_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: a narrow map to a 168-value key then one map-side-
     combinable aggregate — partials compress each partition to ≤168
     rows before the shuffle; scan-bound like evt_benford."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     dow = (
         F.datediff(F.to_date("ts"), F.to_date(F.lit(_DOW_ANCHOR))) % 7
@@ -2572,7 +2551,6 @@ def evt_shipping_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. Exact quantiles bound by per-priority row counts; swap to
     approx_percentile at true scale (the agg_approx_percentile
     contract)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
     )
@@ -2629,7 +2607,6 @@ def evt_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides shuffle on the part key), then a map-side-combinable
     aggregate on the brand dimension; regr_* aggregates carry
     constant-size moment state per group."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_quantity") > 0) & (F.col("l_extendedprice") > 0)
     )
@@ -2697,7 +2674,6 @@ def evt_anova_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream operates on the ≤ calendar-sized day dimension — group
     means, the within/between sums, and the final 1-row scorecard are
     all metadata-sized."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy(
@@ -2799,7 +2775,6 @@ def evt_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag/lead/MA windows over the calendar-bounded series — at
     multi-series scale the windows partition by series id, the
     evt_rolling_median shape."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = ev.groupBy(
         F.to_date("ts").alias("day_d")
@@ -2884,7 +2859,6 @@ def evt_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — partials carry (n, mean, M2) per cell, so the scan is the
     whole cost; the DiD arithmetic is a 1-row epilogue over the
     pivoted cells."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         (F.col("user_id") % 2).cast("int").alias("treated"),
@@ -2985,7 +2959,6 @@ def evt_ols_multifactor(spark: SparkSession, sf_dir: str) -> DataFrame:
     epilogue. The same dataflow handles any regression on a bounded
     feature set; past ~20 features you switch to the iterative
     least-squares the reference architecture would hand to MLlib."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.round(
@@ -3106,7 +3079,6 @@ def evt_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     every iteration after runs on the states-dimension matrix —
     metadata-sized however large the log. PageRank is this loop with
     teleportation; the shared shape is the point."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -3202,7 +3174,6 @@ def evt_catalog_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     scorecard) — the evt_rate_limit shape — with the JSON extraction a
     narrow map; the per-item distinct-user count is the only Expand,
     bounded by item cardinality."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     inter = ev.select(
         F.get_json_object("props", "$.k").cast("bigint").alias("item"),
@@ -3296,7 +3267,6 @@ def evt_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     day series. The odd/even assignment carries no real effect, so a
     healthy trace mostly reads 'continue' — the calibration twin of
     evt_did's bounded-|t| pin."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("day_d"),
@@ -3385,7 +3355,6 @@ def evt_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass — the distinct-actives Expand is bounded by user
     cardinality), then a LAG window over the calendar-bounded weekly
     series."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     week = F.floor(
         F.datediff(F.to_date("ts"), F.to_date(F.lit("2024-01-01"))) / 7
@@ -3467,7 +3436,6 @@ def evt_propensity_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate carries constant moment state per covariate. The
     odd/even assignment should read balanced — the same calibrated
     null evt_did and evt_sprt pin."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("double").alias("n_events"),
@@ -3542,7 +3510,6 @@ def evt_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shuffle; point-in-time correctness costs nothing because
     trailing frames are leakage-free by definition (the join_asof
     family handles the cross-table as-of case)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.to_date("ts").alias("day_d")
@@ -3612,7 +3579,6 @@ def evt_retention_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned shuffle family; the (cohort, offset) rollup and the
     base join run on the weeks² grid, calendar-bounded however large
     the log."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     week = F.floor(
         F.datediff(F.to_date("ts"), F.to_date(F.lit(_DOW_ANCHOR))) / 7
@@ -3720,7 +3686,6 @@ def evt_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_stateful's shape: the recursion IS sequential per key, so
     at serving time you'd carry ewma in state rather than re-expand
     the closed form."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n")
@@ -3836,7 +3801,6 @@ def evt_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     |event_types|^{_PATH_STEPS}, and the final top-k is a
     single-partition window over that bounded dimension (the
     evt_pareto_share trade-off)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3944,7 +3908,6 @@ def evt_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Nothing driver-side, no window at all. The pre-period must be
     frozen BEFORE assignment in production; the deterministic split
     here stands in for that freeze."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cutoff = ev.agg(
         F.date_add(F.to_date(F.min("ts")), _CUPED_PRE_DAYS).alias("cutoff")
@@ -4098,7 +4061,6 @@ def evt_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     production the per-(unit, replicate) weights fold into a single pass
     with an array column; the explicit replicate rows here keep the
     oracle twin exact."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.sum("value").alias("user_value"))
     point = per_user.agg(
@@ -4200,7 +4162,6 @@ def evt_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed grid or approx-quantile sketch first — D error is bounded by
     grid resolution). The totals ride a 1-row broadcast; nothing
     driver-side."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # value IS NOT NULL before ranking: a NULL metric would land NULLS
     # FIRST in Spark's rank window but NULLS LAST in DuckDB's — the
@@ -4327,7 +4288,6 @@ def evt_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, then a 1-row reduction; pre-bucket a continuous metric to a
     fixed grid first (midranks within a bucket collapse to the bucket
     midrank, exactly the tie rule)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # value IS NOT NULL before ranking: a NULL metric would land NULLS
     # FIRST in Spark's rank window but NULLS LAST in DuckDB's — the
@@ -4341,15 +4301,7 @@ def evt_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").alias("ca"),
         F.count(F.lit(1)).alias("tie"),
     ).select("v", "ca", "tie")
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_v.select(
-        "ca",
-        "tie",
-        (
-            F.coalesce(F.sum("tie").over(w), F.lit(0))
-            + (F.col("tie") + 1) / 2.0
-        ).alias("avg_rank"),
-    )
+    ranked = per_v.select("ca", "tie", midrank("tie", "v").alias("avg_rank"))
     s = ranked.agg(
         F.sum("ca").cast("bigint").alias("na"),
         F.sum(F.col("tie") - F.col("ca")).cast("bigint").alias("nb"),
@@ -4453,7 +4405,6 @@ def evt_chi2_cramers(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, then everything lives on that bounded grid — broadcast
     marginal cross joins, audited intentional, never corpus×corpus.
     Scan prunes to two columns; scan-bound like evt_heatmap_dow_hour."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     x = ev.select(
         "event_type",
@@ -4583,7 +4534,6 @@ def evt_bayes_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadrature is a fixed {_BAYES_GRID}-row epilogue (a broadcast
     cross join against the 1-row counts and one bounded window) — the
     posterior math costs the same at any data scale."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     conv = ev.groupBy("user_id").agg(
         (F.col("user_id") % 2).alias("variant"),
@@ -4697,7 +4647,6 @@ def evt_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile_approx and the plan is otherwise unchanged; the exact
     form is kept here because the oracle pins interpolation
     semantics cross-engine."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
     )
@@ -4818,7 +4767,6 @@ def evt_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup (map-side combinable); the cohort anchor is a 1-row min;
     day-k membership is a user-keyed join against a {_RETFIT_MAX_K}-row
     broadcast grid; the OLS runs on ≤{_RETFIT_MAX_K} points."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.date_trunc("day", F.col("ts").cast("timestamp")).alias("d")
@@ -4934,7 +4882,6 @@ def evt_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnostics must consume the verified frame, not re-derive it)."""
     from hive_test_spark.registry import QUERIES
 
-    tune(spark)
     acf = QUERIES["evt_acf"](spark, sf_dir).filter(F.col("lag") <= _PACF_LAGS)
     w = acf.agg(
         *[
@@ -5032,7 +4979,6 @@ def evt_entropy_over_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass; the grid is |days| x |types| (calendar x enum —
     metadata-sized), the LAG pairs consecutive days per type in one
     tiny window, and the per-day reduction is a 5-term sum."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy(
         F.to_date("ts").alias("day"), "event_type"
@@ -5128,7 +5074,6 @@ def evt_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rel_week, treated) key carries (n, mean, M2) partials — the scan
     is the whole cost; the pivot, pre-period baseline (a 1-row
     broadcast), and per-week epilogue run on |weeks| rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         F.floor(
@@ -5243,7 +5188,6 @@ def evt_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid first — midranks within a bucket collapse to the bucket
     midrank, exactly the tie rule); everything after is a 5-group
     reduction with 1-row broadcast epilogues."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # value IS NOT NULL before ranking (the evt_mann_whitney rule —
     # NULLS FIRST/LAST divergence between the engines' rank windows).
@@ -5251,15 +5195,7 @@ def evt_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_v = ev.groupBy(F.col("value").alias("v")).agg(
         F.count(F.lit(1)).alias("tie")
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_v.select(
-        "v",
-        "tie",
-        (
-            F.coalesce(F.sum("tie").over(w), F.lit(0))
-            + (F.col("tie") + 1) / 2.0
-        ).alias("avg_rank"),
-    )
+    ranked = per_v.select("v", "tie", midrank("tie", "v").alias("avg_rank"))
     per_vt = ev.groupBy(F.col("value").alias("tv"), "event_type").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -5374,7 +5310,6 @@ def evt_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate for the moment sums, 1-row epilogue
     — the fact table is scanned twice and shuffled never (group key
     has 5 values; partial aggregation collapses everything)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy(F.col("event_type").alias("m_type")).agg(
         F.expr("percentile(value, 0.5D)").alias("med")
@@ -5492,7 +5427,6 @@ def evt_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     two broadcast-size rank joins, then a 1-row reduction — the
     evt_kruskal_wallis scale shape. Millions of series pairs would
     partition every stage by pair key with identical arithmetic."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # NULL guard (ADVICE r11): a NULL-summing (type, day) group would
     # enter the ORDER BY v rank window, which sorts NULLS FIRST in
@@ -5528,14 +5462,7 @@ def evt_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_v = base.groupBy(F.col(col).alias("v")).agg(
             F.count(F.lit(1)).alias("tie")
         )
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        return per_v.select(
-            "v",
-            (
-                F.coalesce(F.sum("tie").over(w), F.lit(0))
-                + (F.col("tie") + 1) / 2.0
-            ).alias("r"),
-        )
+        return per_v.select("v", midrank("tie", "v").alias("r"))
 
     rx = ranks("x").select(F.col("v").alias("xv"), F.col("r").alias("ra"))
     ry = ranks("y").select(F.col("v").alias("yv"), F.col("r").alias("rb"))
@@ -5660,7 +5587,6 @@ def evt_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     million-hypothesis family (per-SKU tests) keeps the identical
     shape — the BH windows run over the hypothesis dimension, which
     is what it is regardless of corpus size."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     )
@@ -5838,7 +5764,6 @@ def evt_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks parallelize on the partition key), and the epilogue is a
     K-row reduction. The day-completeness filter is a group-count
     semi-join on the same rollup — no second corpus scan."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     )
@@ -5861,18 +5786,10 @@ def evt_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = s.join(F.broadcast(full_days), "day")
     per_v = b.groupBy("day", "rev").agg(F.count(F.lit(1)).alias("tie"))
-    w = (
-        Window.partitionBy("day")
-        .orderBy("rev")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     ranked = per_v.select(
         F.col("day").alias("rday"),
         F.col("rev").alias("rrev"),
-        (
-            F.coalesce(F.sum("tie").over(w), F.lit(0))
-            + (F.col("tie") + 1) / 2.0
-        ).alias("r"),
+        midrank("tie", "rev", "day").alias("r"),
     )
     rk = b.join(
         ranked,
@@ -5972,7 +5889,6 @@ def evt_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     millions of series would partition by pair key. The O(n log n)
     merge-sort inversion count is the whale-series rewrite; the pair
     census IS the definition, kept while the frame is bounded."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # NULL guard (ADVICE r11): kept in lockstep with evt_spearman's
     # null-hardened contract — the integer pair census happens to
@@ -6130,7 +6046,6 @@ def evt_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     window + a 1-row epilogue — the evt_granger scale shape. Per-user
     or per-SKU runs tests partition the LAG window by series key with
     identical arithmetic."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     )
@@ -6258,7 +6173,6 @@ def evt_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     day) once; all windows run on the bounded per-series daily frame,
     parallel across series. The online deployment is the same
     recurrence inside applyInPandasWithState."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -6410,7 +6324,6 @@ def evt_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded calendar frame, K·|chunks| epilogue rows. Per-series H at
     scale partitions the chunk windows by series key; dyadic window
     ladders just extend _HURST_SIZES."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w_day = Window.orderBy(F.col("day"))
     # ONE corpus pass: the day-count frame feeds all three window
@@ -6571,7 +6484,6 @@ def evt_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only corpus pass; everything after is a 7-row epilogue."""
     from hive_test_spark.registry import QUERIES
 
-    tune(spark)
     acf = QUERIES["evt_acf"](spark, sf_dir)
     nn = acf.agg(F.max(F.col("n_pairs") + F.col("lag")).alias("n"))
     w_run = Window.orderBy("lag").rowsBetween(
@@ -6704,7 +6616,6 @@ def evt_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (grouped by series key), never the corpus; millions of series
     partition the census by series key with identical arithmetic —
     the O(n log n) merge-sort S-count is the whale-series rewrite."""
-    tune(spark)
     s = _daily_vp(spark, sf_dir).localCheckpoint(eager=True)
     a = s.select(
         F.col("event_type").alias("et"),
@@ -6854,7 +6765,6 @@ def evt_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_stats; the epilogue is K rows. Per-segment normality scans
     (per SKU, per cohort) reuse the identical shape keyed by the
     segment dimension."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     )
@@ -6946,7 +6856,6 @@ def evt_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first pass swaps to approx_percentile (t-digest sketch,
     map-side combinable) when the group sort outgrows the cluster,
     which changes the fence values but not the operator shape."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     )
@@ -7053,7 +6962,6 @@ def evt_pairwise_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one map-side-combinable rollup to the day dimension,
     one 7-row moment aggregate, one broadcast 21-pair epilogue —
     nothing downstream of the first shuffle scales with the corpus."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("day"),
@@ -7167,7 +7075,6 @@ def evt_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     one combinable pass; the windows and term sums run over that
     metadata-sized frame. Feature-selection sweeps (MI of label vs
     thousands of features) partition the same shape by feature key."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
@@ -7279,7 +7186,6 @@ def evt_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite is the rank-sum identity via evt_mann_whitney's midrank
     machinery (one sort-free window pass), which this operator's
     day-frame census cross-checks at fixture scale."""
-    tune(spark)
     s = _daily_vp(spark, sf_dir).localCheckpoint(eager=True)
     x = s.filter(F.col("event_type") == "view").select(
         F.col("rev").alias("xr")
@@ -7365,7 +7271,6 @@ def evt_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape in the deck. Stratified ORs (per country, per cohort;
     Mantel-Haenszel pooling) key the same pass by the stratum
     dimension."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     weekend = (
         F.when(
@@ -7450,7 +7355,6 @@ def evt_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: a K-row integer rollup plus a 1-row epilogue — the
     evt_odds_ratio shape. Dose-response sweeps (rate vs ordered
     exposure buckets) key the identical pass by the bucket score."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     g = ev.groupBy(
         (
@@ -7556,7 +7460,6 @@ def evt_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment rollup is 2 rows and the TOST epilogue is 1 row.
     Per-experiment equivalence sweeps key the same shape by
     experiment id."""
-    tune(spark)
     s = _daily_vp(spark, sf_dir)
     rd = F.col("rev").cast("decimal(18,6)")
     g = s.groupBy("event_type").agg(
@@ -7649,7 +7552,6 @@ def evt_poisson_rate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: a day-dimension rollup plus a 1-row epilogue — the
     evt_odds_ratio shape with exposure tracking. Per-segment rate
     surveillance keys the identical pass by segment."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         F.to_date("ts").alias("day"),
@@ -7757,7 +7659,6 @@ def evt_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     paired frame is calendar-bounded and the census re-reads it with
     a 1-row broadcast of the limits. Method-comparison sweeps (every
     sensor pair) key the same shape by pair id."""
-    tune(spark)
     s = _daily_vp(spark, sf_dir)
     x = s.filter(F.col("event_type") == "view").select(
         "day", F.col("rev").cast("decimal(18,6)").alias("a")
@@ -7884,7 +7785,6 @@ def evt_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     test collapse to 7-row bin tables); the decomposition is a 7-row
     broadcast join. Forecast sweeps (per segment, per horizon) key
     the identical shape by forecast id."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"),
         (
@@ -8028,7 +7928,6 @@ def evt_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one map-side-combinable rollup to the day dimension,
     a 7-row moment aggregate, a 1-row epilogue — the evt_anova_dow
     profile exactly."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("day"),

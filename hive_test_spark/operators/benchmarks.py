@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 _Q3_SEGMENT = "BUILDING"
 _Q3_DATE = "1996-03-15"
@@ -54,7 +53,6 @@ def bench_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is two-phase; and the top-10 is TakeOrderedAndProject — at
     100 TB nothing global-sorts the join output, each task keeps a
     10-row heap."""
-    tune(spark)
     c = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == _Q3_SEGMENT)
@@ -115,7 +113,6 @@ def bench_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-value priority key. The semi join's non-equi residual
     (l_shipdate > o_orderdate + 60) rides the l_orderkey equi-key, so
     at 100 TB it's a keyed shuffle, never a broadcast of the fact."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit(_Q4_START).cast("date"))
         & (F.col("o_orderdate") < F.lit(_Q4_END).cast("date"))
@@ -164,7 +161,6 @@ def bench_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the top-100 is TakeOrderedAndProject. This is the
     aggregate-then-join ordering Catalyst cannot derive on its own when
     written join-first — the query encodes it declaratively."""
-    tune(spark)
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         l.groupBy("l_orderkey")
@@ -220,7 +216,6 @@ def bench_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     and tiny, so both broadcast and the OR filter runs map-side after
     them; the fact shuffles only for orders/customer. The date range is
     pushed to the lineitem scan."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").between(_Q7_START, _Q7_END)
     )
@@ -274,7 +269,6 @@ def bench_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is a broadcast anti-join (keys are guaranteed non-null here, so
     it stays a plain anti join, not the null-aware nested loop), and the
     distinct-count expands AFTER the joins — one Expand, two-phase."""
-    tune(spark)
     p = (
         load_table(spark, sf_dir, "part")
         .filter(
@@ -329,7 +323,6 @@ def bench_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row plan feeding a map-side filter — never an eager
     collect; the NOT EXISTS is a shuffle-free broadcast anti join on the
     date-pruned orders scan; the rollup is two-phase."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("a"))
@@ -385,7 +378,6 @@ def bench_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is reusable, and its result arrives at every task as a
     literal, never a shuffled join. At 100 TB: one keyed shuffle of the
     nation-filtered fact slice; the threshold compare is map-side."""
-    tune(spark)
     n = (
         load_table(spark, sf_dir, "nation")
         .filter(F.col("n_name") == _Q11_NATION)
@@ -448,7 +440,6 @@ def bench_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact is read and shuffled exactly once; everything after operates on
     agg-sized data. Ties surface ALL max suppliers — semantics a
     row_number() rewrite would silently break."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(f"{_Q15_YEAR}-01-01").cast("date"))
         & (F.col("l_shipdate") < F.lit(f"{int(_Q15_YEAR) + 1}-01-01").cast("date"))
@@ -505,7 +496,6 @@ def bench_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-part avg table is partkey-sized and AQE-broadcasts. At
     100 TB: two pruned fact column scans, one partkey shuffle for the
     avg, zero shuffles of unaggregated fact rows."""
-    tune(spark)
     p = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == _Q17_BRAND)
@@ -562,7 +552,6 @@ def bench_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized supplier table. Each IN is a LEFT SEMI — duplicate
     qualifying lines can't duplicate suppliers. At 100 TB: one keyed
     shuffle of the doubly-pruned fact slice, then dimension-scale work."""
-    tune(spark)
     p = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like(_Q20_PART_PREFIX))
@@ -628,7 +617,6 @@ def bench_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — the self-join probe is the late subset, not the whole fact.
     At 100 TB: three keyed passes over one shuffle layout, no broadcast
     of anything fact-sized."""
-    tune(spark)
     n = (
         load_table(spark, sf_dir, "nation")
         .filter(F.col("n_name").isin(*_Q21_NATIONS))
@@ -731,7 +719,6 @@ def bench_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the SQL form); the part predicate prunes the probe to a
     broadcastable dimension slice. At 100 TB: one keyed shuffle of the
     fact slice, then agg-sized data only."""
-    tune(spark)
     r = (
         load_table(spark, sf_dir, "region")
         .filter(F.col("r_name") == _Q2_REGION)
@@ -828,7 +815,6 @@ def bench_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFram
     extra exchange. At 100 TB: two keyed fact shuffles (orderkey,
     custkey), dimensions broadcast, no shuffle carries the nation
     correlation."""
-    tune(spark)
     r = (
         load_table(spark, sf_dir, "region")
         .filter(F.col("r_name") == _Q5_REGION)
@@ -899,7 +885,6 @@ def bench_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical scan-bound query: throughput equals scan bandwidth times
     predicate selectivity, zero shuffle rows beyond one per
     partition."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(f"{_Q6_YEAR}-01-01").cast("date"))
         & (F.col("l_shipdate") < F.lit(f"{_Q6_YEAR + 1}-01-01").cast("date"))
@@ -957,7 +942,6 @@ def bench_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ~years-many groups. At 100 TB: the numerator/denominator trick
     means the fact is read once — the naive two-query formulation would
     double the dominant cost."""
-    tune(spark)
     p = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_type").like(f"{_Q8_TYPE}%"))
@@ -1040,7 +1024,6 @@ def bench_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg is two-phase over ~175 groups. At 100 TB the substring filter
     runs vectorized in the scan stage and drops ~2/3 of the fact before
     any exchange."""
-    tune(spark)
     p = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").contains(_Q9_NAME_FRAGMENT))
@@ -1104,7 +1087,6 @@ def bench_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the expensive join is between two heavily-pruned streams; the
     top-k is per-partition heads + one 20-row merge on the driver-side
     stage."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit(_Q10_START).cast("date"))
         & (F.col("o_orderdate") < F.lit(_Q10_END).cast("date"))
@@ -1176,7 +1158,6 @@ def bench_q12_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; counts are two-phase over 2 groups. At 100 TB: one orderkey
     shuffle pair; the CASE counts combine map-side so the final
     exchange carries ~partitions×2 rows."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
@@ -1233,7 +1214,6 @@ def bench_q13_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-domain key. At 100 TB the histogram agg is the cheap half —
     the custkey shuffle of orders dominates, and COUNT(o_orderkey) (not
     COUNT(*)) is what makes the 0-bucket correct."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != _Q13_EXCLUDED_PRIORITY
@@ -1279,7 +1259,6 @@ def bench_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard "rate metric" template: broadcast dim + single-pass CASE
     ratio; the global (groupless) agg reduces to one row per partition
     then one final row."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(_Q14_START).cast("date"))
         & (F.col("l_shipdate") < F.lit(_Q14_END).cast("date"))
@@ -1337,7 +1316,6 @@ def bench_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     stays broadcastable. At 100 TB the derived scan filters are the
     difference between joining 3 brands' slice and joining the whole
     fact."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -39,7 +38,6 @@ def dml_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet reader), profiled per returnflag so the oracle compares the
     whole surviving content cheaply. In a real ACID table only files
     containing hits are rewritten; the anti-predicate scan is identical."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(~(F.col("l_quantity") < 5))
@@ -66,7 +64,6 @@ def dml_update_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     400000, as copy-on-write: a CASE projection over the snapshot. The
     non-updated columns pass through untouched — at scale the rewrite
     touches only files whose zone-map says the predicate can hit."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -110,7 +107,6 @@ def dml_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: shuffle join on the merge key; broadcast the delta when it is
     <10% of the table (the common CDC case); Delta/Iceberg turn the same
     join into a file-level rewrite plan."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     upd = (
         o.filter(F.col("o_orderkey") % 7 == 0)
@@ -174,7 +170,6 @@ def dml_insert_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFram
     from hive_test_spark.io import scratch_dir
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -248,7 +243,6 @@ def dml_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     union is free (no operator barrier). This is exactly how SCD2 runs
     on a non-ACID table format; dml_merge_upsert shows the
     full-outer-join MERGE that replaces it when deltas are large."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     base = c.select("c_custkey", F.round("c_acctbal", 2).alias("acctbal"))
     delta = c.filter(F.col("c_custkey") % 7 == 0).select(
@@ -326,7 +320,6 @@ def dml_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     and it's shuffle-free), then a 4-row rollup. The per-row classify
     is pure map logic; nothing materializes the diff except the
     aggregate consumed downstream."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     snap_a = c.select(
         "c_custkey", F.round("c_acctbal", 2).alias("acctbal"), "c_mktsegment"
@@ -411,7 +404,6 @@ def dml_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_test_spark.io import scratch_dir
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     tag = _sf_tag(sf_dir)
     ident = tag.replace(".", "_")  # table identifiers cannot contain dots
     o = load_table(spark, sf_dir, "orders").select(
@@ -504,7 +496,6 @@ def dml_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcasts down the chain the same way. Marker-join + SUM beats
     an anti-join-then-recount because it reads each fact exactly once
     for both the before and erased numbers."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from hive_test_spark.io import load_table, scratch_dir
 from hive_test_spark.registry import register
 from hive_test_spark.sources.scans import _sf_tag
-from hive_test_spark.session import tune
 
 
 @register(
@@ -45,7 +44,6 @@ def udtf_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     OUTER modifier. Spark's ``explode_outer`` is the exact builtin; like
     plain Generate it is a narrow map-side transform, so at 100 TB it
     streams with no shuffle and the only cost is the fan-out multiplier."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part")
     words = F.when(F.col("p_size") < 25, F.split("p_name", " ")).otherwise(
         F.array().cast("array<string>")
@@ -73,7 +71,6 @@ def win_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key cardinality is high (collect_set materializes the set per ROW
     in the worst case; the groupBy form materializes it once per KEY), or
     ``approx_count_distinct`` when an estimate suffices."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey")
     return o.select(
@@ -100,7 +97,6 @@ def agg_count_if_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ties it is pick-any in both engines. All three are map-side
     combinable (partial count + partial (key,val) max), so at 100 TB
     this is a single standard two-phase aggregate with no extra pass."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count_if(F.col("o_totalprice") > 150000).alias("n_big"),
@@ -124,7 +120,6 @@ def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles buffer the group's values per key, so at 100 TB swap to
     ``percentile_approx`` (a fixed-size mergeable digest, map-side
     combinable) — the exact form here is what makes it oracle-able."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.median("l_quantity"), 6).alias("median_qty"),
@@ -151,7 +146,6 @@ def evt_distinct_users_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users, not raw event volume. At 100 TB that bound is the
     whole game; if an estimate suffices, approx_count_distinct drops the
     Expand entirely."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
@@ -194,7 +188,6 @@ def evt_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB cap whale users (count filter first) or fall back to the join
     chain; the oracle IS that join chain, which doubles as the proof the
     two strategies agree."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     g = ev.groupBy("user_id").agg(
         F.collect_list(F.struct("ts", "event_type")).alias("evs")
@@ -229,7 +222,6 @@ def scale_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.sql.files.maxRecordsPerFile`` as the secondary bound, and
     prefer ``repartitionByRange`` on a filter column so compaction also
     restores min/max pruning (see ``scale_zorder``)."""
-    tune(spark)
     tag = _sf_tag(sf_dir)
     frag = scratch_dir("compact", tag, "orders_frag")
     compact = scratch_dir("compact", tag, "orders_compact")
@@ -278,7 +270,6 @@ def agg_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     properties are PROVEN IN THE RESULT (boolean columns the oracle pins
     to TRUE alongside the exact counts) — a failed sketch fails the hash
     gate, so this is a full oracle check, not rows-only."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     direct = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("exact_parts"),
@@ -338,7 +329,6 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is plain COUNT(DISTINCT): the bitmap pipeline must
     reproduce it bit-for-bit. At 100 TB: shuffle volume is
     |groups| × |key-space|/32768 × 4KB, independent of row count."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_partkey", "l_suppkey"
     )
@@ -401,7 +391,6 @@ def agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     key space exceeds maxItemsTracked the counts become approximate with
     the usual space-saving guarantees — size the budget to the heavy
     tail you care about."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_partkey")
     sk = li.groupBy("l_returnflag").agg(
         F.expr("approx_top_k(l_partkey, 10, 50000)").alias("topk"),
@@ -452,7 +441,6 @@ def agg_bit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface) or N² CASE pivots. Bitfield fusion is the same trick
     roaring bitmaps scale up (agg_bitmap_distinct); here the key space
     is the flag set itself, so a plain BIGINT suffices."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     mask = (
         F.when(F.col("l_quantity") > 25, 1).otherwise(0)
@@ -506,7 +494,6 @@ def scale_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     snappy's footprint at ~equal scan throughput, and the audit shape —
     write, re-read, aggregate-compare — is exactly how a lake migration
     validates a codec switch before flipping the table default."""
-    tune(spark)
     tag = _sf_tag(sf_dir)
     src = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_shipdate"

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, side
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 _DAMP = 0.85
 _ITERS = 3
@@ -129,7 +128,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop invariant — pre-partitioning it by src lets every iteration's
     join reuse that exchange, and a fixed iteration count keeps lineage
     shallow (unbounded loops would localCheckpoint periodically)."""
-    tune(spark)
     edges = _trade_edges(spark, sf_dir)
     # deg feeds the initial ranks, every iteration's broadcast n_nodes,
     # and the final degree join — cache it, or six copies of the
@@ -208,7 +206,6 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter graphs would localCheckpoint every ~10 levels (see
     llm_dedup_clusters' pointer-doubling variant that halves the level
     count logarithmically)."""
-    tune(spark)
     customer = load_table(spark, sf_dir, "customer")
     edges = _trade_edges(spark, sf_dir).cache()
     dist = customer.filter(F.col("c_nationkey") == _BFS_SRC_NATION).select(
@@ -278,7 +275,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic wedge join; for power-law graphs the classic refinement is
     to orient edges by (degree, id) instead of raw id so high-degree hubs
     never fan out — same two-join plan, different orientation key."""
-    tune(spark)
     return _triangle_counts(_copurchase_pairs(spark, sf_dir))
 
 
@@ -386,7 +382,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     with MIN in place of the rank sum; the fixed round count keeps
     lineage shallow (convergence loops localCheckpoint, the CC
     pattern). The per-round rollups key on the label dimension."""
-    tune(spark)
     # The edge list feeds every round: checkpoint once (the pagerank
     # cached-edges idiom) so the rounds re-read memory, not parquet.
     edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
@@ -478,7 +473,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     — two hash joins keyed on node ids, no cartesian anywhere;
     per-round localCheckpoint keeps the unrolled lineage flat (the CC
     cadence)."""
-    tune(spark)
     edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     rounds = [edges]
     for _ in range(_KCORE_ROUNDS):
@@ -553,7 +547,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     id; the histogram is a second count keyed on degree (domain:
     thousands of values, no skew); the fit is a 1-row aggregate attached
     by broadcast. Nothing after the first rollup scales with edges."""
-    tune(spark)
     # One row per node; referenced three times (histogram, dmin, fit) —
     # cache so the edge derivation runs once (the graph_triangles rule).
     degs = (
@@ -641,7 +634,6 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_shingle_containment's rare-shingle rule. Degrees join back on
     supplier id (broadcastable: suppliers are the small side of TPC-H),
     and the top-k is a single bounded sort."""
-    tune(spark)
     pairs = _trade_pairs(spark, sf_dir)
     cdeg = pairs.groupBy("cust").agg(F.count(F.lit(1)).alias("cd"))
     # One row per non-hub (cust, supp) edge; referenced three times
@@ -736,7 +728,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy each over the labeled edges, m is a 1-row frame crossed in
     (the llm_tfidf no-driver-count rule), and the final window-SUM runs
     on |communities| rows (25)."""
-    tune(spark)
     pairs = _trade_pairs(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("cust"), F.col("c_nationkey").alias("c_comm")
@@ -823,7 +814,6 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     list (already support-filtered); the triangle leg is the bounded
     wedge join graph_triangles documents; the final join keys on node
     id. The mean reduces map-side and ships one row."""
-    tune(spark)
     pairs = _copurchase_pairs(spark, sf_dir)
     tri = _triangle_counts(pairs)
     deg = (
@@ -916,7 +906,6 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-driver-count idiom). Fixed iteration count keeps lineage
     shallow (the graph_pagerank rule); the edge list never re-derives
     inside the loop."""
-    tune(spark)
     pairs = _trade_pairs(spark, sf_dir).localCheckpoint(eager=True)
     hd = pairs.groupBy("cust").agg(F.count(F.lit(1)).alias("hdeg"))
     ad = pairs.groupBy("supp").agg(F.count(F.lit(1)).alias("adeg"))
@@ -996,7 +985,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree lookups are equi-joins on node id (vertex-cut shape); the
     correlation is a single 1-row co-moment reduction — no window, no
     collect, nothing quadratic beyond the already-bounded edge list."""
-    tune(spark)
     pairs = _copurchase_pairs(spark, sf_dir)
     deg = (
         pairs.select(F.col("p1").alias("node"))
@@ -1080,7 +1068,6 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterate is node-dimension-sized and the lineage stays 3 deep
     (longer sweeps would localCheckpoint every few rounds like
     llm_dedup_clusters)."""
-    tune(spark)
     edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     x = edges.select("src").distinct().select(
         F.col("src").alias("node"), F.lit(1.0).alias("katz")

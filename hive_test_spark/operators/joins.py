@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -36,7 +35,6 @@ from hive_test_spark.session import tune
 )
 def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join orders↔customer (shuffled hash / SMJ; AQE may broadcast)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0.0)
     return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
@@ -56,7 +54,6 @@ def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join keeping order-less customers (NULL-extended rows)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return (
@@ -78,7 +75,6 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer join — all customers, NULL order columns where unmatched."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     return o.join(c, o.o_custkey == c.c_custkey, "right").select(
@@ -100,7 +96,6 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join of two aggregates with disjoint key coverage."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     s = load_table(spark, sf_dir, "supplier")
     cn = (
@@ -129,7 +124,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product (tiny dims only; never cross a fact table at scale)."""
-    tune(spark)
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
     return r.crossJoin(n).select("r_name", "n_name")
@@ -146,7 +140,6 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI JOIN (Hive's canonical EXISTS): customers with a big order."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000.0)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_mktsegment")
@@ -167,7 +160,6 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     The orders side is date-filtered so the survivor set is non-empty at
     every SF — an unfiltered anti-join returns 0 rows at sf0.01 (every
     customer has orders), which would make the oracle hash-match vacuous."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= "1998-01-01")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
@@ -186,7 +178,6 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-side join (Hive MAPJOIN): explicit broadcast of the part dim —
     the fact scan never shuffles for the join, only for the final agg."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     return (
@@ -213,7 +204,6 @@ def join_sort_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort-merge join (Hive SMB analogue): MERGE hint pins SMJ for the
     fact-fact join; on a warehouse both sides would be bucketed on the key
     (df.write.bucketBy) making this shuffle-free."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").hint("merge")
     return (
@@ -238,7 +228,6 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi (theta) join: BroadcastNestedLoopJoin with the supplier side
     broadcast. At 100 TB a pure theta join must be banded (join on a coarse
     bucket equi-key + residual predicate) — see join_range_interval."""
-    tune(spark)
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
     c = load_table(spark, sf_dir, "customer").select("c_acctbal")
     return (
@@ -265,7 +254,6 @@ def join_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval/range join: fact rows land in value bands. The band table is
     broadcast, so the plan is a map-side nested-loop over 5 rows — the
     scalable shape for banded range joins (no shuffle of the fact side)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     bands = (
         load_table(spark, sf_dir, "region")
@@ -311,7 +299,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     the naive alternative (range self-join + row_number) is quadratic per
     user. Clicks are pre-deduped per (user, ts) so ties are deterministic.
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -381,7 +368,6 @@ def join_star_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter through the join chain and prunes everything else. At 100 TB
     orders outgrows any threshold and AQE turns that first join into a
     keyed shuffle — the code stays the same."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -426,7 +412,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The standard fix is to split the plan: plain equi-join for non-null
     keys UNION the null×null block handled separately (or salted). Here
     the whole join stays one shuffle on the coalesced key."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").select(
         F.expr("nullif(c_nationkey, 3)").alias("join_key")
     )
@@ -468,7 +453,6 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same family of trade as the LSH band count in llm_ann_lsh.
     The a<b key inequality halves the pair space and makes output
     deterministic."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_type", "p_size", "p_name"
     )
@@ -532,7 +516,6 @@ def join_existence_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
     when large); the alternative users write (collect keys to the
     driver, then `.isin(...)`) dies at ~10⁵ keys. The plan-shape test
     asserts ExistenceJoin appears."""
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("hts_exist_orders")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "hts_exist_customer"
@@ -586,7 +569,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id. Spark will not use a specialized interval tree; the
     per-key group sizes bound the quadratic term exactly like
     llm_semdedup's cluster cells."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     spans = ev.groupBy("user_id", "event_type").agg(
         F.min("ts").alias("t_lo"), F.max("ts").alias("t_hi")
@@ -658,7 +640,6 @@ def join_temporal_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join → quadratic; see join_interval_overlap's gridding
     note). SCD2 dims stay broadcastable far longer than facts grow:
     versions accrete linearly with CHANGE rate, not event rate."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     v1 = c.select(
         "c_custkey",
@@ -734,7 +715,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     staleness gate — identical 100 TB story: linear in events, one
     exchange on user_id. The oracle applies the same gate over DuckDB's
     native ASOF LEFT JOIN, pinning the rewrite equivalence."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -826,7 +806,6 @@ def join_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     like its 7-day lookback to cap bot users), and the argmin window
     repartitions on the purchase id over already pair-compressed rows.
     Never a cross product; never driver-side."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", F.col("ts").alias("p_ts")
@@ -930,7 +909,6 @@ def join_geo_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     is emitted exactly once: the customer's cell is unique and each
     supplier replica lands in a distinct cell, so no post-join
     DISTINCT is needed."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey",
         f"40 + 20 * {_GEO_U_SPARK.format(salt='lat:c', key='c_custkey')} AS lat",
@@ -1012,7 +990,6 @@ def join_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same rows whatever the physical join), so the hash gate proves
     result-equivalence across all three strategies together with
     join_broadcast/join_sort_merge over the same fixtures."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").hint("shuffle_hash")
     return (

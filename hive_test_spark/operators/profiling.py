@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -38,7 +37,6 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle, output rows = n_rows × n_metrics, so at 100 TB it streams
     — the only cost is the row-count multiplier, which downstream
     aggregations absorb map-side."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.round(F.col("p_size").cast("double"), 6).alias("p_size"),
@@ -99,7 +97,6 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB swap ``countDistinct`` for ``approx_count_distinct`` (HLL,
     map-side combinable, no Expand blow-up) — the audit is an estimate
     there anyway; the exact form here is what makes it oracle-able."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     agg_exprs = [F.count(F.lit(1)).alias("n_rows")]
     for name, _ in _DQ_COLS:
@@ -185,7 +182,6 @@ def dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass; the anti joins shuffle on the key only (2-column scan on the
     dim), and a partition-scoped run (validate only today's ingest)
     prunes the fact scan before any of this starts."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
@@ -297,7 +293,6 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is integer microseconds on both engines (unix_micros /
     epoch_us), so the oracle matches bitwise. At 100 TB the per-type
     grain becomes (source, ingest_partition) — same two-agg plan."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     anchor = ev.agg(F.max("ts").alias("a"))
     per_type = ev.groupBy("event_type").agg(
@@ -358,7 +353,6 @@ def dq_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_approx_percentile accuracy contract); pass two re-scans with
     the 5-row fence table broadcast, so the join adds no shuffle. Two
     scans total, both pruned to 2 columns."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     q = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -450,7 +444,6 @@ def dq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     if one hot key dominates. Child scans prune to the single key
     column; counts are map-side-combinable. The audit is embarrassingly
     parallel across edges (independent subtrees under one union)."""
-    tune(spark)
     per_edge = []
     for edge, child, ck, parent, pk in _FK_EDGES:
         ckeys = (
@@ -539,7 +532,6 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference year's proportions broadcast; at web scale the same op
     runs per (table, column) in one pass by stacking a column id into
     the grouping key."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     b = o.select(
         F.year("o_orderdate").alias("yr"),

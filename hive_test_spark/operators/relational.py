@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -27,7 +26,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exercises scan/filter/project/agg/sort in one pipeline; the filter and
     the 7-column projection are pushed into the parquet scan.
     """
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -66,7 +64,7 @@ GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """
 
-register("flagship_pricing_summary", PRICING_SUMMARY_SQL)(pricing_summary)
+pricing_summary = register("flagship_pricing_summary", PRICING_SUMMARY_SQL)(pricing_summary)
 
 
 @register(
@@ -80,7 +78,6 @@ register("flagship_pricing_summary", PRICING_SUMMARY_SQL)(pricing_summary)
 )
 def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column projection + alias + arithmetic. Narrow; scan reads 5 cols only."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
@@ -101,7 +98,6 @@ def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive/disjunctive predicates, pushed to the parquet scan."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.filter(
         (F.col("o_totalprice") > 50000.0)
@@ -122,7 +118,6 @@ def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_in_between_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN / BETWEEN / LIKE / RLIKE predicates."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part")
     return p.filter(
         F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
@@ -145,7 +140,6 @@ def filter_in_between_like(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def project_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Searched + simple CASE projection."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -173,7 +167,6 @@ def project_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def project_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CAST across numeric/string/date types."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
@@ -200,7 +193,6 @@ def project_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-valued NULL logic: synthesized NULLs + IS NULL + COALESCE."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     maybe = F.when(F.col("o_orderstatus") == "P", F.lit(None).cast("double")).otherwise(
         F.col("o_totalprice")
@@ -224,7 +216,6 @@ def filter_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT — hash-aggregate dedup (partial map-side combine)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import SCRATCH_DIR, load_table, scratch_dir
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 _SAMPLE_FRAC = 0.1
@@ -49,7 +48,6 @@ def scan_tablesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic membership twin is ``llm_hash_sample`` (md5-threshold,
     a pure row-value function) — use that when reproducibility across
     engines matters more than statistical independence."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sampled = (
         li.sample(fraction=_SAMPLE_FRAC, seed=42)
@@ -101,7 +99,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the fallback when AQE skew-split cannot help
     (e.g. skewed *aggregation* keys or non-splittable join types).
     """
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").withColumn(
         "salt", F.pmod(F.xxhash64("c_custkey"), F.lit(N_SALTS)).cast("int")
     )
@@ -136,7 +133,6 @@ def join_bucketed_smb(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is THE repeated-join optimization at warehouse scale: pay the
     bucketed write once, skip the join shuffle forever after.
     """
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     tag = _sf_tag(sf_dir).replace(".", "_")
@@ -208,7 +204,6 @@ def scale_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition-column values survive the directory encoding)."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     path = scratch_dir("scale", _sf_tag(sf_dir), "lineitem_by_year")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -254,7 +249,6 @@ def scale_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing alone misleads (e.g. highly compressed or wide tables).
     Result is hint-free and stats-driven; values hash-match the plain
     join oracle."""
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     tag = _sf_tag(sf_dir).replace(".", "_")
@@ -333,7 +327,6 @@ def scale_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the full-table aggregate. Storing (count, sum) instead of avg is
     what makes the state mergeable — the same decomposition Spark itself
     uses for partial aggregation pushdown."""
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     o = load_table(spark, sf_dir, "orders")
@@ -433,7 +426,6 @@ def scale_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     The verified result aggregates per z-bucket over the WRITTEN layout
     (round-trips the clustering write); the oracle recomputes the same
     integer interleave, proving the z-math bit-identical."""
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     li = load_table(spark, sf_dir, "lineitem").select("l_quantity", "l_extendedprice")
@@ -538,7 +530,6 @@ def scale_aqe_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle vs one task reading 80% of the fact)."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     path = scratch_dir("scale", _sf_tag(sf_dir), "aqe_skew_result")
     saved = {k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS}
     for k, v in AQE_SKEW_CONFS.items():
@@ -615,7 +606,6 @@ def scale_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     are IDENTICAL with and without it."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     path = scratch_dir("scale", _sf_tag(sf_dir), "bloom_filter_result")
     saved = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
     for k, v in BLOOM_CONFS.items():
@@ -649,7 +639,6 @@ def scan_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries a full value oracle. At scale the same expression sits in the
     reader filter and, on a table bucketed by the key, prunes whole
     files instead of scanning-and-filtering."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     bucket = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10).cast(
         "bigint"
@@ -681,7 +670,6 @@ def scale_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the difference between one and two full fact-table
     passes whenever a query compares rows against a statistic of the
     same derivation — no manual cache() needed."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     nat_rev = (
@@ -722,7 +710,6 @@ def scale_cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical subtrees; cache() is the tool when CONSUMERS differ (here:
     different aggregate keys). At 100 TB you cache the slice that fits
     (memory-and-disk) or checkpoint it — the plan shape is the same."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     hot = (
         li.filter(F.col("l_shipdate") >= "1998-01-01")
@@ -763,7 +750,6 @@ def scale_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages shrink to match their true output instead of scheduling
     thousands of empty reducers; under-skew the same machinery splits
     (the two are one feature with two directions)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
@@ -814,7 +800,6 @@ def scale_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (retry-safe — a rand() salt double-counts rows replayed by task
     retries, and breaks the disjointness that makes distinct counts
     summable)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     stage1 = (
         ev.groupBy(
@@ -869,7 +854,6 @@ def scale_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed tables in this engine are the SMB/pruning fixtures,
     which all WANT bucketed reads — the SMB join keeps its
     shuffle-free plan either way)."""
-    tune(spark)
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
@@ -940,7 +924,6 @@ def scale_range_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the residual-filter kill rate, narrower ones inflate the interval
     fan-out. Same shape as llm_minhash_det's band-bucket join: bucket
     first, exact-verify inside the bucket."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_shipdate").cast("date").alias("point_d"), "l_quantity"
@@ -1038,7 +1021,6 @@ def scale_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot key inside each partition before the shuffle); the rank window
     and quantiles run on the reduced key dimension, and the 1-row
     stats frame broadcasts over the top-k rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # Both branches (summary stats, hot-key rank) reference the per-key
     # rollup; checkpoint the key-dimension frame so events scans once.
@@ -1152,7 +1134,6 @@ def scale_aqe_join_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle reader keeps off the critical path."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     path = scratch_dir("scale", _sf_tag(sf_dir), "aqe_join_switch_result")
     saved = {k: spark.conf.get(k, None) for k in AQE_JOIN_SWITCH_CONFS}
     for k, v in AQE_JOIN_SWITCH_CONFS.items():

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 def _branches(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -47,7 +46,6 @@ _BRANCH_SQL = {
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (bag semantics — duplicates kept, visible via the count)."""
-    tune(spark)
     big, urgent = _branches(spark, sf_dir)
     return big.unionByName(urgent).groupBy("custkey").agg(F.count(F.lit(1)).alias("n"))
 
@@ -60,7 +58,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION DISTINCT (set semantics)."""
-    tune(spark)
     big, urgent = _branches(spark, sf_dir)
     return big.unionByName(urgent).distinct()
 
@@ -73,7 +70,6 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct semantics): customers in both branches."""
-    tune(spark)
     big, urgent = _branches(spark, sf_dir)
     return big.intersect(urgent)
 
@@ -86,7 +82,6 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct semantics): big-order customers never urgent."""
-    tune(spark)
     big, urgent = _branches(spark, sf_dir)
     return big.subtract(urgent)
 
@@ -118,7 +113,6 @@ def set_bag_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     regenerate rows) — same single-shuffle cost class as distinct set
     ops, NOT a join explosion; still keep projections narrow since the
     whole row is the shuffle key."""
-    tune(spark)
     big, urgent = _branches(spark, sf_dir)
     exc = (
         big.exceptAll(urgent)

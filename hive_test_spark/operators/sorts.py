@@ -39,7 +39,6 @@ def sort_order_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes the total order so the order-insensitive hash verifies it.
     (The single-partition rank window is the verification device; the
     production sort itself is the range-partitioned orderBy.)"""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     w = Window.orderBy(
         F.col("c_nationkey").asc(), F.col("c_acctbal").desc_nulls_last(), F.col("c_custkey")
@@ -62,7 +61,6 @@ def sort_order_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-K: plans as TakeOrderedAndProject (per-partition heaps,
     no full sort, no full shuffle). Deterministic via o_orderkey tiebreak."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), "o_orderkey")
@@ -84,7 +82,6 @@ def limit_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIMIT row cap. Bare LIMIT is partition-order-dependent, so the
     verified form caps an ordered-by-unique-key input (deterministic);
     tests exercise the bare CollectLimit separately."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.orderBy("l_orderkey", "l_linenumber")
@@ -217,7 +214,6 @@ def sort_cluster_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant is exactly what bucket-map-join correctness rests on. The
     follow-up groupBy reuses the HashPartitioning(l_suppkey) the shuffle
     produced — one exchange total (asserted in tests/test_plans.py)."""
-    tune(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("cb_lineitem")
     clustered = spark.sql(
         "SELECT l_suppkey, l_extendedprice FROM cb_lineitem CLUSTER BY l_suppkey"
@@ -268,7 +264,6 @@ def sort_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     (as here) funnels one window partition; fine on a 2000-row slice,
     use per-shard ranks + offset joins at fact scale
     (llm_curriculum_order shows that decomposition)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 2000)
     keyed = c.select(
         "c_custkey",
@@ -309,7 +304,6 @@ def sort_limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagination (n in the millions) is an anti-pattern: use keyset
     pagination instead (WHERE (price, key) < last-seen ORDER BY ...
     LIMIT k), which this op's total order makes directly possible."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))

@@ -7,8 +7,9 @@ HiveQL-dialect constructs Spark SQL inherits: LATERAL VIEW, DISTRIBUTE
 BY / SORT BY / CLUSTER BY, LEFT SEMI / ANTI JOIN, and optimizer hints)
 must be exercised against the same DuckDB oracles as the DataFrame ops.
 Every operator here parses SQL text into the SAME Catalyst plans the
-DataFrame twins produce — tests/test_contract.py asserts this module
-keeps ≥ 10 registered ``sql_*`` keys.
+DataFrame twins produce — tests/test_contract.py counts the registry
+entries whose ``__module__`` is this one (the registry's wrapper keeps
+it) and asserts there are ≥ 10, each hash-oracled.
 
 Each op registers its input tables as temp views prefixed ``hts_sql_``
 (idempotent createOrReplaceTempView; the prefix avoids colliding with
@@ -21,9 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
-
-SQL_FRONT_KEYS: list[str] = []
 
 
 def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
@@ -31,13 +29,7 @@ def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"hts_sql_{t}")
 
 
-def _sql_register(key: str, oracle: str):
-    """register() wrapper that also records the key for the contract test."""
-    SQL_FRONT_KEYS.append(key)
-    return register(key, oracle)
-
-
-@_sql_register(
+@register(
     "sql_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -59,7 +51,6 @@ def sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: plan-identical to the DataFrame twin — the front end
     contributes parse time only (milliseconds, driver-side)."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -77,7 +68,7 @@ def sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_star_join_hinted",
     """
     SELECT n.n_name, o.o_orderpriority,
@@ -100,7 +91,6 @@ def sql_star_join_hinted(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: nation/region always broadcast; hinting customer too is
     correct while customers fit executor memory, and AQE demotes it to
     shuffle if statistics say otherwise (hints are advisory)."""
-    tune(spark)
     _views(spark, sf_dir, "orders", "customer", "nation", "region")
     return spark.sql(
         """
@@ -119,7 +109,7 @@ def sql_star_join_hinted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_lateral_view_explode",
     """
     SELECT d.doc_id, t.tok, COUNT(*) AS n
@@ -139,7 +129,6 @@ def sql_lateral_view_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (no exchange); the count agg shuffles (doc_id, tok) —
     explode-then-agg is the linear tokenization template the llm_* text
     ops build on."""
-    tune(spark)
     _views(spark, sf_dir, "documents")
     return spark.sql(
         """
@@ -153,7 +142,7 @@ def sql_lateral_view_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_distribute_sort_by",
     """
     SELECT o_custkey, o_orderkey, ROUND(o_totalprice, 4) AS o_totalprice
@@ -173,7 +162,6 @@ def sql_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the write-preparation idiom: cluster rows by key
     and order within files WITHOUT a global sort barrier — one hash
     exchange, no range-partition sampling pass."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -185,7 +173,7 @@ def sql_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_semi_anti_join",
     """
     SELECT c.c_custkey, c.c_mktsegment
@@ -210,7 +198,6 @@ def sql_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     early-out probing; the semi/anti forms never materialize order
     columns — the payload-free build is what makes them cheaper than
     inner joins + distinct."""
-    tune(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
@@ -225,7 +212,7 @@ def sql_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_rollup_grouping",
     """
     SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
@@ -247,7 +234,6 @@ def sql_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: Spark expands rollup to a single Expand + one hash agg —
     3 output rows per input row pre-combine, NOT three scans; the
     map-side combine keeps the exchange at group-domain size."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -264,7 +250,7 @@ def sql_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_window_analytics",
     """
     SELECT o_custkey, o_orderkey,
@@ -289,7 +275,6 @@ def sql_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: ONE custkey exchange serves both window functions (same
     partitioning spec); the rank filter cuts output before the final
     sort."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -312,7 +297,7 @@ def sql_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_cte_reuse",
     """
     WITH seg AS (
@@ -338,7 +323,6 @@ def sql_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the full customer slice; the pattern (compare each row to
     its group aggregate) is the decorrelated form Catalyst produces for
     correlated scalar subqueries too."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -357,7 +341,7 @@ def sql_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_set_ops_chain",
     """
     SELECT c_custkey AS custkey FROM customer c
@@ -381,7 +365,6 @@ def sql_set_ops_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     single projected column — payload-free and combinable; precedence
     (INTERSECT binds tighter than EXCEPT) is a parser property this op
     pins cross-engine."""
-    tune(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
@@ -401,7 +384,7 @@ def sql_set_ops_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_values_inline",
     """
     WITH tiers(tier_name, lo, hi) AS (
@@ -425,7 +408,6 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the band predicate evaluates in the probe's scan stage,
     so banding costs zero exchanges — the idiom to prefer over a CASE
     ladder when bands live in config, not code."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -444,7 +426,7 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_case_pivot",
     """
     SELECT o_orderpriority,
@@ -468,7 +450,6 @@ def sql_case_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one grouped pass with three combinable conditional sums
     — identical exchange profile to PIVOT; the CASE form is what old
     HiveQL corpora contain, so the parser path matters for ports."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -485,7 +466,7 @@ def sql_case_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_cluster_by_bucket",
     """
     SELECT l_suppkey,
@@ -505,7 +486,6 @@ def sql_cluster_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: grouped agg and CLUSTER BY share the same hash key, so
     Catalyst reuses ONE exchange for both — this op exists to pin that
     no second shuffle appears."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -519,7 +499,7 @@ def sql_cluster_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_parameterized",
     """
     SELECT c_mktsegment, COUNT(*) AS n_cust,
@@ -540,7 +520,6 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     are visible to Catalyst as constants, so partition pruning and
     filter pushdown work exactly as with inline literals — unlike
     driver-side string formatting, with none of the quoting hazards."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -555,7 +534,7 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_transform_using",
     """
     SELECT c_custkey, lower(c_mktsegment) AS seg_lower
@@ -576,7 +555,6 @@ def sql_transform_using(spark: SparkSession, sf_dir: str) -> DataFrame:
     with executor count, but pays one OS process per task plus
     row-at-a-time text framing — which is exactly why the mapInPandas
     twin exists; keep USING for legacy script compatibility only."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -593,7 +571,7 @@ def _clamp_bal(s):
     return s.clip(lower=0.0, upper=5000.0)
 
 
-@_sql_register(
+@register(
     "sql_temp_function",
     """
     SELECT c_mktsegment,
@@ -622,7 +600,6 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-implementing clamps/parsers per query."""
     from pyspark.sql.functions import pandas_udf
 
-    tune(spark)
     # Built here, not at import time (type resolution needs an active
     # session — same note as udf_pandas_scalar); plain function + explicit
     # returnType, no hint inference.
@@ -639,7 +616,7 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_group_order_by_all",
     """
     SELECT o_orderstatus, o_orderpriority,
@@ -666,7 +643,6 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: pure parse-time sugar — identical two-phase hash
     aggregate + range-partitioned sort plan as the longhand text."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -688,7 +664,7 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_file_direct",
     """
     SELECT l_returnflag,
@@ -715,7 +691,6 @@ def sql_file_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
     reordering and no partition specs (path globs replace partition
     pruning), so production keeps file-direct for exploration and
     registers curated tables for recurring joins."""
-    tune(spark)
     path = f"{sf_dir}/lineitem.parquet"
     return spark.sql(
         f"""
@@ -729,7 +704,7 @@ def sql_file_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_positional_ordinals",
     """
     SELECT CAST(year(o_orderdate) AS INTEGER) AS order_year,
@@ -757,7 +732,6 @@ def sql_positional_ordinals(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: parse-time sugar, zero plan impact — the resolved plan
     is the standard partial/final hash aggregate over the pushed-down
     scan, identical to spelling the expressions out."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -773,7 +747,7 @@ def sql_positional_ordinals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_pivot_clause",
     """
     SELECT l_returnflag,
@@ -798,7 +772,6 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-aggregate pass (no per-value scans) — same plan as the
     CASE matrix. The implicit form (no IN list) needs a prior distinct
     scan to discover values: always enumerate at scale."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -812,7 +785,7 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_unpivot_clause",
     """
     SELECT l_returnflag, measure, val FROM (
@@ -838,7 +811,6 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per measure with NO shuffle (the aggregate before it already
     collapsed the fact); the UNION-ALL spelling re-SCANS the source
     per measure, which is exactly why the clause form wins at scale."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -854,7 +826,7 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_sql_register(
+@register(
     "sql_scripting",
     """
     WITH lv AS (
@@ -909,7 +881,6 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep bounds are known up front; the scripting form wins when the
     loop body must see the previous iteration's result — model-fit
     convergence, retry-until-drained compaction, watermark advance."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     prev = spark.conf.get("spark.sql.scripting.enabled", None)
     try:

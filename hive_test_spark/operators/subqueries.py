@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -34,7 +33,6 @@ def subq_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key, not once per row. At scale that plan is one map-side-partial
     agg + one shuffle on o_custkey; AQE broadcasts the (small) aggregate
     side when it fits."""
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("subq_orders")
     return spark.sql(
         """
@@ -65,7 +63,6 @@ def subq_not_in_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-aware anti join (broadcast-only strategy) to honor 3-valued
     logic. Kept as the canonical example of why production pipelines
     prefer NOT EXISTS on nullable keys at 100 TB: NAAJ cannot shuffle."""
-    tune(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("subq_customer")
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("subq_nation")
     return spark.sql(
@@ -105,7 +102,6 @@ def subq_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateral is O(outer x inner); the window rewrite is one pass over the
     inner table. Same shape as win_topk_per_group, driven through the
     SQL front end to exercise the decorrelator itself."""
-    tune(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("lat_nation")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
     return spark.sql(
@@ -154,7 +150,6 @@ def subq_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scans prior levels. The same query text runs verbatim on DuckDB,
     making this one of the few ops whose oracle is literally identical
     SQL."""
-    tune(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("rc_customer")
     return spark.sql(
         """
@@ -200,7 +195,6 @@ def subq_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelation equivalence."""
     from pyspark.sql import functions as F
 
-    tune(spark)
     p = load_table(spark, sf_dir, "part")
     ref = p.filter(F.col("p_brand") == "Brand#4").agg(
         F.min("p_retailprice").alias("mn"), F.max("p_retailprice").alias("mx")

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -44,7 +43,6 @@ def evt_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; the sparse column is manufactured with CASE so no second scan
     or self-join is needed (the naive formulation joins each row to its
     last purchase — a per-row range join this window rewrite avoids)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -104,7 +102,6 @@ def evt_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmented-scan form: chunk the series, compute per-chunk (ewma,
     (1-α)^len) pairs, then fold the per-chunk carry terms — associative,
     so it distributes."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     schema = "user_id long, event_id long, ewma double"
     return ev.groupBy("user_id").applyInPandas(_ewma_group, schema)
@@ -139,7 +136,6 @@ def evt_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg-only rewrite equals the window formulation. At 100 TB this is the
     canonical downsampling shape: one shuffle on the (series, bucket) key,
     all states constant-size."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     order_key = F.struct(F.col("ts"), F.col("event_id"))
     return (
@@ -175,7 +171,6 @@ def evt_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB with wide frames the rewrite is approx_percentile over the
     window (t-digest state, mergeable) or the two-heap streaming median
     inside applyInPandas — the oracle stays this exact form either way."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -237,7 +232,6 @@ def evt_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential per-partition pass, the same segmented-scan story as
     evt_ewma above. Ties on ts are broken by event_id on BOTH sides so
     the prefix sums agree bitwise."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     flow = F.when(F.col("event_type") == "error", -F.col("value")).otherwise(
         F.col("value")
@@ -304,7 +298,6 @@ def evt_forecast_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     to calendar gaps where a window lag(7) silently misaligns — and the
     scorecard is one tiny aggregate. The only corpus-sized shuffle is
     the daily rollup; everything after runs on KBs at any scale."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -381,7 +374,6 @@ def evt_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-year 100 TB corpus decomposition would partition these
     windows by series key (per product / per region), which changes
     nothing in the expression, only the partitionBy."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("day")
@@ -502,7 +494,6 @@ def evt_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     switches to the segmented-scan fold evt_ewma documents — Holt's
     update is an affine map (l,b) ↦ M(x)·(l,b)+c(x), so per-chunk
     2×2 matrix products fold associatively."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = ev.groupBy(
         "event_type", F.to_date("ts").cast("string").alias("day")
@@ -565,7 +556,6 @@ def evt_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window family partitioned by series — all five sums share a
     single frame, one shuffle total. The closed form divides exact
     sums of rounded inputs, so 6dp output rounding is stable."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = ev.groupBy(
         "event_type",
@@ -652,7 +642,6 @@ def evt_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     task, and past that the repeated-median variant subsamples pairs
     per point. The intercept pass re-joins the tiny per-series slope
     frame (broadcast) against the daily points — never the raw log."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -808,7 +797,6 @@ def evt_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     affine in (l, b, s-vector), so a whale series folds associatively
     as (m+2)x(m+2) matrix products — the evt_ewma segmented-scan
     escape hatch, one rung bigger."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = ev.groupBy(
         "event_type", F.to_date("ts").cast("string").alias("day")
@@ -859,7 +847,6 @@ def evt_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order noise floor."""
     from hive_test_spark.registry import QUERIES
 
-    tune(spark)
     d = QUERIES["evt_seasonal_decompose"](spark, sf_dir).filter(
         F.col("trend").isNotNull()
     )
@@ -946,7 +933,6 @@ def evt_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Daily revenue is rounded to 6dp BEFORE the windows (the
     evt_holt_linear round-the-inputs rule) so both engines difference
     identical doubles."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.round(F.sum("value"), 6).alias("rev")
@@ -1038,7 +1024,6 @@ def evt_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic date, so each lag's pairing is an equi-join, never a
     range scan. Millions of series would partition the rollup by
     series key and reuse the identical plan per pair."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = (
         ev.filter(F.col("event_type").isin("view", "purchase"))
@@ -1201,7 +1186,6 @@ def evt_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     each direction is a 1-row moment reduction plus scalar epilogue.
     Millions of series pairs would partition the lag window by pair
     key and keep the identical leg arithmetic."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     s = (
         ev.filter(F.col("event_type").isin("view", "purchase"))
@@ -1347,7 +1331,6 @@ def evt_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on the (5-value) event_type — the quantile frame is
     broadcast-size by construction, so the join back is a broadcast
     hash join, never a shuffle of the fact side."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     q = ev.groupBy(F.col("event_type").alias("q_type")).agg(
         F.expr("percentile(value, 0.05D)").alias("p05"),

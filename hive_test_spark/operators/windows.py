@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -31,7 +30,6 @@ from hive_test_spark.session import tune
 def win_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROW_NUMBER per customer in order-date order (o_orderkey tiebreak
     keeps it deterministic — SURVEY.md §5.3)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select("o_custkey", "o_orderkey", F.row_number().over(w).alias("rn"))
@@ -50,7 +48,6 @@ def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANK / DENSE_RANK with gaps (floored balance induces real ties;
     floor, not int-cast — double→int cast truncates in Spark but rounds
     in DuckDB, a dialect trap for the oracle)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.floor("c_acctbal").desc())
     return c.select(
@@ -71,7 +68,6 @@ def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NTILE(4) quartile assignment within market segment."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return c.select("c_custkey", F.ntile(4).over(w).alias("quartile"))
@@ -88,7 +84,6 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_percent_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCENT_RANK / CUME_DIST relative-position functions."""
-    tune(spark)
     s = load_table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy("s_acctbal")
     return s.select(
@@ -110,7 +105,6 @@ def win_percent_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG/LEAD offset access + derived delta column."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     lagp = F.lag("o_totalprice", 1).over(w)
@@ -139,7 +133,6 @@ def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIRST_VALUE / LAST_VALUE with explicit frames (LAST needs the full
     frame — the default frame stops at CURRENT ROW)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     base = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_first = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -167,7 +160,6 @@ def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running aggregate with a ROWS frame."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -200,7 +192,6 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE (value-based) frame: trailing 1-hour sum per user — the batch
     sliding-window idiom. Epoch seconds make the RANGE bound portable."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "epoch_s", F.unix_timestamp("ts")
     )
@@ -228,7 +219,6 @@ def win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K per group (the classic Hive-test exercise): row_number + filter.
     Spark pushes a per-partition rank limit (WindowGroupLimit) before the
     shuffle, so only K rows per group per input partition move."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), "c_custkey")
     return (
@@ -266,7 +256,6 @@ def win_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min gap): lag → new-session flag →
     running sum as session id → per-session rollup. One shuffle on
     user_id serves both windows and feeds the final agg."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     order = ["ts", "event_id"]
     w = Window.partitionBy("user_id").orderBy(*order)
@@ -334,7 +323,6 @@ def win_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer partitioning); the running max is O(1) per row. The
     strictly-prior frame makes the island id exact (an interval never
     compares against its own end). Deterministic tie-break (s, e)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     iv = o.select(
         "o_custkey",
@@ -399,7 +387,6 @@ def win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers each partition to its end before emitting — same cost class
     as last_value-with-full-frame, fine on dimension-scale partitions,
     use the top-k join shape on fact-scale ones."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
     full = (
@@ -450,7 +437,6 @@ def win_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical sessionless rate-limit / rolling-exposure query; for
     cross-user global time windows use the tumbling/sliding
     stream_* ops instead, which need no per-key shuffle at all."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("hts_win_time_range_events")
     return spark.sql(
@@ -495,7 +481,6 @@ def win_count_distinct_over(spark: SparkSession, sf_dir: str) -> DataFrame:
     URLs per user), swap the exact set for an approx sketch column
     (agg_sketch_distinct's HLL union over a self-joined prefix) — the
     exact set is the right call only when the domain is bounded."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")

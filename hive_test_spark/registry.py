@@ -7,19 +7,32 @@ signature ``(spark, sf_dir) -> DataFrame`` and must alias every computed
 column identically to its oracle SQL (driver hash-compares by column
 name — SURVEY.md §5.3).
 
+``register`` is the one entry point of every query: the wrapper it
+stores (and returns, so module-level names and operator-to-operator
+calls go through it too) applies ``session.tune`` and labels the jobs
+the build runs with the key. Operator bodies therefore never tune; a
+helper called outside ``queries()`` must tune itself.
+
 ``oracle=None`` ⇒ rows-only check (approx/streaming/partition-local ops).
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from hive_test_spark import session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+
+# Jobs a query's build runs (eager checkpoints, loops, stream starts) carry
+# its key here; the DataFrame's own actions run after the wrapper returns.
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def _load_driver_rows() -> tuple[frozenset[str], frozenset[str], dict[str, int]]:
@@ -106,10 +119,24 @@ def register(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn
     def deco(fn: QueryFn) -> QueryFn:
         if key in QUERIES:
             raise ValueError(f"duplicate operator key: {key}")
-        QUERIES[key] = fn
+
+        @functools.wraps(fn)
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            # Through the module attribute, so a wrapper installed on
+            # ``session.tune`` after this module loaded still sees the call.
+            session.tune(spark)
+            sc = spark.sparkContext
+            outer = sc.getLocalProperty(_JOB_DESCRIPTION)
+            sc.setLocalProperty(_JOB_DESCRIPTION, key)
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                sc.setLocalProperty(_JOB_DESCRIPTION, outer)  # None unsets it
+
+        QUERIES[key] = query
         if oracle is not None:
             ORACLES[key] = oracle
-        return fn
+        return query
 
     return deco
 

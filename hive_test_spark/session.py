@@ -2,8 +2,9 @@
 
 The driver may hand us an arbitrary ``SparkSession``; everything that is
 runtime-settable (session timezone, Arrow, AQE) is (re-)applied by
-``tune()`` at the top of every query function so correctness does not
-depend on who built the session.
+``tune()``. The wrapper ``registry.register`` stores for every query calls
+it before the build, so correctness does not depend on who built the
+session. A helper called outside ``queries()`` must call ``tune`` itself.
 
 Scale notes (100 TB design): these configs are the single place where
 cluster-level tuning lives. On a real cluster the same factory is used
@@ -60,8 +61,6 @@ def shuffle_partitions(spark: SparkSession) -> int:
             n = 0
         if n > 0:
             return n
-        import warnings
-
         warnings.warn(
             f"SPARK_GRAFT_SHUFFLE_PARTITIONS={env!r} is not a positive "
             "int; falling back to defaultParallelism"
@@ -81,11 +80,7 @@ def fanout(spark: SparkSession) -> int:
     the spread adapts to the host instead of over/under-parallelizing
     (ADVICE r8). On this harness (local[32]) it returns exactly 32, so
     existing verified plans are unchanged."""
-    try:
-        n = spark.sparkContext.defaultParallelism
-    except Exception:  # session without a live context (never in practice)
-        n = 0
-    return n if n and n > 0 else 32
+    return spark.sparkContext.defaultParallelism
 
 
 def tune(spark: SparkSession) -> SparkSession:

@@ -26,7 +26,6 @@ from pyspark.sql import types as T
 
 from hive_test_spark.io import load_table, scratch_dir
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 def _materialize(df: DataFrame, fmt: str, path: str, **options) -> str:
@@ -51,7 +50,6 @@ def _sf_tag(sf_dir: str) -> str:
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized columnar parquet scan: reads exactly 2 columns
     (ReadSchema pruning) regardless of table width."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -81,7 +79,6 @@ CUSTOMER_SCHEMA = T.StructType(
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delimited-text scan (Hive TextFile+SerDe): explicit schema — never
     inferSchema at scale (it is a full extra pass over the data)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     path = _materialize(c, "csv", scratch_dir("fmt", _sf_tag(sf_dir), "customer_csv"),
                         header="true")
@@ -102,7 +99,6 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines scan (Hive JsonSerDe analogue), explicit schema."""
-    tune(spark)
     s = load_table(spark, sf_dir, "supplier")
     schema = T.StructType(
         [
@@ -130,7 +126,6 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC scan (Hive's native columnar format) — full pushdown support."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     path = _materialize(o, "orc", scratch_dir("fmt", _sf_tag(sf_dir), "orders_orc"))
     df = spark.read.orc(path)
@@ -153,7 +148,6 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def view_over_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE VIEW: named logical query re-used through the SQL front end.
     Views are pure plan macros — the optimizer sees through them."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     c.createOrReplaceTempView("hts_customer_v")
     spark.sql(
@@ -203,7 +197,6 @@ def scan_regex_serde(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB note: text scans are splittable by line; the regex runs
     JVM-side inside codegen. Schema-on-read costs one parse pass — the
     op's own output shows why you convert logs to parquet once parsed."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     lines = o.select(
         F.concat(
@@ -263,7 +256,6 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-hour load. The cache() is the documented Spark requirement
     for referencing the corrupt-record column; at scale quarantine to a
     separate sink in the same pass instead of caching."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     lines = o.select(
         F.concat(
@@ -334,7 +326,6 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one task. The content column stays opaque BINARY end-to-end —
     decode happens in Arrow-batched Python (llm/multimodal.py), never
     row-at-a-time."""
-    tune(spark)
     # Scratch dir is keyed on the blob count AND a digest of the payload
     # recipe: changing _N_BINARY_FILES or the generator formula must
     # invalidate the cache, or stale b*.bin files from a prior run would
@@ -398,7 +389,6 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     note: the avro format is NOT deployable here (external module jar
     absent from this build — "Failed to find data source: avro"), which
     is why the format matrix is parquet/CSV/JSON/ORC/XML/text/binary."""
-    tune(spark)
     s = load_table(spark, sf_dir, "supplier")
     path = scratch_dir("fmt", _sf_tag(sf_dir), "supplier_xml")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -464,7 +454,6 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract enforcement, DROPMALFORMED silently loses data and should
     be confined to exploratory reads. Both reads here are one pass,
     schema explicit — inferSchema would add a full extra scan."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -556,7 +545,6 @@ def scan_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     fan out to footers; new columns must be APPENDED nullable — type
     narrowing or renames break old readers and are a table-format
     (rename-by-id) feature, not a parquet one."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     path = scratch_dir("fmt", _sf_tag(sf_dir), "orders_schema_evo")
     if not os.path.exists(os.path.join(path, "_done")):
@@ -613,7 +601,6 @@ def scan_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columnar formats shred the same nesting (parquet repetition levels)
     so the struct list survives into parquet too — JSON is exercised
     here because schema-on-read text is the harder contract."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 5000)
     li = load_table(spark, sf_dir, "lineitem")
     path = scratch_dir("fmt", _sf_tag(sf_dir), "orders_nested_json")
@@ -675,7 +662,6 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     files. Row-position virtual columns (BLOCK__OFFSET) intentionally
     have no equivalent: row identity at scale belongs in data keys,
     not physical offsets."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     loc = scratch_dir("scan", tag, "orders_meta_layout")
     marker = os.path.join(loc, "_hts_ready")

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, scratch_dir
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 from hive_test_spark.sources.scans import _sf_tag
 
@@ -42,7 +41,6 @@ from hive_test_spark.sources.scans import _sf_tag
 def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT OVERWRITE ... PARTITION(col): partitionBy parquet write, then
     a re-read that prunes to the partition dirs (partition pruning)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     path = scratch_dir("sink", _sf_tag(sf_dir), "orders_by_status")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
@@ -67,7 +65,6 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT INTO (append): overwrite first batch, append second batch,
     re-read — bag semantics of append are visible in the count."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice", "o_orderstatus")
     path = scratch_dir("sink", _sf_tag(sf_dir), "orders_append")
     shutil.rmtree(path, ignore_errors=True)
@@ -94,7 +91,6 @@ def ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE TABLE AS SELECT through the SQL front end and the session
     catalog (in-memory catalog; on a warehouse this is the metastore),
     with an explicit LOCATION so data lands in scratch."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part")
     p.createOrReplaceTempView("hts_part_v")
     tag = _sf_tag(sf_dir).replace(".", "_")
@@ -140,7 +136,6 @@ def sink_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Metric sums round to cents: they are ~1e9 where double addition-order
     noise sits at ~1e-7, below round-6 but not round-2."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
     ).persist()
@@ -224,7 +219,6 @@ def meta_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^6 specs = 10^6 metastore rows per query). Partition columns stay
     low-cardinality; everything finer belongs in bucketing or file
     sort order, not the metastore."""
-    tune(spark)
     table = _ensure_part_meta_table(spark, sf_dir)
     specs = spark.sql(f"SHOW PARTITIONS {table}").select(
         F.col("partition").alias("partition_spec"),
@@ -292,7 +286,6 @@ def meta_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate), run per-partition-batch after ingest; planners read the
     catalog row, never the data. High-NDV columns store the HLL
     estimate — the 2% error is irrelevant to join reordering."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_stats_meta_{tag}"
     if not spark.catalog.tableExists(table):
@@ -350,7 +343,6 @@ def meta_show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     (production reads counts from table-level stats, see
     meta_analyze_stats). Name-prefix namespacing is the poor man's
     schema; real deployments use databases — same enumeration API."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     prefix = f"hts_cat_{tag}"
     region = load_table(spark, sf_dir, "region")
@@ -405,7 +397,6 @@ def sink_csv_quoting(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operational reason pipelines re-land CSV as parquet on arrival;
     keep multiline text out of delimited interchange or cap file sizes
     at write time (maxRecordsPerFile)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 300)
     tricky = c.select(
         "c_custkey",
@@ -474,7 +465,6 @@ def meta_describe_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging, scan_parquet_schema_evolution). Schema-as-data is the
     contract-testing idiom: diff this output across pipeline versions
     to catch silent type drift before it lands in 800k files."""
-    tune(spark)
     out = None
     for t in ("events", "embeddings"):
         df = load_table(spark, sf_dir, t)
@@ -529,7 +519,6 @@ def meta_msck_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovery. Discovery never reads data files: a spec with corrupt
     parquet still registers (correctness of content is the reader's
     job, which is why the join-back to real counts matters here)."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_msck_meta_{tag}"
     loc = scratch_dir("meta", tag, table)
@@ -614,7 +603,6 @@ def meta_refresh_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql.metadataCacheTTLSeconds or routes appends through the
     catalog (ADD PARTITION / transactional table formats) instead of
     refresh-after-the-fact."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_refresh_meta_{tag}"
     loc = scratch_dir("meta", tag, table)
@@ -687,7 +675,6 @@ def sink_insert_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition subdirectories (partitioned INSERT OVERWRITE) when
     the consumer filters, because a flat export can only be pruned by
     filename convention."""
-    tune(spark)
     for t in ("supplier", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"hts_sink_{t}")
     out = scratch_dir("sink", _sf_tag(sf_dir), "export_nation_bal")
@@ -737,7 +724,6 @@ def meta_drop_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contrast dml_delete_rewrite (row-level, rewrites files): partition
     drop only works when the retention boundary IS the partition
     key — the reason fact tables partition by ingest date."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_droppart_meta_{tag}"
     loc = scratch_dir("meta", tag, table)
@@ -807,7 +793,6 @@ def meta_add_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-cost, never data-cost. IF NOT EXISTS makes the ingest
     idempotent under retries, which is why the statement form beats
     implicit discovery in pipelines."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_addpart_meta_{tag}"
     loc = scratch_dir("meta", tag, table)
@@ -895,7 +880,6 @@ def meta_show_create_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     data pass is the one-time exhibit-table write shared with
     meta_show_partitions. Parsing happens on a 1-row DataFrame via
     JVM regexp (no driver-side string handling beyond the plan)."""
-    tune(spark)
     table = _ensure_part_meta_table(spark, sf_dir)
     ddl = spark.sql(f"SHOW CREATE TABLE {table}")
     (col,) = ddl.columns
@@ -966,7 +950,6 @@ def dml_exchange_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     The staged layout is written once per scale factor (marker-gated);
     the two catalog tables are re-declared each run so the op is
     idempotent in any fresh session — the external-path idiom."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     src, tgt = f"hts_xchg_src_{tag}", f"hts_xchg_tgt_{tag}"
     loc = scratch_dir("meta", tag, "xchg_staging")
@@ -1057,7 +1040,6 @@ def meta_tblproperties(spark: SparkSession, sf_dir: str) -> DataFrame:
     enforcement jobs, cost attribution, PII classification) because
     they travel with the table through SHOW CREATE TABLE and
     metastore replication."""
-    tune(spark)
     table = _ensure_part_meta_table(spark, sf_dir)
     spark.sql(
         f"ALTER TABLE {table} SET TBLPROPERTIES ("
@@ -1114,7 +1096,6 @@ def meta_show_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: pure catalog metadata — zero data scanned; the listing
     is a driver-local catalog enumeration (hundreds of rows) shipped
     through ordinary DataFrames so the facts still flow JVM-side."""
-    tune(spark)
     # Hive's CREATE TEMPORARY FUNCTION takes a Java class; Spark's
     # engine-native user-function surface is the SQL macro form
     # (CREATE TEMPORARY FUNCTION ... RETURNS — fn_sql_macro's subject),
@@ -1232,7 +1213,6 @@ def sink_export_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than relying on self-describing data files alone."""
     import json
 
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
@@ -1349,7 +1329,6 @@ def meta_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     n+sum and derives nothing. Refresh rides partition overwrite of
     changed days only (dynamic partition overwrite), the
     scale_incremental_agg pattern."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     mv = f"hts_mv_daily_rev_{tag}"
     if not spark.catalog.tableExists(mv):
@@ -1414,7 +1393,6 @@ def meta_show_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     THROUGH the view at query time; contrast meta_materialized_view,
     which trades storage + refresh for skipping the fact scan. SHOW
     VIEWS itself is a driver-local catalog enumeration."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
@@ -1491,7 +1469,6 @@ def meta_explain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-flight gate pattern: assert plan facts before launching a
     cluster-scale job; tools/audit_plans.py runs the same checks
     fleet-wide over the registry."""
-    tune(spark)
     for t in ("orders", "customer"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"hts_exp_{t}")
     ex = spark.sql(
@@ -1574,7 +1551,6 @@ def sink_hive_textfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     billions of legacy ^A rows exactly once — straight into parquet —
     and getting the SerDe contract wrong silently corrupts every
     downstream join."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
     )
@@ -1640,7 +1616,6 @@ def meta_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the first real query instead of a blocking scan; and always
     UNCACHE on pipeline exit — an orphaned cache holds executor memory
     for the session's lifetime (this repo's cache-hygiene rule)."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     view = f"hts_cache_meta_{tag}"
     load_table(spark, sf_dir, "lineitem").select(
@@ -1719,7 +1694,6 @@ def meta_database_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay in scratch after the drop, proving the external contract) and
     the name-scoping that SHOW TABLES LIKE prefix hacks approximate
     without it (see meta_show_tables)."""
-    tune(spark)
     tag = _sf_tag(sf_dir).replace(".", "_")
     db = f"hts_db_{tag}"
     comment = "governance boundary: curated zone"

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 
 @register(
@@ -36,7 +35,6 @@ from hive_test_spark.session import tune
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 10-minute window agg — same F.window expression a
     readStream pipeline uses."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
@@ -62,7 +60,6 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (10-minute length, 5-minute slide): every event lands
     in exactly 2 windows. Oracle mirrors via the offset-expansion idiom."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
@@ -102,7 +99,6 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based session window (30-minute gap) via F.session_window — the
     native streaming session operator; oracle is the lag/cumsum idiom."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")

@@ -27,7 +27,6 @@ from pyspark.sql import types as T
 from hive_test_spark.io import NANOS_AS_LONG, parquet_schema, scratch_dir, table_path
 from hive_test_spark.llm.pipeline import _INCR_MINHASH_ORACLE
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
 
 def _events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
     """Copy events.parquet into a scratch dir usable as a streaming file
@@ -144,7 +143,6 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling count executed as a LIVE streaming query.
     The 10-minute watermark bounds window state; with one AvailableNow
     batch no rows are late, so the batch twin is exact."""
-    tune(spark)
     ev = _read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "10 minutes")
@@ -167,7 +165,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup within the watermark: the source is the events file
     duplicated 2× (guaranteed dups); dropDuplicates('event_id') restores
     exactly one copy — verified by aggregating the deduped stream."""
-    tune(spark)
     ev = _read_events_stream(spark, sf_dir, copies=2)
     deduped = ev.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
     # Dedup emits first-seen rows ON ARRIVAL; the trailing no-data batch
@@ -194,7 +191,6 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    tune(spark)
     ev = _read_events_stream(spark, sf_dir)
 
     def update_counts(key, pdfs, state: GroupState):
@@ -235,7 +231,6 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream–static enrichment: the static dim is broadcast into every
     micro-batch (the canonical streaming dimension-join shape)."""
-    tune(spark)
     ev = _read_events_stream(spark, sf_dir)
     dim = spark.createDataFrame(
         [("click", 1.0), ("view", 0.5), ("purchase", 10.0), ("signup", 5.0), ("error", 0.0)],
@@ -270,7 +265,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream–stream inner join: purchases matched to same-user clicks in
     the preceding 10 minutes, watermarks on both sides bound join state."""
-    tune(spark)
     ev1 = _read_events_stream(spark, sf_dir)
     ev2 = _read_events_stream(spark, sf_dir)
     purchases = (
@@ -319,7 +313,6 @@ def stream_sink_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sink/output-mode matrix: append (raw filter), complete (agg),
     update (agg), and a foreachBatch sink — each run live; the emitted
     row counts are deterministic under a single AvailableNow batch."""
-    tune(spark)
     ev = _read_events_stream(spark, sf_dir)
 
     append_out = _run_to_memory(ev.filter(F.col("event_type") == "error"), "append")
@@ -388,7 +381,6 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger, which is what 'exactly-once via idempotent sink' means."""
     from pyspark.sql import Window
 
-    tune(spark)
     ev = _read_events_stream_throttled(spark, sf_dir, copies=2)
     tag = os.path.basename(os.path.normpath(sf_dir))
     base = scratch_dir("stream_ledger", tag)
@@ -488,7 +480,6 @@ def stream_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     StateStore). At 100 TB this is the canonical telemetry-rollup
     topology: Kafka → watermark → windowed min_by/max_by/count → upsert
     sink; state per key never grows with event volume."""
-    tune(spark)
     ev = _read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -554,7 +545,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    tune(spark)
 
     try:  # capability probe: TWS driver worker hard-requires protobuf
         from google.protobuf import descriptor  # noqa: F401
@@ -680,7 +670,6 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB streaming job leans on at every executor loss or planned
     restart: offsets and state checkpoint atomically per micro-batch,
     so a restart neither re-counts A nor drops it."""
-    tune(spark)
     # Deterministic two-half split of events, cached like the stream srcs.
     events = table_path(sf_dir, "events")
     st = os.stat(events)
@@ -789,7 +778,6 @@ def stream_foreachbatch_multisink(spark: SparkSession, sf_dir: str) -> DataFrame
     deterministic content (idempotent by path = batch_id) — the
     exactly-once recipe for multi-destination fan-out without a
     two-phase commit."""
-    tune(spark)
     ev = _read_events_stream_throttled(spark, sf_dir, copies=2)
 
     run = uuid.uuid4().hex[:12]
@@ -882,7 +870,6 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _probe_band_index,
     )
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     ex_toks, ex_bands = _minhash_bands_from(
         docs.filter(F.col("doc_id") % _INCR_MOD != 0)

@@ -55,11 +55,12 @@ def main() -> int:
     for key in keys:
         t0 = time.time()
         try:
-            # Route through $SPARK_GRAFT_SHUFFLE_PARTITIONS: every query
-            # calls tune(), which (re-)applies session.shuffle_partitions
-            # at build time — a bare spark.conf.set here is clobbered
-            # before execution (r12 fix: the old conf.set probe never
-            # actually ran the second leg under a different layout).
+            # Route through $SPARK_GRAFT_SHUFFLE_PARTITIONS: the registry's
+            # wrapper calls tune() before every query build, which
+            # (re-)applies session.shuffle_partitions — a bare
+            # spark.conf.set here is clobbered before execution (r12 fix:
+            # the old conf.set probe never actually ran the second leg
+            # under a different layout).
             os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "32"
             a = qs[key](spark, args.sf).toPandas()
             os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "17"
