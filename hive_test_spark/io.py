@@ -20,6 +20,13 @@ Scale notes: at 100 TB each "table" is a directory of many files (or an
 external catalog table); ``read_parquet`` handles both, and the stamp
 covers every file under a directory table. Partition-pruned reads come
 for free when the warehouse layout is ``partitionBy`` -ed.
+
+Materialization: ``materialize`` is the engine's only checkpoint. Every
+operator that cuts a lineage (a loop round, a frame read by several
+branches, a result pinned inside a conf scope) goes through it, so the
+choice between local and reliable checkpoints is made here once: a
+reliable ``checkpoint`` when the deployment sets Spark's own
+``spark.checkpoint.dir``, a ``localCheckpoint`` otherwise.
 """
 
 from __future__ import annotations
@@ -121,6 +128,24 @@ def side(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
     if limit > 0 and sum(table_bytes(sf_dir, t) for t in tables) <= limit:
         return F.broadcast(df)
     return df.hint("shuffle_hash")
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df`` now and return a frame whose plan is a single scan of
+    the stored result, with the lineage cut (``df.transform(materialize)``).
+
+    With a checkpoint directory on the SparkContext (Spark's
+    ``spark.checkpoint.dir`` setting, or ``sc.setCheckpointDir``) this is
+    a reliable ``checkpoint(eager=True)``: the blocks are written to that
+    directory and survive the loss of the executor that computed them,
+    which a cluster needs for the engine's iterative loops. Spark does
+    not delete those files unless
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is true. Without
+    a directory (local mode, every test and benchmark run) it is
+    ``localCheckpoint(eager=True)``: the blocks live in executor storage."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

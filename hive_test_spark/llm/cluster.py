@@ -15,7 +15,7 @@ broadcastable), (b) one narrow pass computing argmin distance per vector
 (c) one map-side-combinable per-(cluster,pos) mean — the only shuffle,
 keyed on k×dim rows. Nothing is ever collected to the driver; the
 iteration count is FIXED so lineage stays shallow (convergence-driven
-loops would localCheckpoint the assignment every few rounds). Distances
+loops would materialize the assignment every few rounds). Distances
 are pure JVM ``aggregate(zip_with(...))`` — no Python workers anywhere.
 """
 
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
 
 KMEANS_K = 8
@@ -672,7 +672,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: each of the K−1 steps is one narrow pass (distance to
     the single broadcast new center + LEAST with the running min) and
     one TakeOrderedAndProject argmax — never a pairwise product; the
-    running min-distance frame is localCheckpoint-truncated per step
+    running min-distance frame is materialize-truncated per step
     (the llm_mmr_diversify lineage rule: each step references the
     previous frame twice). K is a constant, so the whole selection is
     K linear passes."""
@@ -683,7 +683,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = e.orderBy("vec_id").limit(1)
     sel = seed.select(
         F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     d = (
         e.crossJoin(sel)
         .select(
@@ -691,7 +691,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "emb",
             F.round(F.expr(_SQDIST.format(a="emb", b="c_emb")), 6).alias("d"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     picks = [(1, sel.select(F.col("c_id").alias("center_id"),
                             F.lit(0.0).alias("radius")))]
@@ -699,7 +699,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = (
             d.orderBy(F.col("d").desc(), "vec_id")
             .limit(1)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         picks.append(
             (
@@ -723,7 +723,7 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(F.expr(_SQDIST.format(a="emb", b="c_emb")), 6),
                 ).alias("d"),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
     out = None
     for step, frame in picks:
@@ -808,7 +808,7 @@ def llm_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 64-group shuffle — depth-constant cost; the corpus never
     shuffles. Fixed iteration count keeps lineage shallow (the
     graph_pagerank rule); a convergence-driven variant would
-    localCheckpoint every ~10 rounds like llm_dedup_clusters."""
+    materialize every ~10 rounds like llm_dedup_clusters."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
@@ -1186,7 +1186,7 @@ def llm_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity note: a(i) > 0 always holds here (no member sits ON its
     centroid at 6dp), so GREATEST never sees the 0/0 guard case."""
     e, c1 = _lloyd_chain(spark, sf_dir)
-    a2 = _assign(e, c1).localCheckpoint(eager=True)
+    a2 = _assign(e, c1).transform(materialize)
     c2 = _centroids(a2)
     dist = a2.crossJoin(F.broadcast(c2.withColumnRenamed("cluster", "cc"))).select(
         "vec_id",
@@ -1209,7 +1209,7 @@ def llm_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(9,6)")
         .alias("sil"),
         F.round("a", 6).cast("decimal(12,6)").alias("ad"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     per_c = s.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("long").alias("n_members"),
         (
@@ -1303,8 +1303,8 @@ def llm_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is identical for k in the tens of thousands (the pair
     matrix then shards by cluster-id range)."""
     e, c1 = _lloyd_chain(spark, sf_dir)
-    a2 = _assign(e, c1).localCheckpoint(eager=True)
-    c2 = _centroids(a2).localCheckpoint(eager=True)
+    a2 = _assign(e, c1).transform(materialize)
+    c2 = _centroids(a2).transform(materialize)
     scatter = (
         a2.join(F.broadcast(c2), "cluster")
         .select(
@@ -1358,7 +1358,7 @@ def llm_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cj").alias("worst_neighbor"),
             F.col("r_ij").alias("r_max"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     db = worst.agg(
         (
@@ -1445,7 +1445,7 @@ def llm_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
         a2.join(labels, "vec_id")
         .groupBy("cluster", "label")
         .agg(F.count(F.lit(1)).cast("long").alias("nij"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     sum_cells = cell.agg(
         F.sum((F.col("nij") * (F.col("nij") - 1) / 2).cast("long"))

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table, side
+from hive_test_spark.io import load_table, materialize, side
 from hive_test_spark.llm.pipeline import bucket_pairs
 from hive_test_spark.registry import register
 from hive_test_spark.session import fanout, tune
@@ -358,7 +358,7 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not failure, so no explicit unpersist hook is threaded through.
     cand = minhash_candidate_pairs(spark, sf_dir).select(
         "doc_a", "doc_b"
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
 
     # Precision leg: rescore every candidate on raw token sets. The
     # token tables are broadcast EXPLICITLY (r12): the checkpointed cand
@@ -864,7 +864,7 @@ def llm_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"i -> concat_ws(' ', slice(split(text, ' '), i + 1, {_CONT_W})))"
             )
         ).alias("shingles"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     posting = sh.select("doc_id", F.explode("shingles").alias("g"))
     df = posting.groupBy("g").agg(F.count(F.lit(1)).alias("docfreq"))
     rare = posting.join(

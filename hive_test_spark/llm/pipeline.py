@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hive_test_spark.io import load_table, side
+from hive_test_spark.io import load_table, materialize, side
 from hive_test_spark.registry import register
 from hive_test_spark.session import fanout
 
@@ -417,7 +417,7 @@ def llm_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planner broadcast-built candidate×batch-tokens and probed it from
     # ~1 partition. ~4 small rows per doc (band, bkey, n), the same
     # persisted-index stand-in stream_incremental_neardup checkpoints.
-    bands = bands.localCheckpoint(eager=True)
+    bands = bands.transform(materialize)
     decisions = _probe_band_index(
         incoming_docs=load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _INCR_MOD == 0)
@@ -583,7 +583,7 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): each round is one shuffle join on node id —
     the same loop GraphX/GraphFrames connected-components runs. Rounds
     needed = graph diameter (near-dup clusters are dense, so typically
-    ≤ 5). Each round materializes via localCheckpoint() which truncates the
+    ≤ 5). Each round goes through io.materialize, which truncates the
     previous round's lineage — without that the plan doubles per iteration. The
     convergence check is an aggregate (one boolean), not a collect of
     data rows.
@@ -596,7 +596,7 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         _minhash_verified_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     return _cluster_labels_from(spark, sf_dir, pairs)
 
@@ -612,15 +612,11 @@ def _cluster_labels_from(
     ).toDF("src", "dst").persist()
 
     d = load_table(spark, sf_dir, "documents")
-    # localCheckpoint (eager) rather than persist: it truncates the logical
-    # plan to a leaf each round. The pointer-doubling step below references
-    # `labels` twice per round, so with persist alone the *plan* (not the
-    # data) doubles every iteration — Spark OOMs just stringifying it by
-    # round ~10. On a real cluster the same loop uses reliable
-    # checkpoint() into the job's checkpoint dir for fault tolerance.
-    labels = d.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint(
-        eager=True
-    )
+    # materialize rather than persist: it truncates the logical plan to a
+    # leaf each round. The pointer-doubling step below references `labels`
+    # twice per round, so with persist alone the *plan* (not the data)
+    # doubles every iteration — Spark OOMs just stringifying it by round ~10.
+    labels = d.select("doc_id", F.col("doc_id").alias("cluster_id")).transform(materialize)
 
     # Min-label propagation with pointer doubling: each round takes the min
     # of (own label, neighbors' labels, label-of-own-label). The third term
@@ -661,7 +657,7 @@ def _cluster_labels_from(
                     new_label.alias("new_cid"),
                     (new_label < F.col("cluster_id")).alias("chg"),
                 )
-                .localCheckpoint(eager=True)
+                .transform(materialize)
             )
             changed = new_labels.filter("chg").limit(1).count()
             labels = new_labels.select(
@@ -1081,7 +1077,7 @@ def llm_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One signature build (the shared _minhash_sig_from chain) feeds all
     # three configs: checkpoint it.
     _, sig = _minhash_sig_from(d)
-    sig = sig.localCheckpoint(eager=True)
+    sig = sig.transform(materialize)
     # VALUES through SQL plans as a JVM LocalRelation — createDataFrame
     # over a Python list would plan applySchemaToPythonRDD instead.
     configs = spark.sql(
@@ -1350,7 +1346,7 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(side(ta, sf_dir, "documents"), "doc_a")
         .join(side(tb, sf_dir, "documents"), "doc_b")
         .select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     taus = spark.sql(
         "SELECT CAST(tau AS DOUBLE) AS tau FROM VALUES "
@@ -1446,8 +1442,8 @@ def llm_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the audit and is exactly the cost the estimator would remove."""
     d = load_table(spark, sf_dir, "documents")
     toks, mins = _minhash_wide(d)
-    toks = toks.localCheckpoint(eager=True)
-    mins = mins.localCheckpoint(eager=True)
+    toks = toks.transform(materialize)
+    mins = mins.transform(materialize)
     cand = bucket_pairs(
         _bands_from_wide(mins), ["band", "bkey"], "doc_id", ("doc_a", "doc_b")
     ).distinct()
@@ -1681,7 +1677,7 @@ def llm_cluster_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         _minhash_verified_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     labels = _cluster_labels_from(spark, sf_dir, pairs).select(
         "doc_id", "cluster_id"

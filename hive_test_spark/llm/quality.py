@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, materialize
 from hive_test_spark.operators.analytics import midrank
 from hive_test_spark.registry import register
 
@@ -594,7 +594,7 @@ def llm_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Three branches (ref side, cand side, totals) reference the
         # gram counts; checkpoint the reduced frame so documents is
         # scanned once for grams (audit showed 6 scans without it).
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     r = grams.select(
         F.col("doc_id").alias("ref_id"),
@@ -1292,14 +1292,14 @@ def llm_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             # state the actual semantics.
             (F.col("qa") >= F.col("qb")).cast("int").alias("win_a"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     nn = (
         battles.select(F.col("la").alias("i"), F.col("lb").alias("j"))
         .unionAll(battles.select(F.col("lb").alias("i"), F.col("la").alias("j")))
         .groupBy("i", "j")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     w = (
         battles.select(F.col("la").alias("i"), F.col("win_a").alias("win"))
@@ -1308,7 +1308,7 @@ def llm_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("i")
         .agg(F.sum("win").alias("wins"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     n_players = w.agg(F.count(F.lit(1)).alias("np"))
     p = w.crossJoin(n_players).select(
@@ -1331,7 +1331,7 @@ def llm_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.col("raw") / F.sum("raw").over(Window.partitionBy()), 8
             ).alias("p"),
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
     nbat = nn.groupBy("i").agg(F.sum("n").alias("n_battles"))
     return (
         w.join(p, "i")
@@ -1521,7 +1521,7 @@ def llm_judge_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         j1.cast("int").alias("j1"),
         j2.cast("int").alias("j2"),
         F.col("n_chars").between(150, 400).cast("int").alias("j3"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     rows = []
     for j in ("j1", "j2", "j3"):
         rows.append(
@@ -1617,7 +1617,7 @@ def llm_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("conf"), 6).alias("mean_conf"),
             F.round(F.avg("label"), 6).alias("accuracy"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     ece = per_bin.agg(
         F.round(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
 from hive_test_spark.session import fanout
 
@@ -869,7 +869,7 @@ def llm_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits don't crowd the result list. The greedy loop has constant
     depth K, so it UNROLLS into pure dataflow — K windowed-argmax
     stages over the bounded candidate pool (top-C=10 per probe from the
-    exact ranker), each stage localCheckpoint-truncated because every
+    exact ranker), each stage materialize-truncated because every
     step references the previous selection twice (a lazy unroll doubles
     the plan per step) — keeping the whole operator JVM-side; the oracle
     unrolls identically, and because every cosine is rounded to 6dp
@@ -920,14 +920,14 @@ def llm_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a fully lazy unroll doubles the plan per step — 2^K copies of the
     # candidate subtree, 300+ re-scans at K=5. Checkpointing the |Q|·C
     # pool, the |Q|·C² pair sims, and each |Q|-row pick keeps the plan
-    # K small stages; on a cluster use reliable checkpoint() instead.
-    slim = cand.select("query_id", "vec_id", "rel").localCheckpoint()
-    pair = pair.localCheckpoint()
+    # K small stages.
+    slim = cand.select("query_id", "vec_id", "rel").transform(materialize)
+    pair = pair.transform(materialize)
     sel = (
         slim.select("*", F.row_number().over(w_rel).alias("rn"))
         .filter(F.col("rn") == 1)
         .select("query_id", "vec_id", F.col("rel").alias("score"), F.lit(1).alias("rk"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     lam, om = _MMR_LAMBDA, 1.0 - _MMR_LAMBDA
     for i in range(2, _MMR_K + 1):
@@ -954,7 +954,7 @@ def llm_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             scored.select("*", F.row_number().over(w_s).alias("rn"))
             .filter(F.col("rn") == 1)
             .select("query_id", "vec_id", "score", F.lit(i).alias("rk"))
-            .localCheckpoint()
+            .transform(materialize)
         )
         sel = sel.unionAll(nxt)
     return sel.select("query_id", "rk", "vec_id", F.round("score", 6).alias("mmr_score"))
@@ -1310,7 +1310,7 @@ def llm_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: D
         e.select("vec_id")
         .join(indeg, "vec_id", "left")
         .select("vec_id", F.coalesce("in_degree", F.lit(0)).alias("in_degree"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     stats = alln.agg(
         F.avg("in_degree").alias("mu"),
@@ -1602,12 +1602,12 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("*", F.row_number().over(w_route).alias("rn"))
         # referenced once per sweep point (the graph_triangles 2+-refs rule):
-        # localCheckpoint, not cache — a returned-plan cache can never be
+        # materialize, not cache — a returned-plan cache can never be
         # unpersisted before consumption, so repeated invocations would pin
         # CacheManager entries in the shared session forever (ADVICE r7);
-        # checkpoint blocks are freed by the ContextCleaner once the
+        # local checkpoint blocks are freed by the ContextCleaner once the
         # returned frame is released.
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     corpus = e.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -1616,12 +1616,12 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("b_norm"),
     )
     # ground truth is reused by every sweep point — materialize once instead
-    # of recomputing the exact top-k chain len(sweep) times (localCheckpoint
-    # so storage stays bounded per run, see the routed note above)
+    # of recomputing the exact top-k chain len(sweep) times (a checkpoint,
+    # not a cache, so storage stays bounded per run: see the routed note)
     exact = (
         llm_cosine_topk(spark, sf_dir)
         .select("probe_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     w_k = Window.partitionBy("probe_id").orderBy(
         F.col("cos_sim").desc(), "neighbor_id"
@@ -1644,8 +1644,8 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             # read twice below (candidate-count agg + top-k cut): materialize
             # the bucket-bounded candidate table so each cell scan runs once
-            # (localCheckpoint, not cache — see the routed note above)
-            .localCheckpoint(eager=True)
+            # (materialize, not cache — see the routed note above)
+            .transform(materialize)
         )
         n_cand = cand.agg(F.count(F.lit(1)).alias("total_candidates"))
         topk = (
@@ -1920,7 +1920,7 @@ def llm_precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(nh * 1.0 / F.col("k"), 6).alias("p_at_k"),
         F.round(nh * 1.0 / _PRK_REL_K, 6).alias("r_at_k"),
         F.round(nh * 2.0 / (F.col("k") + _PRK_REL_K), 6).alias("f1_at_k"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     macro = per_q.groupBy("k").agg(
         (
             F.sum(F.col("p_at_k").cast("decimal(8,6)"))

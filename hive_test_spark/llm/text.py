@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
 
 
@@ -1070,11 +1070,11 @@ def _bm25_index_frames(spark: SparkSession, sf_dir: str):
         d.select("doc_id", F.explode(toks).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     dlen = d.select(
         "doc_id", F.size(toks).cast("double").alias("dl")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     stats = dlen.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avg_dl"),
@@ -1085,7 +1085,7 @@ def _bm25_index_frames(spark: SparkSession, sf_dir: str):
         F.explode(F.array_distinct(F.slice(toks, 1, _BM25_QUERY_TOKENS))).alias(
             "token"
         ),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     return tf, dlen, stats, docfreq, queries
 
 
@@ -1243,7 +1243,7 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.select(F.explode("t").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     tot = uni.agg(F.sum("c1").cast("double").alias("n_tok"))
     pairs = toks.select(
@@ -1257,7 +1257,7 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     big_all = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     btot = big_all.agg(F.sum("c12").cast("double").alias("n_big"))
     big = big_all.filter(F.col("c12") >= _PMI_MIN_PAIR)
@@ -1403,7 +1403,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # Two branches (docfreq, the doc-side join) reference this
         # frame — checkpoint so documents scans once (the audit rule).
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     df = dg.groupBy("gram").agg(F.count(F.lit(1)).alias("docfreq"))
     return (
@@ -1758,7 +1758,7 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary dimension only — the reason real BPE trainers
     (SentencePiece, HF tokenizers) train on word counts, not raw text.
     The driver-side loop is constant-depth (_BPE_TRAIN_ROUNDS) with a
-    per-round localCheckpoint truncating lineage, the repo's unrolled-
+    per-round materialize truncating lineage, the repo's unrolled-
     loop rule; a 50k-merge production run would checkpoint the vocab
     table every few hundred rounds and skip recount via pair-delta
     updates (only words containing the merged pair change — the
@@ -1771,7 +1771,7 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace("word", "(.)", "|$1|").alias("s")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     merge_rows = []
     cur = words
@@ -1801,7 +1801,7 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         best = pairs.orderBy(
             F.col("c").desc(), F.col("l"), F.col("r")
-        ).limit(1).localCheckpoint(eager=True)
+        ).limit(1).transform(materialize)
         merge_rows.append(
             best.select(
                 F.lit(r).cast("bigint").alias("round"),
@@ -1821,7 +1821,7 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("s"),
                 "cnt",
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
     out = merge_rows[0]
     for m in merge_rows[1:]:
@@ -1894,7 +1894,7 @@ def llm_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus is tokenized once (the multi-branch audit rule).
     lens = d.select(
         "doc_id", F.size("t").cast("bigint").alias("doc_len")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     w_off = (
         Window.orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)

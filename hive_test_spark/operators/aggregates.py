@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
 
 
@@ -751,7 +751,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.crossJoin(rows_)
         .groupBy("r", bucket(F.col("key"), F.col("r")).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     probes = (
         li.filter(F.col("key") % _CMS_PROBE_MOD == 0)

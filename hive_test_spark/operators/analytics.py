@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
 
 
@@ -729,7 +729,7 @@ def evt_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         ev.select("user_id", F.to_date("ts").alias("d"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     cover = ud.select(
         "user_id",
@@ -1217,7 +1217,7 @@ def evt_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # tu feeds three branches (tot + both join sides): checkpoint once,
     # scan the corpus once (the evt_market_basket convention).
-    tu = ev.select("event_type", "user_id").distinct().localCheckpoint(eager=True)
+    tu = ev.select("event_type", "user_id").distinct().transform(materialize)
     tot = tu.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = tu.alias("a")
     b = tu.alias("b")
@@ -1929,7 +1929,7 @@ def evt_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # showed 5 scans). The deduped 2-column projection is the natural
     # stage boundary — checkpoint it once, every branch reads memory.
     basket = (
-        li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
+        li.select("l_orderkey", "l_partkey").distinct().transform(materialize)
     )
     item = basket.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_item"))
     a = basket.alias("a")
@@ -2028,7 +2028,7 @@ def evt_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         ev.groupBy(F.to_date("ts").alias("day"))
         .agg(F.sum("value").alias("rev"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     lags = spark.range(1, _ACF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
@@ -2209,7 +2209,7 @@ def evt_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("s_ts"), F.max("ts").alias("e_ts"))
         # Both boundary branches reference the session frame; checkpoint
         # the session-dimension rollup so events scans once.
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     bounds = sess.select(F.col("s_ts").alias("ts"), F.lit(1).alias("delta")).unionByName(
         sess.select(F.col("e_ts").alias("ts"), F.lit(-1).alias("delta"))
@@ -2405,7 +2405,7 @@ def evt_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
@@ -2417,7 +2417,7 @@ def evt_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "t_view")
         .agg(F.min("c_ts").alias("t_click"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
@@ -2430,7 +2430,7 @@ def evt_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "t_view", "t_click")
         .agg(F.min("p_ts").alias("t_purchase"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     nv = v.agg(F.count(F.lit(1)).alias("n_view"))
     nc = c.agg(F.count(F.lit(1)).alias("n_click"))
@@ -2685,7 +2685,7 @@ def evt_anova_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("value"), 6).alias("rev"))
         # Three branches (group means, grand mean, within-SS join)
         # reference the day series — checkpoint it (the evt_acf rule).
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     g = daily.groupBy("dow").agg(
         F.count(F.lit(1)).alias("n_g"), F.avg("rev").alias("mean_g")
@@ -3098,7 +3098,7 @@ def evt_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("p_trans"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     states = m.select("from_type").distinct()
     n_states = states.agg(F.count(F.lit(1)).alias("n_states"))
@@ -3113,7 +3113,7 @@ def evt_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("to_type").alias("new_state"))
             .agg(F.round(F.sum(F.col("pi") * F.col("p_trans")), 8).alias("new_pi"))
             .select(F.col("new_state").alias("state"), F.col("new_pi").alias("pi"))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
     p2 = prev.select(F.col("state").alias("p2_state"), F.col("pi").alias("p2_pi"))
     return (
@@ -3592,7 +3592,7 @@ def evt_retention_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("week") - F.col("cohort_week")).alias("offset_weeks"),
         )
         .agg(F.countDistinct("user_id").alias("n_active"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     base = grid.filter(F.col("offset_weeks") == 0).select(
         "cohort_week", F.col("n_active").alias("cohort_size")
@@ -3927,7 +3927,7 @@ def evt_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # feeds theta AND the adjusted readout: checkpoint so the
         # docstring's "one corpus-scale pass" is literally true.
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # NULLIF guard: a degenerate pre-period (all-equal pre sums) zeroes
     # var_samp, where Spark divides to NULL but DuckDB IEEE-divides to
@@ -5448,14 +5448,14 @@ def evt_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = s.filter(F.col("event_type") == "purchase").select(
         F.col("day").alias("yday"), F.col("rev").alias("y")
     )
-    # ONE corpus pass: the ~|days| base frame is localCheckpoint-
-    # materialized (the llm_rank_rbo shared-frame idiom) so the two
-    # rank legs and the pair join reuse it instead of re-deriving the
-    # (type, day) rollup lineage per reference.
+    # ONE corpus pass: the ~|days| base frame is materialized (the
+    # llm_rank_rbo shared-frame idiom) so the two rank legs and the pair
+    # join reuse it instead of re-deriving the (type, day) rollup lineage
+    # per reference.
     base = (
         x.join(y, F.col("yday") == F.col("day"))
         .select("day", "x", "y")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
     def ranks(col: str) -> DataFrame:
@@ -5773,7 +5773,7 @@ def evt_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         ev.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.round(F.sum("value"), 6).alias("rev"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     k_types = s.select(
         F.countDistinct("event_type").alias("n_types")
@@ -5914,7 +5914,7 @@ def evt_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         x.join(y, F.col("yday") == F.col("day"))
         .select("day", "x", "y")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = base.select(
         F.col("day").alias("d1"), F.col("x").alias("x1"), F.col("y").alias("y1")
@@ -6332,7 +6332,7 @@ def evt_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.col("ts").cast("date").alias("day"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .select("n", F.row_number().over(w_day).alias("rn"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     pts = None
     for m in _HURST_SIZES:
@@ -6543,7 +6543,7 @@ _DAILY_VP_SQL = """s AS (
 
 def _daily_vp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of _DAILY_VP_SQL (one corpus pass, map-side
-    combinable; callers localCheckpoint when they branch)."""
+    combinable; callers materialize when they branch)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.filter(
@@ -6616,7 +6616,7 @@ def evt_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (grouped by series key), never the corpus; millions of series
     partition the census by series key with identical arithmetic —
     the O(n log n) merge-sort S-count is the whale-series rewrite."""
-    s = _daily_vp(spark, sf_dir).localCheckpoint(eager=True)
+    s = _daily_vp(spark, sf_dir).transform(materialize)
     a = s.select(
         F.col("event_type").alias("et"),
         F.col("day").alias("d1"),
@@ -7092,7 +7092,7 @@ def evt_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(w_r).alias("r"),
         F.sum("c").over(w_c).alias("cc"),
         F.sum("c").over(w_n).alias("n"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     mi_term = F.round(
         (F.col("c") * 1.0 / F.col("n"))
         * F.log(
@@ -7186,7 +7186,7 @@ def evt_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite is the rank-sum identity via evt_mann_whitney's midrank
     machinery (one sort-free window pass), which this operator's
     day-frame census cross-checks at fixture scale."""
-    s = _daily_vp(spark, sf_dir).localCheckpoint(eager=True)
+    s = _daily_vp(spark, sf_dir).transform(materialize)
     x = s.filter(F.col("event_type") == "view").select(
         F.col("rev").alias("xr")
     )
@@ -7669,7 +7669,7 @@ def evt_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     paired = (
         x.join(y, F.col("yday") == F.col("day"))
         .select("day", "a", "b")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     diff = F.col("a") - F.col("b")
     # (18,6), not the natural (19,6) subtract width: the square must
@@ -7800,7 +7800,7 @@ def evt_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("mid")
     )
-    evs = ev.crossJoin(split).localCheckpoint(eager=True)
+    evs = ev.crossJoin(split).transform(materialize)
     train = (
         evs.filter(F.col("day") <= F.col("mid"))
         .groupBy("dow")

@@ -16,7 +16,7 @@ loops. The per-iteration cost is one shuffle join (edges ⋈ ranks on src)
 plus one map-side-combinable aggregation (contributions by dst); the edge
 list with precomputed 1/outdeg weights is computed once and cached, and
 the loop is a FIXED, small iteration count so lineage stays shallow (for
-unbounded convergence loops, checkpoint/localCheckpoint every ~10 rounds
+unbounded convergence loops, materialize every ~10 rounds
 — see llm_dedup_clusters' pointer-doubling CC for that pattern).
 Triangle counting uses the classic ordered-edge (p1 < p2 < p3) two-join
 form, so every wedge is generated exactly once; the support-≥2 edge filter
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table, side
+from hive_test_spark.io import load_table, materialize, side
 from hive_test_spark.registry import register
 
 _DAMP = 0.85
@@ -127,7 +127,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     eager ``.count()``). At 100 TB: the cached weighted edge list is the
     loop invariant — pre-partitioning it by src lets every iteration's
     join reuse that exchange, and a fixed iteration count keeps lineage
-    shallow (unbounded loops would localCheckpoint periodically)."""
+    shallow (unbounded loops would materialize periodically)."""
     edges = _trade_edges(spark, sf_dir)
     # deg feeds the initial ranks, every iteration's broadcast n_nodes,
     # and the final degree join — cache it, or six copies of the
@@ -203,7 +203,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop invariant, pre-partitioned by src so every level's join
     reuses one exchange; unreached nodes never enter the frontier, so
     cost tracks the reached subgraph, not the full graph. Unbounded-
-    diameter graphs would localCheckpoint every ~10 levels (see
+    diameter graphs would materialize every ~10 levels (see
     llm_dedup_clusters' pointer-doubling variant that halves the level
     count logarithmically)."""
     customer = load_table(spark, sf_dir, "customer")
@@ -228,7 +228,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (union branch + join branch), so without materialization
             # the plan doubles per level — the before-plan carried 96
             # parquet scans and 62 joins for 4 levels; 5 joins remain.
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
     return dist
 
@@ -380,11 +380,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one shuffle join (edges ⋈ labels on src) + one
     map-side-combinable MIN per round — the graph_pagerank loop shape
     with MIN in place of the rank sum; the fixed round count keeps
-    lineage shallow (convergence loops localCheckpoint, the CC
+    lineage shallow (convergence loops materialize, the CC
     pattern). The per-round rollups key on the label dimension."""
     # The edge list feeds every round: checkpoint once (the pagerank
     # cached-edges idiom) so the rounds re-read memory, not parquet.
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _trade_edges(spark, sf_dir).transform(materialize)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -405,7 +405,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # without it round t's plan embeds rounds 1..t-1 again and
             # the summary union re-evaluates every prefix (audit showed
             # 22 sort-merge joins for 3 rounds; 3 remain after).
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         rounds.append(labels.select(F.lit(i + 1).alias("round"), "label"))
     all_rounds = rounds[0]
@@ -471,9 +471,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: each round is one map-side-combinable degree count +
     one semi-join of edges against surviving nodes on BOTH endpoints
     — two hash joins keyed on node ids, no cartesian anywhere;
-    per-round localCheckpoint keeps the unrolled lineage flat (the CC
+    per-round materialize keeps the unrolled lineage flat (the CC
     cadence)."""
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _trade_edges(spark, sf_dir).transform(materialize)
     rounds = [edges]
     for _ in range(_KCORE_ROUNDS):
         prev = rounds[-1]
@@ -493,7 +493,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dst",
                 "left_semi",
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         rounds.append(nxt)
     out = None
@@ -906,7 +906,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-driver-count idiom). Fixed iteration count keeps lineage
     shallow (the graph_pagerank rule); the edge list never re-derives
     inside the loop."""
-    pairs = _trade_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    pairs = _trade_pairs(spark, sf_dir).transform(materialize)
     hd = pairs.groupBy("cust").agg(F.count(F.lit(1)).alias("hdeg"))
     ad = pairs.groupBy("supp").agg(F.count(F.lit(1)).alias("adeg"))
     h = hd.select("cust", F.lit(1.0).alias("h"))
@@ -1066,9 +1066,9 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: per sweep one shuffle join (edges x iterate on src)
     plus a map-side-combinable dst fold — the graph_pagerank profile;
     the iterate is node-dimension-sized and the lineage stays 3 deep
-    (longer sweeps would localCheckpoint every few rounds like
+    (longer sweeps would materialize every few rounds like
     llm_dedup_clusters)."""
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _trade_edges(spark, sf_dir).transform(materialize)
     x = edges.select("src").distinct().select(
         F.col("src").alias("node"), F.lit(1.0).alias("katz")
     )

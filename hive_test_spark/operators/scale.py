@@ -15,8 +15,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import SCRATCH_DIR, load_table, scratch_dir
+from hive_test_spark.io import SCRATCH_DIR, load_table, materialize, scratch_dir
 from hive_test_spark.registry import register
+from hive_test_spark.session import scoped_confs
 
 
 _SAMPLE_FRAC = 0.1
@@ -279,26 +280,16 @@ def scale_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in cbo_confs}
-    for k, v in cbo_confs.items():
-        spark.conf.set(k, v)
-    try:
-        out = (
+    with scoped_confs(spark, cbo_confs):
+        return (
             sup.join(nat, sup.s_nationkey == nat.n_nationkey)
             .groupBy("n_name")
             .agg(
                 F.count(F.lit(1)).alias("n_sup"),
                 F.round(F.sum("s_acctbal"), 6).alias("total_bal"),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
 
 
 @register(
@@ -531,17 +522,8 @@ def scale_aqe_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_test_spark.sources.scans import _sf_tag
 
     path = scratch_dir("scale", _sf_tag(sf_dir), "aqe_skew_result")
-    saved = {k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS}
-    for k, v in AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, AQE_SKEW_CONFS):
         skew_join_frame(spark, sf_dir).write.mode("overwrite").parquet(path)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(path)
 
 
@@ -607,17 +589,8 @@ def scale_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_test_spark.sources.scans import _sf_tag
 
     path = scratch_dir("scale", _sf_tag(sf_dir), "bloom_filter_result")
-    saved = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
-    for k, v in BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, BLOOM_CONFS):
         bloom_join_frame(spark, sf_dir).write.mode("overwrite").parquet(path)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(path)
 
 
@@ -1027,7 +1000,7 @@ def scale_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_key = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_ev"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     stats = per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -1135,17 +1108,6 @@ def scale_aqe_join_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_test_spark.sources.scans import _sf_tag
 
     path = scratch_dir("scale", _sf_tag(sf_dir), "aqe_join_switch_result")
-    saved = {k: spark.conf.get(k, None) for k in AQE_JOIN_SWITCH_CONFS}
-    for k, v in AQE_JOIN_SWITCH_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        aqe_switch_join_frame(spark, sf_dir).write.mode("overwrite").parquet(
-            path
-        )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    with scoped_confs(spark, AQE_JOIN_SWITCH_CONFS):
+        aqe_switch_join_frame(spark, sf_dir).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

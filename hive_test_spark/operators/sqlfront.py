@@ -20,8 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_test_spark.io import load_table
+from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
+from hive_test_spark.session import scoped_confs
 
 
 def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
@@ -868,7 +869,7 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-satisfying == min-satisfying).
 
     The block executes when ``spark.sql`` is invoked; the single result
-    row is pinned with ``localCheckpoint`` so the returned frame no
+    row is pinned with ``materialize`` so the returned frame no
     longer references session variables (which are scoped to the
     script) and the scripting conf can be restored immediately.
 
@@ -882,10 +883,8 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop body must see the previous iteration's result — model-fit
     convergence, retry-until-drained compaction, watermark advance."""
     _views(spark, sf_dir, "orders")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    try:
-        spark.conf.set("spark.sql.scripting.enabled", "true")
-        out = spark.sql(
+    with scoped_confs(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
             """
             BEGIN
               DECLARE thr BIGINT DEFAULT 1000;
@@ -913,10 +912,4 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (cnt <= 150 AND (iters = 0 OR prev > 150)) AS minimal;
             END
             """
-        ).localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
-    return out
+        ).transform(materialize)

@@ -15,8 +15,11 @@ shuffle-partition coalescing and skew-join splitting, and
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import warnings
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -92,6 +95,26 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of a ``with`` block, then
+    put each one back as it was: its old value, or unset when it had none.
+    The restore runs also when the body raises, so an operator that needs
+    a conf for its own plan never leaks it into later queries of the
+    shared session."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make ``hive_test_spark`` importable on Python workers regardless of
     the driver process's cwd/sys.path.
@@ -103,7 +126,8 @@ def _ship_package(spark: SparkSession) -> None:
     otherwise crash every UDF-tier operator with ModuleNotFoundError.
     Shipping the package once per SparkContext with ``addPyFile`` is the
     same mechanism a real cluster deployment uses (``--py-files``), and is
-    a no-op for JVM-only operators.
+    a no-op for JVM-only operators. Executors fetch the zip after this
+    returns, so it is removed only when the interpreter exits.
     """
     sc = spark.sparkContext
     if getattr(sc, "_hts_pkg_shipped", False):
@@ -114,6 +138,7 @@ def _ship_package(spark: SparkSession) -> None:
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
     zpath = os.path.join(tempfile.gettempdir(), f"hive_test_spark_pkg_{os.getpid()}.zip")
+    atexit.register(_remove, zpath)
     with zipfile.ZipFile(zpath, "w") as z:
         for dirpath, dirnames, filenames in os.walk(pkg_dir):
             dirnames[:] = [d for d in dirnames if d != "__pycache__"]
@@ -131,6 +156,11 @@ def _ship_package(spark: SparkSession) -> None:
             stacklevel=2,
         )
     sc._hts_pkg_shipped = True
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
 
 
 def get_spark(app_name: str = "hive-test-spark") -> SparkSession:

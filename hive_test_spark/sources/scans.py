@@ -24,11 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_test_spark.io import load_table, scratch_dir
+from hive_test_spark.io import load_table, materialize, scratch_dir
 from hive_test_spark.registry import register
 
 
-def _materialize(df: DataFrame, fmt: str, path: str, **options) -> str:
+def _write_once(df: DataFrame, fmt: str, path: str, **options) -> str:
     """Distributed write of df as fmt at path, once (cached by _SUCCESS)."""
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         df.write.mode("overwrite").options(**options).format(fmt).save(path)
@@ -80,8 +80,8 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delimited-text scan (Hive TextFile+SerDe): explicit schema — never
     inferSchema at scale (it is a full extra pass over the data)."""
     c = load_table(spark, sf_dir, "customer")
-    path = _materialize(c, "csv", scratch_dir("fmt", _sf_tag(sf_dir), "customer_csv"),
-                        header="true")
+    path = _write_once(c, "csv", scratch_dir("fmt", _sf_tag(sf_dir), "customer_csv"),
+                       header="true")
     df = spark.read.csv(path, header=True, schema=CUSTOMER_SCHEMA)
     return df.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
@@ -108,7 +108,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("s_acctbal", T.DoubleType()),
         ]
     )
-    path = _materialize(s, "json", scratch_dir("fmt", _sf_tag(sf_dir), "supplier_json"))
+    path = _write_once(s, "json", scratch_dir("fmt", _sf_tag(sf_dir), "supplier_json"))
     df = spark.read.json(path, schema=schema)
     return df.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n"),
@@ -127,7 +127,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC scan (Hive's native columnar format) — full pushdown support."""
     o = load_table(spark, sf_dir, "orders")
-    path = _materialize(o, "orc", scratch_dir("fmt", _sf_tag(sf_dir), "orders_orc"))
+    path = _write_once(o, "orc", scratch_dir("fmt", _sf_tag(sf_dir), "orders_orc"))
     df = spark.read.orc(path)
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -207,7 +207,7 @@ def scan_regex_serde(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100).cast("bigint").cast("string"),
         ).alias("value")
     )
-    path = _materialize(lines, "text", scratch_dir("fmt", _sf_tag(sf_dir), "orders_log"))
+    path = _write_once(lines, "text", scratch_dir("fmt", _sf_tag(sf_dir), "orders_log"))
     raw = spark.read.text(path)
     parsed = raw.select(
         F.regexp_extract("value", r"status=([A-Z])", 1).alias("status"),
@@ -253,9 +253,10 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB note: this is the ingestion-edge quarantine pattern — bad
     rows stay queryable for reprocessing instead of killing a
-    multi-hour load. The cache() is the documented Spark requirement
-    for referencing the corrupt-record column; at scale quarantine to a
-    separate sink in the same pass instead of caching."""
+    multi-hour load. The parse needs no cache: Spark refuses a raw-CSV
+    query only when the corrupt-record column is the sole column it
+    reads, and the rollup reads it beside the parsed ones in one pass.
+    At scale, quarantine to a separate sink in that same pass."""
     o = load_table(spark, sf_dir, "orders")
     lines = o.select(
         F.concat(
@@ -268,7 +269,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    path = _materialize(
+    path = _write_once(
         lines, "text", scratch_dir("fmt", _sf_tag(sf_dir), "orders_dirty_csv")
     )
     parsed = (
@@ -276,19 +277,13 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
-        .cache()
     )
-    # Materialize the tiny rollup eagerly, then release the cached parse
-    # — otherwise the full parsed CSV stays pinned in executor storage
-    # for the rest of the session (the sink_multi_insert discipline).
-    out = parsed.groupBy("status").agg(
+    return parsed.groupBy("status").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("_corrupt_record").alias("n_corrupt"),
         (F.count(F.lit(1)) - F.count("_corrupt_record")).alias("n_good"),
         F.sum("cents").alias("good_cents"),
-    ).localCheckpoint(eager=True)
-    parsed.unpersist()
-    return out
+    ).transform(materialize)
 
 
 _N_BINARY_FILES = 12

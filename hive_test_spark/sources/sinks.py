@@ -483,6 +483,28 @@ def meta_describe_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = part if out is None else out.unionAll(part)
     return out
 
+
+def _land_orders_by_status(spark: SparkSession, sf_dir: str, loc: str) -> None:
+    """Land ``orders`` (key, price, status) at ``loc`` partitioned by
+    ``o_orderstatus``, once per location: partition dirs exist on the FS
+    only, with no catalog entry. The ``_hts_ingested`` marker (invisible
+    to Spark's file listing, being "_"-prefixed) is written after the
+    layout is complete, so a half-written layout is landed again."""
+    marker = os.path.join(loc, "_hts_ingested")
+    if os.path.exists(marker):
+        return
+    shutil.rmtree(loc, ignore_errors=True)
+    (
+        load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_totalprice", "o_orderstatus")
+        .write.mode("overwrite")
+        .partitionBy("o_orderstatus")
+        .parquet(loc)
+    )
+    with open(marker, "w") as fh:
+        fh.write("ok")
+
+
 @register(
     "meta_msck_repair",
     """
@@ -522,20 +544,7 @@ def meta_msck_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_msck_meta_{tag}"
     loc = scratch_dir("meta", tag, table)
-    # Landing-zone ingest, cached per sf: partition dirs exist on the FS
-    # only ("_"-prefixed marker is invisible to Spark's file listing).
-    marker = os.path.join(loc, "_hts_ingested")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice", "o_orderstatus")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(loc)
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    _land_orders_by_status(spark, sf_dir, loc)
     # Fresh external table over the landed layout: DROP of an external
     # table forgets specs but keeps files, so every invocation exercises
     # the empty-catalog -> repaired transition, not a cached result.
@@ -727,18 +736,7 @@ def meta_drop_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_droppart_meta_{tag}"
     loc = scratch_dir("meta", tag, table)
-    marker = os.path.join(loc, "_hts_ingested")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice", "o_orderstatus")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(loc)
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    _land_orders_by_status(spark, sf_dir, loc)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
         f"CREATE TABLE {table} "
@@ -796,18 +794,7 @@ def meta_add_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_addpart_meta_{tag}"
     loc = scratch_dir("meta", tag, table)
-    marker = os.path.join(loc, "_hts_ingested")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice", "o_orderstatus")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(loc)
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    _land_orders_by_status(spark, sf_dir, loc)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
         f"CREATE TABLE {table} "
@@ -954,18 +941,7 @@ def dml_exchange_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, tgt = f"hts_xchg_src_{tag}", f"hts_xchg_tgt_{tag}"
     loc = scratch_dir("meta", tag, "xchg_staging")
     tgt_loc = scratch_dir("meta", tag, "xchg_curated")
-    marker = os.path.join(loc, "_hts_ingested")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice", "o_orderstatus")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(loc)
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    _land_orders_by_status(spark, sf_dir, loc)
     os.makedirs(tgt_loc, exist_ok=True)
     ddl = (
         "(o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING) "

@@ -24,9 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_test_spark.io import NANOS_AS_LONG, parquet_schema, scratch_dir, table_path
+from hive_test_spark.io import NANOS_AS_LONG, materialize, parquet_schema, scratch_dir, table_path
 from hive_test_spark.llm.pipeline import _INCR_MINHASH_ORACLE
 from hive_test_spark.registry import register
+from hive_test_spark.session import scoped_confs
 
 def _events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
     """Copy events.parquet into a scratch dir usable as a streaming file
@@ -102,11 +103,8 @@ def _run_to_memory(
     spark = df.sparkSession
     name = f"hts_mem_{uuid.uuid4().hex[:12]}"
     ckpt = scratch_dir("ckpt", name)
-    conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    saved = spark.conf.get(conf_key, None)
-    if not final_watermark_batch:
-        spark.conf.set(conf_key, "false")
-    try:
+    no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    with scoped_confs(spark, {} if final_watermark_batch else no_data):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -115,12 +113,6 @@ def _run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if not final_watermark_batch:
-            if saved is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, saved)
     try:
         q.awaitTermination(300)
     finally:
@@ -622,12 +614,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     ev = _read_events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with scoped_confs(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         stateful = (
             ev.withWatermark("ts", "1 hour")
             .groupBy("user_id")
@@ -642,11 +630,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _run_to_memory(stateful, "update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 @register(
@@ -844,7 +827,7 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the live twin of llm_incremental_minhash, which defines the batch
     semantics this stream must reproduce exactly (same oracle). The
     existing corpus's (band, band_key) index and token sets are
-    materialized once (localCheckpoint — the stand-in for the persisted
+    materialized once (io.materialize — the stand-in for the persisted
     index table a production pipeline keeps); the incoming split is
     landed as three parquet files and read with maxFilesPerTrigger=1,
     so AvailableNow genuinely runs ≥2 micro-batches (asserted). Each
@@ -874,8 +857,8 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex_toks, ex_bands = _minhash_bands_from(
         docs.filter(F.col("doc_id") % _INCR_MOD != 0)
     )
-    ex_toks = ex_toks.localCheckpoint(eager=True)
-    ex_bands = ex_bands.localCheckpoint(eager=True)
+    ex_toks = ex_toks.transform(materialize)
+    ex_bands = ex_bands.transform(materialize)
 
     run = uuid.uuid4().hex[:12]
     src = scratch_dir("stream_docs_src", run)

@@ -5,6 +5,7 @@ holds, and nothing falls back to a cartesian product."""
 from __future__ import annotations
 
 from hive_test_spark.plans.inspect import analyze, has_pushed_filters, scan_read_columns
+from hive_test_spark.session import scoped_confs
 from tests.conftest import SF_DIR
 
 
@@ -295,18 +296,12 @@ def test_aqe_skew_join_splits_partitions(spark, registry):
     partition was split instead of serializing on one task."""
     from hive_test_spark.operators.scale import AQE_SKEW_CONFS, skew_join_frame
 
-    saved = {k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS}
-    for k, v in AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, AQE_SKEW_CONFS):
         df = skew_join_frame(spark, SF_DIR)
         rows = df.collect()
         assert len(rows) == 3  # keys 0, 8, 9
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan[:2000]
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
 
 
 def test_bloom_runtime_filter_injected(spark, registry):
@@ -315,17 +310,11 @@ def test_bloom_runtime_filter_injected(spark, registry):
     probe on the fact side — rows that cannot join die pre-shuffle."""
     from hive_test_spark.operators.scale import BLOOM_CONFS, bloom_join_frame
 
-    saved = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
-    for k, v in BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, BLOOM_CONFS):
         df = bloom_join_frame(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan, plan[:1500]
         assert "might_contain" in plan
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
 
 
 def test_islands_single_customer_shuffle(spark, registry):
@@ -1526,10 +1515,7 @@ def test_aqe_demotes_smj_to_broadcast(spark, registry):
         aqe_switch_join_frame,
     )
 
-    saved = {k: spark.conf.get(k, None) for k in AQE_JOIN_SWITCH_CONFS}
-    for k, v in AQE_JOIN_SWITCH_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, AQE_JOIN_SWITCH_CONFS):
         df = aqe_switch_join_frame(spark, SF_DIR)
         static = df._jdf.queryExecution().sparkPlan().toString()
         assert "SortMergeJoin" in static, static[:1500]
@@ -1538,9 +1524,6 @@ def test_aqe_demotes_smj_to_broadcast(spark, registry):
         assert len(rows) >= 1
         executed = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in executed, executed[:2000]
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
 
 
 def test_bootstrap_ci_no_resample_shuffle(spark, registry):

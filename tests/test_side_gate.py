@@ -15,6 +15,7 @@ import pytest
 from hive_test_spark import io
 from hive_test_spark.oracle import compare
 from hive_test_spark.plans.inspect import explain_str
+from hive_test_spark.session import scoped_confs
 from tests.conftest import SF_DIR
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
@@ -54,10 +55,8 @@ SHUFFLE_HASH_IN_PLAN = {
 
 @pytest.fixture
 def no_broadcast(spark):
-    old = spark.conf.get(THRESHOLD)
-    spark.conf.set(THRESHOLD, "-1")
-    yield spark
-    spark.conf.set(THRESHOLD, old)
+    with scoped_confs(spark, {THRESHOLD: "-1"}):
+        yield spark
 
 
 def _logical(df) -> str:
