@@ -23,10 +23,10 @@ for free when the warehouse layout is ``partitionBy`` -ed.
 
 Materialization: ``materialize`` is the engine's only checkpoint. Every
 operator that cuts a lineage (a loop round, a frame read by several
-branches, a result pinned inside a conf scope) goes through it, so the
-choice between local and reliable checkpoints is made here once: a
-reliable ``checkpoint`` when the deployment sets Spark's own
-``spark.checkpoint.dir``, a ``localCheckpoint`` otherwise.
+branches, a result pinned inside a conf scope) goes through it, so how a
+lineage is cut is decided here once. Today that is a ``localCheckpoint``:
+its blocks live in executor storage and are freed by the ContextCleaner
+once the returned frame is released.
 """
 
 from __future__ import annotations
@@ -134,17 +134,8 @@ def materialize(df: DataFrame) -> DataFrame:
     """Run ``df`` now and return a frame whose plan is a single scan of
     the stored result, with the lineage cut (``df.transform(materialize)``).
 
-    With a checkpoint directory on the SparkContext (Spark's
-    ``spark.checkpoint.dir`` setting, or ``sc.setCheckpointDir``) this is
-    a reliable ``checkpoint(eager=True)``: the blocks are written to that
-    directory and survive the loss of the executor that computed them,
-    which a cluster needs for the engine's iterative loops. Spark does
-    not delete those files unless
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is true. Without
-    a directory (local mode, every test and benchmark run) it is
-    ``localCheckpoint(eager=True)``: the blocks live in executor storage."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
+    This is ``localCheckpoint(eager=True)``: the blocks live in executor
+    storage (MEMORY_AND_DISK), so a lost executor fails the query."""
     return df.localCheckpoint(eager=True)
 
 

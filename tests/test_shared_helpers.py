@@ -112,43 +112,3 @@ def test_landed_layout_cold_then_warm(spark, duck, registry, key):
         assert res["ok"] and res["bitwise"], f"{key}: {res['notes']}"
         assert marker.exists()
 
-
-_RELIABLE = """
-import sys
-sys.path.insert(0, {root!r})
-from hive_test_spark.api import oracle_sql, queries
-from hive_test_spark.oracle import compare, duck_connect
-from hive_test_spark.session import get_spark
-
-spark = get_spark("hts-checkpoint-dir")
-assert spark.sparkContext.getCheckpointDir(), "spark.checkpoint.dir was not applied"
-qs, oracles, duck = queries(), oracle_sql(), duck_connect({sf!r})
-for key in {keys!r}:
-    res = compare(key, qs[key](spark, {sf!r}).toPandas(), duck.execute(oracles[key]).df())
-    assert res["ok"] and res["bitwise"], (key, res["notes"])
-    print("ok", key)
-"""
-
-
-@pytest.mark.slow
-def test_reliable_checkpoints_match_oracle(tmp_path):
-    """With Spark's ``spark.checkpoint.dir`` set, ``materialize`` writes
-    reliable checkpoints there and the iterative keys still match DuckDB.
-    A context's checkpoint directory cannot be unset, so the session runs
-    in its own process."""
-    keys = ["graph_kcore", "graph_label_propagation", "graph_shortest_path", "llm_dedup_clusters"]
-    ckpt = tmp_path / "checkpoints"
-    run = subprocess.run(
-        [sys.executable, "-c", _RELIABLE.format(root=str(ROOT), sf=SF_DIR, keys=keys)],
-        env={
-            **os.environ,
-            "PYSPARK_SUBMIT_ARGS": f"--conf spark.checkpoint.dir={ckpt} pyspark-shell",
-        },
-        capture_output=True,
-        text=True,
-        timeout=1200,
-    )
-    assert run.returncode == 0, run.stderr[-4000:]
-    done = [ln for ln in run.stdout.splitlines() if ln.startswith("ok ")]
-    assert done == [f"ok {k}" for k in keys]
-    assert any(p.name.startswith("part-") for p in ckpt.rglob("*"))
