@@ -122,22 +122,22 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, not just the graph construction.
 
     Spark shape: edge list + per-src weight (1/outdeg) computed once and
-    cached; each iteration is edges⋈ranks (shuffle on src) → groupBy dst
+    materialized; each iteration is edges⋈ranks (shuffle on src) → groupBy dst
     partial-agg sum. Node count arrives via a broadcast 1-row plan (no
-    eager ``.count()``). At 100 TB: the cached weighted edge list is the
+    eager ``.count()``). At 100 TB: the materialized weighted edge list is the
     loop invariant — pre-partitioning it by src lets every iteration's
     join reuse that exchange, and a fixed iteration count keeps lineage
     shallow (unbounded loops would materialize periodically)."""
     edges = _trade_edges(spark, sf_dir)
     # deg feeds the initial ranks, every iteration's broadcast n_nodes,
-    # and the final degree join — cache it, or six copies of the
+    # and the final degree join — materialize it, or six copies of the
     # edge-build subtree re-aggregate per reference.
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).cache()
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).transform(materialize)
     # Loop invariant: each directed edge carries its source's 1/outdeg.
     edges_w = (
         edges.join(deg, "src")
         .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .cache()
+        .transform(materialize)
     )
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     ranks = deg.crossJoin(n_nodes).select(
@@ -199,7 +199,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     (NOT a recursive path-enumeration CTE: on a dense bipartite trade
     graph that would enumerate every path; level-wise min keeps each
     intermediate bounded by the node count — the exact reason the Spark
-    loop is also level-synchronous). At 100 TB: the cached edge list is
+    loop is also level-synchronous). At 100 TB: the materialized edge list is
     the loop invariant, pre-partitioned by src so every level's join
     reuses one exchange; unreached nodes never enter the frontier, so
     cost tracks the reached subgraph, not the full graph. Unbounded-
@@ -207,7 +207,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_dedup_clusters' pointer-doubling variant that halves the level
     count logarithmically)."""
     customer = load_table(spark, sf_dir, "customer")
-    edges = _trade_edges(spark, sf_dir).cache()
+    edges = _trade_edges(spark, sf_dir).transform(materialize)
     dist = customer.filter(F.col("c_nationkey") == _BFS_SRC_NATION).select(
         F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("node"),
         F.lit(0).alias("hops"),

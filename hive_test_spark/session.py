@@ -6,6 +6,12 @@ runtime-settable (session timezone, Arrow, AQE) is (re-)applied by
 it before the build, so correctness does not depend on who built the
 session. A helper called outside ``queries()`` must call ``tune`` itself.
 
+Static confs, such as the size of the generated-class cache, are read
+once when the SparkContext starts, so they live only in ``get_spark``.
+``tune()`` cannot change them: a session the driver built keeps Spark's
+defaults (a 100-entry codegen cache), which costs recompiles, not
+correctness.
+
 Scale notes (100 TB design): these configs are the single place where
 cluster-level tuning lives. On a real cluster the same factory is used
 with ``master`` unset (picked up from spark-submit), AQE handles runtime
@@ -45,12 +51,8 @@ def shuffle_partitions(spark: SparkSession) -> int:
     partitions land in the 100 MB–1 GB band, guide §2.2), otherwise the
     session's core count (``defaultParallelism``).
 
-    r12 optimization round: this was a literal 32 — right for the
-    local[32] harness, wrong everywhere else (the driver also benches at
-    a LOWER core count, where 32 shuffle tasks are pure scheduling
-    overhead at fixture scale, and a real cluster wants a data-sized
-    value). Every cross-partition reduction in the engine accumulates in
-    exact DECIMAL or integers (SCALE.md §9ac), so results are
+    Every cross-partition reduction in the engine accumulates in exact
+    DECIMAL or integers (SCALE.md §9ac), so results are
     partition-count-invariant by construction; AQE coalesces above
     whatever is set here."""
     env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
@@ -81,8 +83,7 @@ def fanout(spark: SparkSession) -> int:
     Derived from ``defaultParallelism`` (= total cores on local[N],
     executor-count-scaled on a real cluster) rather than a literal 32, so
     the spread adapts to the host instead of over/under-parallelizing
-    (ADVICE r8). On this harness (local[32]) it returns exactly 32, so
-    existing verified plans are unchanged."""
+    (ADVICE r8)."""
     return spark.sparkContext.defaultParallelism
 
 
@@ -179,6 +180,12 @@ def get_spark(app_name: str = "hive-test-spark") -> SparkSession:
         # Files: pack small test files; at scale maxPartitionBytes governs
         # scan parallelism (128m default keeps partitions executor-sized).
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Generated-class cache, keyed by source. Spark's default of 100
+        # entries is smaller than one pass over the headline keys (about
+        # 157 classes), so warm queries would recompile with Janino; the
+        # whole registry compiles about 6,300 classes. Static: read once
+        # when the context starts.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

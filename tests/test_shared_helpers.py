@@ -1,5 +1,6 @@
 """The engine's shared building blocks: ``io.materialize`` (the only
-checkpoint), ``session.scoped_confs`` (the only conf save/restore), the
+checkpoint, which leaves nothing pinned in the session's cache),
+``session.scoped_confs`` (the only conf save/restore), the
 landed ``orders`` layout of the partition-metadata keys, and the removal
 of the package zip that ``session._ship_package`` writes."""
 
@@ -47,6 +48,19 @@ def test_no_checkpoint_call_outside_io():
         and node.func.attr in ("localCheckpoint", "checkpoint")
     ]
     assert calls == []
+
+
+# Keys whose reused branch points go through ``io.materialize`` rather
+# than a ``.cache()`` that nothing unpersists.
+MATERIALIZED_BRANCHES = ["graph_pagerank", "graph_shortest_path"]
+
+
+def test_branch_points_leave_the_cache_manager_empty(spark, registry):
+    qs, _ = registry
+    spark.catalog.clearCache()
+    for key in MATERIALIZED_BRANCHES:
+        assert qs[key](spark, SF_DIR).collect(), key
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_scoped_confs_restores_after_return_and_raise(spark):
