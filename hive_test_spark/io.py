@@ -27,11 +27,22 @@ branches, a result pinned inside a conf scope) goes through it, so how a
 lineage is cut is decided here once. Today that is a ``localCheckpoint``:
 its blocks live in executor storage and are freed by the ContextCleaner
 once the returned frame is released.
+
+Landing: formats, layouts and stream sources the fixture does not ship
+(an ORC copy of ``orders``, a partitioned layout, a stream source
+directory) are written once into ``.scratch`` by ``land`` and reused
+while the fixture's files stay the same. ``land`` is the only
+write-once gate: it keys each copy on the fixture's files, not on its
+directory name, so a fixture rewritten in place or another fixture
+with the same directory name lands its own copy.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -192,3 +203,38 @@ def scratch_dir(*parts: str) -> str:
     p = os.path.join(SCRATCH_DIR, *parts)
     os.makedirs(os.path.dirname(p), exist_ok=True)
     return p
+
+
+LANDED_MARKER = "_hts_landed"
+
+
+def land(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
+    """Directory holding the scratch copy ``name`` derived from the
+    fixture at ``sf_dir``: ``SCRATCH_DIR/<name>/<basename>_<digest>``.
+
+    The digest covers the fixture's real path and the (inode, mtime_ns,
+    size) of each of its files, the stamp ``parquet_schema`` trusts. When
+    the directory lacks the ``LANDED_MARKER`` file, it is removed,
+    ``write(path)`` fills it and the marker is written last, so a
+    half-written copy lands again. Spark's file listing skips the
+    "_"-prefixed marker. Copies of ``name`` with the same basename and
+    another digest are removed, so ``.scratch`` keeps one per fixture
+    directory name. A copy follows the fixture, not the code: a changed
+    ``write`` needs a new ``name``."""
+    real = os.path.realpath(sf_dir)
+    digest = hashlib.sha1(real.encode())
+    for f, st in _table_files(real):
+        digest.update(f"{f}\0{st.st_ino}\0{st.st_mtime_ns}\0{st.st_size}\n".encode())
+    base = os.path.basename(os.path.normpath(sf_dir))
+    leaf = f"{base}_{digest.hexdigest()[:16]}"
+    parent = os.path.join(SCRATCH_DIR, name)
+    os.makedirs(parent, exist_ok=True)
+    for sib in os.listdir(parent):
+        if sib != leaf and sib.rpartition("_")[0] == base:
+            shutil.rmtree(os.path.join(parent, sib), ignore_errors=True)
+    path = os.path.join(parent, leaf)
+    if not os.path.exists(os.path.join(path, LANDED_MARKER)):
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
+        open(os.path.join(path, LANDED_MARKER), "w").close()
+    return path

@@ -21,6 +21,8 @@ are pure JVM ``aggregate(zip_with(...))`` — no Python workers anywhere.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -725,11 +727,8 @@ def llm_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .transform(materialize)
         )
-    out = None
-    for step, frame in picks:
-        row = frame.select(F.lit(step).alias("step"), "center_id", "radius")
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("step")
+    rows = [frame.select(F.lit(step).alias("step"), "center_id", "radius") for step, frame in picks]
+    return reduce(DataFrame.unionByName, rows).orderBy("step")
 
 
 # Power iteration: fixed deterministic init (uniform unit vector), a

@@ -17,6 +17,8 @@ bucketing window partitions by language, never a global sort.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1532,10 +1534,7 @@ def llm_judge_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.corr(j, "n_chars"), 6).alias("length_corr"),
             )
         )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("judge")
+    return reduce(DataFrame.unionByName, rows).orderBy("judge")
 
 
 # Calibration: confidence-bin count for the reliability diagram / ECE.
@@ -1798,10 +1797,10 @@ def llm_grpo_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
             % 50
         ).alias("reward"),
     )
-    # Referenced twice (the (S,Q) rollup and the join-back): cache so
-    # the documents scan + md5 reward map run once (the graph_triangles
+    # Referenced twice (the (S,Q) rollup and the join-back): materialize
+    # so the documents scan + md5 reward map run once (the graph_triangles
     # rule; without it the expensive upstream executes per reference).
-    rollouts = rollouts.cache()
+    rollouts = rollouts.transform(materialize)
     stats = rollouts.groupBy("prompt_id").agg(
         F.sum("reward").alias("s"),
         F.sum(F.col("reward") * F.col("reward")).alias("q"),

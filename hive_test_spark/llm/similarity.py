@@ -16,6 +16,8 @@ euclidean. Norms are precomputed once per row, never per pair.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1626,7 +1628,7 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_k = Window.partitionBy("probe_id").orderBy(
         F.col("cos_sim").desc(), "neighbor_id"
     )
-    out = None
+    rows = []
     for np_ in _NPROBE_SWEEP:
         cand = (
             routed.filter(F.col("rn") <= np_)
@@ -1653,7 +1655,7 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn2") <= TOP_K)
             .select("probe_id", "neighbor_id", F.lit(1).alias("hit"))
         )
-        row = (
+        rows.append(
             exact.join(topk, ["probe_id", "neighbor_id"], "left")
             .agg(
                 F.lit(np_).alias("nprobe"),
@@ -1663,8 +1665,7 @@ def llm_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .crossJoin(n_cand)
         )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("nprobe")
+    return reduce(DataFrame.unionByName, rows).orderBy("nprobe")
 
 
 # Mean reciprocal rank: dense-relevant set depth, rank cutoff.
@@ -1891,13 +1892,13 @@ def llm_precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("drk") <= _PRK_REL_K)
         .select("query_id", "doc_id")
     )
-    ks = None
-    for k in _PRK_KS:
-        row = F.lit(k).alias("k")
-        frame = lex.select("query_id", "doc_id", "rk", row).filter(
-            F.col("rk") <= k
-        )
-        ks = frame if ks is None else ks.unionByName(frame)
+    ks = reduce(
+        DataFrame.unionByName,
+        [
+            lex.select("query_id", "doc_id", "rk", F.lit(k).alias("k")).filter(F.col("rk") <= k)
+            for k in _PRK_KS
+        ],
+    )
     hits = (
         ks.join(rel, ["query_id", "doc_id"])
         .groupBy("query_id", "k")
@@ -1908,10 +1909,9 @@ def llm_precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < N_PROBES)
         .select(F.col("doc_id").alias("query_id"))
     )
-    kdim = None
-    for k in _PRK_KS:
-        r1 = panel.select("query_id", F.lit(k).alias("k"))
-        kdim = r1 if kdim is None else kdim.unionByName(r1)
+    kdim = reduce(
+        DataFrame.unionByName, [panel.select("query_id", F.lit(k).alias("k")) for k in _PRK_KS]
+    )
     nh = F.coalesce(F.col("n_hits"), F.lit(0))
     per_q = kdim.join(F.broadcast(hits), ["query_id", "k"], "left").select(
         "query_id",

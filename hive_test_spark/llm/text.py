@@ -11,6 +11,8 @@ feeds straight into map-side partial aggregation.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1823,10 +1825,7 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .transform(materialize)
         )
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionByName(m)
-    return out.orderBy("round")
+    return reduce(DataFrame.unionByName, merge_rows).orderBy("round")
 
 
 @register(
@@ -2115,10 +2114,7 @@ def llm_bm25_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mean_self_rank",
             )
         )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out.orderBy("k1", "b")
+    return reduce(DataFrame.unionByName, legs).orderBy("k1", "b")
 
 
 # RBO configuration: compare the two extreme corners of the BM25 tuning

@@ -9,6 +9,8 @@ codegen'd) with full DuckDB oracles.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -3446,12 +3448,13 @@ def evt_propensity_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("purchase_rate"),
     ).withColumn("arm", (F.col("user_id") % 2).cast("int"))
-    long = None
-    for cov in ("n_events", "mean_value", "purchase_rate"):
-        part = per_user.select(
-            "arm", F.lit(cov).alias("covariate"), F.col(cov).alias("x")
-        )
-        long = part if long is None else long.unionByName(part)
+    long = reduce(
+        DataFrame.unionByName,
+        [
+            per_user.select("arm", F.lit(cov).alias("covariate"), F.col(cov).alias("x"))
+            for cov in ("n_events", "mean_value", "purchase_rate")
+        ],
+    )
     stats = long.groupBy("covariate").agg(
         F.avg(F.when(F.col("arm") == 1, F.col("x"))).alias("mu_t"),
         F.avg(F.when(F.col("arm") == 0, F.col("x"))).alias("mu_c"),
@@ -6334,7 +6337,7 @@ def evt_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("n", F.row_number().over(w_day).alias("rn"))
         .transform(materialize)
     )
-    pts = None
+    points = []
     for m in _HURST_SIZES:
         chunked = ds.select(
             ((F.col("rn") - 1) / m).cast("long").alias("chunk"),
@@ -6394,7 +6397,8 @@ def evt_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("mean_ln_rs"),
         )
-        pts = point if pts is None else pts.unionByName(point)
+        points.append(point)
+    pts = reduce(DataFrame.unionByName, points)
     xy = pts.select(
         "m",
         "n_chunks",

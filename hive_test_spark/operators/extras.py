@@ -15,6 +15,7 @@ import glob
 import math
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -529,7 +530,4 @@ def scale_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("codec")
+    return reduce(DataFrame.unionByName, parts).orderBy("codec")

@@ -14,7 +14,7 @@ Both operators derive their graphs from the TPC-H fixtures:
 Scale notes (100 TB): iterative graph algorithms on Spark are join+agg
 loops. The per-iteration cost is one shuffle join (edges ⋈ ranks on src)
 plus one map-side-combinable aggregation (contributions by dst); the edge
-list with precomputed 1/outdeg weights is computed once and cached, and
+list with precomputed 1/outdeg weights is computed once and materialized, and
 the loop is a FIXED, small iteration count so lineage stays shallow (for
 unbounded convergence loops, materialize every ~10 rounds
 — see llm_dedup_clusters' pointer-doubling CC for that pattern).
@@ -25,6 +25,8 @@ affinity-graph degree, not the raw co-occurrence degree.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -280,8 +282,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of _COPURCHASE_TRI_SQL's ``pairs`` CTE: the support>=2
-    co-purchase edge list, oriented p1 < p2, cached (it is referenced
-    three times by the wedge join and again by degree consumers)."""
+    co-purchase edge list, oriented p1 < p2, materialized (it is
+    referenced three times by the wedge join and again by degree
+    consumers)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     b_side = li.select(F.col("l_orderkey").alias("b_ok"), F.col("l_partkey").alias("p2"))
     return (
@@ -297,7 +300,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("l_orderkey").alias("support"))
         .filter(F.col("support") >= 2)
         .select("p1", "p2")
-        .cache()
+        .transform(materialize)
     )
 
 
@@ -383,7 +386,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage shallow (convergence loops materialize, the CC
     pattern). The per-round rollups key on the label dimension."""
     # The edge list feeds every round: checkpoint once (the pagerank
-    # cached-edges idiom) so the rounds re-read memory, not parquet.
+    # materialized-edges idiom) so the rounds re-read memory, not parquet.
     edges = _trade_edges(spark, sf_dir).transform(materialize)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -408,9 +411,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .transform(materialize)
         )
         rounds.append(labels.select(F.lit(i + 1).alias("round"), "label"))
-    all_rounds = rounds[0]
-    for r in rounds[1:]:
-        all_rounds = all_rounds.unionByName(r)
+    all_rounds = reduce(DataFrame.unionByName, rounds)
     sizes = all_rounds.groupBy("round", "label").agg(F.count(F.lit(1)).alias("sz"))
     return (
         sizes.groupBy("round")
@@ -496,15 +497,15 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .transform(materialize)
         )
         rounds.append(nxt)
-    out = None
-    for i, e in enumerate(rounds):
-        row = e.agg(
+    rows = [
+        e.agg(
             F.lit(i).alias("round"),
             F.countDistinct("src").alias("n_nodes"),
             F.count(F.lit(1)).alias("n_edges"),
         )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("round")
+        for i, e in enumerate(rounds)
+    ]
+    return reduce(DataFrame.unionByName, rows).orderBy("round")
 
 
 # ---------------------------------------------------------------------------
@@ -548,12 +549,13 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of values, no skew); the fit is a 1-row aggregate attached
     by broadcast. Nothing after the first rollup scales with edges."""
     # One row per node; referenced three times (histogram, dmin, fit) —
-    # cache so the edge derivation runs once (the graph_triangles rule).
+    # materialize so the edge derivation runs once (the graph_triangles
+    # rule).
     degs = (
         _trade_edges(spark, sf_dir)
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("degree"))
-        .cache()
+        .transform(materialize)
     )
     # 1-row fit: n, dmin, and the CSN continuous-approximation MLE.
     # dmin rides in as a broadcast 1-row scalar (not a whole-table
@@ -637,9 +639,9 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _trade_pairs(spark, sf_dir)
     cdeg = pairs.groupBy("cust").agg(F.count(F.lit(1)).alias("cd"))
     # One row per non-hub (cust, supp) edge; referenced three times
-    # (both wedge sides + supplier degrees) — cache so the orders ×
+    # (both wedge sides + supplier degrees) — materialize so the orders ×
     # lineitem distinct runs once (the graph_triangles rule).
-    kept = pairs.join(cdeg, "cust").filter(F.col("cd") <= _CN_HUB_CAP).cache()
+    kept = pairs.join(cdeg, "cust").filter(F.col("cd") <= _CN_HUB_CAP).transform(materialize)
     sdeg = kept.groupBy("supp").agg(F.count(F.lit(1)).alias("sd"))
     a = kept.select("cust", F.col("supp").alias("s1"), "cd")
     b = kept.select("cust", F.col("supp").alias("s2"))

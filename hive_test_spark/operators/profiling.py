@@ -10,6 +10,7 @@ column. Both are pure built-in compositions with full DuckDB oracles.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -461,10 +462,7 @@ def dq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(edge).alias("edge"), "n_child", "n_orphans"
             )
         )
-    out = per_edge[0]
-    for e in per_edge[1:]:
-        out = out.unionByName(e)
-    return out.orderBy("edge")
+    return reduce(DataFrame.unionByName, per_edge).orderBy("edge")
 
 
 # PSI drift monitor: fixed-width price bins (edges are CONSTANTS — a

@@ -15,7 +15,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import SCRATCH_DIR, load_table, materialize, scratch_dir
+from hive_test_spark.io import SCRATCH_DIR, land, load_table, materialize, scratch_dir
 from hive_test_spark.registry import register
 from hive_test_spark.session import scoped_confs
 
@@ -203,17 +203,8 @@ def scale_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The re-read aggregate also round-trips the partitioned write
     (partition-column values survive the directory encoding)."""
-    from hive_test_spark.sources.scans import _sf_tag
-
-    li = load_table(spark, sf_dir, "lineitem")
-    path = scratch_dir("scale", _sf_tag(sf_dir), "lineitem_by_year")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            li.withColumn("l_shipyear", F.year("l_shipdate"))
-            .write.mode("overwrite")
-            .partitionBy("l_shipyear")
-            .parquet(path)
-        )
+    li = load_table(spark, sf_dir, "lineitem").withColumn("l_shipyear", F.year("l_shipdate"))
+    path = land(sf_dir, "lineitem_by_year", li.write.partitionBy("l_shipyear").parquet)
     fact = spark.read.parquet(path)
     years = (
         load_table(spark, sf_dir, "orders")
@@ -318,22 +309,17 @@ def scale_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the full-table aggregate. Storing (count, sum) instead of avg is
     what makes the state mergeable — the same decomposition Spark itself
     uses for partial aggregation pushdown."""
-    from hive_test_spark.sources.scans import _sf_tag
-
     o = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("2000-01-01").cast("timestamp")
-    path = scratch_dir("incr", _sf_tag(sf_dir), "orders_base_partials")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            o.filter(F.col("o_orderdate") < cutoff)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("o_totalprice").alias("price_sum"),
-            )
-            .write.mode("overwrite")
-            .parquet(path)
+    base = (
+        o.filter(F.col("o_orderdate") < cutoff)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("o_totalprice").alias("price_sum"),
         )
+    )
+    path = land(sf_dir, "orders_base_partials", base.write.parquet)
     stored = spark.read.parquet(path)
     delta = (
         o.filter(F.col("o_orderdate") >= cutoff)
@@ -417,20 +403,12 @@ def scale_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     The verified result aggregates per z-bucket over the WRITTEN layout
     (round-trips the clustering write); the oracle recomputes the same
     integer interleave, proving the z-math bit-identical."""
-    from hive_test_spark.sources.scans import _sf_tag
-
     li = load_table(spark, sf_dir, "lineitem").select("l_quantity", "l_extendedprice")
     z = li.withColumn("qx", F.expr(_QX_SQL)).withColumn("qy", F.expr(_QY_SQL)).withColumn(
         "zval", F.expr(_z_spark("qx", "qy"))
     )
-    path = scratch_dir("scale", _sf_tag(sf_dir), "lineitem_zorder")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            z.repartitionByRange(16, "zval")
-            .sortWithinPartitions("zval")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    clustered = z.repartitionByRange(16, "zval").sortWithinPartitions("zval")
+    path = land(sf_dir, "lineitem_zorder", clustered.write.parquet)
     back = spark.read.parquet(path)
     return (
         back.groupBy(F.floor(F.col("zval") / 4096).cast("long").alias("z_bucket"))

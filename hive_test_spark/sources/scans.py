@@ -3,9 +3,9 @@
 Reference surface: Hive storage handlers & SerDes (TextFile, JsonSerDe,
 ORC, Parquet) [Hive-public] (reference checkout empty — SURVEY.md §0.1).
 
-CSV/JSON/ORC fixtures don't exist in /root/testdata, so each scan first
-materializes the format from the parquet source *with a distributed
-Spark write* (write-once, cached via _SUCCESS marker), then reads it
+The fixtures ship parquet only, so each scan first lands the format from
+the parquet source *with a distributed Spark write* through
+``io.land`` (written once per set of fixture files), then reads it
 back through the format's own reader — both legs exercise the real
 connector code path. The DuckDB oracle reads the original parquet view;
 the round-trip must therefore be value-exact.
@@ -18,25 +18,27 @@ format allows (parquet/ORC; CSV/JSON prune columns only after parse).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_test_spark.io import load_table, materialize, scratch_dir
+from hive_test_spark.io import land, load_table, materialize
 from hive_test_spark.registry import register
-
-
-def _write_once(df: DataFrame, fmt: str, path: str, **options) -> str:
-    """Distributed write of df as fmt at path, once (cached by _SUCCESS)."""
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        df.write.mode("overwrite").options(**options).format(fmt).save(path)
-    return path
 
 
 def _sf_tag(sf_dir: str) -> str:
     return os.path.basename(os.path.normpath(sf_dir))
+
+
+def _land_orders_by_status(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Land ``orders`` (key, price, status) partitioned by
+    ``o_orderstatus`` as ``name``: partition dirs on the FS only, with no
+    catalog entry."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderstatus"
+    )
+    return land(sf_dir, name, orders.write.partitionBy("o_orderstatus").parquet)
 
 
 @register(
@@ -80,8 +82,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delimited-text scan (Hive TextFile+SerDe): explicit schema — never
     inferSchema at scale (it is a full extra pass over the data)."""
     c = load_table(spark, sf_dir, "customer")
-    path = _write_once(c, "csv", scratch_dir("fmt", _sf_tag(sf_dir), "customer_csv"),
-                       header="true")
+    path = land(sf_dir, "customer_csv", c.write.option("header", "true").csv)
     df = spark.read.csv(path, header=True, schema=CUSTOMER_SCHEMA)
     return df.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
@@ -108,7 +109,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("s_acctbal", T.DoubleType()),
         ]
     )
-    path = _write_once(s, "json", scratch_dir("fmt", _sf_tag(sf_dir), "supplier_json"))
+    path = land(sf_dir, "supplier_json", s.write.json)
     df = spark.read.json(path, schema=schema)
     return df.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n"),
@@ -127,7 +128,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC scan (Hive's native columnar format) — full pushdown support."""
     o = load_table(spark, sf_dir, "orders")
-    path = _write_once(o, "orc", scratch_dir("fmt", _sf_tag(sf_dir), "orders_orc"))
+    path = land(sf_dir, "orders_orc", o.write.orc)
     df = spark.read.orc(path)
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -207,7 +208,7 @@ def scan_regex_serde(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100).cast("bigint").cast("string"),
         ).alias("value")
     )
-    path = _write_once(lines, "text", scratch_dir("fmt", _sf_tag(sf_dir), "orders_log"))
+    path = land(sf_dir, "orders_log", lines.write.text)
     raw = spark.read.text(path)
     parsed = raw.select(
         F.regexp_extract("value", r"status=([A-Z])", 1).alias("status"),
@@ -269,9 +270,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    path = _write_once(
-        lines, "text", scratch_dir("fmt", _sf_tag(sf_dir), "orders_dirty_csv")
-    )
+    path = land(sf_dir, "orders_dirty_csv", lines.write.text)
     parsed = (
         spark.read.schema("k BIGINT, status STRING, cents BIGINT, _corrupt_record STRING")
         .option("mode", "PERMISSIVE")
@@ -307,7 +306,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     for image/audio/video corpora — each file becomes one row with
     (path, modificationTime, length, content BINARY)]. This is how
     multimodal payloads ENTER the engine before the llm_multimodal_*
-    ops process them. Fixture: 12 deterministic blobs written once to
+    ops process them. Fixture: 12 deterministic blobs landed in
     scratch (driver-side — they stand in for an external object-store
     landing zone), read back through the real connector, projected to
     engine-independent columns (name, byte length, content digest) the
@@ -321,27 +320,14 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one task. The content column stays opaque BINARY end-to-end —
     decode happens in Arrow-batched Python (llm/multimodal.py), never
     row-at-a-time."""
-    # Scratch dir is keyed on the blob count AND a digest of the payload
-    # recipe: changing _N_BINARY_FILES or the generator formula must
-    # invalidate the cache, or stale b*.bin files from a prior run would
-    # still match pathGlobFilter and diverge from the oracle.
-    import hashlib as _hashlib
 
-    recipe = _hashlib.md5(
-        ";".join(
-            f"blob-{i:03d}:" + "x" * (i * 7) for i in range(_N_BINARY_FILES)
-        ).encode("ascii")
-    ).hexdigest()[:8]
-    blob_dir = scratch_dir(f"binfiles_{_N_BINARY_FILES}_{recipe}", "_anchor")
-    parent = os.path.dirname(blob_dir)
-    marker = os.path.join(parent, ".ready")
-    if not os.path.exists(marker):
+    def write_blobs(path: str) -> None:
+        os.makedirs(path)
         for i in range(_N_BINARY_FILES):
-            payload = (f"blob-{i:03d}:" + "x" * (i * 7)).encode("ascii")
-            with open(os.path.join(parent, f"b{i:03d}.bin"), "wb") as fh:
-                fh.write(payload)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+            with open(os.path.join(path, f"b{i:03d}.bin"), "wb") as fh:
+                fh.write((f"blob-{i:03d}:" + "x" * (i * 7)).encode("ascii"))
+
+    parent = land(sf_dir, f"binfiles_{_N_BINARY_FILES}", write_blobs)
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
@@ -385,11 +371,8 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent from this build — "Failed to find data source: avro"), which
     is why the format matrix is parquet/CSV/JSON/ORC/XML/text/binary."""
     s = load_table(spark, sf_dir, "supplier")
-    path = scratch_dir("fmt", _sf_tag(sf_dir), "supplier_xml")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        s.write.mode("overwrite").option("rowTag", "supplier").format("xml").save(
-            path
-        )
+    xml = s.write.option("rowTag", "supplier").format("xml")
+    path = land(sf_dir, "supplier_xml", xml.save)
     schema = T.StructType(
         [
             T.StructField("s_suppkey", T.LongType()),
@@ -467,9 +450,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    path = scratch_dir("fmt", _sf_tag(sf_dir), f"orders_malformed_{_MALFORMED_MOD}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        lines.write.mode("overwrite").format("text").save(path)
+    path = land(sf_dir, f"orders_malformed_{_MALFORMED_MOD}", lines.write.text)
     schema = (
         "o_orderkey LONG, o_totalprice DOUBLE, o_orderstatus STRING, _bad STRING"
     )
@@ -541,22 +522,23 @@ def scan_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     narrowing or renames break old readers and are a table-format
     (rename-by-id) feature, not a parquet one."""
     o = load_table(spark, sf_dir, "orders")
-    path = scratch_dir("fmt", _sf_tag(sf_dir), "orders_schema_evo")
-    if not os.path.exists(os.path.join(path, "_done")):
-        v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
-            F.lit("v1").alias("batch"), "o_orderkey", "o_totalprice"
-        )
-        v1.write.mode("overwrite").parquet(path)
-        v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
-            F.lit("v2").alias("batch"),
-            "o_orderkey",
-            "o_totalprice",
-            (F.length("o_orderstatus") + F.col("o_orderkey") % 5)
-            .cast("long")
-            .alias("o_comment_len"),
-        )
+    v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
+        F.lit("v1").alias("batch"), "o_orderkey", "o_totalprice"
+    )
+    v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
+        F.lit("v2").alias("batch"),
+        "o_orderkey",
+        "o_totalprice",
+        (F.length("o_orderstatus") + F.col("o_orderkey") % 5)
+        .cast("long")
+        .alias("o_comment_len"),
+    )
+
+    def write_batches(path: str) -> None:
+        v1.write.parquet(path)
         v2.write.mode("append").parquet(path)
-        open(os.path.join(path, "_done"), "w").close()
+
+    path = land(sf_dir, "orders_schema_evo", write_batches)
     merged = spark.read.option("mergeSchema", "true").parquet(path)
     return merged.groupBy("batch").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -598,20 +580,18 @@ def scan_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     here because schema-on-read text is the harder contract."""
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 5000)
     li = load_table(spark, sf_dir, "lineitem")
-    path = scratch_dir("fmt", _sf_tag(sf_dir), "orders_nested_json")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        items = li.groupBy("l_orderkey").agg(
-            F.collect_list(
-                F.struct(
-                    F.col("l_linenumber").alias("line"),
-                    F.col("l_extendedprice").alias("price"),
-                )
-            ).alias("items")
-        )
-        nested = o.join(items, o.o_orderkey == items.l_orderkey).select(
-            "o_orderkey", "o_orderstatus", "items"
-        )
-        nested.write.mode("overwrite").format("json").save(path)
+    items = li.groupBy("l_orderkey").agg(
+        F.collect_list(
+            F.struct(
+                F.col("l_linenumber").alias("line"),
+                F.col("l_extendedprice").alias("price"),
+            )
+        ).alias("items")
+    )
+    nested = o.join(items, o.o_orderkey == items.l_orderkey).select(
+        "o_orderkey", "o_orderstatus", "items"
+    )
+    path = land(sf_dir, "orders_nested_json", nested.write.json)
     schema = (
         "o_orderkey LONG, o_orderstatus STRING, "
         "items ARRAY<STRUCT<line: INT, price: DOUBLE>>"
@@ -657,20 +637,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     files. Row-position virtual columns (BLOCK__OFFSET) intentionally
     have no equivalent: row identity at scale belongs in data keys,
     not physical offsets."""
-    tag = _sf_tag(sf_dir).replace(".", "_")
-    loc = scratch_dir("scan", tag, "orders_meta_layout")
-    marker = os.path.join(loc, "_hts_ready")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice", "o_orderstatus")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(loc)
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    loc = _land_orders_by_status(spark, sf_dir, "orders_meta_layout")
     back = spark.read.parquet(loc).select(
         "o_totalprice",
         F.regexp_extract(

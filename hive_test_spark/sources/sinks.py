@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 from hive_test_spark.io import load_table, scratch_dir
 from hive_test_spark.registry import register
 
-from hive_test_spark.sources.scans import _sf_tag
+from hive_test_spark.sources.scans import _land_orders_by_status, _sf_tag
 
 
 @register(
@@ -302,9 +303,9 @@ def meta_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS "
         + ", ".join(_ANALYZE_COLS)
     )
-    out = None
-    for col, stats in _ANALYZE_COLS.items():
-        desc = (
+    return reduce(
+        DataFrame.unionAll,
+        [
             spark.sql(f"DESCRIBE EXTENDED {table} {col}")
             .filter(F.col("info_name").isin(*stats))
             .select(
@@ -312,9 +313,9 @@ def meta_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("info_name").alias("stat"),
                 F.col("info_value").alias("value"),
             )
-        )
-        out = desc if out is None else out.unionAll(desc)
-    return out
+            for col, stats in _ANALYZE_COLS.items()
+        ],
+    )
 
 
 _SHOW_TABLES_ORACLE = """
@@ -361,12 +362,15 @@ def meta_show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     listed = spark.sql(f"SHOW TABLES LIKE '{prefix}_*'").select(
         F.expr(f"substring(tableName, {len(prefix) + 2})").alias("table_suffix")
     )
-    counts = None
-    for suffix in slices:
-        c = spark.table(f"{prefix}_{suffix}").agg(
-            F.count(F.lit(1)).alias("n_rows")
-        ).select(F.lit(suffix).alias("table_suffix"), "n_rows")
-        counts = c if counts is None else counts.unionAll(c)
+    counts = reduce(
+        DataFrame.unionAll,
+        [
+            spark.table(f"{prefix}_{suffix}")
+            .agg(F.count(F.lit(1)).alias("n_rows"))
+            .select(F.lit(suffix).alias("table_suffix"), "n_rows")
+            for suffix in slices
+        ],
+    )
     return listed.join(counts, "table_suffix").select("table_suffix", "n_rows")
 
 
@@ -407,7 +411,7 @@ def sink_csv_quoting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = scratch_dir("fmt", _sf_tag(sf_dir).replace(".", "_"), "csv_quoting")
     # The WRITER is the operator under test (module contract: sink writes
-    # re-run every invocation) — a _SUCCESS gate here would freeze the
+    # re-run every invocation) — an io.land gate here would freeze the
     # first run's files and let a quoting/escape regression pass silently.
     tricky.write.mode("overwrite").option("header", "true").option(
         "quoteAll", "true"
@@ -465,7 +469,7 @@ def meta_describe_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging, scan_parquet_schema_evolution). Schema-as-data is the
     contract-testing idiom: diff this output across pipeline versions
     to catch silent type drift before it lands in 800k files."""
-    out = None
+    parts = []
     for t in ("events", "embeddings"):
         df = load_table(spark, sf_dir, t)
         view = f"hts_desc_{t}_{_sf_tag(sf_dir).replace('.', '_')}"
@@ -477,32 +481,12 @@ def meta_describe_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(f.name, i + 1) for i, f in enumerate(df.schema.fields)],
             "col_name string, ordinal long",
         )
-        part = desc.join(ordinals, "col_name").select(
-            "table_name", "ordinal", "col_name", "data_type"
+        parts.append(
+            desc.join(ordinals, "col_name").select(
+                "table_name", "ordinal", "col_name", "data_type"
+            )
         )
-        out = part if out is None else out.unionAll(part)
-    return out
-
-
-def _land_orders_by_status(spark: SparkSession, sf_dir: str, loc: str) -> None:
-    """Land ``orders`` (key, price, status) at ``loc`` partitioned by
-    ``o_orderstatus``, once per location: partition dirs exist on the FS
-    only, with no catalog entry. The ``_hts_ingested`` marker (invisible
-    to Spark's file listing, being "_"-prefixed) is written after the
-    layout is complete, so a half-written layout is landed again."""
-    marker = os.path.join(loc, "_hts_ingested")
-    if os.path.exists(marker):
-        return
-    shutil.rmtree(loc, ignore_errors=True)
-    (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderstatus")
-        .write.mode("overwrite")
-        .partitionBy("o_orderstatus")
-        .parquet(loc)
-    )
-    with open(marker, "w") as fh:
-        fh.write("ok")
+    return reduce(DataFrame.unionAll, parts)
 
 
 @register(
@@ -543,8 +527,7 @@ def meta_msck_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     job, which is why the join-back to real counts matters here)."""
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_msck_meta_{tag}"
-    loc = scratch_dir("meta", tag, table)
-    _land_orders_by_status(spark, sf_dir, loc)
+    loc = _land_orders_by_status(spark, sf_dir, "meta_msck_orders")
     # Fresh external table over the landed layout: DROP of an external
     # table forgets specs but keeps files, so every invocation exercises
     # the empty-catalog -> repaired transition, not a cached result.
@@ -724,8 +707,8 @@ def meta_drop_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     table back: the remaining per-partition counts plus the post-drop
     spec count are hash-pinned — a reader that still lists the dropped
     directory (stale file index) or a catalog that dropped the wrong
-    spec fails the gate. Files stay on disk (pinned by the per-sf
-    ingest marker staying valid across invocations).
+    spec fails the gate. Files stay on disk (pinned by the landed
+    copy staying valid across invocations).
 
     At 100 TB: DROP PARTITION is THE retention primitive — O(1)
     metastore ops per expired day vs rewriting data; pair with
@@ -735,8 +718,7 @@ def meta_drop_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — the reason fact tables partition by ingest date."""
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_droppart_meta_{tag}"
-    loc = scratch_dir("meta", tag, table)
-    _land_orders_by_status(spark, sf_dir, loc)
+    loc = _land_orders_by_status(spark, sf_dir, "meta_droppart_orders")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
         f"CREATE TABLE {table} "
@@ -793,8 +775,7 @@ def meta_add_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     implicit discovery in pipelines."""
     tag = _sf_tag(sf_dir).replace(".", "_")
     table = f"hts_addpart_meta_{tag}"
-    loc = scratch_dir("meta", tag, table)
-    _land_orders_by_status(spark, sf_dir, loc)
+    loc = _land_orders_by_status(spark, sf_dir, "meta_addpart_orders")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
         f"CREATE TABLE {table} "
@@ -934,14 +915,13 @@ def dml_exchange_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     target serves all of them, and the spec counts prove the catalog
     moved with the data.
 
-    The staged layout is written once per scale factor (marker-gated);
-    the two catalog tables are re-declared each run so the op is
+    The staged layout is landed once per set of fixture files
+    (``io.land``); the two catalog tables are re-declared each run so the op is
     idempotent in any fresh session — the external-path idiom."""
     tag = _sf_tag(sf_dir).replace(".", "_")
     src, tgt = f"hts_xchg_src_{tag}", f"hts_xchg_tgt_{tag}"
-    loc = scratch_dir("meta", tag, "xchg_staging")
+    loc = _land_orders_by_status(spark, sf_dir, "meta_xchg_staging")
     tgt_loc = scratch_dir("meta", tag, "xchg_curated")
-    _land_orders_by_status(spark, sf_dir, loc)
     os.makedirs(tgt_loc, exist_ok=True)
     ddl = (
         "(o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING) "

@@ -16,43 +16,79 @@ batch sinks via idempotent overwrite.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import uuid
+from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from hive_test_spark.io import NANOS_AS_LONG, materialize, parquet_schema, scratch_dir, table_path
+from hive_test_spark.io import (
+    NANOS_AS_LONG,
+    land,
+    materialize,
+    parquet_schema,
+    scratch_dir,
+    table_path,
+)
 from hive_test_spark.llm.pipeline import _INCR_MINHASH_ORACLE
 from hive_test_spark.registry import register
 from hive_test_spark.session import scoped_confs
 
-def _events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
-    """Copy events.parquet into a scratch dir usable as a streaming file
-    source (optionally duplicated to create a dup-heavy stream)."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # Key the cache on the source file's identity (size + mtime_ns) so
-    # regenerated driver fixtures invalidate stale copies automatically.
-    st = os.stat(table_path(sf_dir, "events"))
-    base = scratch_dir("stream_src", "_anchor")  # ensures parent exists
-    parent = os.path.dirname(base)
-    prefix = f"{tag}_x{copies}_"
-    d = os.path.join(parent, f"{prefix}{st.st_size}_{st.st_mtime_ns}")
-    # Prune superseded cache dirs for this (tag, copies) so .scratch does
-    # not grow unboundedly across fixture regenerations.
-    for sib in os.listdir(parent):
-        p = os.path.join(parent, sib)
-        if sib.startswith(prefix) and p != d and os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-    marker = os.path.join(d, ".ready")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        for i in range(copies):
-            shutil.copyfile(table_path(sf_dir, "events"), os.path.join(d, f"events_{i}.parquet"))
-        open(marker, "w").write("ok")
+# Seconds an AvailableNow query may run before it counts as hung.
+STREAM_TIMEOUT_S = 300
+
+
+def _run_available_now(
+    writer: DataStreamWriter, ckpt: str | None = None, confs: Mapping[str, str] | None = None
+) -> None:
+    """Start ``writer`` with ``Trigger.AvailableNow`` and wait until it
+    has consumed its source. The query is stopped however the wait ends;
+    one still running after ``STREAM_TIMEOUT_S`` raises ``TimeoutError``,
+    so a partial sink is never returned as an answer. ``confs`` are set
+    only around ``start()`` (a started query keeps the confs it was
+    started with). Without ``ckpt`` the query gets a fresh checkpoint,
+    removed when it ends."""
+    own = ckpt is None
+    ckpt = ckpt or scratch_dir("ckpt", f"hts_{uuid.uuid4().hex[:12]}")
+    try:
+        with scoped_confs(writer._spark, confs or {}):
+            q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        try:
+            done = q.awaitTermination(STREAM_TIMEOUT_S)
+        finally:
+            if q.isActive:
+                q.stop()
+        if not done:
+            raise TimeoutError(f"stream {q.name or q.id} still running after {STREAM_TIMEOUT_S} s")
+    finally:
+        if own:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _run_dir(kind: str) -> str:
+    """A fresh scratch directory for one run's stream output. The
+    returned frame reads it lazily, so it is removed when the interpreter
+    exits."""
+    d = scratch_dir(kind, uuid.uuid4().hex[:12])
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+def _events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
+    """events.parquet landed as a streaming file source of ``copies``
+    identical files (more than one makes a dup-heavy stream)."""
+
+    def write(path: str) -> None:
+        os.makedirs(path)
+        for i in range(copies):
+            shutil.copyfile(table_path(sf_dir, "events"), os.path.join(path, f"events_{i}.parquet"))
+
+    return land(sf_dir, f"stream_src_x{copies}", write)
 
 
 def _events_raw_schema(spark: SparkSession, src: str) -> T.StructType:
@@ -100,26 +136,13 @@ def _run_to_memory(
     A started query keeps the session confs it was started with, so the
     session-global conf is set only around ``start()`` and restored as
     soon as it returns, not held for the run."""
-    spark = df.sparkSession
     name = f"hts_mem_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_dir("ckpt", name)
     no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    with scoped_confs(spark, {} if final_watermark_batch else no_data):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    _run_available_now(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        confs={} if final_watermark_batch else no_data,
+    )
+    return df.sparkSession.table(name)
 
 
 @register(
@@ -320,20 +343,7 @@ def stream_sink_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts["foreach_batch"] += batch_df.count()
 
-    name = f"hts_feb_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_dir("ckpt", name)
-    q = (
-        ev.writeStream.foreachBatch(sink_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _run_available_now(ev.writeStream.foreachBatch(sink_batch))
 
     rows = [
         ("append", append_out.count()),
@@ -405,20 +415,7 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base, f"gen={batch_id}")
         )
 
-    name = f"hts_upsert_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_dir("ckpt", name)
-    q = (
-        ev.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _run_available_now(ev.writeStream.foreachBatch(upsert))
 
     gens = sorted(
         int(d.split("=", 1)[1]) for d in os.listdir(base) if d.startswith("gen=")
@@ -653,29 +650,18 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB streaming job leans on at every executor loss or planned
     restart: offsets and state checkpoint atomically per micro-batch,
     so a restart neither re-counts A nor drops it."""
-    # Deterministic two-half split of events, cached like the stream srcs.
+    # Deterministic two-half split of events, landed like the stream
+    # srcs. The halves hold the fixture's rows as read with nanosAsLong,
+    # so their raw schema is the fixture's.
     events = table_path(sf_dir, "events")
-    st = os.stat(events)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = scratch_dir("ckpt_rec", "_anchor")
-    parent = os.path.dirname(base)
-    prefix = f"{tag}_"
-    halves = os.path.join(parent, f"{prefix}{st.st_size}_{st.st_mtime_ns}")
-    for sib in os.listdir(parent):
-        p = os.path.join(parent, sib)
-        if sib.startswith(prefix) and p != halves and os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-    # The halves hold the fixture's rows as read with nanosAsLong, so
-    # their raw schema is the fixture's.
     schema = _events_raw_schema(spark, events)
-    marker = os.path.join(halves, ".ready")
-    if not os.path.exists(marker):
+
+    def write_halves(path: str) -> None:
         full = spark.read.schema(schema).parquet(events)
         for side, pred in (("a", "event_id % 2 = 0"), ("b", "event_id % 2 = 1")):
-            full.filter(pred).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(halves, f"half_{side}")
-            )
-        open(marker, "w").write("ok")
+            full.filter(pred).coalesce(1).write.parquet(os.path.join(path, f"half_{side}"))
+
+    halves = land(sf_dir, "ckpt_rec_halves", write_halves)
 
     src = scratch_dir("ckpt_rec_src", uuid.uuid4().hex[:12])
     os.makedirs(src, exist_ok=True)
@@ -699,19 +685,9 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 6).alias("total_value"),
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _run_available_now(
+            agg.writeStream.format("memory").queryName(qname).outputMode("complete"), ckpt
         )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
 
     try:
         _copy_half("a")
@@ -763,9 +739,8 @@ def stream_foreachbatch_multisink(spark: SparkSession, sf_dir: str) -> DataFrame
     two-phase commit."""
     ev = _read_events_stream_throttled(spark, sf_dir, copies=2)
 
-    run = uuid.uuid4().hex[:12]
-    rollup_dir = scratch_dir("fbm_rollup", run)
-    archive_dir = scratch_dir("fbm_archive", run)
+    rollup_dir = _run_dir("fbm_rollup")
+    archive_dir = _run_dir("fbm_archive")
     n_batches = {"n": 0}
 
     def _fanout(batch_df: DataFrame, batch_id: int) -> None:
@@ -787,19 +762,7 @@ def stream_foreachbatch_multisink(spark: SparkSession, sf_dir: str) -> DataFrame
             batch_df.unpersist()
         n_batches["n"] += 1
 
-    ckpt = scratch_dir("ckpt", f"fbm_{run}")
-    q = (
-        ev.writeStream.foreachBatch(_fanout)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _run_available_now(ev.writeStream.foreachBatch(_fanout))
     assert n_batches["n"] >= 2, "maxFilesPerTrigger=1 over 2 files must yield >=2 batches"
 
     rollup = (
@@ -860,10 +823,8 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex_toks = ex_toks.transform(materialize)
     ex_bands = ex_bands.transform(materialize)
 
-    run = uuid.uuid4().hex[:12]
-    src = scratch_dir("stream_docs_src", run)
-    out_dir = scratch_dir("stream_neardup_out", run)
-    ckpt = scratch_dir("ckpt", f"neardup_{run}")
+    src = _run_dir("stream_docs_src")
+    out_dir = _run_dir("stream_neardup_out")
     (
         docs.filter(F.col("doc_id") % _INCR_MOD == 0)
         .select("doc_id", "text")
@@ -893,18 +854,7 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_batches["n"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _run_available_now(stream.writeStream.foreachBatch(_probe))
     assert n_batches["n"] >= 2, (
         "maxFilesPerTrigger=1 over 3 files must yield >=2 micro-batches"
     )

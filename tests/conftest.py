@@ -31,3 +31,14 @@ def registry():
     from hive_test_spark.api import oracle_sql, queries
 
     return queries(), oracle_sql()
+
+
+def landed(name: str, sf_dir: str = SF_DIR) -> str:
+    """Path of the landed copy ``name`` of ``sf_dir`` (``io.land``);
+    fails if that copy is not landed yet."""
+    from hive_test_spark.io import land
+
+    def not_landed(path: str) -> None:
+        raise AssertionError(f"{name} is not landed at {path}")
+
+    return land(sf_dir, name, not_landed)

@@ -14,6 +14,23 @@ def _facts(spark, registry, key):
     return analyze(qs[key](spark, SF_DIR))
 
 
+def _facts_with_build(spark, registry, key, monkeypatch):
+    """Facts of ``key``'s final plan, then of every plan that reaches
+    ``DataFrame.localCheckpoint`` while the key builds: a frame cut by
+    ``io.materialize`` runs its scans in its own job, so the final plan
+    reads a checkpoint leaf instead."""
+    frame_cls = type(spark.range(0))  # the session's concrete DataFrame
+    built = []
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        built.append(analyze(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    return [_facts(spark, registry, key), *built]
+
+
 def test_flagship_pushdown_and_pruning(spark, registry):
     f = _facts(spark, registry, "flagship_pricing_summary")
     assert has_pushed_filters(f), "shipdate filter must reach the parquet scan"
@@ -348,19 +365,16 @@ def test_pagerank_no_cartesian_and_broadcast_n(spark, registry):
     assert f.cartesian == 0
     assert f.broadcast_joins >= 4  # n_nodes per iteration + init
 
-def test_triangles_ordered_edges_no_cartesian(spark, registry):
+def test_triangles_ordered_edges_no_cartesian(spark, registry, monkeypatch):
     """Triangle enumeration is two equi-joins over the ordered edge list —
     a cartesian wedge join would be the N^2 failure mode at 100 TB."""
-    f = _facts(spark, registry, "graph_triangles")
-    assert f.cartesian == 0
-    # The edge list is cache()d; once another test materializes it, the
-    # printed plan embeds the cached relation's recorded child (its
-    # FileScans appear an extra time under the InMemoryTableScans). Pin
-    # the 100 TB contract — every lineitem scan prunes to the 2 needed
-    # columns — not the print-time duplication count.
-    cols = scan_read_columns(f)
+    plans = _facts_with_build(spark, registry, "graph_triangles", monkeypatch)
+    assert all(f.cartesian == 0 for f in plans)
+    # The edge list is materialized: its build job holds both lineitem
+    # scans (the self-join), and the final plan reads the checkpoint.
+    cols = [c for f in plans for c in scan_read_columns(f)]
     assert set(cols) == {2}, "every lineitem scan must prune to (orderkey, partkey)"
-    assert 2 <= len(cols) <= 3, cols
+    assert len(cols) == 2, cols
 
 
 def test_ohlc_is_single_two_phase_agg(spark, registry):
@@ -1600,33 +1614,35 @@ def test_referential_audit_key_projected_anti_joins(spark, registry):
     assert "Python" not in f.text
 
 
-def test_degree_distribution_two_rollups_broadcast_fit(spark, registry):
+def test_degree_distribution_two_rollups_broadcast_fit(spark, registry, monkeypatch):
     """graph_degree_distribution: degree count + histogram count, the
-    1-row fit attached by broadcast; scans prune to the join/key pairs."""
-    f = _facts(spark, registry, "graph_degree_distribution")
-    assert f.cartesian == 0
-    assert "Python" not in f.text
-    assert set(scan_read_columns(f)) == {2}, "(o_orderkey,o_custkey)/(l_orderkey,l_suppkey)"
+    1-row fit attached by broadcast; scans prune to the join/key pairs
+    (in the job that materializes the degrees)."""
+    plans = _facts_with_build(spark, registry, "graph_degree_distribution", monkeypatch)
+    assert all(f.cartesian == 0 and "Python" not in f.text for f in plans)
+    cols = [c for f in plans for c in scan_read_columns(f)]
+    assert cols == [2, 2, 2, 2], "(o_orderkey,o_custkey)/(l_orderkey,l_suppkey)"
 
 
-def test_common_neighbors_wedge_join_broadcast_degrees(spark, registry):
+def test_common_neighbors_wedge_join_broadcast_degrees(spark, registry, monkeypatch):
     """graph_common_neighbors: the wedge join is a shared-customer
     equi-join (never supplier×supplier); supplier degrees ride
-    broadcasts; the hub cap is applied before the quadratic term."""
-    f = _facts(spark, registry, "graph_common_neighbors")
-    assert f.cartesian == 0
-    assert f.broadcast_joins >= 2, "both degree attaches broadcast"
-    assert "Python" not in f.text
-    assert set(scan_read_columns(f)) == {2}
+    broadcasts; the hub cap is applied before the quadratic term (in
+    the job that materializes the kept edges, where the scans are)."""
+    plans = _facts_with_build(spark, registry, "graph_common_neighbors", monkeypatch)
+    assert all(p.cartesian == 0 and "Python" not in p.text for p in plans)
+    assert plans[0].broadcast_joins >= 2, "both degree attaches broadcast"
+    assert [c for p in plans for c in scan_read_columns(p)] == [2, 2, 2, 2]
 
 
-def test_grpo_advantage_single_key_family(spark, registry):
+def test_grpo_advantage_single_key_family(spark, registry, monkeypatch):
     """llm_grpo_advantage: one (S,Q) rollup keyed on prompt_id joined
-    straight back on the same key — no second key family, no Python."""
-    f = _facts(spark, registry, "llm_grpo_advantage")
-    assert f.cartesian == 0
-    assert "Python" not in f.text
-    assert set(scan_read_columns(f)) == {2}, "(doc_id, text) only"
+    straight back on the same key — no second key family, no Python.
+    The documents scan runs in the job that materializes the rollouts."""
+    plans = _facts_with_build(spark, registry, "llm_grpo_advantage", monkeypatch)
+    assert all(f.cartesian == 0 and "Python" not in f.text for f in plans)
+    cols = [c for f in plans for c in scan_read_columns(f)]
+    assert cols == [2], "(doc_id, text) only"
 
 
 def test_bayes_ab_grid_is_broadcast_epilogue(spark, registry):

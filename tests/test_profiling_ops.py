@@ -61,16 +61,15 @@ def test_incremental_agg_merges_stored_partials(spark, registry, tmp_path):
     the operator) and still equal the full aggregate."""
     import os
 
-    from hive_test_spark.io import scratch_dir
-    from hive_test_spark.sources.scans import _sf_tag
+    from hive_test_spark.io import LANDED_MARKER
+    from tests.conftest import landed
 
     qs, _ = registry
     first = qs["scale_incremental_agg"](spark, SF_DIR)
-    path = scratch_dir("incr", _sf_tag(SF_DIR), "orders_base_partials")
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
+    marker = os.path.join(landed("orders_base_partials"), LANDED_MARKER)
+    mtime = os.path.getmtime(marker)
     again = qs["scale_incremental_agg"](spark, SF_DIR)
-    assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == mtime  # reused
+    assert os.path.getmtime(marker) == mtime  # reused
     a = sorted(map(tuple, first.collect()))
     b = sorted(map(tuple, again.collect()))
     assert a == b

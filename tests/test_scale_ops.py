@@ -56,13 +56,11 @@ def test_zorder_layout_clusters_both_dims(spark, registry):
 
     import pyarrow.parquet as pq
 
-    from hive_test_spark.io import scratch_dir
-    from hive_test_spark.sources.scans import _sf_tag
-    from tests.conftest import SF_DIR
+    from tests.conftest import SF_DIR, landed
 
     qs, _ = registry
     qs["scale_zorder"](spark, SF_DIR).collect()  # ensures the layout exists
-    path = scratch_dir("scale", _sf_tag(SF_DIR), "lineitem_zorder")
+    path = landed("lineitem_zorder")
     files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     assert len(files) > 4, "repartitionByRange(16) must produce multiple files"
 

@@ -1,24 +1,28 @@
 """The engine's shared building blocks: ``io.materialize`` (the only
 checkpoint, which leaves nothing pinned in the session's cache),
-``session.scoped_confs`` (the only conf save/restore), the
-landed ``orders`` layout of the partition-metadata keys, and the removal
-of the package zip that ``session._ship_package`` writes."""
+``session.scoped_confs`` (the only conf save/restore), ``io.land`` (the
+only write-once gate for scratch copies derived from the fixture), and
+the removal at exit of the package zip that ``session._ship_package``
+writes and of the per-run stream outputs."""
 
 from __future__ import annotations
 
 import ast
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from hive_test_spark import io
-from hive_test_spark.oracle import compare
+from hive_test_spark.oracle import compare, duck_connect
 from hive_test_spark.session import scoped_confs
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, landed
 from tests.test_io_schema_cache import _jobs
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -52,7 +56,14 @@ def test_no_checkpoint_call_outside_io():
 
 # Keys whose reused branch points go through ``io.materialize`` rather
 # than a ``.cache()`` that nothing unpersists.
-MATERIALIZED_BRANCHES = ["graph_pagerank", "graph_shortest_path"]
+MATERIALIZED_BRANCHES = [
+    "graph_pagerank",
+    "graph_shortest_path",
+    "graph_triangles",
+    "graph_degree_distribution",
+    "graph_common_neighbors",
+    "llm_grpo_advantage",
+]
 
 
 def test_branch_points_leave_the_cache_manager_empty(spark, registry):
@@ -103,11 +114,68 @@ def test_shipped_package_zip_is_removed_at_exit(tmp_path):
     assert list(tmp_path.glob("hive_test_spark_pkg_*.zip")) == []
 
 
+_RUN_DIRS = """
+import os, sys
+sys.path.insert(0, {root!r})
+from hive_test_spark import io
+io.SCRATCH_DIR = {scratch!r}
+from hive_test_spark.streaming.live import _run_dir
+for kind in {kinds!r}:
+    d = _run_dir(kind)
+    os.makedirs(d)
+    open(os.path.join(d, "part-0.parquet"), "w").close()
+print(sorted(os.listdir(os.path.join(io.SCRATCH_DIR, {kinds!r}[0]))))
+"""
+
+# Per-run stream outputs that the returned frames read lazily.
+RUN_DIR_KINDS = ("fbm_archive", "fbm_rollup", "stream_docs_src", "stream_neardup_out")
+
+
+def test_per_run_stream_outputs_are_removed_at_exit(tmp_path):
+    live = ast.parse((PKG / "streaming" / "live.py").read_text())
+    kinds = {
+        node.args[0].value
+        for node in ast.walk(live)
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_run_dir"
+    }
+    assert kinds == set(RUN_DIR_KINDS)
+    script = _RUN_DIRS.format(root=str(ROOT), scratch=str(tmp_path), kinds=RUN_DIR_KINDS)
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert run.returncode == 0, run.stderr
+    assert run.stdout.strip() != "[]"  # written while the process ran
+    assert {p.name for p in tmp_path.iterdir()} == set(RUN_DIR_KINDS)
+    assert list(tmp_path.glob("*/*")) == []
+
+
+# Marker-file names of write-once gates; ``io.land`` owns the only one.
+MARKERS = {"_SUCCESS", "_done", ".ready", "_hts_ready", "_hts_ingested", io.LANDED_MARKER}
+
+
+def test_no_write_once_gate_outside_land():
+    """No module names a marker file but ``io``. The one ``_SUCCESS`` left
+    selects the previous ledger generation a micro-batch of
+    ``stream_foreach_batch_upsert`` merges into; it gates no copy."""
+    found = [
+        (str(path.relative_to(PKG)), getattr(top, "name", None), node.value)
+        for path in sorted(PKG.rglob("*.py"))
+        if path != PKG / "io.py"
+        for top in ast.parse(path.read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str) and node.value in MARKERS
+    ]
+    assert found == [("streaming/live.py", "stream_foreach_batch_upsert", "_SUCCESS")]
+
+
 LANDED = {
-    "meta_msck_repair": "hts_msck_meta_{tag}",
-    "meta_drop_partition": "hts_droppart_meta_{tag}",
-    "meta_add_partition": "hts_addpart_meta_{tag}",
-    "dml_exchange_partition": "xchg_staging",
+    "meta_msck_repair": "meta_msck_orders",
+    "meta_drop_partition": "meta_droppart_orders",
+    "meta_add_partition": "meta_addpart_orders",
+    "dml_exchange_partition": "meta_xchg_staging",
 }
 
 
@@ -115,14 +183,60 @@ LANDED = {
 def test_landed_layout_cold_then_warm(spark, duck, registry, key):
     """The first run lands the layout (marker removed), the second reads
     the landed one; both match the oracle."""
-    from hive_test_spark.sources.scans import _sf_tag
-
     qs, oracles = registry
-    tag = _sf_tag(SF_DIR).replace(".", "_")
-    marker = Path(io.scratch_dir("meta", tag, LANDED[key].format(tag=tag)), "_hts_ingested")
-    marker.unlink(missing_ok=True)
+    qs[key](spark, SF_DIR)  # lands the layout unless an earlier test did
+    marker = Path(landed(LANDED[key]), io.LANDED_MARKER)
+    marker.unlink()
+    stamps = []
     for _ in range(2):
         res = compare(key, qs[key](spark, SF_DIR).toPandas(), duck.execute(oracles[key]).df())
         assert res["ok"] and res["bitwise"], f"{key}: {res['notes']}"
-        assert marker.exists()
+        stamps.append(marker.stat().st_mtime_ns)
+    assert stamps[0] == stamps[1]  # the second run reused the landed copy
 
+
+# Keys whose landed copy derives from ``orders`` or ``customer``.
+STALE_KEYS = [
+    "meta_msck_repair",
+    "scan_csv",
+    "scan_file_metadata",
+    "scan_orc",
+    "scan_parquet_schema_evolution",
+]
+
+
+def _write_rows(src: str, dst: str, key: str, drop: int) -> None:
+    """Write the rows of the parquet file ``src`` whose ``key`` is not
+    ``drop`` mod 3 to ``dst`` (in place when ``dst`` exists)."""
+    t = pq.read_table(src)
+    pq.write_table(t.filter(pa.array(t[key].to_numpy() % 3 != drop)), dst)
+
+
+def test_landed_copies_follow_the_fixture_files(spark, registry, tmp_path):
+    """Two fixtures with one directory name but different ``orders`` and
+    ``customer``, and one of them rewritten in place, each read their own
+    landed copies: every run matches its own fixture's oracle bitwise."""
+    qs, oracles = registry
+    base = os.path.basename(os.path.normpath(SF_DIR))
+    a, b = (str(tmp_path / side / base) for side in "ab")
+    for d in (a, b):
+        shutil.copytree(SF_DIR, d, copy_function=shutil.copyfile)
+    _write_rows(io.table_path(SF_DIR, "orders"), io.table_path(b, "orders"), "o_orderkey", 0)
+    _write_rows(io.table_path(SF_DIR, "customer"), io.table_path(b, "customer"), "c_custkey", 0)
+
+    def check(sf_dir):
+        duck = duck_connect(sf_dir)
+        rows = {}
+        for key in STALE_KEYS:
+            got = qs[key](spark, sf_dir).toPandas()
+            res = compare(key, got, duck.execute(oracles[key]).df())
+            assert res["ok"] and res["bitwise"], f"{key} on {sf_dir}: {res['notes']}"
+            rows[key] = sorted(map(tuple, got.astype(str).values.tolist()))
+        return rows
+
+    runs = [check(a), check(b)]
+    _write_rows(io.table_path(SF_DIR, "orders"), io.table_path(b, "orders"), "o_orderkey", 1)
+    runs.append(check(b))
+    for key in STALE_KEYS:  # the answers differ, so a stale copy would show
+        assert runs[0][key] != runs[1][key], key
+        assert key == "scan_csv" or runs[1][key] != runs[2][key], key  # reads customer only

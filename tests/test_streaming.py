@@ -3,9 +3,11 @@ multi-micro-batch execution, dedup across batches, twin equivalence."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -97,3 +99,21 @@ def test_session_window_twin_equivalence(spark, registry):
     )
     idiom_map = {r["user_id"]: r["n_sessions"] for r in idiom}
     assert native_map == idiom_map
+
+
+def test_stream_timeout_raises_and_leaves_nothing_running(spark, registry, monkeypatch):
+    """A stream still running when ``STREAM_TIMEOUT_S`` is up raises
+    ``TimeoutError`` instead of returning its partial sink as the answer;
+    the query is stopped and its checkpoint removed. (pyspark rejects a
+    timeout of 0, so the test waits 1 ms.)"""
+    from hive_test_spark.io import scratch_dir
+    from hive_test_spark.streaming import live
+
+    qs, _ = registry
+    ckpts = os.path.dirname(scratch_dir("ckpt", "_"))
+    before = set(os.listdir(ckpts))
+    monkeypatch.setattr(live, "STREAM_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        qs["stream_sink_modes"](spark, SF_DIR)
+    assert spark.streams.active == []
+    assert set(os.listdir(ckpts)) == before
