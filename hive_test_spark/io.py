@@ -194,10 +194,6 @@ def _normalize_ts(dtype):
     return F.col("ts").cast(T.TimestampType())
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def scratch_dir(*parts: str) -> str:
     """Path for a scratch output directory (parent pre-created)."""
     p = os.path.join(SCRATCH_DIR, *parts)

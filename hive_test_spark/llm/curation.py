@@ -735,8 +735,6 @@ def llm_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CURR_STAGES = 4  # length-quartile curriculum stages
-
 _CURRICULUM_ORACLE = """
     WITH scored AS (SELECT doc_id, n_chars FROM documents),
     th AS (

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, materialize, side
-from hive_test_spark.llm.pipeline import bucket_pairs
+from hive_test_spark.llm.pipeline import both_ends, bucket_pairs, jaccard, size_ratio
 from hive_test_spark.registry import register
 from hive_test_spark.session import fanout, tune
 
@@ -94,20 +94,10 @@ def llm_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("n", F.size("tok"))
     a = toks.repartition(fanout(spark)).alias("a")
     b = toks.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok"))).cast("double")
-    union = F.col("a.n") + F.col("b.n") - F.size(
-        F.array_intersect(F.col("a.tok"), F.col("b.tok"))
-    )
-    jac = inter / union
-    # Value-identical size-ratio prefilter (r12): jac <= min(n)/max(n)
-    # exactly (correctly-rounded quotients of exact ints, rounding
-    # monotone), so this cheap 2-int conjunct can never drop a pair the
-    # jac >= tau filter keeps — it only skips the O(|A|+|B|)
-    # array_intersect for size-mismatched pairs. Separate filter so
-    # codegen orders the cheap conjunct first.
-    ratio = F.least(F.col("a.n"), F.col("b.n")).cast("double") / F.greatest(
-        F.col("a.n"), F.col("b.n")
-    )
+    jac = jaccard(F.col("a.tok"), F.col("b.tok"), F.col("a.n"), F.col("b.n"))
+    # The size_ratio prefilter skips the O(|A|+|B|) array_intersect for
+    # size-mismatched pairs and never drops a kept pair (see size_ratio).
+    ratio = size_ratio(F.col("a.n"), F.col("b.n"))
     # All three predicates live IN the join condition, cheapest first
     # (r13, guide §1.2 per-task work): written as chained .filter()s the
     # optimizer AND-ed them into the nested-loop condition with the
@@ -220,25 +210,16 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Candidate pairs from the (table, hashval) buckets (see
     # pipeline.bucket_pairs for the single-sided shape). Carrying nb
     # (the doc's distinct-HashingTF-bucket count — the same quantity the
-    # rescore's na/nb uses) lets the value-identical
-    # size-ratio prefilter run BEFORE the distinct: fjac <=
-    # min(na,nb)/max(na,nb) exactly (correctly-rounded quotients of
-    # exact integers, rounding monotone), so a dropped pair can never
-    # pass the fjac > 0.5 rescore below.
+    # rescore's na/nb uses) lets the size_ratio prefilter run BEFORE the
+    # distinct. It shares the rescore's threshold: if one moves, the
+    # other must move with it or candidates would be silently dropped.
     cand = (
         bucket_pairs(
             sigs.join(bkts.select("doc_id", "nb"), "doc_id"),
             ["t", "hval"],
             F.struct("doc_id", "nb"),
         )
-        .filter(
-            F.least(F.col("a.nb"), F.col("b.nb")).cast("double")
-            / F.greatest(F.col("a.nb"), F.col("b.nb"))
-            # Same constant as the fjac rescore below (ADVICE r12): if
-            # the rescore threshold moves, the prefilter must move with
-            # it or it would silently drop candidates.
-            > JACCARD_THRESHOLD
-        )
+        .filter(size_ratio(F.col("a.nb"), F.col("b.nb")) > JACCARD_THRESHOLD)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
@@ -248,8 +229,7 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bb = bkts.select(
         F.col("doc_id").alias("doc_b"), F.col("bkt").alias("bkt_b"), F.col("nb").alias("nb")
     )
-    fint = F.size(F.array_intersect("bkt_a", "bkt_b")).cast("double")
-    fjac = fint / (F.col("na") + F.col("nb") - F.size(F.array_intersect("bkt_a", "bkt_b")))
+    fjac = jaccard("bkt_a", "bkt_b", F.col("na"), F.col("nb"))
     # No broadcast hints: the bucket-set tables span the ENTIRE corpus,
     # so at 100 TB these are doc_id-keyed shuffle joins (the schedule the
     # docstring describes); at fixture scale AQE auto-broadcasts the tiny
@@ -317,17 +297,9 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the single-split streamed side across cores, and derive |A∪B| from
     # per-doc sizes instead of a per-pair array_distinct(concat(...)).
     a, b = toks.repartition(fanout(spark)).alias("a"), toks.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok"))).cast("double")
-    union = F.col("a.n") + F.col("b.n") - F.size(
-        F.array_intersect(F.col("a.tok"), F.col("b.tok"))
-    )
-    jac = inter / union
-    # Value-identical size-ratio prefilter (r12, same proof as
-    # llm_jaccard_exact, strict-> strict): fl(jac) <= fl(min/max), so
-    # min/max <= tau implies jac > tau is false.
-    ratio = F.least(F.col("a.n"), F.col("b.n")).cast("double") / F.greatest(
-        F.col("a.n"), F.col("b.n")
-    )
+    jac = jaccard(F.col("a.tok"), F.col("b.tok"), F.col("a.n"), F.col("b.n"))
+    # Strict threshold, strict prefilter (see size_ratio).
+    ratio = size_ratio(F.col("a.n"), F.col("b.n"))
     # Conjuncts in the join condition, cheapest first (r13, same
     # rationale and measurement as llm_jaccard_exact: the optimizer's
     # own AND-ordering ran the array-intersect Jaccard before the
@@ -366,26 +338,10 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the planner broadcast-built the multi-million-row PAIR side and
     # probed it from the corpus scan's single partition — the whole
     # rescore on one core (measured 106 s vs 2.4 s hinted at sf0.1).
-    # |A∪B| derives from sizes (arrays are distinct — exact identity).
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("tok").alias("tok_b"))
-    cand_jac = (
-        # Size-gated attach (r13): io.side broadcasts ONLY while
-        # the corpus is dimension-sized; the rescore is part of the
-        # 100 TB leg, where these flip to doc_id-keyed shuffled hash
-        # joins (the scale rule this file documents).
-        cand.join(side(ta, sf_dir, "documents"), "doc_a")
-        .join(side(tb, sf_dir, "documents"), "doc_b")
-        .select(
-            (
-                F.size(F.array_intersect("tok_a", "tok_b")).cast("double")
-                / (
-                    F.size("tok_a")
-                    + F.size("tok_b")
-                    - F.size(F.array_intersect("tok_a", "tok_b"))
-                )
-            ).alias("token_jac")
-        )
+    # The rescore is part of the 100 TB leg, where both_ends' size gates
+    # flip to doc_id-keyed shuffled hash joins.
+    cand_jac = both_ends(cand, toks.drop("n"), sf_dir).select(
+        jaccard("tok_a", "tok_b", F.size("tok_a"), F.size("tok_b")).alias("token_jac")
     )
     precision = cand_jac.agg(
         F.coalesce(
@@ -880,14 +836,10 @@ def llm_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    n_a, n_b = F.size("sh_a"), F.size("sh_b")
+    n_common = F.size(F.array_intersect("shingles_a", "shingles_b"))
+    n_a, n_b = F.size("shingles_a"), F.size("shingles_b")
     return (
-        # Size-gated attach (r13): shingle sets span the corpus too.
-        cand.join(side(sa, sf_dir, "documents"), "doc_a")
-        .join(side(sb, sf_dir, "documents"), "doc_b")
+        both_ends(cand, sh, sf_dir)
         .select(
             "doc_a",
             "doc_b",

@@ -86,9 +86,9 @@ _MINHASH_K = 16  # signature length
 _BAND_ROWS = 4   # rows per LSH band -> 4 bands, collision threshold ~ (1/4)^(1/4) ~ 0.71
 _MINHASH_VERIFY_TAU = 0.9
 
-# Signature-stage CTEs (token sets -> banded LSH index) shared by every
-# minhash oracle: the full self-join (llm_minhash_det / clusters) and the
-# incremental index probe (llm_incremental_minhash).
+# Oracle CTE fragments, composed by every minhash oracle: token sets and
+# the (doc_id, k, mh) signature, the banded LSH index over it, and the
+# distinct (doc_a, doc_b) candidate pairs that share a band key.
 _MINHASH_SIG_CTES = f"""
     toks AS (
       SELECT doc_id, list_distinct(string_split(text, ' ')) AS tok FROM documents
@@ -98,21 +98,25 @@ _MINHASH_SIG_CTES = f"""
       FROM (SELECT doc_id, unnest(tok) AS tok FROM toks) u
       CROSS JOIN range({_MINHASH_K}) t(k)
     ),
-    sig AS (SELECT doc_id, k, min(h) AS mh FROM hashes GROUP BY doc_id, k),
+    sig AS (SELECT doc_id, k, min(h) AS mh FROM hashes GROUP BY doc_id, k)
+"""
+_MINHASH_BANDS_CTE = f"""
     bands AS (
       SELECT doc_id, k // {_BAND_ROWS} AS band, string_agg(mh, '|' ORDER BY mh) AS bkey
       FROM sig GROUP BY doc_id, k // {_BAND_ROWS}
     )
 """
-
-# CTE chain shared by llm_minhash_det and llm_dedup_clusters oracles.
-_MINHASH_CTES = f"""
-    {_MINHASH_SIG_CTES},
+_MINHASH_CAND_CTE = """
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ),
+    )
+"""
+
+# CTE chain shared by llm_minhash_det and llm_dedup_clusters oracles.
+_MINHASH_CTES = f"""
+    {_MINHASH_SIG_CTES}, {_MINHASH_BANDS_CTE}, {_MINHASH_CAND_CTE},
     verified AS (
       SELECT c.doc_a, c.doc_b,
              ROUND(CAST(len(list_intersect(ta.tok, tb.tok)) AS DOUBLE)
@@ -137,7 +141,8 @@ def _minhash_wide(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     `n` plus all K min-hashes as columns m0..m{K-1}). The hash salt, K,
     and tokenization live HERE and only here — every minhash exhibit
     derives from this one chain, so a change cannot skew one exhibit
-    against the others.
+    against the others. Their oracle twin is ``_MINHASH_SIG_CTES``, the
+    one signature fragment every minhash oracle composes.
 
     Optimization-round shape (guide §2.3/§2.4, r12): min() over a STRING
     agg buffer cannot hash-aggregate (Spark plans Sort+SortAggregate),
@@ -246,72 +251,79 @@ def bucket_pairs(
     )
 
 
+def jaccard(a: str | Column, b: str | Column, na: Column, nb: Column) -> Column:
+    """Exact Jaccard |A∩B| / |A∪B| of two arrays of sizes ``na`` and
+    ``nb``. The arrays hold distinct elements, so |A∪B| = |A|+|B|−|A∩B|
+    holds exactly and no per-pair array_distinct(concat(...)) is built.
+    ``tests/test_shared_helpers.py`` pins the value bitwise against the
+    oracle's |A∩B| / |distinct(A++B)|."""
+    return F.size(F.array_intersect(a, b)).cast("double") / (
+        na + nb - F.size(F.array_intersect(a, b))
+    )
+
+
+def size_ratio(na: Column, nb: Column) -> Column:
+    """min/max of two set sizes: the cheap prefilter in front of
+    ``jaccard``. |A∩B| <= min and |A∪B| >= max, so J <= min/max. Both
+    are correctly rounded quotients of exact integers and rounding is
+    monotone, so fl(jac) <= fl(min/max): ``size_ratio < tau`` (``<=``
+    for a strict threshold) never drops a pair that ``jac >= tau``
+    (``> tau``) keeps. ``tests/test_shared_helpers.py`` pins this."""
+    return F.least(na, nb).cast("double") / F.greatest(na, nb)
+
+
+def minhash_candidates(mins: DataFrame, tau: float) -> DataFrame:
+    """Distinct (doc_a, doc_b) LSH candidate pairs, doc_a < doc_b, over
+    the wide signature frame ``mins``. Buckets carry (doc_id, n) structs,
+    so the size-ratio prefilter at ``tau`` runs when pairs are emitted,
+    before the distinct: it shrinks both the distinct's shuffle and the
+    token-array verify join."""
+    return (
+        bucket_pairs(
+            _bands_from_wide(mins), ["band", "bkey"], F.struct("doc_id", "n")
+        )
+        .filter(size_ratio(F.col("a.n"), F.col("b.n")) >= tau)
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def both_ends(pairs: DataFrame, per_doc: DataFrame, sf_dir: str) -> DataFrame:
+    """``pairs`` with the non-id columns of ``per_doc`` (keyed by doc_id)
+    attached to both ends: ``<col>_a`` on doc_a, ``<col>_b`` on doc_b.
+    Both joins are size-gated by ``io.side`` on ``documents``: a
+    broadcast while the corpus is dimension-sized, a doc_id-keyed
+    shuffled hash join at scale (an unconditional broadcast hint would
+    broadcast the whole corpus whatever its size)."""
+    cols = [c for c in per_doc.columns if c != "doc_id"]
+    for end in ("a", "b"):
+        one = per_doc.select(
+            F.col("doc_id").alias(f"doc_{end}"),
+            *[F.col(c).alias(f"{c}_{end}") for c in cols],
+        )
+        pairs = pairs.join(side(one, sf_dir, "documents"), f"doc_{end}")
+    return pairs
+
+
 def _minhash_bands_from(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Signature stage over an arbitrary documents frame (static corpus
     or a streaming micro-batch): (token sets, banded LSH index). The
-    index rows keep the doc's distinct-token count ``n`` (r13) so the
-    incremental probe can run the value-identical size-ratio prefilter
-    at candidate time — 2 ints per row against the index, the same
-    trade _minhash_verified_pairs makes."""
+    index rows keep the doc's distinct-token count ``n`` so the
+    incremental probe can run the size-ratio prefilter at candidate
+    time."""
     toks, mins = _minhash_wide(d)
     return toks, _bands_from_wide(mins)
-
-
-def _minhash_bands(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared signature stage: (token sets, banded LSH index). The
-    `bands` frame IS the storable dedup index — llm_minhash_det
-    self-joins it, llm_incremental_minhash probes it with a batch."""
-    return _minhash_bands_from(load_table(spark, sf_dir, "documents"))
 
 
 def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared candidate-generation + verification stage (see
     llm_minhash_det for the full docstring); also feeds
-    llm_dedup_clusters.
-
-    Optimization-round shape (r12, guide §2.3/§2.4): buckets carry
-    (doc_id, n) structs so the value-identical size-ratio prefilter
-    runs at PAIR-EXPLOSION time, BEFORE the distinct — on this corpus
-    it kills ~55% of collision rows, so both the distinct's shuffle and
-    the token-array verify join shrink by that factor. Prefilter
-    soundness (unchanged from r8): |A∩B| <= min(|A|,|B|) and |A∪B| >=
-    max(|A|,|B|), so J(A,B) <= min/max; both ratios are correctly-
-    rounded quotients of exact integers and rounding is monotonic, so
-    fl(jac) <= fl(min/max) — the prefilter can never drop a pair the
-    jac >= tau filter would keep. |A∪B| in the verify leg is derived
-    as |A|+|B|-|A∩B| (exact integers, tokens are distinct) instead of
-    re-hashing array_distinct(concat(...)) per pair."""
+    llm_dedup_clusters. On this corpus the size-ratio prefilter kills
+    ~55% of collision rows before the distinct."""
     toks, mins = _minhash_wide(load_table(spark, sf_dir, "documents"))
-    pairs = (
-        bucket_pairs(
-            _bands_from_wide(mins), ["band", "bkey"], F.struct("doc_id", "n")
-        )
-        .filter(
-            F.least(F.col("a.n"), F.col("b.n")).cast("double")
-            / F.greatest(F.col("a.n"), F.col("b.n"))
-            >= _MINHASH_VERIFY_TAU
-        )
-    )
-    cand = pairs.select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    ).distinct()
-
-    ta = toks.select(F.col("doc_id").alias("_ida"), F.col("tok").alias("tok_a"))
-    tb = toks.select(F.col("doc_id").alias("_idb"), F.col("tok").alias("tok_b"))
-    inter = F.size(F.array_intersect("tok_a", "tok_b")).cast("double")
-    union = (
-        F.size("tok_a") + F.size("tok_b") - F.size(F.array_intersect("tok_a", "tok_b"))
-    )
-    jac = inter / union
-    # Size-gated attach (r13, VERDICT r12 item 3): broadcast while the
-    # corpus is provably dimension-sized, doc_id-keyed shuffled hash
-    # join at scale — an unconditional broadcast HINT would override
-    # the size threshold and pin the whole corpus to the driver.
+    jac = jaccard("tok_a", "tok_b", F.size("tok_a"), F.size("tok_b"))
     return (
-        cand.join(side(ta, sf_dir, "documents"), F.col("doc_a") == F.col("_ida"))
-        .join(side(tb, sf_dir, "documents"), F.col("doc_b") == F.col("_idb"))
+        both_ends(minhash_candidates(mins, _MINHASH_VERIFY_TAU), toks, sf_dir)
         .filter(jac >= _MINHASH_VERIFY_TAU)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -349,7 +361,7 @@ def llm_minhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INCR_MOD = 5
 
 _INCR_MINHASH_ORACLE = f"""
-    WITH {_MINHASH_SIG_CTES},
+    WITH {_MINHASH_SIG_CTES}, {_MINHASH_BANDS_CTE},
     icand AS (
       SELECT DISTINCT i.doc_id AS in_id, e.doc_id AS ex_id
       FROM bands i JOIN bands e ON i.band = e.band AND i.bkey = e.bkey
@@ -407,7 +419,7 @@ def llm_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm_minhash_det) runs once to bootstrap; this op is every
     subsequent ingest tick. Index freshness: accepted docs append
     their band rows (insert-only, no rebuild)."""
-    toks, bands = _minhash_bands(spark, sf_dir)
+    toks, bands = _minhash_bands_from(load_table(spark, sf_dir, "documents"))
     # Materialized once (r13): both probe sides filter from ONE banded
     # index, so the corpus-wide signature aggregation runs once instead
     # of twice (in_bands and ex_bands each re-planned the whole
@@ -454,13 +466,9 @@ def _probe_band_index(
 
     r13 verify-leg rework (guide §2.3/§8; measured 30.8 s full vs 4.8 s
     candidate stage at sf0.1 — the per-pair array work WAS the op):
-    - the value-identical size-ratio prefilter (r12 monotone-rounding
-      proof: fl(jac) <= fl(min/max), so min/max < tau can never kill a
-      pair the jac >= tau filter keeps) now runs at collision time,
-      BEFORE the distinct — it needs only the 2 ints the index rows
-      carry and drops 56% of the distinct pairs (2.15M → 0.95M);
-    - |A∪B| derives from sizes (|A|+|B|−|A∩B|, exact — token arrays
-      are distinct) instead of array_distinct(concat(...)) per pair;
+    - the ``size_ratio`` prefilter runs at collision time, BEFORE the
+      distinct — it needs only the 2 ints the index rows carry and
+      drops 56% of the distinct pairs (2.15M → 0.95M);
     - the index-side shuffle_hash join runs FIRST, while the pair rows
       are two bare ids, and the batch-token broadcast join attaches
       tok_i after — so the shuffle moves 16-byte pair keys, never the
@@ -472,26 +480,15 @@ def _probe_band_index(
             (F.col("i.band") == F.col("e.band"))
             & (F.col("i.bkey") == F.col("e.bkey")),
         )
-        .filter(
-            F.least(F.col("i.n"), F.col("e.n")).cast("double")
-            / F.greatest(F.col("i.n"), F.col("e.n"))
-            >= _MINHASH_VERIFY_TAU
-        )
+        .filter(size_ratio(F.col("i.n"), F.col("e.n")) >= _MINHASH_VERIFY_TAU)
         .select(
             F.col("i.doc_id").alias("in_id"), F.col("e.doc_id").alias("ex_id")
         )
         .distinct()
     )
     ti, te = in_toks.alias("ti"), ex_toks.alias("te")
-    inter = F.size(F.array_intersect(F.col("ti.tok"), F.col("te.tok"))).cast(
-        "double"
-    )
-    union = (
-        F.size(F.col("ti.tok"))
-        + F.size(F.col("te.tok"))
-        - F.size(F.array_intersect(F.col("ti.tok"), F.col("te.tok")))
-    )
-    jac = inter / union
+    tok_i, tok_e = F.col("ti.tok"), F.col("te.tok")
+    jac = jaccard(tok_i, tok_e, F.size(tok_i), F.size(tok_e))
     ver = (
         # shuffle_hash (r12): pins the documented shuffle-on-doc_id
         # schedule. The rewritten candidate subtree's size estimate
@@ -1011,15 +1008,7 @@ def llm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSH_CONFIGS = ((4, 4), (8, 2), (16, 1))
 
 _LSH_TUNE_ORACLE = f"""
-    WITH toks AS (
-      SELECT doc_id, list_distinct(string_split(text, ' ')) AS tok FROM documents
-    ),
-    hashes AS (
-      SELECT doc_id, t.k AS k, md5(t.k::VARCHAR || ':' || u.tok) AS h
-      FROM (SELECT doc_id, unnest(tok) AS tok FROM toks) u
-      CROSS JOIN range({_MINHASH_K}) t(k)
-    ),
-    sig AS (SELECT doc_id, k, min(h) AS mh FROM hashes GROUP BY doc_id, k),
+    WITH {_MINHASH_SIG_CTES},
     configs AS (SELECT * FROM (VALUES {", ".join(f"({b}, {r})" for b, r in _LSH_CONFIGS)}) AS t(bands, rows_per_band)),
     banded AS (
       SELECT c.bands, c.rows_per_band, s.doc_id,
@@ -1250,24 +1239,7 @@ def llm_dedup_method_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SWEEP_TAUS = (0.7, 0.8, 0.9, 0.95)
 
 _DEDUP_SWEEP_ORACLE = f"""
-    WITH toks AS (
-      SELECT doc_id, list_distinct(string_split(text, ' ')) AS tok FROM documents
-    ),
-    hashes AS (
-      SELECT doc_id, t.k AS k, md5(t.k::VARCHAR || ':' || u.tok) AS h
-      FROM (SELECT doc_id, unnest(tok) AS tok FROM toks) u
-      CROSS JOIN range({_MINHASH_K}) t(k)
-    ),
-    sig AS (SELECT doc_id, k, min(h) AS mh FROM hashes GROUP BY doc_id, k),
-    bands AS (
-      SELECT doc_id, k // {_BAND_ROWS} AS band, string_agg(mh, '|' ORDER BY mh) AS bkey
-      FROM sig GROUP BY doc_id, k // {_BAND_ROWS}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ),
+    WITH {_MINHASH_SIG_CTES}, {_MINHASH_BANDS_CTE}, {_MINHASH_CAND_CTE},
     scored AS (
       SELECT c.doc_a, c.doc_b,
              ROUND(CAST(len(list_intersect(ta.tok, tb.tok)) AS DOUBLE)
@@ -1309,43 +1281,16 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold sits on a duplicate-density cliff — exactly what you
     want to know before deleting 10% of a corpus."""
     d = load_table(spark, sf_dir, "documents")
-    # r13: the sweep now rides the WIDE signature chain (one aggregation,
-    # band keys by projection — the llm_minhash_det shape) instead of the
-    # narrow sig + second band aggregation, and scores candidates with
-    # |A∪B| = |A|+|B|−|A∩B| (exact: token arrays are distinct) instead of
-    # array_distinct(concat(...)) per pair.
     toks, mins = _minhash_wide(d)
-    # Value-identical prefilter at the sweep's FLOOR tau with a rounding
-    # margin: a dropped pair has fl(jac) <= fl(min/max) < 0.6999 (the r8
-    # monotone-rounding proof), so even its ROUND(jac, 6) stays < 0.7 =
-    # min(_SWEEP_TAUS) — it could never be counted by any tau row; only
-    # never-hit pairs are dropped, every aggregate is unchanged.
-    _pre = min(_SWEEP_TAUS) - 1e-4
-    pairs = (
-        bucket_pairs(
-            _bands_from_wide(mins), ["band", "bkey"], F.struct("doc_id", "n")
-        )
-        .filter(
-            F.least(F.col("a.n"), F.col("b.n")).cast("double")
-            / F.greatest(F.col("a.n"), F.col("b.n"))
-            >= _pre
-        )
-    )
-    cand = pairs.select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    ).distinct()
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("tok").alias("tok_b"))
-    inter = F.size(F.array_intersect("tok_a", "tok_b")).cast("double")
-    union = (
-        F.size("tok_a") + F.size("tok_b") - F.size(F.array_intersect("tok_a", "tok_b"))
-    )
+    # Prefilter at the sweep's FLOOR tau with a rounding margin (see
+    # size_ratio): a dropped pair has fl(jac) < 0.6999, so even its
+    # ROUND(jac, 6) stays < 0.7 = min(_SWEEP_TAUS) and no tau row could
+    # count it; every aggregate is unchanged.
+    cand = minhash_candidates(mins, min(_SWEEP_TAUS) - 1e-4)
+    jac = jaccard("tok_a", "tok_b", F.size("tok_a"), F.size("tok_b"))
     scored = (
-        # Size-gated attach (r13): see io.side — broadcast at
-        # fixture scale, doc_id-keyed shuffled hash join at 100 TB.
-        cand.join(side(ta, sf_dir, "documents"), "doc_a")
-        .join(side(tb, sf_dir, "documents"), "doc_b")
-        .select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
+        both_ends(cand, toks, sf_dir)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
         .transform(materialize)
     )
     taus = spark.sql(
@@ -1377,24 +1322,7 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MH_EST_ORACLE = f"""
-    WITH toks AS (
-      SELECT doc_id, list_distinct(string_split(text, ' ')) AS tok FROM documents
-    ),
-    hashes AS (
-      SELECT doc_id, t.k AS k, md5(t.k::VARCHAR || ':' || u.tok) AS h
-      FROM (SELECT doc_id, unnest(tok) AS tok FROM toks) u
-      CROSS JOIN range({_MINHASH_K}) t(k)
-    ),
-    sig AS (SELECT doc_id, k, min(h) AS mh FROM hashes GROUP BY doc_id, k),
-    bands AS (
-      SELECT doc_id, k // {_BAND_ROWS} AS band, string_agg(mh, '|' ORDER BY mh) AS bkey
-      FROM sig GROUP BY doc_id, k // {_BAND_ROWS}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ),
+    WITH {_MINHASH_SIG_CTES}, {_MINHASH_BANDS_CTE}, {_MINHASH_CAND_CTE},
     est AS (
       SELECT c.doc_a, c.doc_b,
              ROUND(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END)
@@ -1453,42 +1381,18 @@ def llm_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-grouping (a K× row blow-up and a shuffle for the same sum of
     # indicators; measured 40 s → 11 s at sf0.1). Same integer match
     # count, same /K double division, bitwise-identical estimate.
-    ma = mins.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"m{k}").alias(f"_a{k}") for k in range(_MINHASH_K)],
-    )
-    mb = mins.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"m{k}").alias(f"_b{k}") for k in range(_MINHASH_K)],
-    )
     n_match = sum(
-        F.when(F.col(f"_a{k}") == F.col(f"_b{k}"), 1).otherwise(0)
+        F.when(F.col(f"m{k}_a") == F.col(f"m{k}_b"), 1).otherwise(0)
         for k in range(_MINHASH_K)
     )
-    est = (
-        # Size-gated attach (r13): the wide signature table spans the
-        # corpus — broadcast only while it is provably dimension-sized.
-        cand.join(side(ma, sf_dir, "documents"), "doc_a")
-        .join(side(mb, sf_dir, "documents"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(n_match / F.lit(float(_MINHASH_K)), 6).alias("sig_estimate"),
-        )
+    est = both_ends(cand, mins.drop("n"), sf_dir).select(
+        "doc_a",
+        "doc_b",
+        F.round(n_match / F.lit(float(_MINHASH_K)), 6).alias("sig_estimate"),
     )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("tok").alias("tok_b"))
-    exact = (
-        F.size(F.array_intersect("tok_a", "tok_b")).cast("double")
-        / (
-            F.size("tok_a")
-            + F.size("tok_b")
-            - F.size(F.array_intersect("tok_a", "tok_b"))
-        )
-    )
+    exact = jaccard("tok_a", "tok_b", F.size("tok_a"), F.size("tok_b"))
     return (
-        est.join(side(ta, sf_dir, "documents"), "doc_a")
-        .join(side(tb, sf_dir, "documents"), "doc_b")
+        both_ends(est, toks, sf_dir)
         .select(
             "doc_a",
             "doc_b",

@@ -399,6 +399,7 @@ def dml_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan cost is paid once, each branch writes its own files in the same
     stage. Dynamic-partitioned destinations compose (each branch may
     ``PARTITION`` independently)."""
+    import os
     import shutil
 
     from hive_test_spark.io import scratch_dir
@@ -414,6 +415,7 @@ def dml_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     for kind, tbl in names.items():
         path = scratch_dir("dml", tag, f"multi_insert_{kind}")
         shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         spark.sql(
             f"CREATE TABLE {tbl} (o_orderkey BIGINT, o_totalprice DOUBLE) "

@@ -17,6 +17,7 @@ batch sinks via idempotent overwrite.
 from __future__ import annotations
 
 import atexit
+import glob
 import os
 import shutil
 import uuid
@@ -77,6 +78,14 @@ def _run_dir(kind: str) -> str:
     d = scratch_dir(kind, uuid.uuid4().hex[:12])
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+def _batch_paths(root: str) -> list[str]:
+    """The ``batch=<id>`` directories a foreachBatch sink wrote under
+    ``root``, to read as plain paths: Spark's FileStreamSink logs a
+    FileNotFoundException for a ``batch=*`` glob, and reading ``root``
+    itself adds a ``batch`` partition column (one more Project)."""
+    return sorted(glob.glob(os.path.join(root, "batch=*")))
 
 
 def _events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
@@ -766,7 +775,7 @@ def stream_foreachbatch_multisink(spark: SparkSession, sf_dir: str) -> DataFrame
     assert n_batches["n"] >= 2, "maxFilesPerTrigger=1 over 2 files must yield >=2 batches"
 
     rollup = (
-        spark.read.parquet(os.path.join(rollup_dir, "batch=*"))
+        spark.read.parquet(*_batch_paths(rollup_dir))
         .groupBy("event_type")
         .agg(
             F.sum("cnt").alias("n_rollup"),
@@ -774,7 +783,7 @@ def stream_foreachbatch_multisink(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     archive = (
-        spark.read.parquet(os.path.join(archive_dir, "batch=*"))
+        spark.read.parquet(*_batch_paths(archive_dir))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_archive"))
     )
@@ -858,7 +867,4 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert n_batches["n"] >= 2, (
         "maxFilesPerTrigger=1 over 3 files must yield >=2 micro-batches"
     )
-    return (
-        spark.read.parquet(os.path.join(out_dir, "batch=*"))
-        .orderBy("doc_id")
-    )
+    return spark.read.parquet(*_batch_paths(out_dir)).orderBy("doc_id")

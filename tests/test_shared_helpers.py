@@ -1,7 +1,8 @@
 """The engine's shared building blocks: ``io.materialize`` (the only
 checkpoint, which leaves nothing pinned in the session's cache),
 ``session.scoped_confs`` (the only conf save/restore), ``io.land`` (the
-only write-once gate for scratch copies derived from the fixture), and
+only write-once gate for scratch copies derived from the fixture), the
+near-dup family's ``pipeline.jaccard`` and ``pipeline.size_ratio``, and
 the removal at exit of the package zip that ``session._ship_package``
 writes and of the per-run stream outputs."""
 
@@ -20,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_test_spark import io
+from hive_test_spark.llm.pipeline import jaccard, size_ratio
 from hive_test_spark.oracle import compare, duck_connect
 from hive_test_spark.session import scoped_confs
 from tests.conftest import SF_DIR, landed
@@ -72,6 +74,46 @@ def test_branch_points_leave_the_cache_manager_empty(spark, registry):
     for key in MATERIALIZED_BRANCHES:
         assert qs[key](spark, SF_DIR).collect(), key
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_jaccard_is_the_oracle_value_and_size_ratio_never_drops_a_pair(spark, duck):
+    """Over every document pair's token sets: ``jaccard`` is bitwise the
+    oracle's |A∩B| / |distinct(A++B)|, and no pair that a ``>= tau`` or
+    ``> tau`` Jaccard filter keeps has a size ratio below ``tau``."""
+    toks = io.load_table(spark, SF_DIR, "documents").select(
+        "doc_id", F.array_distinct(F.split("text", " ")).alias("tok")
+    )
+    a = toks.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
+    b = toks.select(F.col("doc_id").alias("doc_b"), F.col("tok").alias("tok_b"))
+    na, nb = F.size("tok_a"), F.size("tok_b")
+    got = (
+        a.join(b, F.col("doc_a") < F.col("doc_b"))
+        .select(
+            "doc_a",
+            "doc_b",
+            jaccard("tok_a", "tok_b", na, nb).alias("jac"),
+            size_ratio(na, nb).alias("ratio"),
+        )
+        .toPandas()
+    )
+    want = duck.execute(
+        """
+        WITH toks AS (
+          SELECT doc_id, list_distinct(string_split(text, ' ')) AS tok FROM documents
+        )
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(len(list_intersect(a.tok, b.tok)) AS DOUBLE)
+                 / len(list_distinct(list_concat(a.tok, b.tok))) AS oracle
+        FROM toks a JOIN toks b ON a.doc_id < b.doc_id
+        """
+    ).df()
+    both = got.merge(want, on=["doc_a", "doc_b"])
+    assert len(both) == len(got) == len(want) > 0
+    assert (both["jac"] == both["oracle"]).all()
+    for tau in (0.5, 0.6999, 0.9):
+        assert (both["jac"] >= tau).any(), tau
+        assert not ((both["jac"] >= tau) & (both["ratio"] < tau)).any(), tau
+        assert not ((both["jac"] > tau) & (both["ratio"] <= tau)).any(), tau
 
 
 def test_scoped_confs_restores_after_return_and_raise(spark):
