@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
 @register(
@@ -160,7 +160,8 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Conditional family: if/nvl/nullif/coalesce/isnull.
+register_sql(
     "fn_conditional",
     """
     SELECT s_suppkey,
@@ -169,20 +170,9 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
            NULLIF(s_nationkey, 0) AS nation_or_null,
            COALESCE(NULLIF(s_nationkey, 0), -1) AS nation_nvl,
            (s_acctbal IS NOT NULL) AS has_bal
-    FROM supplier
+    FROM {supplier}
     """,
 )
-def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional family: if/nvl/nullif/coalesce/isnull."""
-    s = load_table(spark, sf_dir, "supplier")
-    return s.select(
-        "s_suppkey",
-        F.when(F.col("s_acctbal") > 5000.0, "rich").otherwise("modest").alias("wealth"),
-        F.coalesce(F.nullif(F.col("s_name"), F.lit("")), F.lit("unknown")).alias("safe_name"),
-        F.nullif(F.col("s_nationkey"), F.lit(0)).alias("nation_or_null"),
-        F.coalesce(F.nullif(F.col("s_nationkey"), F.lit(0)), F.lit(-1)).alias("nation_nvl"),
-        F.col("s_acctbal").isNotNull().alias("has_bal"),
-    )
 
 
 @register(
@@ -784,8 +774,6 @@ def fn_sql_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CREATE OR REPLACE TEMPORARY FUNCTION hts_is_bulk(q DOUBLE) "
         "RETURNS BOOLEAN RETURN q >= 30"
     )
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("hts_macro_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -796,10 +784,11 @@ def fn_sql_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS charged_total,
                ROUND(AVG(CASE WHEN hts_is_bulk(l_quantity)
                               THEN l_extendedprice END), 4) AS bulk_avg_price
-        FROM hts_macro_lineitem
+        FROM {li}
         GROUP BY l_returnflag
         ORDER BY l_returnflag
-        """
+        """,
+        li=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -324,13 +324,13 @@ def udtf_python_class(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("hts_long_tokens", LongTokens)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    docs.createOrReplaceTempView("hts_udtf_docs")
     return spark.sql(
         """
         SELECT d.doc_id, t.token, t.token_len
-        FROM hts_udtf_docs d, LATERAL hts_long_tokens(d.text) t
+        FROM {docs} d, LATERAL hts_long_tokens(d.text) t
         ORDER BY doc_id, token
-        """
+        """,
+        docs=docs,
     )
 
 

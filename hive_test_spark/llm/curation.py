@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 # 4-token shingles; benchmark probe set = every 53rd doc (deterministic,
 # ~2% of corpus — the size class of a real eval suite vs a crawl). 5-grams
@@ -605,32 +605,25 @@ def llm_entropy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DOMAIN_CAP = 100
 
 
-@register(
+# Per-domain document cap (web-corpus practice: no single domain may
+# dominate the mix): keep at most 100 docs per language, chosen by
+# content-hash rank so the survivor set is stable across reruns —
+# seeded-random selection would diverge between engines and between
+# snapshots. One window shuffle on the cap key. At 100 TB, rank with a
+# two-level top-k (per-partition heap then per-key merge) when a single
+# domain's rows exceed one task — the win_topk_per_group rewrite.
+register_sql(
     "llm_domain_cap",
     f"""
     WITH ranked AS (
       SELECT doc_id, lang, source,
              row_number() OVER (PARTITION BY lang ORDER BY md5(text), doc_id) AS rk
-      FROM documents
+      FROM {{documents}}
     )
     SELECT doc_id, lang, source, rk
     FROM ranked WHERE rk <= {_DOMAIN_CAP}
     """,
 )
-def llm_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain document cap (web-corpus practice: no single domain may
-    dominate the mix): keep at most 100 docs per language, chosen by
-    content-hash rank so the survivor set is stable across reruns —
-    seeded-random selection would diverge between engines and between
-    snapshots. One window shuffle on the cap key. At 100 TB, rank with a
-    two-level top-k (per-partition heap then per-key merge) when a single
-    domain's rows exceed one task — the win_topk_per_group rewrite."""
-    d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(F.md5("text"), F.col("doc_id"))
-    return (
-        d.select("doc_id", "lang", "source", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= _DOMAIN_CAP)
-    )
 
 
 @register(

@@ -20,36 +20,28 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, materialize, side
 from hive_test_spark.llm.pipeline import both_ends, bucket_pairs, jaccard, size_ratio
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 from hive_test_spark.session import fanout, tune
 
 
-@register(
+# Exact/normalized dedup: md5 of normalized text, keep lowest doc_id
+# per digest (deterministic winner — not dropDuplicates, whose survivor
+# is partition-order-dependent).
+#
+# Shape: GROUP BY digest with MIN rather than a ROW_NUMBER() window —
+# the aggregate gets a map-side partial combine (each partition emits at
+# most one row per digest before the shuffle), where the window variant
+# must shuffle *every* row and sort each hash partition. At 100 TB
+# that's the difference between shuffling unique-digest counts and
+# shuffling the whole corpus.
+register_sql(
     "llm_exact_dedup",
     """
     SELECT min(doc_id) AS doc_id, md5(lower(trim(text))) AS content_hash
-    FROM documents
+    FROM {documents}
     GROUP BY md5(lower(trim(text)))
     """,
 )
-def llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact/normalized dedup: md5 of normalized text, keep lowest doc_id
-    per digest (deterministic winner — not dropDuplicates, whose survivor
-    is partition-order-dependent).
-
-    Shape: groupBy(digest).agg(min) rather than a row_number() window —
-    the aggregate gets a map-side partial combine (each partition emits at
-    most one row per digest before the shuffle), where the window variant
-    must shuffle *every* row and sort each hash partition. At 100 TB
-    that's the difference between shuffling unique-digest counts and
-    shuffling the whole corpus."""
-    d = load_table(spark, sf_dir, "documents")
-    digest = F.md5(F.lower(F.trim(F.col("text"))))
-    return (
-        d.groupBy(digest.alias("content_hash"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", "content_hash")
-    )
 
 
 # Threshold chosen so the fixture vocabulary (small shared word pool,
@@ -542,15 +534,36 @@ def llm_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Canonical-document selection [public method: every dedup pipeline
+# keeps ONE representative per duplicate group — C4/RefinedWeb keep by
+# heuristic preference, not arbitrarily]: group exact duplicates by
+# normalized-text hash, elect the survivor deterministically (longest
+# text, then lowest doc_id — never "first seen", which is
+# partition-order-dependent and breaks re-run reproducibility), and
+# report each multi-copy group's survivor. llm_exact_dedup counts
+# copies; this op makes the KEEP decision a writer consumes.
+#
+# The fixture's texts are all distinct, which would make this a 0-row
+# vacuous pass (the trap documented in curation.py and avoided in
+# llm_cross_dedup) — so a deterministic "re-crawl" twin of every 7th
+# doc is injected (same normalized text via trailing whitespace,
+# n_chars + 2), and the election provably picks it: longest text
+# wins, exercising the survivor rule on every group.
+#
+# Scale shape: one shuffle on the 128-bit group hash (uniform by
+# construction — no skew beyond true duplicate mass), ranking window
+# and group count ride that same partitioning (single exchange
+# total). At 100 TB the survivor election is exactly this plan over
+# the hash-bucketed corpus.
+register_sql(
     "llm_dedup_canonical",
     """
     WITH docs AS (
-      SELECT doc_id, source, n_chars, text FROM documents
+      SELECT doc_id, source, n_chars, text FROM {documents}
       UNION ALL
       SELECT doc_id + 10000 AS doc_id, 'recrawl' AS source,
              n_chars + 2 AS n_chars, text || '  ' AS text
-      FROM documents WHERE doc_id % 7 = 0
+      FROM {documents} WHERE doc_id % 7 = 0
     ),
     keyed AS (
       SELECT doc_id, source, n_chars,
@@ -571,59 +584,6 @@ def llm_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn = 1 AND n_copies > 1
     """,
 )
-def llm_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-document selection [public method: every dedup pipeline
-    keeps ONE representative per duplicate group — C4/RefinedWeb keep by
-    heuristic preference, not arbitrarily]: group exact duplicates by
-    normalized-text hash, elect the survivor deterministically (longest
-    text, then lowest doc_id — never "first seen", which is
-    partition-order-dependent and breaks re-run reproducibility), and
-    report each multi-copy group's survivor. llm_exact_dedup counts
-    copies; this op makes the KEEP decision a writer consumes.
-
-    The fixture's texts are all distinct, which would make this a 0-row
-    vacuous pass (the trap documented in curation.py and avoided in
-    llm_cross_dedup) — so a deterministic "re-crawl" twin of every 7th
-    doc is injected (same normalized text via trailing whitespace,
-    n_chars + 2), and the election provably picks it: longest text
-    wins, exercising the survivor rule on every group.
-
-    Scale shape: one shuffle on the 128-bit group hash (uniform by
-    construction — no skew beyond true duplicate mass), ranking window
-    and group count ride that same partitioning (single exchange
-    total). At 100 TB the survivor election is exactly this plan over
-    the hash-bucketed corpus."""
-    from pyspark.sql import Window
-
-    base = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars", "text"
-    )
-    recrawl = base.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.lit("recrawl").alias("source"),
-        (F.col("n_chars") + 2).alias("n_chars"),
-        F.concat("text", F.lit("  ")).alias("text"),
-    )
-    d = base.unionByName(recrawl)
-    keyed = d.select(
-        "doc_id", "source", "n_chars", F.md5(F.lower(F.trim("text"))).alias("grp")
-    )
-    w = Window.partitionBy("grp").orderBy(F.col("n_chars").desc(), "doc_id")
-    ranked = keyed.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        "grp",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("grp")).alias("n_copies"),
-    )
-    return ranked.filter((F.col("rn") == 1) & (F.col("n_copies") > 1)).select(
-        "grp",
-        "n_copies",
-        F.col("doc_id").alias("survivor_doc_id"),
-        F.col("source").alias("survivor_source"),
-        F.col("n_chars").alias("survivor_chars"),
-    )
 
 
 _CROSS_DEDUP_SPLIT = 250  # doc_id < split = existing corpus; rest = batch
@@ -694,9 +654,27 @@ def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COLLISION_ORACLE = """
+# Digest-collision audit for the hash keys the dedup family trusts:
+# per source, count documents, distinct digests, and COLLISIONS —
+# digests shared by documents with DIFFERENT text (md5 collisions or,
+# the operationally common cause, a buggy normalization upstream
+# hashing distinct docs identically). llm_exact_dedup and
+# llm_cross_dedup treat digest equality as text equality; this is the
+# audit that makes that assumption a checked invariant instead of
+# faith. Expected collisions = 0, but the output keeps full per-source
+# counts so the zero is pinned inside non-vacuous rows (the 0-row
+# vacuous-pass trap from SURVEY §5).
+#
+# At 100 TB: two chained aggregations, both keyed on (source, digest)
+# then source — map-side combinable, no joins, no all-pairs anything;
+# COUNT(DISTINCT text) inside a digest group only ever sees the
+# handful of rows sharing a 128-bit digest. Run it per ingest batch;
+# alert on n_collisions > 0.
+register_sql(
+    "llm_collision_audit",
+    """
     WITH digests AS (
-      SELECT source, md5(text) AS digest, text FROM documents
+      SELECT source, md5(text) AS digest, text FROM {documents}
     )
     SELECT source,
            CAST(SUM(n) AS BIGINT) AS n_docs,
@@ -707,38 +685,8 @@ _COLLISION_ORACLE = """
       FROM digests GROUP BY source, digest
     ) per_digest
     GROUP BY source
-"""
-
-
-@register("llm_collision_audit", _COLLISION_ORACLE)
-def llm_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Digest-collision audit for the hash keys the dedup family trusts:
-    per source, count documents, distinct digests, and COLLISIONS —
-    digests shared by documents with DIFFERENT text (md5 collisions or,
-    the operationally common cause, a buggy normalization upstream
-    hashing distinct docs identically). llm_exact_dedup and
-    llm_cross_dedup treat digest equality as text equality; this is the
-    audit that makes that assumption a checked invariant instead of
-    faith. Expected collisions = 0, but the output keeps full per-source
-    counts so the zero is pinned inside non-vacuous rows (the 0-row
-    vacuous-pass trap from SURVEY §5).
-
-    At 100 TB: two chained aggregations, both keyed on (source, digest)
-    then source — map-side combinable, no joins, no all-pairs anything;
-    COUNT(DISTINCT text) inside a digest group only ever sees the
-    handful of rows sharing a 128-bit digest. Run it per ingest batch;
-    alert on n_collisions > 0."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "source", F.md5("text").alias("digest"), "text"
-    )
-    per_digest = d.groupBy("source", "digest").agg(
-        F.countDistinct("text").alias("n_texts"), F.count(F.lit(1)).alias("n")
-    )
-    return per_digest.groupBy("source").agg(
-        F.sum("n").alias("n_docs"),
-        F.countDistinct("digest").alias("n_digests"),
-        F.sum(F.col("n_texts") - 1).alias("n_collisions"),
-    )
+""",
+)
 
 
 # Containment detection: shingle width, rare-shingle blocking band, and

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, materialize
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
 @register(
@@ -580,7 +580,23 @@ def llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DATASET_CARD_ORACLE = """
+# Dataset-card statistics block (the datasheet every released
+# training corpus ships): doc counts, character volume, mean length,
+# and an approximate token count (whitespace splits + 1), reported at
+# THREE granularities in one pass — per (source, lang), per source,
+# and corpus-total — via ROLLUP with GROUPING flags disambiguating
+# the rolled-up rows. This is the reporting face of the curation
+# pipeline: llm_text_stats feeds per-doc rows, this op is the
+# publishable aggregate.
+#
+# At 100 TB: one Expand (3 replicas) + one shuffle produces all three
+# granularities — the naive three-query version scans the corpus
+# three times. The token proxy stays a codegen'd string expression;
+# swapping in a real tokenizer moves it to llm_token_count's path
+# without touching this plan.
+register_sql(
+    "llm_dataset_card",
+    """
     SELECT source, lang,
            CAST(GROUPING(source) AS INT) AS g_source,
            CAST(GROUPING(lang) AS INT) AS g_lang,
@@ -589,48 +605,10 @@ _DATASET_CARD_ORACLE = """
            ROUND(AVG(n_chars), 4) AS avg_chars,
            CAST(SUM(length(text) - length(replace(text, ' ', ''))) + COUNT(*)
                 AS BIGINT) AS approx_tokens
-    FROM documents
+    FROM {documents}
     GROUP BY ROLLUP (source, lang)
-"""
-
-
-@register("llm_dataset_card", _DATASET_CARD_ORACLE)
-def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-card statistics block (the datasheet every released
-    training corpus ships): doc counts, character volume, mean length,
-    and an approximate token count (whitespace splits + 1), reported at
-    THREE granularities in one pass — per (source, lang), per source,
-    and corpus-total — via ROLLUP with GROUPING flags disambiguating
-    the rolled-up rows. This is the reporting face of the curation
-    pipeline: llm_text_stats feeds per-doc rows, this op is the
-    publishable aggregate.
-
-    At 100 TB: one Expand (3 replicas) + one shuffle produces all three
-    granularities — the naive three-query version scans the corpus
-    three times. The token proxy stays a codegen'd string expression;
-    swapping in a real tokenizer moves it to llm_token_count's path
-    without touching this plan."""
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.rollup("source", "lang")
-        .agg(
-            F.grouping("source").cast("int").alias("g_source"),
-            F.grouping("lang").cast("int").alias("g_lang"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-            (
-                F.sum(
-                    F.length("text") - F.length(F.replace(F.col("text"), F.lit(" ")))
-                )
-                + F.count(F.lit(1))
-            ).alias("approx_tokens"),
-        )
-        .select(
-            "source", "lang", "g_source", "g_lang",
-            "n_docs", "total_chars", "avg_chars", "approx_tokens",
-        )
-    )
+""",
+)
 
 
 @register(

@@ -19,10 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, materialize
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
-@register(
+# Hash group-by with count/sum/avg/min/max (partial+final agg).
+register_sql(
     "agg_groupby_basic",
     """
     SELECT o_orderpriority,
@@ -31,20 +32,10 @@ from hive_test_spark.registry import register
            ROUND(AVG(o_totalprice), 6) AS avg_price,
            ROUND(MIN(o_totalprice), 6) AS min_price,
            ROUND(MAX(o_totalprice), 6) AS max_price
-    FROM orders
+    FROM {orders}
     GROUP BY o_orderpriority
     """,
 )
-def agg_groupby_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash group-by with count/sum/avg/min/max (partial+final agg)."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("num_orders"),
-        F.round(F.sum("o_totalprice"), 6).alias("sum_price"),
-        F.round(F.avg("o_totalprice"), 6).alias("avg_price"),
-        F.round(F.min("o_totalprice"), 6).alias("min_price"),
-        F.round(F.max("o_totalprice"), 6).alias("max_price"),
-    )
 
 
 @register(
@@ -245,7 +236,8 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Statistical UDAF family: stddev/variance/corr/covar.
+register_sql(
     "agg_stats",
     """
     SELECT l_returnflag,
@@ -253,19 +245,10 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(var_samp(l_extendedprice), 4) AS var_price,
            ROUND(corr(l_extendedprice, l_quantity), 6) AS corr_price_qty,
            ROUND(covar_samp(l_extendedprice, l_quantity), 4) AS covar_price_qty
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY l_returnflag
     """,
 )
-def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical UDAF family: stddev/variance/corr/covar."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
-        F.round(F.var_samp("l_extendedprice"), 4).alias("var_price"),
-        F.round(F.corr("l_extendedprice", "l_quantity"), 6).alias("corr_price_qty"),
-        F.round(F.covar_samp("l_extendedprice", "l_quantity"), 4).alias("covar_price_qty"),
-    )
 
 
 @register(
@@ -322,7 +305,17 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Linear-regression aggregate family [Hive-public: the ANSI regr_*
+# UDAFs every warehouse ships — in-database OLS without exporting
+# data]: per return flag, slope/intercept/R² of extendedprice against
+# quantity plus the regression means — one two-phase hash aggregate,
+# identical SQL on both engines.
+#
+# Scale shape: regr_* are sufficient-statistics aggregates
+# (n, Σx, Σy, Σxx, Σxy — all map-side-combinable partials), so a
+# 100 TB regression costs exactly one combinable agg pass: the whole
+# point of in-engine OLS vs collect-and-fit.
+register_sql(
     "agg_regr",
     """
     SELECT l_returnflag,
@@ -332,39 +325,30 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
            ROUND(regr_avgx(l_extendedprice, l_quantity), 6) AS avg_x,
            ROUND(regr_avgy(l_extendedprice, l_quantity), 4) AS avg_y
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY l_returnflag
     """,
 )
-def agg_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear-regression aggregate family [Hive-public: the ANSI regr_*
-    UDAFs every warehouse ships — in-database OLS without exporting
-    data]: per return flag, slope/intercept/R² of extendedprice against
-    quantity plus the regression means — one two-phase hash aggregate,
-    identical SQL on both engines.
-
-    Scale shape: regr_* are sufficient-statistics aggregates
-    (n, Σx, Σy, Σxx, Σxy — all map-side-combinable partials), so a
-    100 TB regression costs exactly one combinable agg pass: the whole
-    point of in-engine OLS vs collect-and-fit."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.expr("CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT)").alias("n"),
-        F.round(F.expr("regr_slope(l_extendedprice, l_quantity)"), 6).alias("slope"),
-        F.round(F.expr("regr_intercept(l_extendedprice, l_quantity)"), 4).alias(
-            "intercept"
-        ),
-        F.round(F.expr("regr_r2(l_extendedprice, l_quantity)"), 6).alias("r2"),
-        F.round(F.expr("regr_avgx(l_extendedprice, l_quantity)"), 6).alias("avg_x"),
-        F.round(F.expr("regr_avgy(l_extendedprice, l_quantity)"), 4).alias("avg_y"),
-    )
 
 
-@register(
+# Weighted median [Hive-public: the OLAP percentile variant plain
+# percentile() can't express — each value counts with a weight
+# (here: price weighted by quantity, i.e. the median price of a
+# SHIPPED UNIT, not of a line)]: sort within group, running weight,
+# first value whose cumulative weight crosses half the total.
+# Deterministic tie-break (v, wt).
+#
+# Scale shape: one shuffle on the group key serves both windows AND
+# the crossing-point filter (same partitioning). The within-group
+# sort is the unavoidable cost of any exact quantile; the documented
+# approx path (weight-replicated percentile_approx digests, which
+# merge map-side) takes over when groups stop fitting a
+# partition.
+register_sql(
     "agg_weighted_median",
     """
     WITH w AS (
-      SELECT l_returnflag, l_extendedprice AS v, l_quantity AS wt FROM lineitem
+      SELECT l_returnflag, l_extendedprice AS v, l_quantity AS wt FROM {lineitem}
     ),
     c AS (
       SELECT l_returnflag, v, wt,
@@ -382,52 +366,24 @@ def agg_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hit WHERE rn = 1
     """,
 )
-def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted median [Hive-public: the OLAP percentile variant plain
-    percentile() can't express — each value counts with a weight
-    (here: price weighted by quantity, i.e. the median price of a
-    SHIPPED UNIT, not of a line)]: sort within group, running weight,
-    first value whose cumulative weight crosses half the total.
-    Deterministic tie-break (v, wt).
-
-    Scale shape: one shuffle on the group key serves both windows AND
-    the crossing-point filter (same partitioning). The within-group
-    sort is the unavoidable cost of any exact quantile; the documented
-    approx path (weight-replicated percentile_approx digests, which
-    merge map-side) takes over when groups stop fitting a
-    partition."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    w = li.select(
-        "l_returnflag",
-        F.col("l_extendedprice").alias("v"),
-        F.col("l_quantity").alias("wt"),
-    )
-    order = Window.partitionBy("l_returnflag").orderBy("v", "wt")
-    c = w.select(
-        "l_returnflag",
-        "v",
-        "wt",
-        F.sum("wt").over(order.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
-        F.sum("wt").over(Window.partitionBy("l_returnflag")).alias("tot"),
-    )
-    hit = c.filter(F.col("cum") >= F.col("tot") / 2.0).select(
-        "l_returnflag",
-        "v",
-        F.row_number().over(order).alias("rn"),
-    )
-    return hit.filter(F.col("rn") == 1).select(
-        "l_returnflag", F.round("v", 6).alias("weighted_median_price")
-    )
 
 
-@register(
+# Exact mode (most frequent value) per group [Hive-public: the
+# statistical mode() UDAF — engines disagree on tie order, so the
+# portable form is count + deterministic rank, lowest value wins
+# ties]: two-phase count on (group, value), then a top-1 window on
+# the count table.
+#
+# Scale shape: the count collapses the fact to distinct (group,
+# value) pairs map-side; the window ranks that SMALL table. This
+# rank-on-aggregate form is also why it oracles exactly, where a
+# native mode() with unspecified tie-breaking cannot.
+register_sql(
     "agg_mode",
     """
     WITH c AS (
       SELECT l_returnflag, l_quantity AS v, COUNT(*) AS n
-      FROM lineitem GROUP BY l_returnflag, l_quantity
+      FROM {lineitem} GROUP BY l_returnflag, l_quantity
     )
     SELECT l_returnflag, ROUND(v, 6) AS mode_qty, CAST(n AS BIGINT) AS n_occurrences
     FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY l_returnflag
@@ -436,33 +392,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn = 1
     """,
 )
-def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact mode (most frequent value) per group [Hive-public: the
-    statistical mode() UDAF — engines disagree on tie order, so the
-    portable form is count + deterministic rank, lowest value wins
-    ties]: two-phase count on (group, value), then a top-1 window on
-    the count table.
-
-    Scale shape: the count collapses the fact to distinct (group,
-    value) pairs map-side; the window ranks that SMALL table. This
-    rank-on-aggregate form is also why it oracles exactly, where a
-    native mode() with unspecified tie-breaking cannot."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    c = li.groupBy("l_returnflag", F.col("l_quantity").alias("v")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    w = Window.partitionBy("l_returnflag").orderBy(F.col("n").desc(), "v")
-    return (
-        c.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .select(
-            "l_returnflag",
-            F.round("v", 6).alias("mode_qty"),
-            F.col("n").alias("n_occurrences"),
-        )
-    )
 
 
 @register(
@@ -489,8 +418,6 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     string is unbounded in group size — LISTAGG belongs on
     dimension-scale groups (here: 5 nations per region), never on fact
     keys; for fact-scale use the top-k window + join shape instead."""
-    n = load_table(spark, sf_dir, "nation")
-    n.createOrReplaceTempView("hts_listagg_nation")
     return spark.sql(
         """
         SELECT n_regionkey,
@@ -499,10 +426,11 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
                listagg(DISTINCT CAST(n_nationkey % 5 AS STRING), '|')
                  WITHIN GROUP (ORDER BY CAST(n_nationkey % 5 AS STRING))
                  AS mod_classes
-        FROM hts_listagg_nation
+        FROM {n}
         GROUP BY n_regionkey
         ORDER BY n_regionkey
-        """
+        """,
+        n=load_table(spark, sf_dir, "nation"),
     )
 
 
@@ -898,7 +826,18 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Pythagorean-means family (arithmetic / geometric / harmonic /
+# RMS) [classic OLAP surface neither engine ships as builtins beyond
+# AVG]: each expressed through its combinable sufficient statistic —
+# geometric via exp(avg(ln x)) (the log-domain trick that avoids
+# product overflow), harmonic via n/Σ(1/x), RMS via sqrt(avg(x²)) —
+# so all four means compute in ONE two-phase hash aggregate.
+#
+# Scale shape: Σln x, Σ1/x, Σx² are plain SUM partials, map-side
+# combinable like any AVG; the per-group finish is O(1) algebra.
+# The positivity guard (x > 0) is a pushed-down scan predicate,
+# keeping ln/reciprocal total-function-safe without ANSI traps.
+register_sql(
     "agg_mean_family",
     """
     SELECT l_returnflag,
@@ -907,29 +846,8 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(EXP(AVG(LN(CAST(l_quantity AS DOUBLE)))), 6) AS mean_geom,
            ROUND(COUNT(*) / SUM(1.0 / CAST(l_quantity AS DOUBLE)), 6) AS mean_harm,
            ROUND(SQRT(AVG(POWER(CAST(l_quantity AS DOUBLE), 2))), 6) AS mean_rms
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_quantity > 0
     GROUP BY l_returnflag
     """,
 )
-def agg_mean_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pythagorean-means family (arithmetic / geometric / harmonic /
-    RMS) [classic OLAP surface neither engine ships as builtins beyond
-    AVG]: each expressed through its combinable sufficient statistic —
-    geometric via exp(avg(ln x)) (the log-domain trick that avoids
-    product overflow), harmonic via n/Σ(1/x), RMS via sqrt(avg(x²)) —
-    so all four means compute in ONE two-phase hash aggregate.
-
-    Scale shape: Σln x, Σ1/x, Σx² are plain SUM partials, map-side
-    combinable like any AVG; the per-group finish is O(1) algebra.
-    The positivity guard (x > 0) is a pushed-down scan predicate,
-    keeping ln/reciprocal total-function-safe without ANSI traps."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
-    x = F.col("l_quantity").cast("double")
-    return li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(x), 6).alias("mean_arith"),
-        F.round(F.exp(F.avg(F.log(x))), 6).alias("mean_geom"),
-        F.round(F.count(F.lit(1)) / F.sum(F.lit(1.0) / x), 6).alias("mean_harm"),
-        F.round(F.sqrt(F.avg(F.pow(x, 2))), 6).alias("mean_rms"),
-    )

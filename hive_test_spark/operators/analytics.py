@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, materialize
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
 def midrank(tie: str, order: str, *partition: str) -> Column:
@@ -133,35 +133,23 @@ def evt_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Fixed-width histogram (5000-wide buckets over l_extendedprice) —
+# the deterministic replacement for Hive's histogram_numeric (which is
+# approximate/NDV-dependent and thus not oracle-able). floor(x/width)
+# keeps the whole profile one map-side-combinable aggregation; at
+# 100 TB this is the standard first-pass distribution profile before
+# choosing range-partition bounds.
+register_sql(
     "agg_histogram",
     """
     SELECT CAST(floor(l_extendedprice / 5000) AS BIGINT) AS bucket,
            count(*) AS n_items,
            ROUND(min(l_extendedprice), 6) AS lo,
            ROUND(max(l_extendedprice), 6) AS hi
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY 1
     """,
 )
-def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram (5000-wide buckets over l_extendedprice) —
-    the deterministic replacement for Hive's histogram_numeric (which is
-    approximate/NDV-dependent and thus not oracle-able). floor(x/width)
-    keeps the whole profile one map-side-combinable aggregation; at
-    100 TB this is the standard first-pass distribution profile before
-    choosing range-partition bounds."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy(
-            F.floor(F.col("l_extendedprice") / 5000).cast("long").alias("bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.round(F.min("l_extendedprice"), 6).alias("lo"),
-            F.round(F.max("l_extendedprice"), 6).alias("hi"),
-        )
-    )
 
 
 @register(
@@ -569,18 +557,19 @@ def evt_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("value") > 150)
         .groupBy("event_type", (F.col("user_id") % 2).alias("variant"))
         .agg(F.countDistinct("user_id").alias("n_conv"))
+        .alias("c")
     )
-    types = ev.select("event_type").distinct()
+    types = ev.select("event_type").distinct().alias("t")
     grid = (
         types.crossJoin(users)
         .join(
             conv,
-            (types.event_type == conv.event_type)
-            & (F.col("u_variant") == conv.variant),
+            (F.col("t.event_type") == F.col("c.event_type"))
+            & (F.col("u_variant") == F.col("c.variant")),
             "left",
         )
         .select(
-            types.event_type.alias("event_type"),
+            F.col("t.event_type").alias("event_type"),
             F.col("u_variant").alias("variant"),
             "n_users",
             F.coalesce("n_conv", F.lit(0)).alias("n_conv"),
@@ -2059,14 +2048,29 @@ _PWR_Z_BETA = 0.841621
 _PWR_MDE_REL = 0.05
 
 
-@register(
+# A/B-test power analysis per metric [public method: the standard
+# two-sample sample-size formula n = 2(z_α/2+z_β)²σ²/δ² at 80% power
+# — the planning companion to evt_abtest_lift's post-hoc z-test:
+# before an experiment ships, this says how many users each arm
+# needs to detect a _PWR_MDE_REL (5%) relative lift]. Mean and
+# sample-stddev are ROUNDED to 6dp before the closed form, so both
+# engines evaluate the identical formula on identical inputs and the
+# ceil() lands on the same integer (unrounded moments differ in
+# summation order across engines; a boundary-straddling ceil would
+# hash-mismatch).
+#
+# At 100 TB: one map-side-combinable aggregate on the metric key —
+# scan-bound, the optimal shape; the arithmetic is per-group
+# constant work. stddev_samp is Spark's and DuckDB's shared
+# definition (n−1 denominator).
+register_sql(
     "evt_power_analysis",
     f"""
     WITH m AS (
       SELECT event_type, COUNT(*) AS n_obs,
              ROUND(AVG(value), 6) AS mean_val,
              ROUND(stddev_samp(value), 6) AS sd_val
-      FROM events GROUP BY event_type
+      FROM {{events}} GROUP BY event_type
     )
     SELECT event_type, n_obs, mean_val, sd_val,
            ROUND({_PWR_MDE_REL} * mean_val, 6) AS mde_abs,
@@ -2082,43 +2086,6 @@ _PWR_MDE_REL = 0.05
     ORDER BY event_type
     """,
 )
-def evt_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B-test power analysis per metric [public method: the standard
-    two-sample sample-size formula n = 2(z_α/2+z_β)²σ²/δ² at 80% power
-    — the planning companion to evt_abtest_lift's post-hoc z-test:
-    before an experiment ships, this says how many users each arm
-    needs to detect a {_PWR_MDE_REL:.0%} relative lift]. Mean and
-    sample-stddev are ROUNDED to 6dp before the closed form, so both
-    engines evaluate the identical formula on identical inputs and the
-    ceil() lands on the same integer (unrounded moments differ in
-    summation order across engines; a boundary-straddling ceil would
-    hash-mismatch).
-
-    At 100 TB: one map-side-combinable aggregate on the metric key —
-    scan-bound, the optimal shape; the arithmetic is per-group
-    constant work. stddev_samp is Spark's and DuckDB's shared
-    definition (n−1 denominator)."""
-    ev = load_table(spark, sf_dir, "events")
-    m = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_obs"),
-        F.round(F.avg("value"), 6).alias("mean_val"),
-        F.round(F.stddev_samp("value"), 6).alias("sd_val"),
-    )
-    n_per_arm = F.ceil(
-        F.lit(2.0)
-        * F.pow(F.lit(_PWR_Z_ALPHA + _PWR_Z_BETA), 2)
-        * F.pow(F.col("sd_val"), 2)
-        / F.pow(F.lit(_PWR_MDE_REL) * F.col("mean_val"), 2)
-    ).cast("bigint")
-    return m.select(
-        "event_type",
-        "n_obs",
-        "mean_val",
-        "sd_val",
-        F.round(F.lit(_PWR_MDE_REL) * F.col("mean_val"), 6).alias("mde_abs"),
-        n_per_arm.alias("n_per_arm"),
-        (F.col("n_obs") >= 2 * n_per_arm).cast("int").alias("currently_powered"),
-    ).orderBy("event_type")
 
 
 # Concurrency sweep: session gap threshold (seconds), matching the
@@ -2579,7 +2546,20 @@ def evt_shipping_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Log-log price elasticity of demand per brand [public method:
+# the econometric workhorse — elasticity = d ln(q) / d ln(p),
+# estimated as the OLS slope of ln(quantity) on ln(unit price); the
+# applied twin of the raw regr_* surface the repo already pins].
+# Unit price derives from extendedprice/quantity; regr_slope and
+# regr_r2 are the shared two-engine aggregate definitions, rounded
+# at 6dp to absorb summation-order noise in the moment sums.
+#
+# At 100 TB: one part-keyed join (dimension side broadcast by AQE at
+# any realistic part-table size — and if parts outgrow that, both
+# sides shuffle on the part key), then a map-side-combinable
+# aggregate on the brand dimension; regr_* aggregates carry
+# constant-size moment state per group.
+register_sql(
     "evt_price_elasticity",
     """
     SELECT p.p_brand,
@@ -2589,47 +2569,12 @@ def evt_shipping_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(regr_r2(ln(l.l_quantity), ln(l.l_extendedprice / l.l_quantity)), 6)
              AS r2,
            ROUND(AVG(l.l_extendedprice / l.l_quantity), 4) AS mean_unit_price
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
     WHERE l.l_quantity > 0 AND l.l_extendedprice > 0
     GROUP BY p.p_brand
     ORDER BY p.p_brand
     """,
 )
-def evt_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-log price elasticity of demand per brand [public method:
-    the econometric workhorse — elasticity = d ln(q) / d ln(p),
-    estimated as the OLS slope of ln(quantity) on ln(unit price); the
-    applied twin of the raw regr_* surface the repo already pins].
-    Unit price derives from extendedprice/quantity; regr_slope and
-    regr_r2 are the shared two-engine aggregate definitions, rounded
-    at 6dp to absorb summation-order noise in the moment sums.
-
-    At 100 TB: one part-keyed join (dimension side broadcast by AQE at
-    any realistic part-table size — and if parts outgrow that, both
-    sides shuffle on the part key), then a map-side-combinable
-    aggregate on the brand dimension; regr_* aggregates carry
-    constant-size moment state per group."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_quantity") > 0) & (F.col("l_extendedprice") > 0)
-    )
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
-        li.join(p, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.round(F.expr(
-                "regr_slope(ln(l_quantity), ln(l_extendedprice / l_quantity))"
-            ), 6).alias("elasticity"),
-            F.round(F.expr(
-                "regr_r2(ln(l_quantity), ln(l_extendedprice / l_quantity))"
-            ), 6).alias("r2"),
-            F.round(F.avg(F.col("l_extendedprice") / F.col("l_quantity")), 4).alias(
-                "mean_unit_price"
-            ),
-        )
-        .orderBy("p_brand")
-    )
 
 
 @register(
@@ -2814,7 +2759,22 @@ def evt_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DID_CUTOVER = "2024-01-15"
 
 
-@register(
+# Difference-in-differences estimator [public method: the 2×2 DiD
+# — (treated post − treated pre) − (control post − control pre) —
+# the workhorse for launch effects when randomization is impossible;
+# completes the causal family beside evt_abtest_lift (randomized),
+# evt_power_analysis (planning), and evt_attribution_* (credit)].
+# Treatment is the deterministic odd-id assignment, the intervention
+# splits the window at _DID_CUTOVER, and the four cell means plus
+# the pooled standard error √Σ(s²ᵢ/nᵢ) reduce from ONE pass; the
+# t-stat divides the unrounded estimate by the unrounded SE before
+# the display rounding.
+#
+# At 100 TB: a single map-side-combinable aggregate on a 4-value
+# key — partials carry (n, mean, M2) per cell, so the scan is the
+# whole cost; the DiD arithmetic is a 1-row epilogue over the
+# pivoted cells.
+register_sql(
     "evt_did",
     f"""
     WITH cells AS (
@@ -2824,7 +2784,7 @@ _DID_CUTOVER = "2024-01-15"
              COUNT(*) AS n,
              AVG(value) AS mu,
              var_samp(value) AS v
-      FROM events
+      FROM {{events}}
       GROUP BY 1, 2
     ),
     wide AS (
@@ -2845,56 +2805,6 @@ _DID_CUTOVER = "2024-01-15"
     FROM wide
     """,
 )
-def evt_did(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences estimator [public method: the 2×2 DiD
-    — (treated post − treated pre) − (control post − control pre) —
-    the workhorse for launch effects when randomization is impossible;
-    completes the causal family beside evt_abtest_lift (randomized),
-    evt_power_analysis (planning), and evt_attribution_* (credit)].
-    Treatment is the deterministic odd-id assignment, the intervention
-    splits the window at {_DID_CUTOVER}, and the four cell means plus
-    the pooled standard error √Σ(s²ᵢ/nᵢ) reduce from ONE pass; the
-    t-stat divides the unrounded estimate by the unrounded SE before
-    the display rounding.
-
-    At 100 TB: a single map-side-combinable aggregate on a 4-value
-    key — partials carry (n, mean, M2) per cell, so the scan is the
-    whole cost; the DiD arithmetic is a 1-row epilogue over the
-    pivoted cells."""
-    ev = load_table(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        (F.col("user_id") % 2).cast("int").alias("treated"),
-        (F.col("ts") >= F.lit(_DID_CUTOVER).cast("timestamp"))
-        .cast("int")
-        .alias("post"),
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("value").alias("mu"),
-        F.var_samp("value").alias("v"),
-    )
-
-    def cell(t: int, p: int):
-        return F.max(
-            F.when((F.col("treated") == t) & (F.col("post") == p), F.col("mu"))
-        )
-
-    wide = cells.agg(
-        cell(1, 0).alias("t_pre"),
-        cell(1, 1).alias("t_post"),
-        cell(0, 0).alias("c_pre"),
-        cell(0, 1).alias("c_post"),
-        F.sum(F.col("v") / F.col("n")).alias("var_sum"),
-    )
-    did = (F.col("t_post") - F.col("t_pre")) - (F.col("c_post") - F.col("c_pre"))
-    return wide.select(
-        F.round("t_pre", 6).alias("treated_pre"),
-        F.round("t_post", 6).alias("treated_post"),
-        F.round("c_pre", 6).alias("control_pre"),
-        F.round("c_post", 6).alias("control_post"),
-        F.round(did, 6).alias("did"),
-        F.round(F.sqrt("var_sum"), 6).alias("se"),
-        F.round(did / F.sqrt("var_sum"), 6).alias("t_stat"),
-    )
 
 
 @register(

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 _Q3_SEGMENT = "BUILDING"
 _Q3_DATE = "1996-03-15"
@@ -859,44 +859,31 @@ def bench_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFram
 _Q6_YEAR = 1996
 
 
-@register(
+# TPC-H Q6 (forecast revenue change), exact semantics: the
+# pure scan-filter-aggregate — revenue that would have been earned if
+# discounts in a band had been eliminated for a year. No join, no
+# group key: the whole query is a map-side predicate plus one global
+# two-phase sum.
+#
+# Plan properties: every predicate (two date bounds, discount band,
+# quantity cap) reaches the parquet scan as PushedFilters over exactly
+# 4 read columns; the aggregate is partial-per-partition then a
+# single-row final — the minimal possible plan. At 100 TB this is the
+# canonical scan-bound query: throughput equals scan bandwidth times
+# predicate selectivity, zero shuffle rows beyond one per
+# partition.
+register_sql(
     "bench_q6_forecast_revenue",
     f"""
     SELECT ROUND(SUM(l_extendedprice * l_discount), 4) AS revenue,
            COUNT(*) AS n_lines
-    FROM lineitem
+    FROM {{lineitem}}
     WHERE l_shipdate >= DATE '{_Q6_YEAR}-01-01'
       AND l_shipdate < DATE '{_Q6_YEAR + 1}-01-01'
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
 )
-def bench_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 (forecast revenue change), exact semantics: the
-    pure scan-filter-aggregate — revenue that would have been earned if
-    discounts in a band had been eliminated for a year. No join, no
-    group key: the whole query is a map-side predicate plus one global
-    two-phase sum.
-
-    Plan properties: every predicate (two date bounds, discount band,
-    quantity cap) reaches the parquet scan as PushedFilters over exactly
-    4 read columns; the aggregate is partial-per-partition then a
-    single-row final — the minimal possible plan. At 100 TB this is the
-    canonical scan-bound query: throughput equals scan bandwidth times
-    predicate selectivity, zero shuffle rows beyond one per
-    partition."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit(f"{_Q6_YEAR}-01-01").cast("date"))
-        & (F.col("l_shipdate") < F.lit(f"{_Q6_YEAR + 1}-01-01").cast("date"))
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return li.agg(
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 4).alias(
-            "revenue"
-        ),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
 
 
 _Q8_REGION = "AMERICA"
@@ -1233,7 +1220,18 @@ def bench_q13_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q14_START, _Q14_END = "1996-09-01", "1996-10-01"
 
 
-@register(
+# TPC-H Q14 (promotion effect), exact semantics: the percentage of
+# one month's revenue from promotional parts — the conditional-ratio
+# aggregate over a fact-dimension join.
+#
+# Plan properties: the month bounds push into the lineitem scan
+# (~1/80 of the fact survives); part broadcasts with only
+# (p_partkey, p_type) read; numerator and denominator come from ONE
+# grouped pass — no second scan, no self-join. At 100 TB this is the
+# standard "rate metric" template: broadcast dim + single-pass CASE
+# ratio; the global (groupless) agg reduces to one row per partition
+# then one final row.
+register_sql(
     "bench_q14_promo_revenue",
     f"""
     SELECT ROUND(100.0 * SUM(CASE WHEN p.p_type LIKE 'PROMO%'
@@ -1242,39 +1240,11 @@ _Q14_START, _Q14_END = "1996-09-01", "1996-10-01"
                  / SUM(l.l_extendedprice * (1 - l.l_discount)), 6)
              AS promo_revenue,
            COUNT(*) AS n_lines
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+    FROM {{lineitem}} l JOIN {{part}} p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= DATE '{_Q14_START}'
       AND l.l_shipdate < DATE '{_Q14_END}'
     """,
 )
-def bench_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 (promotion effect), exact semantics: the percentage of
-    one month's revenue from promotional parts — the conditional-ratio
-    aggregate over a fact-dimension join.
-
-    Plan properties: the month bounds push into the lineitem scan
-    (~1/80 of the fact survives); part broadcasts with only
-    (p_partkey, p_type) read; numerator and denominator come from ONE
-    grouped pass — no second scan, no self-join. At 100 TB this is the
-    standard "rate metric" template: broadcast dim + single-pass CASE
-    ratio; the global (groupless) agg reduces to one row per partition
-    then one final row."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit(_Q14_START).cast("date"))
-        & (F.col("l_shipdate") < F.lit(_Q14_END).cast("date"))
-    ).select("l_partkey", "l_extendedprice", "l_discount")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(0.0)
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(F.lit(100.0) * F.sum(promo) / F.sum(rev), 6).alias(
-                "promo_revenue"
-            ),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
 
 
 _Q19_BRANDS = (
@@ -1284,12 +1254,26 @@ _Q19_BRANDS = (
 )
 
 
-@register(
+# TPC-H Q19 (discounted revenue), exact shape: revenue over a
+# DISJUNCTION of brand/size/quantity condition triples — the classic
+# test that an optimizer extracts the common join key and the
+# per-side implied predicates from an OR-of-ANDs instead of falling
+# back to a cartesian with a residual filter.
+#
+# Plan properties: the join stays an equi-join on partkey (the OR
+# refers to both sides but every disjunct shares the key); Catalyst
+# derives the implied single-side filters — brand/size disjunction
+# pushes to the part scan, the quantity range union (1..30) to the
+# lineitem scan — before the residual OR evaluates post-join; part
+# stays broadcastable. At 100 TB the derived scan filters are the
+# difference between joining 3 brands' slice and joining the whole
+# fact.
+register_sql(
     "bench_q19_disjunctive_revenue",
     f"""
     SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue,
            COUNT(*) AS n_lines
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {{lineitem}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
     WHERE (p.p_brand = '{_Q19_BRANDS[0][0]}'
            AND p.p_size BETWEEN {_Q19_BRANDS[0][1]} AND {_Q19_BRANDS[0][2]}
            AND l.l_quantity BETWEEN {_Q19_BRANDS[0][3]} AND {_Q19_BRANDS[0][4]})
@@ -1301,40 +1285,3 @@ _Q19_BRANDS = (
            AND l.l_quantity BETWEEN {_Q19_BRANDS[2][3]} AND {_Q19_BRANDS[2][4]})
     """,
 )
-def bench_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 (discounted revenue), exact shape: revenue over a
-    DISJUNCTION of brand/size/quantity condition triples — the classic
-    test that an optimizer extracts the common join key and the
-    per-side implied predicates from an OR-of-ANDs instead of falling
-    back to a cartesian with a residual filter.
-
-    Plan properties: the join stays an equi-join on partkey (the OR
-    refers to both sides but every disjunct shares the key); Catalyst
-    derives the implied single-side filters — brand/size disjunction
-    pushes to the part scan, the quantity range union (1..30) to the
-    lineitem scan — before the residual OR evaluates post-join; part
-    stays broadcastable. At 100 TB the derived scan filters are the
-    difference between joining 3 brands' slice and joining the whole
-    fact."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    cond = None
-    for brand, smin, smax, qmin, qmax in _Q19_BRANDS:
-        leg = (
-            (F.col("p_brand") == brand)
-            & F.col("p_size").between(smin, smax)
-            & F.col("l_quantity").between(qmin, qmax)
-        )
-        cond = leg if cond is None else (cond | leg)
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table, scratch_dir
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 from hive_test_spark.sources.scans import _sf_tag
 
 
@@ -106,54 +106,40 @@ def agg_count_if_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Exact grouped median (percentile-0.5 with linear interpolation —
+# identical even/odd-count semantics in Spark and DuckDB). Exact
+# percentiles buffer the group's values per key, so at 100 TB swap to
+# ``percentile_approx`` (a fixed-size mergeable digest, map-side
+# combinable) — the exact form here is what makes it oracle-able.
+register_sql(
     "agg_median",
     """
     SELECT l_returnflag, l_linestatus,
            ROUND(median(l_quantity), 6) AS median_qty,
            ROUND(median(l_extendedprice), 6) AS median_price
-    FROM lineitem GROUP BY l_returnflag, l_linestatus
+    FROM {lineitem} GROUP BY l_returnflag, l_linestatus
     """,
 )
-def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact grouped median (percentile-0.5 with linear interpolation —
-    identical even/odd-count semantics in Spark and DuckDB). Exact
-    percentiles buffer the group's values per key, so at 100 TB swap to
-    ``percentile_approx`` (a fixed-size mergeable digest, map-side
-    combinable) — the exact form here is what makes it oracle-able."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.round(F.median("l_quantity"), 6).alias("median_qty"),
-        F.round(F.median("l_extendedprice"), 6).alias("median_price"),
-    )
 
 
-@register(
+# Hourly active-user rollup: distinct users and event volume per
+# (hour, event_type) — the batch twin of a streaming DAU/HAU counter.
+# COUNT(DISTINCT) plans as Expand + two-phase aggregate keyed on
+# (h, event_type, user_id): the first phase dedups map-side, so the
+# shuffle carries at most one row per (hour, type, user) — bounded by
+# distinct users, not raw event volume. At 100 TB that bound is the
+# whole game; if an estimate suffices, approx_count_distinct drops the
+# Expand entirely.
+register_sql(
     "evt_distinct_users_hourly",
     """
     SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
            event_type,
            COUNT(DISTINCT user_id) AS n_users,
            COUNT(*) AS n_events
-    FROM events GROUP BY 1, 2
+    FROM {events} GROUP BY 1, 2
     """,
 )
-def evt_distinct_users_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly active-user rollup: distinct users and event volume per
-    (hour, event_type) — the batch twin of a streaming DAU/HAU counter.
-    COUNT(DISTINCT) plans as Expand + two-phase aggregate keyed on
-    (h, event_type, user_id): the first phase dedups map-side, so the
-    shuffle carries at most one row per (hour, type, user) — bounded by
-    distinct users, not raw event volume. At 100 TB that bound is the
-    whole game; if an estimate suffices, approx_count_distinct drops the
-    Expand entirely."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    ).agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
 
 
 @register(
@@ -406,7 +392,21 @@ def agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-@register(
+# Bitwise aggregates over a packed flag bitfield [Spark-public:
+# bit_and / bit_or / bit_xor aggregate functions, SPARK-27879]: five
+# boolean attributes are fused into ONE integer mask column, then a
+# single group-by answers "which flags hold for every row"
+# (BIT_AND), "which flags ever occur" (BIT_OR) and the parity
+# fingerprint (BIT_XOR) per return flag.
+#
+# At 100 TB this packing is the point: N boolean predicates aggregate
+# as ONE 8-byte column with three combinable integer aggregates —
+# map-side partials shuffle one row per (partition × group) — instead
+# of N separate bool_and/bool_or columns (agg_bool covers that
+# surface) or N² CASE pivots. Bitfield fusion is the same trick
+# roaring bitmaps scale up (agg_bitmap_distinct); here the key space
+# is the flag set itself, so a plain BIGINT suffices.
+register_sql(
     "agg_bit_ops",
     """
     SELECT l_returnflag,
@@ -422,44 +422,11 @@ def agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + (CASE WHEN l_linenumber >= 4 THEN 8 ELSE 0 END)
                 + (CASE WHEN l_linestatus = 'F' THEN 16 ELSE 0 END)
                AS BIGINT) AS mask
-      FROM lineitem
+      FROM {lineitem}
     ) t
     GROUP BY l_returnflag
     """,
 )
-def agg_bit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitwise aggregates over a packed flag bitfield [Spark-public:
-    bit_and / bit_or / bit_xor aggregate functions, SPARK-27879]: five
-    boolean attributes are fused into ONE integer mask column, then a
-    single group-by answers "which flags hold for every row"
-    (BIT_AND), "which flags ever occur" (BIT_OR) and the parity
-    fingerprint (BIT_XOR) per return flag.
-
-    At 100 TB this packing is the point: N boolean predicates aggregate
-    as ONE 8-byte column with three combinable integer aggregates —
-    map-side partials shuffle one row per (partition × group) — instead
-    of N separate bool_and/bool_or columns (agg_bool covers that
-    surface) or N² CASE pivots. Bitfield fusion is the same trick
-    roaring bitmaps scale up (agg_bitmap_distinct); here the key space
-    is the flag set itself, so a plain BIGINT suffices."""
-    li = load_table(spark, sf_dir, "lineitem")
-    mask = (
-        F.when(F.col("l_quantity") > 25, 1).otherwise(0)
-        + F.when(F.col("l_discount") > 0.05, 2).otherwise(0)
-        + F.when(F.col("l_tax") > 0.04, 4).otherwise(0)
-        + F.when(F.col("l_linenumber") >= 4, 8).otherwise(0)
-        + F.when(F.col("l_linestatus") == "F", 16).otherwise(0)
-    ).cast("bigint")
-    return (
-        li.select("l_returnflag", mask.alias("mask"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.bit_and("mask").alias("common_bits"),
-            F.bit_or("mask").alias("seen_bits"),
-            F.bit_xor("mask").alias("parity_bits"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
 
 
 @register(

@@ -22,111 +22,66 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
-@register(
+# Inner equi-join orders↔customer (shuffled hash / SMJ; AQE may broadcast).
+register_sql(
     "join_inner_hash",
     """
     SELECT o.o_orderkey, c.c_custkey, c.c_mktsegment, o.o_totalprice
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
     WHERE c.c_acctbal > 0.0
     """,
 )
-def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inner equi-join orders↔customer (shuffled hash / SMJ; AQE may broadcast)."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0.0)
-    return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
-        "o_orderkey", "c_custkey", "c_mktsegment", "o_totalprice"
-    )
 
 
-@register(
+# Left outer join keeping order-less customers (NULL-extended rows).
+register_sql(
     "join_left_outer",
     """
     SELECT c.c_custkey,
            COUNT(o.o_orderkey) AS num_orders,
            ROUND(COALESCE(SUM(o.o_totalprice), 0.0), 6) AS total_spent
-    FROM customer c LEFT OUTER JOIN orders o ON c.c_custkey = o.o_custkey
+    FROM {customer} c LEFT OUTER JOIN {orders} o ON c.c_custkey = o.o_custkey
     GROUP BY c.c_custkey
     """,
 )
-def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join keeping order-less customers (NULL-extended rows)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("num_orders"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 6).alias("total_spent"),
-        )
-    )
 
 
-@register(
+# Right outer join — all customers, NULL order columns where unmatched.
+register_sql(
     "join_right_outer",
     """
     SELECT o.o_orderkey, c.c_custkey, c.c_name
-    FROM orders o RIGHT OUTER JOIN customer c ON o.o_custkey = c.c_custkey
+    FROM {orders} o RIGHT OUTER JOIN {customer} c ON o.o_custkey = c.c_custkey
     """,
 )
-def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right outer join — all customers, NULL order columns where unmatched."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return o.join(c, o.o_custkey == c.c_custkey, "right").select(
-        "o_orderkey", "c_custkey", "c_name"
-    )
 
 
-@register(
+# Full outer join of two aggregates with disjoint key coverage.
+register_sql(
     "join_full_outer",
     """
     WITH cn AS (SELECT c_nationkey AS nk, COUNT(*) AS num_customers
-                FROM customer WHERE c_acctbal > 9000.0 GROUP BY c_nationkey),
+                FROM {customer} WHERE c_acctbal > 9000.0 GROUP BY c_nationkey),
          sn AS (SELECT s_nationkey AS nk, COUNT(*) AS num_suppliers
-                FROM supplier WHERE s_acctbal > 9000.0 GROUP BY s_nationkey)
+                FROM {supplier} WHERE s_acctbal > 9000.0 GROUP BY s_nationkey)
     SELECT COALESCE(cn.nk, sn.nk) AS nationkey,
            cn.num_customers, sn.num_suppliers
     FROM cn FULL OUTER JOIN sn ON cn.nk = sn.nk
     """,
 )
-def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join of two aggregates with disjoint key coverage."""
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    cn = (
-        c.filter(F.col("c_acctbal") > 9000.0)
-        .groupBy(F.col("c_nationkey").alias("nk"))
-        .agg(F.count(F.lit(1)).alias("num_customers"))
-    )
-    sn = (
-        s.filter(F.col("s_acctbal") > 9000.0)
-        .groupBy(F.col("s_nationkey").alias("nk"))
-        .agg(F.count(F.lit(1)).alias("num_suppliers"))
-    )
-    return cn.join(sn, cn.nk == sn.nk, "full").select(
-        F.coalesce(cn.nk, sn.nk).alias("nationkey"),
-        "num_customers",
-        "num_suppliers",
-    )
 
 
-@register(
+# Cartesian product (tiny dims only; never cross a fact table at scale).
+register_sql(
     "join_cross",
     """
     SELECT r.r_name, n.n_name
-    FROM region r CROSS JOIN nation n
+    FROM {region} r CROSS JOIN {nation} n
     """,
 )
-def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cartesian product (tiny dims only; never cross a fact table at scale)."""
-    r = load_table(spark, sf_dir, "region")
-    n = load_table(spark, sf_dir, "nation")
-    return r.crossJoin(n).select("r_name", "n_name")
 
 
 @register(
@@ -486,53 +441,35 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Existence (mark) join — Spark's 9th physical join type, produced
+# when an IN/EXISTS subquery sits inside a DISJUNCTION: the subquery
+# can't become a plain semi join (the OR's other leg must still pass
+# rows), so the join emits every probe row plus a boolean `exists`
+# mark consumed by the residual OR [Spark-public: ExistenceJoin in
+# the join-type hierarchy]. Orders from rich customers OR big-ticket
+# orders, rolled up by priority — requires SQL text (the DataFrame
+# API has no direct spelling for a marked subquery in a disjunct;
+# `isin` over a collected list would be the driver-side anti-pattern).
+#
+# At 100 TB: the mark join keeps the subquery distributed — build
+# side is the filtered customer-key set (broadcast here, hash shuffle
+# when large); the alternative users write (collect keys to the
+# driver, then `.isin(...)`) dies at ~10⁵ keys. The plan-shape test
+# asserts ExistenceJoin appears.
+register_sql(
     "join_existence_mark",
     """
     SELECT o.o_orderpriority,
            COUNT(*) AS n_orders,
            ROUND(SUM(o.o_totalprice), 4) AS total
-    FROM orders o
-    WHERE o.o_custkey IN (SELECT c_custkey FROM customer
+    FROM {orders} o
+    WHERE o.o_custkey IN (SELECT c_custkey FROM {customer}
                           WHERE c_acctbal > 8000)
        OR o.o_totalprice > 400000
     GROUP BY o.o_orderpriority
     ORDER BY o_orderpriority
     """,
 )
-def join_existence_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Existence (mark) join — Spark's 9th physical join type, produced
-    when an IN/EXISTS subquery sits inside a DISJUNCTION: the subquery
-    can't become a plain semi join (the OR's other leg must still pass
-    rows), so the join emits every probe row plus a boolean `exists`
-    mark consumed by the residual OR [Spark-public: ExistenceJoin in
-    the join-type hierarchy]. Orders from rich customers OR big-ticket
-    orders, rolled up by priority — requires SQL text (the DataFrame
-    API has no direct spelling for a marked subquery in a disjunct;
-    `isin` over a collected list would be the driver-side anti-pattern).
-
-    At 100 TB: the mark join keeps the subquery distributed — build
-    side is the filtered customer-key set (broadcast here, hash shuffle
-    when large); the alternative users write (collect keys to the
-    driver, then `.isin(...)`) dies at ~10⁵ keys. The plan-shape test
-    asserts ExistenceJoin appears."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("hts_exist_orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "hts_exist_customer"
-    )
-    return spark.sql(
-        """
-        SELECT o.o_orderpriority,
-               COUNT(*) AS n_orders,
-               ROUND(SUM(o.o_totalprice), 4) AS total
-        FROM hts_exist_orders o
-        WHERE o.o_custkey IN (SELECT c_custkey FROM hts_exist_customer
-                              WHERE c_acctbal > 8000)
-           OR o.o_totalprice > 400000
-        GROUP BY o.o_orderpriority
-        ORDER BY o_orderpriority
-        """
-    )
 
 
 _OVERLAP_ORACLE = """

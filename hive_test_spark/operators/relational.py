@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,42 +67,28 @@ ORDER BY l_returnflag, l_linestatus
 pricing_summary = register("flagship_pricing_summary", PRICING_SUMMARY_SQL)(pricing_summary)
 
 
-@register(
+# Column projection + alias + arithmetic. Narrow; scan reads 5 cols only.
+register_sql(
     "project_select",
     """
     SELECT l_orderkey, l_linenumber,
            l_extendedprice * (1 - l_discount) AS net_price,
            l_quantity * 2.0 AS double_qty
-    FROM lineitem
+    FROM {lineitem}
     """,
 )
-def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column projection + alias + arithmetic. Narrow; scan reads 5 cols only."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net_price"),
-        (F.col("l_quantity") * F.lit(2.0)).alias("double_qty"),
-    )
 
 
-@register(
+# Conjunctive/disjunctive predicates, pushed to the parquet scan.
+register_sql(
     "filter_pred",
     """
     SELECT o_orderkey, o_totalprice, o_orderstatus
-    FROM orders
+    FROM {orders}
     WHERE o_totalprice > 50000.0
       AND (o_orderstatus = 'F' OR o_orderpriority = '1-URGENT')
     """,
 )
-def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conjunctive/disjunctive predicates, pushed to the parquet scan."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.filter(
-        (F.col("o_totalprice") > 50000.0)
-        & ((F.col("o_orderstatus") == "F") | (F.col("o_orderpriority") == "1-URGENT"))
-    ).select("o_orderkey", "o_totalprice", "o_orderstatus")
 
 
 @register(
@@ -127,7 +113,8 @@ def filter_in_between_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "p_brand", "p_type", "p_size")
 
 
-@register(
+# Searched + simple CASE projection.
+register_sql(
     "project_case_when",
     """
     SELECT o_orderkey,
@@ -135,23 +122,9 @@ def filter_in_between_like(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHEN o_totalprice >= 50000.0 THEN 'mid'
                 ELSE 'small' END AS price_band,
            CASE o_orderstatus WHEN 'O' THEN 'open' WHEN 'F' THEN 'done' ELSE 'partial' END AS status_word
-    FROM orders
+    FROM {orders}
     """,
 )
-def project_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Searched + simple CASE projection."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.when(F.col("o_totalprice") >= 150000.0, "big")
-        .when(F.col("o_totalprice") >= 50000.0, "mid")
-        .otherwise("small")
-        .alias("price_band"),
-        F.when(F.col("o_orderstatus") == "O", "open")
-        .when(F.col("o_orderstatus") == "F", "done")
-        .otherwise("partial")
-        .alias("status_word"),
-    )
 
 
 @register(
@@ -179,49 +152,28 @@ def project_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# 3-valued NULL logic: synthesized NULLs + IS NULL + COALESCE.
+register_sql(
     "filter_null_semantics",
     """
     SELECT o_orderkey,
            CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_totalprice END AS maybe_price,
            COALESCE(CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_totalprice END, -1.0) AS price_or_neg1,
            (CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_totalprice END) IS NULL AS is_missing
-    FROM orders
+    FROM {orders}
     WHERE CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_totalprice END IS NULL
        OR o_totalprice > 100000.0
     """,
 )
-def filter_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-valued NULL logic: synthesized NULLs + IS NULL + COALESCE."""
-    o = load_table(spark, sf_dir, "orders")
-    maybe = F.when(F.col("o_orderstatus") == "P", F.lit(None).cast("double")).otherwise(
-        F.col("o_totalprice")
-    )
-    return o.select(
-        "o_orderkey",
-        maybe.alias("maybe_price"),
-        F.coalesce(maybe, F.lit(-1.0)).alias("price_or_neg1"),
-        maybe.isNull().alias("is_missing"),
-    ).filter(maybe.isNull() | (F.col("o_totalprice") > 100000.0))
 
 
-@register(
+# SELECT DISTINCT — hash-aggregate dedup (partial map-side combine).
+register_sql(
     "distinct_rows",
     """
     SELECT DISTINCT l_returnflag, l_linestatus, l_shipmode
     FROM (SELECT l_returnflag, l_linestatus,
                  CASE WHEN l_linenumber % 2 = 0 THEN 'EVEN' ELSE 'ODD' END AS l_shipmode
-          FROM lineitem) t
+          FROM {lineitem}) t
     """,
 )
-def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SELECT DISTINCT — hash-aggregate dedup (partial map-side combine)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.select(
-            "l_returnflag",
-            "l_linestatus",
-            F.when(F.col("l_linenumber") % 2 == 0, "EVEN").otherwise("ODD").alias("l_shipmode"),
-        )
-        .distinct()
-    )

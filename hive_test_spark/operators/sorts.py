@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 from hive_test_spark.session import tune
 
 
@@ -49,45 +49,31 @@ def sort_order_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Global top-K: plans as TakeOrderedAndProject (per-partition heaps,
+# no full sort, no full shuffle). Deterministic via o_orderkey tiebreak.
+register_sql(
     "sort_limit_topk",
     """
     SELECT o_orderkey, o_totalprice
-    FROM orders
+    FROM {orders}
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 25
     """,
 )
-def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-K: plans as TakeOrderedAndProject (per-partition heaps,
-    no full sort, no full shuffle). Deterministic via o_orderkey tiebreak."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .select("o_orderkey", "o_totalprice")
-        .limit(25)
-    )
 
 
-@register(
+# LIMIT row cap. Bare LIMIT is partition-order-dependent, so the
+# verified form caps an ordered-by-unique-key input (deterministic);
+# tests exercise the bare CollectLimit separately.
+register_sql(
     "limit_rows",
     """
     SELECT l_orderkey, l_linenumber, l_quantity
-    FROM lineitem
+    FROM {lineitem}
     ORDER BY l_orderkey, l_linenumber
     LIMIT 100
     """,
 )
-def limit_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIMIT row cap. Bare LIMIT is partition-order-dependent, so the
-    verified form caps an ordered-by-unique-key input (deterministic);
-    tests exercise the bare CollectLimit separately."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.orderBy("l_orderkey", "l_linenumber")
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-        .limit(100)
-    )
 
 
 def sorted_partitions_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,9 +200,9 @@ def sort_cluster_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant is exactly what bucket-map-join correctness rests on. The
     follow-up groupBy reuses the HashPartitioning(l_suppkey) the shuffle
     produced — one exchange total (asserted in tests/test_plans.py)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("cb_lineitem")
     clustered = spark.sql(
-        "SELECT l_suppkey, l_extendedprice FROM cb_lineitem CLUSTER BY l_suppkey"
+        "SELECT l_suppkey, l_extendedprice FROM {li} CLUSTER BY l_suppkey",
+        li=load_table(spark, sf_dir, "lineitem"),
     )
     return (
         clustered.withColumn("pid", F.spark_partition_id())

@@ -11,9 +11,12 @@ DataFrame twins produce — tests/test_contract.py counts the registry
 entries whose ``__module__`` is this one (the registry's wrapper keeps
 it) and asserts there are ≥ 10, each hash-oracled.
 
-Each op registers its input tables as temp views prefixed ``hts_sql_``
-(idempotent createOrReplaceTempView; the prefix avoids colliding with
-other ops' view names in a shared session).
+Each op passes its input tables to ``spark.sql`` as ``{name}`` arguments.
+PySpark's formatter binds each frame to a uniquely named temp view and
+drops the view once the text is analysed, so no op reads or shadows a
+caller's ``orders`` view, and none leaves a view behind. Keys whose
+oracle text runs on Spark SQL with the same plan need no body at all:
+they register through ``registry.register_sql``.
 """
 
 from __future__ import annotations
@@ -23,11 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
 from hive_test_spark.session import scoped_confs
-
-
-def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"hts_sql_{t}")
 
 
 @register(
@@ -52,7 +50,6 @@ def sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: plan-identical to the DataFrame twin — the front end
     contributes parse time only (milliseconds, driver-side)."""
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
@@ -61,11 +58,12 @@ def sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROUND(SUM(l_extendedprice * (1 - l_discount)), 4)
                  AS sum_disc_price,
                ROUND(AVG(l_discount), 6) AS avg_disc
-        FROM hts_sql_lineitem
+        FROM {lineitem}
         WHERE l_shipdate <= DATE '1998-09-02'
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -92,21 +90,24 @@ def sql_star_join_hinted(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: nation/region always broadcast; hinting customer too is
     correct while customers fit executor memory, and AQE demotes it to
     shuffle if statistics say otherwise (hints are advisory)."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
     return spark.sql(
         """
         SELECT /*+ BROADCAST(n), BROADCAST(r) */
                n.n_name, o.o_orderpriority,
                COUNT(*) AS n_orders,
                ROUND(SUM(o.o_totalprice), 4) AS total
-        FROM hts_sql_orders o
-          JOIN hts_sql_customer c ON o.o_custkey = c.c_custkey
-          JOIN hts_sql_nation n ON c.c_nationkey = n.n_nationkey
-          JOIN hts_sql_region r ON n.n_regionkey = r.r_regionkey
+        FROM {orders} o
+          JOIN {customer} c ON o.o_custkey = c.c_custkey
+          JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+          JOIN {region} r ON n.n_regionkey = r.r_regionkey
         WHERE r.r_name = 'ASIA'
         GROUP BY n.n_name, o.o_orderpriority
         ORDER BY n_name, o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     )
 
 
@@ -130,16 +131,16 @@ def sql_lateral_view_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (no exchange); the count agg shuffles (doc_id, tok) —
     explode-then-agg is the linear tokenization template the llm_* text
     ops build on."""
-    _views(spark, sf_dir, "documents")
     return spark.sql(
         """
         SELECT d.doc_id, t.tok, COUNT(*) AS n
-        FROM hts_sql_documents d
+        FROM {documents} d
         LATERAL VIEW explode(split(d.text, ' ')) t AS tok
         WHERE d.lang = 'en' AND length(t.tok) >= 8
         GROUP BY d.doc_id, t.tok
         ORDER BY doc_id, tok
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -163,14 +164,14 @@ def sql_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the write-preparation idiom: cluster rows by key
     and order within files WITHOUT a global sort barrier — one hash
     exchange, no range-partition sampling pass."""
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_custkey, o_orderkey, ROUND(o_totalprice, 4) AS o_totalprice
-        FROM hts_sql_orders
+        FROM {orders}
         WHERE o_orderstatus = 'O'
         DISTRIBUTE BY o_custkey SORT BY o_custkey, o_orderkey
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -199,17 +200,18 @@ def sql_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     early-out probing; the semi/anti forms never materialize order
     columns — the payload-free build is what makes them cheaper than
     inner joins + distinct."""
-    _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c.c_custkey, c.c_mktsegment
-        FROM hts_sql_customer c
-        LEFT SEMI JOIN hts_sql_orders o
+        FROM {customer} c
+        LEFT SEMI JOIN {orders} o
           ON o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
-        LEFT ANTI JOIN hts_sql_orders o2
+        LEFT ANTI JOIN {orders} o2
           ON o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'P'
         ORDER BY c_custkey
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -235,7 +237,6 @@ def sql_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: Spark expands rollup to a single Expand + one hash agg —
     3 output rows per input row pre-combine, NOT three scans; the
     map-side combine keeps the exchange at group-domain size."""
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
@@ -244,10 +245,11 @@ def sql_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS lvl,
                COUNT(*) AS n,
                ROUND(SUM(l_quantity), 4) AS sum_qty
-        FROM hts_sql_lineitem
+        FROM {lineitem}
         GROUP BY ROLLUP (l_returnflag, l_linestatus)
         ORDER BY lvl, rflag, lstatus
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -276,7 +278,6 @@ def sql_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: ONE custkey exchange serves both window functions (same
     partitioning spec); the rank filter cuts output before the final
     sort."""
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_custkey, o_orderkey, o_totalprice, rn, running_total
@@ -289,12 +290,13 @@ def sql_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ORDER BY o_orderdate, o_orderkey
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
                    AS running_total
-          FROM hts_sql_orders
+          FROM {orders}
           WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
         )
         WHERE rn <= 3
         ORDER BY o_custkey, rn
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -324,11 +326,10 @@ def sql_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the full customer slice; the pattern (compare each row to
     its group aggregate) is the decorrelated form Catalyst produces for
     correlated scalar subqueries too."""
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         WITH seg AS (
-          SELECT c_mktsegment, c_custkey, c_acctbal FROM hts_sql_customer),
+          SELECT c_mktsegment, c_custkey, c_acctbal FROM {customer}),
         seg_stats AS (
           SELECT c_mktsegment, AVG(c_acctbal) AS seg_avg
           FROM seg GROUP BY c_mktsegment)
@@ -338,7 +339,8 @@ def sql_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE s.c_acctbal > st.seg_avg
         GROUP BY s.c_mktsegment
         ORDER BY c_mktsegment
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -366,22 +368,23 @@ def sql_set_ops_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     single projected column — payload-free and combinable; precedence
     (INTERSECT binds tighter than EXCEPT) is a parser property this op
     pins cross-engine."""
-    _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
-        SELECT c_custkey AS custkey FROM hts_sql_customer c
-        WHERE EXISTS (SELECT 1 FROM hts_sql_orders o
+        SELECT c_custkey AS custkey FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderpriority = '1-URGENT')
         INTERSECT
-        SELECT c_custkey FROM hts_sql_customer c
-        WHERE EXISTS (SELECT 1 FROM hts_sql_orders o
+        SELECT c_custkey FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderstatus = 'F')
         EXCEPT
-        SELECT c_custkey FROM hts_sql_customer WHERE c_acctbal < 0
+        SELECT c_custkey FROM {customer} WHERE c_acctbal < 0
         ORDER BY custkey
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -409,7 +412,6 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the band predicate evaluates in the probe's scan stage,
     so banding costs zero exchanges — the idiom to prefer over a CASE
     ladder when bands live in config, not code."""
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         WITH tiers AS (
@@ -419,11 +421,12 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
             AS t(tier_name, lo, hi))
         SELECT t.tier_name, COUNT(*) AS n_cust,
                ROUND(AVG(c.c_acctbal), 4) AS avg_bal
-        FROM hts_sql_customer c JOIN tiers t
+        FROM {customer} c JOIN tiers t
           ON c.c_acctbal >= t.lo AND c.c_acctbal < t.hi
         GROUP BY t.tier_name
         ORDER BY tier_name
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -451,7 +454,6 @@ def sql_case_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one grouped pass with three combinable conditional sums
     — identical exchange profile to PIVOT; the CASE form is what old
     HiveQL corpora contain, so the parser path matters for ports."""
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -460,10 +462,11 @@ def sql_case_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS n_fulfilled,
                SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END)
                  AS n_pending
-        FROM hts_sql_orders
+        FROM {orders}
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -487,16 +490,16 @@ def sql_cluster_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: grouped agg and CLUSTER BY share the same hash key, so
     Catalyst reuses ONE exchange for both — this op exists to pin that
     no second shuffle appears."""
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT l_suppkey,
                COUNT(*) AS n_lines,
                ROUND(SUM(l_quantity), 4) AS total_qty
-        FROM hts_sql_lineitem
+        FROM {lineitem}
         GROUP BY l_suppkey
         CLUSTER BY l_suppkey
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -521,16 +524,16 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     are visible to Catalyst as constants, so partition pruning and
     filter pushdown work exactly as with inline literals — unlike
     driver-side string formatting, with none of the quoting hazards."""
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         SELECT c_mktsegment, COUNT(*) AS n_cust,
                ROUND(SUM(c_acctbal), 4) AS total_bal
-        FROM hts_sql_customer
+        FROM {customer}
         WHERE c_acctbal > :threshold AND c_mktsegment <> :excluded
         GROUP BY c_mktsegment
         ORDER BY c_mktsegment
         """,
+        customer=load_table(spark, sf_dir, "customer"),
         args={"threshold": 2500.0, "excluded": "MACHINERY"},
     )
 
@@ -556,14 +559,14 @@ def sql_transform_using(spark: SparkSession, sf_dir: str) -> DataFrame:
     with executor count, but pays one OS process per task plus
     row-at-a-time text framing — which is exactly why the mapInPandas
     twin exists; keep USING for legacy script compatibility only."""
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         SELECT TRANSFORM(c_custkey, c_mktsegment)
           USING 'tr "[:upper:]" "[:lower:]"'
           AS (c_custkey BIGINT, seg_lower STRING)
-        FROM hts_sql_customer
-        """
+        FROM {customer}
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -605,15 +608,15 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session — same note as udf_pandas_scalar); plain function + explicit
     # returnType, no hint inference.
     spark.udf.register("hts_clamp_bal", pandas_udf(_clamp_bal, "double"))
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         SELECT c_mktsegment,
                COUNT(*) AS n,
                ROUND(SUM(hts_clamp_bal(c_acctbal)), 6) AS clamped_total
-        FROM hts_sql_customer
+        FROM {customer}
         GROUP BY c_mktsegment
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -644,18 +647,18 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: pure parse-time sugar — identical two-phase hash
     aggregate + range-partitioned sort plan as the longhand text."""
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT * FROM (
           SELECT o_orderstatus, o_orderpriority,
                  COUNT(*) AS n_orders,
                  ROUND(SUM(o_totalprice), 4) AS total_price
-          FROM hts_sql_orders
+          FROM {orders}
           GROUP BY ALL
           ORDER BY ALL
         ) t
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     ).selectExpr(
         "o_orderstatus",
         "o_orderpriority",
@@ -733,18 +736,18 @@ def sql_positional_ordinals(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: parse-time sugar, zero plan impact — the resolved plan
     is the standard partial/final hash aggregate over the pushed-down
     scan, identical to spelling the expressions out."""
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT CAST(year(o_orderdate) AS INT) AS order_year,
                o_orderstatus,
                COUNT(*) AS n_orders,
                ROUND(SUM(o_totalprice), 4) AS total_price
-        FROM hts_sql_orders
+        FROM {orders}
         WHERE o_orderdate >= DATE '1997-01-01'
         GROUP BY 1, 2
         ORDER BY 1, 2
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -773,16 +776,16 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-aggregate pass (no per-value scans) — same plan as the
     CASE matrix. The implicit form (no IN list) needs a prior distinct
     scan to discover values: always enumerate at scale."""
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT l_returnflag,
                ROUND(COALESCE(qty_F, 0), 4) AS qty_F,
                ROUND(COALESCE(qty_O, 0), 4) AS qty_O
         FROM (SELECT l_returnflag, l_linestatus, l_quantity
-              FROM hts_sql_lineitem)
+              FROM {lineitem})
         PIVOT (SUM(l_quantity) FOR l_linestatus IN ('F' AS qty_F, 'O' AS qty_O))
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -812,18 +815,18 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per measure with NO shuffle (the aggregate before it already
     collapsed the fact); the UNION-ALL spelling re-SCANS the source
     per measure, which is exactly why the clause form wins at scale."""
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, measure, val FROM (
           SELECT l_returnflag,
                  ROUND(SUM(l_quantity), 4) AS qty,
                  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
-          FROM hts_sql_lineitem
+          FROM {lineitem}
           GROUP BY l_returnflag
         ) wide
         UNPIVOT (val FOR measure IN (qty, revenue))
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -882,7 +885,6 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep bounds are known up front; the scripting form wins when the
     loop body must see the previous iteration's result — model-fit
     convergence, retry-until-drained compaction, watermark advance."""
-    _views(spark, sf_dir, "orders")
     with scoped_confs(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
@@ -891,7 +893,7 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
               DECLARE prev BIGINT DEFAULT NULL;
               DECLARE iters BIGINT DEFAULT 0;
               DECLARE cnt BIGINT DEFAULT 0;
-              SET cnt = (SELECT COUNT(*) FROM hts_sql_orders
+              SET cnt = (SELECT COUNT(*) FROM {orders}
                          WHERE o_totalprice > thr);
               -- Shared bound with the oracle: the DuckDB ladder enumerates
               -- g = 0..39 (thr = 1000 * 2^g), so this loop and the oracle
@@ -904,12 +906,13 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
                 SET prev = cnt;
                 SET thr = thr * 2;
                 SET iters = iters + 1;
-                SET cnt = (SELECT COUNT(*) FROM hts_sql_orders
+                SET cnt = (SELECT COUNT(*) FROM {orders}
                            WHERE o_totalprice > thr);
               END WHILE;
               SELECT thr AS threshold, cnt AS n_above,
                      prev AS n_above_prev, iters AS n_iterations,
                      (cnt <= 150 AND (iters = 0 OR prev > 150)) AS minimal;
             END
-            """
+            """,
+            orders=load_table(spark, sf_dir, "orders"),
         ).transform(materialize)

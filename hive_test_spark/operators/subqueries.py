@@ -13,120 +13,96 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
-@register(
+# Correlated scalar subquery: orders priced >1.5× their customer's
+# average. Catalyst decorrelates (RewriteCorrelatedScalarSubquery) into
+# a per-custkey aggregate + join — i.e. the subquery is evaluated once
+# per key, not once per row. At scale that plan is one map-side-partial
+# agg + one shuffle on o_custkey; AQE broadcasts the (small) aggregate
+# side when it fits.
+register_sql(
     "subq_scalar_correlated",
     """
     SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-    FROM orders o
+    FROM {orders} o
     WHERE o.o_totalprice > 1.5 * (
-      SELECT AVG(o2.o_totalprice) FROM orders o2 WHERE o2.o_custkey = o.o_custkey
+      SELECT AVG(o2.o_totalprice) FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey
     )
     """,
 )
-def subq_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery: orders priced >1.5× their customer's
-    average. Catalyst decorrelates (RewriteCorrelatedScalarSubquery) into
-    a per-custkey aggregate + join — i.e. the subquery is evaluated once
-    per key, not once per row. At scale that plan is one map-side-partial
-    agg + one shuffle on o_custkey; AQE broadcasts the (small) aggregate
-    side when it fits."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("subq_orders")
-    return spark.sql(
-        """
-        SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        FROM subq_orders o
-        WHERE o.o_totalprice > 1.5 * (
-          SELECT AVG(o2.o_totalprice) FROM subq_orders o2
-          WHERE o2.o_custkey = o.o_custkey
-        )
-        """
-    )
 
 
-@register(
+# NOT IN subquery — the null-aware anti-join path. Unlike NOT EXISTS
+# (plain anti join, operators/joins.py join_left_anti), NOT IN must
+# return zero rows if the subquery produces any NULL; Catalyst plans a
+# null-aware anti join (broadcast-only strategy) to honor 3-valued
+# logic. Kept as the canonical example of why production pipelines
+# prefer NOT EXISTS on nullable keys at 100 TB: NAAJ cannot shuffle.
+register_sql(
     "subq_not_in_nullsafe",
     """
     SELECT c_custkey, c_name
-    FROM customer
+    FROM {customer}
     WHERE c_nationkey NOT IN (
-      SELECT n_nationkey FROM nation WHERE n_name LIKE 'A%'
+      SELECT n_nationkey FROM {nation} WHERE n_name LIKE 'A%'
     )
     """,
 )
-def subq_not_in_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT IN subquery — the null-aware anti-join path. Unlike NOT EXISTS
-    (plain anti join, operators/joins.py join_left_anti), NOT IN must
-    return zero rows if the subquery produces any NULL; Catalyst plans a
-    null-aware anti join (broadcast-only strategy) to honor 3-valued
-    logic. Kept as the canonical example of why production pipelines
-    prefer NOT EXISTS on nullable keys at 100 TB: NAAJ cannot shuffle."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("subq_customer")
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("subq_nation")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name
-        FROM subq_customer
-        WHERE c_nationkey NOT IN (
-          SELECT n_nationkey FROM subq_nation WHERE n_name LIKE 'A%'
-        )
-        """
-    )
 
 
-@register(
+# Correlated LATERAL subquery [ANSI / Hive-adjacent: per-row derived
+# table]: for every nation, its top-2 customers by balance. Catalyst
+# decorrelates the LATERAL (DecorrelateInnerQuery) into a ranked window
+# over the child + an equi-join on the correlation key — NOT a per-row
+# re-execution, so the plan is one shuffle on c_nationkey regardless of
+# the outer row count. Tie-break on c_name keeps the LIMIT
+# deterministic so the DuckDB oracle (same LATERAL) is exact.
+#
+# 100 TB note: decorrelation is the whole game — a naive nested-loop
+# lateral is O(outer x inner); the window rewrite is one pass over the
+# inner table. Same shape as win_topk_per_group, driven through the
+# SQL front end to exercise the decorrelator itself.
+register_sql(
     "subq_lateral",
     """
     SELECT n.n_name, c.c_name, c.c_acctbal
-    FROM nation n, LATERAL (
+    FROM {nation} n, LATERAL (
       SELECT c_name, c_acctbal
-      FROM customer
+      FROM {customer}
       WHERE c_nationkey = n.n_nationkey
       ORDER BY c_acctbal DESC, c_name
       LIMIT 2
     ) c
     """,
 )
-def subq_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery [ANSI / Hive-adjacent: per-row derived
-    table]: for every nation, its top-2 customers by balance. Catalyst
-    decorrelates the LATERAL (DecorrelateInnerQuery) into a ranked window
-    over the child + an equi-join on the correlation key — NOT a per-row
-    re-execution, so the plan is one shuffle on c_nationkey regardless of
-    the outer row count. Tie-break on c_name keeps the LIMIT
-    deterministic so the DuckDB oracle (same LATERAL) is exact.
-
-    100 TB note: decorrelation is the whole game — a naive nested-loop
-    lateral is O(outer x inner); the window rewrite is one pass over the
-    inner table. Same shape as win_topk_per_group, driven through the
-    SQL front end to exercise the decorrelator itself."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("lat_nation")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
-    return spark.sql(
-        """
-        SELECT n.n_name, c.c_name, c.c_acctbal
-        FROM lat_nation n, LATERAL (
-          SELECT c_name, c_acctbal
-          FROM lat_customer
-          WHERE c_nationkey = n.n_nationkey
-          ORDER BY c_acctbal DESC, c_name
-          LIMIT 2
-        ) c
-        """
-    )
 
 
-@register(
+# Recursive CTE (WITH RECURSIVE, ANSI / Hive-4-adjacent): walk the
+# implicit binary-heap hierarchy over c_custkey (parent = floor(k/2),
+# root = 1) and aggregate node count + balance per depth. Spark 4
+# executes this as an iterative UnionLoop: each step joins the previous
+# frontier against the child table, terminating when the frontier is
+# empty — depth is O(log N) for this hierarchy (~11 levels at sf0.01,
+# ~24 at 100 TB key ranges), so the iteration count stays tiny even at
+# 1000x data.
+#
+# 100 TB note: every iteration is an ordinary equi-join Catalyst plans
+# independently (broadcast when the frontier is small, shuffle when
+# wide), and each frontier is materialized once — the recursion never
+# re-scans prior levels. The same query text runs verbatim on DuckDB,
+# making this one of the few ops whose oracle is literally identical
+# SQL.
+register_sql(
     "subq_recursive_cte",
     """
     WITH RECURSIVE tree AS (
       SELECT c_custkey AS k, 0 AS depth, c_acctbal AS bal
-      FROM customer WHERE c_custkey = 1
+      FROM {customer} WHERE c_custkey = 1
       UNION ALL
       SELECT c.c_custkey, t.depth + 1, c.c_acctbal
-      FROM customer c JOIN tree t
+      FROM {customer} c JOIN tree t
         ON CAST(FLOOR(c.c_custkey / 2.0) AS BIGINT) = t.k
       WHERE c.c_custkey > 1
     )
@@ -134,38 +110,6 @@ def subq_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tree GROUP BY depth
     """,
 )
-def subq_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (WITH RECURSIVE, ANSI / Hive-4-adjacent): walk the
-    implicit binary-heap hierarchy over c_custkey (parent = floor(k/2),
-    root = 1) and aggregate node count + balance per depth. Spark 4
-    executes this as an iterative UnionLoop: each step joins the previous
-    frontier against the child table, terminating when the frontier is
-    empty — depth is O(log N) for this hierarchy (~11 levels at sf0.01,
-    ~24 at 100 TB key ranges), so the iteration count stays tiny even at
-    1000x data.
-
-    100 TB note: every iteration is an ordinary equi-join Catalyst plans
-    independently (broadcast when the frontier is small, shuffle when
-    wide), and each frontier is materialized once — the recursion never
-    re-scans prior levels. The same query text runs verbatim on DuckDB,
-    making this one of the few ops whose oracle is literally identical
-    SQL."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("rc_customer")
-    return spark.sql(
-        """
-        WITH RECURSIVE tree AS (
-          SELECT c_custkey AS k, 0 AS depth, c_acctbal AS bal
-          FROM rc_customer WHERE c_custkey = 1
-          UNION ALL
-          SELECT c.c_custkey, t.depth + 1, c.c_acctbal
-          FROM rc_customer c JOIN tree t
-            ON CAST(FLOOR(c.c_custkey / 2.0) AS BIGINT) = t.k
-          WHERE c.c_custkey > 1
-        )
-        SELECT depth, COUNT(*) AS n_nodes, ROUND(SUM(bal), 6) AS depth_bal
-        FROM tree GROUP BY depth
-        """
-    )
 
 
 @register(

@@ -16,105 +16,69 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
-@register(
+# ROW_NUMBER per customer in order-date order (o_orderkey tiebreak
+# keeps it deterministic — SURVEY.md §5.3).
+register_sql(
     "win_row_number",
     """
     SELECT o_custkey, o_orderkey,
            ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
-    FROM orders
+    FROM {orders}
     """,
 )
-def win_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROW_NUMBER per customer in order-date order (o_orderkey tiebreak
-    keeps it deterministic — SURVEY.md §5.3)."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select("o_custkey", "o_orderkey", F.row_number().over(w).alias("rn"))
 
 
-@register(
+# RANK / DENSE_RANK with gaps (floored balance induces real ties;
+# floor, not int-cast — double→int cast truncates in Spark but rounds
+# in DuckDB, a dialect trap for the oracle).
+register_sql(
     "win_rank_dense",
     """
     SELECT c_nationkey, c_custkey,
            RANK() OVER (PARTITION BY c_nationkey ORDER BY FLOOR(c_acctbal) DESC) AS rnk,
            DENSE_RANK() OVER (PARTITION BY c_nationkey ORDER BY FLOOR(c_acctbal) DESC) AS drnk
-    FROM customer
+    FROM {customer}
     """,
 )
-def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANK / DENSE_RANK with gaps (floored balance induces real ties;
-    floor, not int-cast — double→int cast truncates in Spark but rounds
-    in DuckDB, a dialect trap for the oracle)."""
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.floor("c_acctbal").desc())
-    return c.select(
-        "c_nationkey",
-        "c_custkey",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-    )
 
 
-@register(
+# NTILE(4) quartile assignment within market segment.
+register_sql(
     "win_ntile",
     """
     SELECT c_custkey,
            NTILE(4) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) AS quartile
-    FROM customer
+    FROM {customer}
     """,
 )
-def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NTILE(4) quartile assignment within market segment."""
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    return c.select("c_custkey", F.ntile(4).over(w).alias("quartile"))
 
 
-@register(
+# PERCENT_RANK / CUME_DIST relative-position functions.
+register_sql(
     "win_percent_cume",
     """
     SELECT s_suppkey,
            ROUND(PERCENT_RANK() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal), 6) AS pct_rank,
            ROUND(CUME_DIST() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal), 6) AS cume
-    FROM supplier
+    FROM {supplier}
     """,
 )
-def win_percent_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERCENT_RANK / CUME_DIST relative-position functions."""
-    s = load_table(spark, sf_dir, "supplier")
-    w = Window.partitionBy("s_nationkey").orderBy("s_acctbal")
-    return s.select(
-        "s_suppkey",
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
 
 
-@register(
+# LAG/LEAD offset access + derived delta column.
+register_sql(
     "win_lag_lead",
     """
     SELECT o_custkey, o_orderkey,
            LAG(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_price,
            LEAD(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS next_price,
            ROUND(o_totalprice - COALESCE(LAG(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 0.0), 6) AS delta
-    FROM orders
+    FROM {orders}
     """,
 )
-def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LAG/LEAD offset access + derived delta column."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    lagp = F.lag("o_totalprice", 1).over(w)
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        lagp.alias("prev_price"),
-        F.lead("o_totalprice", 1).over(w).alias("next_price"),
-        F.round(F.col("o_totalprice") - F.coalesce(lagp, F.lit(0.0)), 6).alias("delta"),
-    )
 
 
 @register(
@@ -145,7 +109,8 @@ def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Running aggregate with a ROWS frame.
+register_sql(
     "win_running_sum",
     """
     SELECT o_custkey, o_orderkey,
@@ -155,23 +120,9 @@ def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) OVER (
              PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_n
-    FROM orders
+    FROM {orders}
     """,
 )
-def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running aggregate with a ROWS frame."""
-    o = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.sum("o_totalprice").over(w), 6).alias("running_total"),
-        F.count(F.lit(1)).over(w).alias("running_n"),
-    )
 
 
 @register(
@@ -204,28 +155,20 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Top-K per group (the classic Hive-test exercise): row_number + filter.
+# Spark pushes a per-partition rank limit (WindowGroupLimit) before the
+# shuffle, so only K rows per group per input partition move.
+register_sql(
     "win_topk_per_group",
     """
     SELECT c_nationkey, c_custkey, c_acctbal
     FROM (SELECT c_nationkey, c_custkey, c_acctbal,
                  ROW_NUMBER() OVER (PARTITION BY c_nationkey
                                     ORDER BY c_acctbal DESC, c_custkey) AS rn
-          FROM customer) t
+          FROM {customer}) t
     WHERE rn <= 3
     """,
 )
-def win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-K per group (the classic Hive-test exercise): row_number + filter.
-    Spark pushes a per-partition rank limit (WindowGroupLimit) before the
-    shuffle, so only K rows per group per input partition move."""
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), "c_custkey")
-    return (
-        c.select("c_nationkey", "c_custkey", "c_acctbal", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 3)
-        .drop("rn")
-    )
 
 
 @register(
@@ -360,7 +303,18 @@ def win_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# nth_value window function — both frame personalities: with a FULL
+# frame it is a per-group constant (the 2nd-richest customer, visible
+# on every row — the 'medalist' reporting idiom), with the DEFAULT
+# running frame it is NULL until the nth row has been seen (ANSI
+# semantics both engines implement). Completes the ordered-analytic
+# set next to first/last/lag/lead (win_first_last, win_lag_lead).
+#
+# At 100 TB: one keyed shuffle like any window; the full-frame variant
+# buffers each partition to its end before emitting — same cost class
+# as last_value-with-full-frame, fine on dimension-scale partitions,
+# use the top-k join shape on fact-scale ones.
+register_sql(
     "win_nth_value",
     """
     SELECT c_custkey, c_nationkey,
@@ -372,39 +326,9 @@ def win_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
              PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
              AS third_seen_so_far
-    FROM customer
+    FROM {customer}
     """,
 )
-def win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nth_value window function — both frame personalities: with a FULL
-    frame it is a per-group constant (the 2nd-richest customer, visible
-    on every row — the 'medalist' reporting idiom), with the DEFAULT
-    running frame it is NULL until the nth row has been seen (ANSI
-    semantics both engines implement). Completes the ordered-analytic
-    set next to first/last/lag/lead (win_first_last, win_lag_lead).
-
-    At 100 TB: one keyed shuffle like any window; the full-frame variant
-    buffers each partition to its end before emitting — same cost class
-    as last_value-with-full-frame, fine on dimension-scale partitions,
-    use the top-k join shape on fact-scale ones."""
-    c = load_table(spark, sf_dir, "customer")
-    order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
-    full = (
-        Window.partitionBy("c_nationkey")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    running = (
-        Window.partitionBy("c_nationkey")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return c.select(
-        "c_custkey",
-        "c_nationkey",
-        F.nth_value("c_custkey", 2).over(full).alias("second_richest_key"),
-        F.nth_value("c_custkey", 3).over(running).alias("third_seen_so_far"),
-    )
 
 
 @register(
@@ -437,18 +361,17 @@ def win_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical sessionless rate-limit / rolling-exposure query; for
     cross-user global time windows use the tumbling/sliding
     stream_* ops instead, which need no per-key shuffle at all."""
-    ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("hts_win_time_range_events")
     return spark.sql(
         """
         SELECT event_id, user_id,
                COUNT(*) OVER w AS n_trailing_1h,
                ROUND(SUM(value) OVER w, 4) AS sum_trailing_1h,
                ROUND(MAX(value) OVER w, 6) AS max_trailing_1h
-        FROM hts_win_time_range_events
+        FROM {ev}
         WINDOW w AS (PARTITION BY user_id ORDER BY ts
                      RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW)
-        """
+        """,
+        ev=load_table(spark, sf_dir, "events"),
     )
 
 

@@ -13,17 +13,22 @@ calls go through it too) applies ``session.tune`` and labels the jobs
 the build runs with the key. Operator bodies therefore never tune; a
 helper called outside ``queries()`` must tune itself.
 
+A query whose oracle text runs on Spark SQL with the plan its body would
+build registers through ``register_sql(key, text)`` instead: the text is
+both the oracle and the body, so the key carries one copy of its query.
+
 ``oracle=None`` ⇒ rows-only check (approx/streaming/partition-local ops).
 """
 
 from __future__ import annotations
 
 import functools
+import string
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_test_spark import session
+from hive_test_spark import io, session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -139,6 +144,28 @@ def register(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn
         return query
 
     return deco
+
+
+def register_sql(key: str, text: str) -> QueryFn:
+    """Register ``text`` as both the oracle and the body of ``key``.
+
+    Each fixture table in ``text`` is a ``{table}`` placeholder, and a
+    literal brace is written doubled. The oracle is ``text`` with each
+    placeholder replaced by the table's name. The body
+    passes each table's frame to ``spark.sql``'s formatter, which binds it
+    to a uniquely named temp view and drops the view once the text is
+    analysed: a caller's own ``lineitem`` view is never read or shadowed,
+    and no view is left behind.
+    """
+    tables = sorted({f for _, f, _, _ in string.Formatter().parse(text) if f})
+
+    def body(spark: SparkSession, sf_dir: str) -> DataFrame:
+        # ``io.load_table`` through the module, so a wrapper installed on it
+        # after this module loaded still sees the calls.
+        return spark.sql(text, **{t: io.load_table(spark, sf_dir, t) for t in tables})
+
+    body.__name__ = body.__qualname__ = key
+    return register(key, text.format(**{t: t for t in tables}))(body)
 
 
 def load_all() -> None:

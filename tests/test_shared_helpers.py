@@ -2,9 +2,10 @@
 checkpoint, which leaves nothing pinned in the session's cache),
 ``session.scoped_confs`` (the only conf save/restore), ``io.land`` (the
 only write-once gate for scratch copies derived from the fixture), the
-near-dup family's ``pipeline.jaccard`` and ``pipeline.size_ratio``, and
-the removal at exit of the package zip that ``session._ship_package``
-writes and of the per-run stream outputs."""
+near-dup family's ``pipeline.jaccard`` and ``pipeline.size_ratio``,
+``registry.register_sql`` (keys run from their oracle text, which name
+no session temp view), and the removal at exit of the package zip that
+``session._ship_package`` writes and of the per-run stream outputs."""
 
 from __future__ import annotations
 
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 from hive_test_spark import io
 from hive_test_spark.llm.pipeline import jaccard, size_ratio
 from hive_test_spark.oracle import compare, duck_connect
+from hive_test_spark.registry import register_sql
 from hive_test_spark.session import scoped_confs
 from tests.conftest import SF_DIR, landed
 from tests.test_io_schema_cache import _jobs
@@ -54,6 +56,85 @@ def test_no_checkpoint_call_outside_io():
         and node.func.attr in ("localCheckpoint", "checkpoint")
     ]
     assert calls == []
+
+
+# Modules whose subject is a named view or a catalog table.
+VIEW_OWNERS = {"sources/scans.py", "sources/sinks.py", "operators/dml.py"}
+VIEW_CALLS = {
+    "createOrReplaceTempView",
+    "createTempView",
+    "createGlobalTempView",
+    "createOrReplaceGlobalTempView",
+    "registerTempTable",
+}
+
+
+def test_no_temp_view_outside_sources_and_dml():
+    """A query reads its tables as ``spark.sql`` ``{name}`` arguments,
+    never through a session temp view it names."""
+    calls = [
+        f"{path.relative_to(PKG)}:{node.lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        if str(path.relative_to(PKG)) not in VIEW_OWNERS
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in VIEW_CALLS
+    ]
+    assert calls == []
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+# Read-only keys with their own Spark text, besides the SQL front end's.
+OWN_TEXT_KEYS = [
+    "agg_grouping_sets",
+    "agg_listagg",
+    "fn_sql_macro",
+    "sort_cluster_by",
+    "udtf_python_class",
+    "win_time_range_frame",
+]
+
+
+def test_sql_text_keys_leave_no_temp_view(spark, registry):
+    """Building every ``register_sql`` key, every SQL front-end key and
+    the other read-only keys with their own text leaves the session's
+    temp views as they were."""
+    qs, _ = registry
+    sql_keys = [k for k, fn in qs.items() if fn.__module__ == register_sql.__module__]
+    front = [k for k, fn in qs.items() if fn.__module__.endswith(".sqlfront")]
+    assert len(sql_keys) >= 50 and len(front) >= 20
+    before = _temp_views(spark)
+    for key in sql_keys + front + OWN_TEXT_KEYS:
+        qs[key](spark, SF_DIR)
+    assert _temp_views(spark) == before
+
+
+def test_sql_text_keys_ignore_a_callers_views(spark, duck, registry):
+    """A caller's own ``lineitem`` and ``customer`` views hold other rows:
+    the keys still answer from the fixture, and the caller's views still
+    hold the caller's rows afterwards."""
+    qs, oracles = registry
+    mine = {
+        "lineitem": io.load_table(spark, SF_DIR, "lineitem").filter("l_orderkey <= 3"),
+        "customer": io.load_table(spark, SF_DIR, "customer").filter("c_custkey <= 10"),
+    }
+    for name, df in mine.items():
+        df.createOrReplaceTempView(name)
+    try:
+        expected = {name: sorted(df.collect()) for name, df in mine.items()}
+        for key in ("project_select", "win_topk_per_group"):
+            got = qs[key](spark, SF_DIR).toPandas()
+            res = compare(key, got, duck.execute(oracles[key]).df())
+            assert res["ok"] and res["bitwise"], f"{key}: {res['notes']}"
+        for name in mine:
+            assert sorted(spark.table(name).collect()) == expected[name], name
+    finally:
+        for name in mine:
+            spark.catalog.dropTempView(name)
 
 
 # Keys whose reused branch points go through ``io.materialize`` rather
