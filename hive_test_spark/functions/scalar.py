@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register, register_sql
+from hive_test_spark.session import temp_functions
 
 
 @register(
@@ -762,34 +763,37 @@ def fn_sql_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression in place. At 100 TB that inlining is the point: a macro
     library adds no Python round-trip and no black-box UDF barrier to
     pushdown or constant folding."""
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hts_disc_price(p DOUBLE, d DOUBLE) "
-        "RETURNS DOUBLE RETURN p * (1 - d)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hts_charge(p DOUBLE, d DOUBLE, t DOUBLE) "
-        "RETURNS DOUBLE RETURN hts_disc_price(p, d) * (1 + t)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hts_is_bulk(q DOUBLE) "
-        "RETURNS BOOLEAN RETURN q >= 30"
-    )
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               COUNT(*) AS n,
-               ROUND(SUM(hts_disc_price(l_extendedprice, l_discount)), 4)
-                 AS disc_total,
-               ROUND(SUM(hts_charge(l_extendedprice, l_discount, l_tax)), 4)
-                 AS charged_total,
-               ROUND(AVG(CASE WHEN hts_is_bulk(l_quantity)
-                              THEN l_extendedprice END), 4) AS bulk_avg_price
-        FROM {li}
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-        """,
-        li=load_table(spark, sf_dir, "lineitem"),
-    )
+    with temp_functions(spark, "hts_disc_price", "hts_charge", "hts_is_bulk") as (
+        disc_price, charge, is_bulk
+    ):
+        spark.sql(
+            f"CREATE TEMPORARY FUNCTION {disc_price}(p DOUBLE, d DOUBLE) "
+            "RETURNS DOUBLE RETURN p * (1 - d)"
+        )
+        spark.sql(
+            f"CREATE TEMPORARY FUNCTION {charge}(p DOUBLE, d DOUBLE, t DOUBLE) "
+            f"RETURNS DOUBLE RETURN {disc_price}(p, d) * (1 + t)"
+        )
+        spark.sql(
+            f"CREATE TEMPORARY FUNCTION {is_bulk}(q DOUBLE) "
+            "RETURNS BOOLEAN RETURN q >= 30"
+        )
+        return spark.sql(
+            f"""
+            SELECT l_returnflag,
+                   COUNT(*) AS n,
+                   ROUND(SUM({disc_price}(l_extendedprice, l_discount)), 4)
+                     AS disc_total,
+                   ROUND(SUM({charge}(l_extendedprice, l_discount, l_tax)), 4)
+                     AS charged_total,
+                   ROUND(AVG(CASE WHEN {is_bulk}(l_quantity)
+                                  THEN l_extendedprice END), 4) AS bulk_avg_price
+            FROM {{li}}
+            GROUP BY l_returnflag
+            ORDER BY l_returnflag
+            """,
+            li=load_table(spark, sf_dir, "lineitem"),
+        )
 
 
 @register(

@@ -27,6 +27,7 @@ from pyspark.sql.functions import pandas_udf
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
+from hive_test_spark.session import temp_functions
 
 
 # ---- row-at-a-time scalar UDF (the Hive `CREATE FUNCTION` analogue) ----
@@ -322,16 +323,17 @@ def udtf_python_class(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if len(w) >= 5:
                     yield w, len(w)
 
-    spark.udtf.register("hts_long_tokens", LongTokens)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    return spark.sql(
-        """
-        SELECT d.doc_id, t.token, t.token_len
-        FROM {docs} d, LATERAL hts_long_tokens(d.text) t
-        ORDER BY doc_id, token
-        """,
-        docs=docs,
-    )
+    with temp_functions(spark, "hts_long_tokens") as (long_tokens,):
+        spark.udtf.register(long_tokens, LongTokens)
+        return spark.sql(
+            f"""
+            SELECT d.doc_id, t.token, t.token_len
+            FROM {{docs}} d, LATERAL {long_tokens}(d.text) t
+            ORDER BY doc_id, token
+            """,
+            docs=docs,
+        )
 
 
 _PYDS_ROWS = 600

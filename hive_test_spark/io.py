@@ -150,6 +150,25 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def values(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A few literal ``rows`` as SQL ``VALUES``, typed by ``schema``
+    (``"name type, ..."``). VALUES plans a JVM ``LocalRelation``;
+    ``createDataFrame`` over a Python list plans a Python RDD, whose scan
+    launches Python-worker tasks. Each value is written as a literal of
+    its Python type (str, int as BIGINT, float as DOUBLE), then cast to
+    its column's type."""
+    struct = T.StructType.fromDDL(schema)
+    text = ", ".join("(" + ", ".join(map(_sql_literal, row)) + ")" for row in rows)
+    names = ", ".join(f"`{f.name}`" for f in struct.fields)
+    return spark.sql(f"SELECT * FROM VALUES {text} AS t({names})").to(struct)
+
+
+def _sql_literal(v: str | int | float) -> str:
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"{v}L" if isinstance(v, int) else f"{v!r}D"
+
+
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalize events.ts to TimestampType across fixture vintages.
 

@@ -940,11 +940,13 @@ def llm_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("sim").alias("pen"))
         )
         scored = (
-            slim.join(
-                pen,
-                (slim["query_id"] == pen["query_id"]) & (slim["vec_id"] == pen["a_id"]),
+            slim.alias("s")
+            .join(
+                pen.alias("p"),
+                (F.col("s.query_id") == F.col("p.query_id"))
+                & (F.col("s.vec_id") == F.col("p.a_id")),
             )
-            .select(slim["query_id"], "vec_id", (lam * F.col("rel") - om * F.col("pen")).alias("score"))
+            .select("s.query_id", "vec_id", (lam * F.col("rel") - om * F.col("pen")).alias("score"))
             .join(
                 sel.select("query_id", "vec_id"),
                 ["query_id", "vec_id"],

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hive_test_spark.io import load_table, materialize
 from hive_test_spark.registry import register
-from hive_test_spark.session import scoped_confs
+from hive_test_spark.session import scoped_confs, temp_functions
 
 
 @register(
@@ -607,17 +607,18 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Built here, not at import time (type resolution needs an active
     # session — same note as udf_pandas_scalar); plain function + explicit
     # returnType, no hint inference.
-    spark.udf.register("hts_clamp_bal", pandas_udf(_clamp_bal, "double"))
-    return spark.sql(
-        """
-        SELECT c_mktsegment,
-               COUNT(*) AS n,
-               ROUND(SUM(hts_clamp_bal(c_acctbal)), 6) AS clamped_total
-        FROM {customer}
-        GROUP BY c_mktsegment
-        """,
-        customer=load_table(spark, sf_dir, "customer"),
-    )
+    with temp_functions(spark, "hts_clamp_bal") as (clamp_bal,):
+        spark.udf.register(clamp_bal, pandas_udf(_clamp_bal, "double"))
+        return spark.sql(
+            f"""
+            SELECT c_mktsegment,
+                   COUNT(*) AS n,
+                   ROUND(SUM({clamp_bal}(c_acctbal)), 6) AS clamped_total
+            FROM {{customer}}
+            GROUP BY c_mktsegment
+            """,
+            customer=load_table(spark, sf_dir, "customer"),
+        )
 
 
 @register(

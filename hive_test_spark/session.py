@@ -24,6 +24,7 @@ from __future__ import annotations
 import atexit
 import contextlib
 import os
+import uuid
 import warnings
 from collections.abc import Iterator, Mapping
 
@@ -42,6 +43,18 @@ _RUNTIME_CONFS = {
     # ANSI off: Hive/legacy-permissive semantics (NULL on bad cast, not error),
     # which is also what the DuckDB oracle's permissive functions expect.
     "spark.sql.ansi.enabled": "false",
+    # Stream checkpoints rename through FileSystem.rename. The default
+    # FileContext manager renames through Hadoop's local file system,
+    # which forks `readlink` on both paths of every offset, commit and
+    # state-store file when libhadoop is not loaded. Every checkpoint is
+    # a private per-run directory, so no second writer races the
+    # non-exclusive rename; on HDFS the rename is atomic. A runtime conf,
+    # not one scoped around start(): a file source's log is created
+    # lazily on the stream thread, after such a scope has closed.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 
@@ -114,6 +127,23 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+@contextlib.contextmanager
+def temp_functions(spark: SparkSession, *names: str) -> Iterator[tuple[str, ...]]:
+    """Per-build unique names for the temporary functions ``names``, in
+    order; each is dropped when the ``with`` block exits. A frame built
+    in the block keeps working: ``spark.sql`` resolves its functions (and
+    inlines a SQL function's body) when it analyses the text. So a
+    caller's function of the same name is neither replaced nor removed,
+    and the session's function catalog is left as it was."""
+    tag = uuid.uuid4().hex[:12]
+    unique = tuple(f"{name}_{tag}" for name in names)
+    try:
+        yield unique
+    finally:
+        for name in unique:
+            spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
 
 
 def _ship_package(spark: SparkSession) -> None:

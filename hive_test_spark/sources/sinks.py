@@ -25,8 +25,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_test_spark.io import load_table, scratch_dir
+from hive_test_spark.io import load_table, scratch_dir, values
 from hive_test_spark.registry import register
+from hive_test_spark.session import temp_functions
 
 from hive_test_spark.sources.scans import _land_orders_by_status, _sf_tag
 
@@ -477,7 +478,8 @@ def meta_describe_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         desc = spark.sql(f"DESCRIBE TABLE {view}").select(
             F.lit(t).alias("table_name"), "col_name", "data_type"
         )
-        ordinals = spark.createDataFrame(
+        ordinals = values(
+            spark,
             [(f.name, i + 1) for i, f in enumerate(df.schema.fields)],
             "col_name string, ordinal long",
         )
@@ -1056,16 +1058,18 @@ def meta_show_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine-native user-function surface is the SQL macro form
     # (CREATE TEMPORARY FUNCTION ... RETURNS — fn_sql_macro's subject),
     # which lands in the same user scope of the function catalog.
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hts_fn_probe(x DOUBLE) "
-        "RETURNS DOUBLE RETURN x * 2"
-    )
+    # SHOW runs when spark.sql is called, so the listing keeps the
+    # probe after the block drops it.
+    with temp_functions(spark, "hts_fn_probe") as (fn_probe,):
+        spark.sql(
+            f"CREATE TEMPORARY FUNCTION {fn_probe}(x DOUBLE) "
+            "RETURNS DOUBLE RETURN x * 2"
+        )
+        user_listing = spark.sql("SHOW USER FUNCTIONS")
     listing = spark.sql("SHOW FUNCTIONS").select(
         F.lower("function").alias("fn")
     )
-    expected = spark.createDataFrame(
-        [(f,) for f in _FN_PROBES], "probe string"
-    )
+    expected = values(spark, [(f,) for f in _FN_PROBES], "probe string")
     listed = (
         expected
         .join(listing, F.col("probe") == F.col("fn"), "left")
@@ -1077,9 +1081,9 @@ def meta_show_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     xfam = spark.sql("SHOW FUNCTIONS LIKE 'xpath*'").agg(
         F.count(F.lit(1)).cast("string").alias("value")
     ).select(F.lit("xpath_family_size").alias("element"), "value")
-    userfn = spark.sql("SHOW USER FUNCTIONS").agg(
+    userfn = user_listing.agg(
         F.max(
-            (F.lower("function") == "hts_fn_probe").cast("int")
+            (F.lower("function") == fn_probe).cast("int")
         ).cast("boolean").cast("string").alias("value")
     ).select(F.lit("user_function_listed").alias("element"), "value")
     desc = spark.sql("DESCRIBE FUNCTION EXTENDED sentences")
@@ -1364,8 +1368,8 @@ def meta_show_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     views = spark.sql("SHOW VIEWS").select(
         F.col("viewName").alias("vn"), F.col("isTemporary").alias("tmp")
     )
-    expected = spark.createDataFrame(
-        [("hts_v_open_orders",), ("hts_v_rev_by_nation",)], "name string"
+    expected = values(
+        spark, [("hts_v_open_orders",), ("hts_v_rev_by_nation",)], "name string"
     )
     probed = expected.join(
         views, F.col("name") == F.col("vn"), "left"

@@ -20,13 +20,14 @@ import atexit
 import glob
 import os
 import shutil
+import time
 import uuid
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from hive_test_spark.io import (
     NANOS_AS_LONG,
@@ -35,6 +36,7 @@ from hive_test_spark.io import (
     parquet_schema,
     scratch_dir,
     table_path,
+    values,
 )
 from hive_test_spark.llm.pipeline import _INCR_MINHASH_ORACLE
 from hive_test_spark.registry import register
@@ -45,30 +47,71 @@ STREAM_TIMEOUT_S = 300
 
 
 def _run_available_now(
-    writer: DataStreamWriter, ckpt: str | None = None, confs: Mapping[str, str] | None = None
+    *writers: DataStreamWriter, ckpt: str | None = None, confs: Mapping[str, str] | None = None
 ) -> None:
-    """Start ``writer`` with ``Trigger.AvailableNow`` and wait until it
-    has consumed its source. The query is stopped however the wait ends;
-    one still running after ``STREAM_TIMEOUT_S`` raises ``TimeoutError``,
-    so a partial sink is never returned as an answer. ``confs`` are set
-    only around ``start()`` (a started query keeps the confs it was
-    started with). Without ``ckpt`` the query gets a fresh checkpoint,
-    removed when it ends."""
-    own = ckpt is None
-    ckpt = ckpt or scratch_dir("ckpt", f"hts_{uuid.uuid4().hex[:12]}")
+    """Start every writer with ``Trigger.AvailableNow`` and wait until all
+    have consumed their sources. Independent streams are passed to one
+    call, so they run together. All start from this thread inside one
+    ``scoped_confs`` block, so ``confs`` (read by ``start()``) are set
+    once and no lock is needed. Every started query is stopped however
+    the wait ends, also when a later ``start()`` raises; one still
+    running after ``STREAM_TIMEOUT_S`` raises ``TimeoutError``, so a
+    partial sink is never returned as an answer. ``ckpt`` is the one
+    writer's checkpoint to keep; without it each query gets a fresh
+    checkpoint, removed when the call ends."""
+    started, own = [], []
     try:
-        with scoped_confs(writer._spark, confs or {}):
-            q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-        try:
-            done = q.awaitTermination(STREAM_TIMEOUT_S)
-        finally:
-            if q.isActive:
-                q.stop()
-        if not done:
-            raise TimeoutError(f"stream {q.name or q.id} still running after {STREAM_TIMEOUT_S} s")
+        with scoped_confs(writers[0]._spark, confs or {}):
+            for writer in writers:
+                path = ckpt
+                if path is None:
+                    path = scratch_dir("ckpt", f"hts_{uuid.uuid4().hex[:12]}")
+                    own.append(path)
+                writer = writer.option("checkpointLocation", path)
+                started.append(writer.trigger(availableNow=True).start())
+        deadline = time.monotonic() + STREAM_TIMEOUT_S
+        # pyspark rejects a timeout of 0: a late query still gets 1 ms.
+        running = [
+            q for q in started
+            if not q.awaitTermination(max(deadline - time.monotonic(), 0.001))
+        ]
+        if running:
+            names = ", ".join(str(q.name or q.id) for q in running)
+            raise TimeoutError(f"stream {names} still running after {STREAM_TIMEOUT_S} s")
     finally:
-        if own:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        stopped = [q for q in started if q.isActive]
+        for q in stopped:
+            q.stop()
+        _await_tasks(writers[0]._spark, stopped)
+        for path in own:
+            shutil.rmtree(path, ignore_errors=True)
+
+
+def _await_tasks(spark: SparkSession, queries: list[StreamingQuery]) -> None:
+    """Wait, at most ``STREAM_TIMEOUT_S``, until no task of the stopped
+    ``queries`` still runs. ``stop()`` cancels a query's jobs (its job
+    group is its run id) without waiting for their tasks, and a job it
+    submitted just before may launch tasks after ``stop()`` returns; such
+    a task can still create state-store directories in a removed
+    checkpoint. A one-task job first drains the scheduler's event queue
+    past the cancellations; a task set then stays in the scheduler's
+    pool until its last task has ended."""
+    if not queries:
+        return
+    spark.range(1).count()
+    groups = {str(q.runId) for q in queries}
+    pool = spark.sparkContext._jsc.sc().taskScheduler().rootPool()
+
+    def running() -> bool:
+        sets = pool.getSortedTaskSetQueue()
+        return any(
+            sets.apply(i).taskSet().properties().getProperty("spark.jobGroup.id") in groups
+            for i in range(sets.size())
+        )
+
+    deadline = time.monotonic() + STREAM_TIMEOUT_S
+    while running() and time.monotonic() < deadline:
+        time.sleep(0.01)
 
 
 def _run_dir(kind: str) -> str:
@@ -142,16 +185,23 @@ def _run_to_memory(
     rows; anything append-mode that emits ON watermark advance (window
     aggs, outer joins) must keep the default.
 
-    A started query keeps the session confs it was started with, so the
-    session-global conf is set only around ``start()`` and restored as
-    soon as it returns, not held for the run."""
-    name = f"hts_mem_{uuid.uuid4().hex[:12]}"
+    The session-global conf is set only around ``start()`` and restored
+    as soon as it returns, not held for the run. That holds for this
+    conf because the query reads it from the session it clones at
+    ``start()``; it does not hold for everything a stream reads: a file
+    source's log is created lazily on the stream thread, after the scope
+    has closed, with the session's confs of that moment (hence the
+    checkpoint manager is a ``session._RUNTIME_CONFS`` entry)."""
+    writer, name = _memory_writer(df, output_mode)
     no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    _run_available_now(
-        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
-        confs={} if final_watermark_batch else no_data,
-    )
+    _run_available_now(writer, confs={} if final_watermark_batch else no_data)
     return df.sparkSession.table(name)
+
+
+def _memory_writer(df: DataFrame, output_mode: str) -> tuple[DataStreamWriter, str]:
+    """A writer of ``df`` into a fresh memory sink, and the sink's name."""
+    name = f"hts_mem_{uuid.uuid4().hex[:12]}"
+    return df.writeStream.format("memory").queryName(name).outputMode(output_mode), name
 
 
 @register(
@@ -256,7 +306,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream–static enrichment: the static dim is broadcast into every
     micro-batch (the canonical streaming dimension-join shape)."""
     ev = _read_events_stream(spark, sf_dir)
-    dim = spark.createDataFrame(
+    dim = values(
+        spark,
         [("click", 1.0), ("view", 0.5), ("purchase", 10.0), ("signup", 5.0), ("error", 0.0)],
         "event_type string, weight double",
     )
@@ -336,31 +387,29 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sink_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sink/output-mode matrix: append (raw filter), complete (agg),
     update (agg), and a foreachBatch sink — each run live; the emitted
-    row counts are deterministic under a single AvailableNow batch."""
+    row counts are deterministic under a single AvailableNow batch. The
+    four queries are independent, so they run together."""
     ev = _read_events_stream(spark, sf_dir)
-
-    append_out = _run_to_memory(ev.filter(F.col("event_type") == "error"), "append")
-    complete_out = _run_to_memory(
-        ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")), "complete"
-    )
-    update_out = _run_to_memory(
-        ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")), "update"
-    )
-
+    sinks = {
+        "append": _memory_writer(ev.filter(F.col("event_type") == "error"), "append"),
+        "complete": _memory_writer(
+            ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")), "complete"
+        ),
+        "update": _memory_writer(
+            ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")), "update"
+        ),
+    }
     counts = {"foreach_batch": 0}
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts["foreach_batch"] += batch_df.count()
 
-    _run_available_now(ev.writeStream.foreachBatch(sink_batch))
-
-    rows = [
-        ("append", append_out.count()),
-        ("complete", complete_out.count()),
-        ("update", update_out.count()),
-        ("foreach_batch", counts["foreach_batch"]),
-    ]
-    return spark.createDataFrame(rows, "mode string, rows_emitted long")
+    _run_available_now(
+        *(writer for writer, _ in sinks.values()), ev.writeStream.foreachBatch(sink_batch)
+    )
+    rows = [(mode, spark.table(name).count()) for mode, (_, name) in sinks.items()]
+    rows.append(("foreach_batch", counts["foreach_batch"]))
+    return values(spark, rows, "mode string, rows_emitted long")
 
 
 @register(
@@ -695,7 +744,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         _run_available_now(
-            agg.writeStream.format("memory").queryName(qname).outputMode("complete"), ckpt
+            agg.writeStream.format("memory").queryName(qname).outputMode("complete"), ckpt=ckpt
         )
 
     try:

@@ -103,3 +103,23 @@ def test_build_jobs_carry_the_key(spark, temp_key):
     finally:
         sc.setLocalProperty(_DESC, outer)
 
+
+
+def test_tune_reapplies_every_runtime_conf(spark):
+    """A session built elsewhere may hold other values for any of the
+    runtime confs; ``tune`` puts back every one of them."""
+    from hive_test_spark.session import _RUNTIME_CONFS, tune
+
+    saved = {k: spark.conf.get(k, None) for k in _RUNTIME_CONFS}
+    try:
+        for k in _RUNTIME_CONFS:
+            spark.conf.unset(k)
+        assert {k: spark.conf.get(k, None) for k in _RUNTIME_CONFS} != _RUNTIME_CONFS
+        tune(spark)
+        assert {k: spark.conf.get(k) for k in _RUNTIME_CONFS} == _RUNTIME_CONFS
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -137,6 +137,67 @@ def test_sql_text_keys_ignore_a_callers_views(spark, duck, registry):
             spark.catalog.dropTempView(name)
 
 
+
+# Keys whose subject is a temporary function they register.
+TEMP_FUNCTION_KEYS = [
+    "fn_sql_macro",
+    "meta_show_functions",
+    "sql_temp_function",
+    "udtf_python_class",
+]
+
+
+def test_temp_function_keys_leave_the_function_catalog_as_it_was(spark, duck, registry):
+    """Each key registers its functions under per-build names and drops
+    them once its frame is analysed: the session's function catalog is
+    unchanged, a caller's ``hts_disc_price`` survives, and the frames,
+    collected after the drop, still match the oracle bitwise."""
+    qs, oracles = registry
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION hts_disc_price(p DOUBLE, d DOUBLE) "
+        "RETURNS DOUBLE RETURN -1.0"
+    )
+    try:
+        before = {f.name for f in spark.catalog.listFunctions()}
+        frames = {key: qs[key](spark, SF_DIR) for key in TEMP_FUNCTION_KEYS}
+        assert {f.name for f in spark.catalog.listFunctions()} == before
+        for key, df in frames.items():
+            res = compare(key, df.toPandas(), duck.execute(oracles[key]).df())
+            assert res["ok"] and res["bitwise"], f"{key}: {res['notes']}"
+        assert spark.sql("SELECT hts_disc_price(2.0, 0.5)").first()[0] == -1.0
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS hts_disc_price")
+
+
+def test_literal_rows_are_sql_values():
+    """A few literal rows go through ``io.values`` (SQL VALUES, a JVM
+    LocalRelation), not ``createDataFrame`` over a Python list, which
+    plans a Python RDD whose scan launches Python-worker tasks.
+    ``functions/udfs.py`` keeps its calls: Arrow ingest is their subject."""
+    literal = (ast.List, ast.ListComp, ast.Tuple, ast.GeneratorExp)
+    calls = [
+        f"{path.relative_to(PKG)}:{node.lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != PKG / "functions" / "udfs.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+        and node.args
+        and isinstance(node.args[0], literal)
+    ]
+    assert calls == []
+
+
+def test_values_keeps_each_spark_type(spark):
+    rows = [("it's", 3, 0.1), ("a\\b", 2**40, 10.0)]
+    schema = "name string, n long, w double"
+    df = io.values(spark, rows, schema)
+    assert df.schema.simpleString() == "struct<name:string,n:bigint,w:double>"
+    assert [tuple(r) for r in df.collect()] == rows
+    leaf = df._jdf.queryExecution().optimizedPlan()
+    assert leaf.getClass().getSimpleName() == "LocalRelation"
+
 # Keys whose reused branch points go through ``io.materialize`` rather
 # than a ``.cache()`` that nothing unpersists.
 MATERIALIZED_BRANCHES = [

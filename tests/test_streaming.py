@@ -8,6 +8,7 @@ import shutil
 import uuid
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -117,3 +118,51 @@ def test_stream_timeout_raises_and_leaves_nothing_running(spark, registry, monke
         qs["stream_sink_modes"](spark, SF_DIR)
     assert spark.streams.active == []
     assert set(os.listdir(ckpts)) == before
+
+
+def test_a_failed_start_stops_every_started_stream(spark):
+    """Independent streams start together; when a later ``start()``
+    raises, the queries already started are stopped and every checkpoint
+    the call made is removed."""
+    from hive_test_spark.io import scratch_dir
+    from hive_test_spark.streaming import live
+
+    ev = live._read_events_stream(spark, SF_DIR)
+    ckpts = os.path.dirname(scratch_dir("ckpt", "_"))
+    before = set(os.listdir(ckpts))
+    started = [live._memory_writer(ev, "append") for _ in range(2)]
+    nameless = ev.writeStream.format("memory")  # a memory sink needs a query name
+    never, _ = live._memory_writer(ev, "append")
+    with pytest.raises(AnalysisException, match="queryName"):
+        live._run_available_now(*(w for w, _ in started), nameless, never)
+    # The first two did start: a memory sink registers its table at start().
+    assert all(spark.catalog.tableExists(name) for _, name in started)
+    assert spark.streams.active == []
+    assert set(os.listdir(ckpts)) == before
+
+
+def test_checkpoints_rename_through_the_file_system_with_checksums(spark, tmp_path):
+    """A tuned session's checkpoint manager renames with
+    ``FileSystem.rename`` (no ``readlink`` fork per rename on a local
+    disk), and the state store still wraps it in its checksum manager:
+    every state file keeps Spark's checksum file beside it."""
+    from hive_test_spark.session import tune
+    from hive_test_spark.streaming import live
+
+    tune(spark)
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    fm = manager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert fm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    ckpt = tmp_path / "ckpt"
+    ev = live._read_events_stream(spark, SF_DIR)
+    writer, name = live._memory_writer(ev.groupBy("event_type").count(), "complete")
+    live._run_available_now(writer, ckpt=str(ckpt))
+    assert spark.table(name).count() > 0
+    deltas = sorted((ckpt / "state").rglob("*.delta"))
+    assert deltas
+    assert all(d.with_name(d.name + ".crc").is_file() for d in deltas)
