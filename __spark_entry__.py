@@ -8,6 +8,12 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 Implementation lives in the ``hive_test_spark`` package; the operator
 inventory is SURVEY.md §2 and every key registers through
 ``hive_test_spark.registry``.
+
+Side effect on the caller's session: loading the ``events`` fixture
+(every ``evt_*`` and ``stream_*`` key, among others) sets
+``spark.sql.legacy.parquet.nanosAsLong=true`` on the shared session and
+leaves it set, so a later read of a TIMESTAMP(NANOS) parquet column in
+that session, the caller's own included, yields raw longs.
 """
 
 from __future__ import annotations

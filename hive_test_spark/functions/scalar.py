@@ -118,7 +118,9 @@ def fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Math family: round/floor/ceil/abs/pow/sqrt/ln/log10/exp/sign/
+# greatest/least/pmod.
+register_sql(
     "fn_math",
     """
     SELECT l_orderkey, l_linenumber,
@@ -135,30 +137,9 @@ def fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
            greatest(l_quantity, 25.0) AS qty_hi,
            least(l_quantity, 25.0) AS qty_lo,
            ((CAST(l_orderkey AS BIGINT) % 7) + 7) % 7 AS key_pmod
-    FROM lineitem
+    FROM {lineitem}
     """,
 )
-def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math family: round/floor/ceil/abs/pow/sqrt/ln/log10/exp/sign/
-    greatest/least/pmod."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round("l_extendedprice", 1).alias("price_r1"),
-        F.floor(F.col("l_discount") * 100).alias("disc_pct_floor"),
-        F.ceil(F.col("l_tax") * 100).alias("tax_pct_ceil"),
-        F.abs(F.col("l_quantity") - 25.0).alias("qty_dev"),
-        F.round(F.pow("l_quantity", F.lit(2)), 6).alias("qty_sq"),
-        F.round(F.sqrt("l_extendedprice"), 6).alias("price_sqrt"),
-        F.round(F.log(F.col("l_extendedprice") + 1.0), 6).alias("price_ln"),
-        F.round(F.log10(F.col("l_extendedprice") + 1.0), 6).alias("price_log10"),
-        F.round(F.exp("l_discount"), 6).alias("disc_exp"),
-        F.signum(F.col("l_quantity") - 25.0).alias("qty_sign"),
-        F.greatest(F.col("l_quantity"), F.lit(25.0)).alias("qty_hi"),
-        F.least(F.col("l_quantity"), F.lit(25.0)).alias("qty_lo"),
-        F.pmod(F.col("l_orderkey"), F.lit(7)).alias("key_pmod"),
-    )
 
 
 # Conditional family: if/nvl/nullif/coalesce/isnull.
@@ -380,26 +361,19 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Boolean aggregates [Hive-public: min/max over booleans; ANSI
+# bool_and/bool_or] + FILTERed count — all map-side combinable.
+register_sql(
     "agg_bool",
     """
     SELECT l_returnflag,
            bool_and(l_quantity > 1) AS all_qty_gt1,
            bool_or(l_discount > 0.09) AS any_disc_gt9,
            count(*) FILTER (WHERE l_tax = 0) AS n_tax_free
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY l_returnflag
     """,
 )
-def agg_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean aggregates [Hive-public: min/max over booleans; ANSI
-    bool_and/bool_or] + FILTERed count — all map-side combinable."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.bool_and(F.col("l_quantity") > 1).alias("all_qty_gt1"),
-        F.bool_or(F.col("l_discount") > 0.09).alias("any_disc_gt9"),
-        F.count(F.when(F.col("l_tax") == 0, 1)).alias("n_tax_free"),
-    )
 
 
 @register(

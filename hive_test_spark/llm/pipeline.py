@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_test_spark.io import load_table, materialize, side
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 from hive_test_spark.session import fanout
 
 
@@ -30,52 +30,40 @@ from hive_test_spark.session import fanout
 # Deterministic sampling
 # ---------------------------------------------------------------------------
 
-@register(
+# Reproducible ~1/8 sample: keep rows whose content-md5 starts with a
+# hex digit in {0,1}. Unlike rand()/TABLESAMPLE, the selection is a pure
+# function of the row, so re-runs (and the DuckDB oracle) pick identical
+# rows. At scale this is a narrow per-row filter — no shuffle, fully
+# pushed into the scan stage, and the sample rate tunes by widening the
+# digit set (k/16) or taking more md5 chars (k/256, ...).
+register_sql(
     "llm_hash_sample",
     """
     SELECT doc_id, lang, n_chars
-    FROM documents
+    FROM {documents}
     WHERE substr(md5(text), 1, 1) IN ('0', '1')
     """,
 )
-def llm_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible ~1/8 sample: keep rows whose content-md5 starts with a
-    hex digit in {0,1}. Unlike rand()/TABLESAMPLE, the selection is a pure
-    function of the row, so re-runs (and the DuckDB oracle) pick identical
-    rows. At scale this is a narrow per-row filter — no shuffle, fully
-    pushed into the scan stage, and the sample rate tunes by widening the
-    digit set (k/16) or taking more md5 chars (k/256, ...)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.filter(F.substring(F.md5("text"), 1, 1).isin("0", "1")).select(
-        "doc_id", "lang", "n_chars"
-    )
 
 
-@register(
+# Deterministic stratified sampling for corpus rebalancing: downsample
+# the majority stratum (en → 1/16) while keeping minority languages at
+# 1/2. The per-stratum rate is a CASE over the same content hash as
+# llm_hash_sample — still a narrow filter (the idiomatic alternative,
+# df.sampleBy, is seeded-random and not reproducible across engines).
+# At 100 TB: rates usually come from a small per-stratum config dim —
+# broadcast-join it and compare the hash digit against the row's rate.
+register_sql(
     "llm_stratified_sample",
     """
     SELECT doc_id, lang
-    FROM documents
+    FROM {documents}
     WHERE CASE WHEN lang = 'en'
                THEN substr(md5(text), 1, 1) = '0'
                ELSE substr(md5(text), 1, 1) IN ('0','1','2','3','4','5','6','7')
           END
     """,
 )
-def llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling for corpus rebalancing: downsample
-    the majority stratum (en → 1/16) while keeping minority languages at
-    1/2. The per-stratum rate is a CASE over the same content hash as
-    llm_hash_sample — still a narrow filter (the idiomatic alternative,
-    df.sampleBy, is seeded-random and not reproducible across engines).
-    At 100 TB: rates usually come from a small per-stratum config dim —
-    broadcast-join it and compare the hash digit against the row's rate."""
-    d = load_table(spark, sf_dir, "documents")
-    digit = F.substring(F.md5("text"), 1, 1)
-    keep = F.when(F.col("lang") == "en", digit == "0").otherwise(
-        digit.isin(*"01234567")
-    )
-    return d.filter(keep).select("doc_id", "lang")
 
 
 # ---------------------------------------------------------------------------

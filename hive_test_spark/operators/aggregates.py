@@ -251,28 +251,16 @@ register_sql(
 )
 
 
-@register(
+# HAVING = post-aggregation filter over aggregate expressions.
+register_sql(
     "agg_having",
     """
     SELECT o_custkey, COUNT(*) AS num_orders, ROUND(SUM(o_totalprice), 6) AS total_spent
-    FROM orders
+    FROM {orders}
     GROUP BY o_custkey
     HAVING COUNT(*) >= 12 AND SUM(o_totalprice) > 500000.0
     """,
 )
-def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAVING = post-aggregation filter over aggregate expressions."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("num_orders"),
-            F.round(F.sum("o_totalprice"), 6).alias("total_spent"),
-            F.sum("o_totalprice").alias("_raw_total"),
-        )
-        .filter((F.col("num_orders") >= 12) & (F.col("_raw_total") > 500000.0))
-        .drop("_raw_total")
-    )
 
 
 PIVOT_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -759,7 +747,23 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Higher-moment aggregates (skewness, excess kurtosis) from raw
+# power sums [the distribution-shape complement of agg_stats'
+# second-moment family]. Both engines ship native skewness()/
+# kurtosis() builtins, but their bias conventions differ (sample vs
+# population adjustment), so the cross-engine-exact form computes
+# population moments from the sufficient statistics
+# (n, Σx, Σx², Σx³, Σx⁴) with one shared formula.
+#
+# Scale shape: the four power sums are plain SUM aggregates —
+# map-side-combinable partials — so shape statistics over 100 TB
+# cost exactly one two-phase hash aggregate; the moment algebra runs
+# on the per-group 5-tuple, data never moves twice. Cancellation
+# note: raw-moment subtraction is safe here because quantity's
+# mean²/variance ratio is O(1); for near-constant columns the
+# streaming (Welford/co-moment) builtins are the right tool and
+# agg_stats exhibits them.
+register_sql(
     "agg_higher_moments",
     """
     WITH s AS (
@@ -769,7 +773,7 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
              SUM(POWER(CAST(l_quantity AS DOUBLE), 2)) AS s2,
              SUM(POWER(CAST(l_quantity AS DOUBLE), 3)) AS s3,
              SUM(POWER(CAST(l_quantity AS DOUBLE), 4)) AS s4
-      FROM lineitem
+      FROM {lineitem}
       GROUP BY 1
     )
     SELECT l_returnflag, n,
@@ -782,48 +786,6 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s
     """,
 )
-def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-moment aggregates (skewness, excess kurtosis) from raw
-    power sums [the distribution-shape complement of agg_stats'
-    second-moment family]. Both engines ship native skewness()/
-    kurtosis() builtins, but their bias conventions differ (sample vs
-    population adjustment), so the cross-engine-exact form computes
-    population moments from the sufficient statistics
-    (n, Σx, Σx², Σx³, Σx⁴) with one shared formula.
-
-    Scale shape: the four power sums are plain SUM aggregates —
-    map-side-combinable partials — so shape statistics over 100 TB
-    cost exactly one two-phase hash aggregate; the moment algebra runs
-    on the per-group 5-tuple, data never moves twice. Cancellation
-    note: raw-moment subtraction is safe here because quantity's
-    mean²/variance ratio is O(1); for near-constant columns the
-    streaming (Welford/co-moment) builtins are the right tool and
-    agg_stats exhibits them."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("double")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("s1"),
-        F.sum(F.pow(x, 2)).alias("s2"),
-        F.sum(F.pow(x, 3)).alias("s3"),
-        F.sum(F.pow(x, 4)).alias("s4"),
-    )
-    m = F.col("s1") / F.col("n")
-    m2 = F.col("s2") / F.col("n") - F.pow(m, 2)
-    m3 = F.col("s3") / F.col("n") - 3 * m * (F.col("s2") / F.col("n")) + 2 * F.pow(m, 3)
-    m4 = (
-        F.col("s4") / F.col("n")
-        - 4 * m * (F.col("s3") / F.col("n"))
-        + 6 * F.pow(m, 2) * (F.col("s2") / F.col("n"))
-        - 3 * F.pow(m, 4)
-    )
-    return s.select(
-        "l_returnflag",
-        "n",
-        F.round(m, 6).alias("mean_qty"),
-        F.round(m3 / F.pow(m2, 1.5), 4).alias("skewness_qty"),
-        F.round(m4 / F.pow(m2, 2) - 3, 4).alias("kurtosis_excess_qty"),
-    )
 
 
 # Pythagorean-means family (arithmetic / geometric / harmonic /

@@ -81,12 +81,17 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Day-over-day retention: per day, distinct active users and how many
+# of them return the next day. The (user, day) distinct set is computed
+# once and self-joined on (user_id, day+1) — one shuffle each on the
+# dedup and the join; day-bucketing keys are low-cardinality so the
+# final aggregates broadcast.
+register_sql(
     "evt_retention",
     """
     WITH days AS (
       SELECT DISTINCT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS d
-      FROM events
+      FROM {events}
     ),
     active AS (SELECT d, count(*) AS n_active FROM days GROUP BY d),
     ret AS (
@@ -99,38 +104,6 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM active act LEFT JOIN ret r ON r.d = act.d
     """,
 )
-def evt_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-over-day retention: per day, distinct active users and how many
-    of them return the next day. The (user, day) distinct set is computed
-    once and self-joined on (user_id, day+1) — one shuffle each on the
-    dedup and the join; day-bucketing keys are low-cardinality so the
-    final aggregates broadcast."""
-    ev = load_table(spark, sf_dir, "events")
-    days = ev.select(
-        "user_id", F.date_trunc("day", F.col("ts")).alias("d")
-    ).distinct()
-    active = days.groupBy("d").agg(F.count(F.lit(1)).alias("n_active"))
-    nxt = days.select(
-        F.col("user_id").alias("b_user"), F.col("d").alias("b_d")
-    )
-    ret = (
-        days.join(
-            nxt,
-            (F.col("b_user") == F.col("user_id"))
-            & (F.col("b_d") == F.col("d") + F.expr("INTERVAL 1 DAY")),
-        )
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("retained"))
-        .withColumnRenamed("d", "r_d")
-    )
-    return (
-        active.join(ret, active.d == F.col("r_d"), "left")
-        .select(
-            F.col("d").alias("day"),
-            "n_active",
-            F.coalesce(F.col("retained"), F.lit(0)).alias("retained"),
-        )
-    )
 
 
 # Fixed-width histogram (5000-wide buckets over l_extendedprice) —
@@ -2436,7 +2409,19 @@ def evt_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DOW_ANCHOR = "2024-01-01"
 
 
-@register(
+# Day-of-week × hour activity heatmap [public practice: the
+# weekly-rhythm matrix on every ops dashboard — staffing, batch-
+# window placement, and anomaly baselines all read it]. Day-of-week
+# comes from days-since-anchor mod 7 (anchor Monday), the
+# evt_seasonal_decompose convention that makes both engines agree
+# without touching their divergent dayofweek() conventions; hour is
+# a plain EXTRACT. Output is the long-form (dow, hour) matrix with
+# counts and value mass.
+#
+# At 100 TB: a narrow map to a 168-value key then one map-side-
+# combinable aggregate — partials compress each partition to ≤168
+# rows before the shuffle; scan-bound like evt_benford.
+register_sql(
     "evt_heatmap_dow_hour",
     f"""
     WITH x AS (
@@ -2444,7 +2429,7 @@ _DOW_ANCHOR = "2024-01-01"
                   - DATE '{_DOW_ANCHOR}' AS INT) % 7 AS dow,
              EXTRACT(hour FROM CAST(ts AS TIMESTAMP)) AS hour,
              value
-      FROM events
+      FROM {{events}}
     )
     SELECT dow, CAST(hour AS INT) AS hour,
            COUNT(*) AS n_events,
@@ -2454,32 +2439,6 @@ _DOW_ANCHOR = "2024-01-01"
     ORDER BY dow, hour
     """,
 )
-def evt_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-of-week × hour activity heatmap [public practice: the
-    weekly-rhythm matrix on every ops dashboard — staffing, batch-
-    window placement, and anomaly baselines all read it]. Day-of-week
-    comes from days-since-anchor mod 7 (anchor Monday), the
-    evt_seasonal_decompose convention that makes both engines agree
-    without touching their divergent dayofweek() conventions; hour is
-    a plain EXTRACT. Output is the long-form (dow, hour) matrix with
-    counts and value mass.
-
-    At 100 TB: a narrow map to a 168-value key then one map-side-
-    combinable aggregate — partials compress each partition to ≤168
-    rows before the shuffle; scan-bound like evt_benford."""
-    ev = load_table(spark, sf_dir, "events")
-    dow = (
-        F.datediff(F.to_date("ts"), F.to_date(F.lit(_DOW_ANCHOR))) % 7
-    ).alias("dow")
-    return (
-        ev.select(dow, F.hour("ts").alias("hour"), "value")
-        .groupBy("dow", "hour")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .orderBy("dow", "hour")
-    )
 
 
 @register(
@@ -3231,7 +3190,19 @@ def evt_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day")
 
 
-@register(
+# Week-over-week growth table [public practice: the standard
+# period-over-period executive report — revenue, volume, actives per
+# anchored week with absolute and percentage deltas; evt_rolling_slope
+# reads the local trend, this is the discrete ratio stakeholders
+# actually quote]. Weeks anchor to days-since-2024-01-01 / 7 (the
+# convention-free bucket both engines share, like the dow trick);
+# the first week's deltas are NULL rather than fabricated.
+#
+# At 100 TB: one combinable rollup to the week dimension (the only
+# corpus pass — the distinct-actives Expand is bounded by user
+# cardinality), then a LAG window over the calendar-bounded weekly
+# series.
+register_sql(
     "evt_wow_growth",
     """
     WITH weekly AS (
@@ -3240,7 +3211,7 @@ def evt_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
              ROUND(SUM(value), 4) AS revenue,
              COUNT(*) AS n_events,
              COUNT(DISTINCT user_id) AS active_users
-      FROM events GROUP BY 1
+      FROM {events} GROUP BY 1
     ),
     lagged AS (
       SELECT week, revenue, n_events, active_users,
@@ -3254,48 +3225,6 @@ def evt_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY week
     """,
 )
-def evt_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week growth table [public practice: the standard
-    period-over-period executive report — revenue, volume, actives per
-    anchored week with absolute and percentage deltas; evt_rolling_slope
-    reads the local trend, this is the discrete ratio stakeholders
-    actually quote]. Weeks anchor to days-since-2024-01-01 / 7 (the
-    convention-free bucket both engines share, like the dow trick);
-    the first week's deltas are NULL rather than fabricated.
-
-    At 100 TB: one combinable rollup to the week dimension (the only
-    corpus pass — the distinct-actives Expand is bounded by user
-    cardinality), then a LAG window over the calendar-bounded weekly
-    series."""
-    ev = load_table(spark, sf_dir, "events")
-    week = F.floor(
-        F.datediff(F.to_date("ts"), F.to_date(F.lit("2024-01-01"))) / 7
-    ).cast("int")
-    weekly = ev.groupBy(week.alias("week")).agg(
-        F.round(F.sum("value"), 4).alias("revenue"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("active_users"),
-    )
-    w = Window.orderBy("week")
-    lagged = weekly.select(
-        "week",
-        "revenue",
-        "n_events",
-        "active_users",
-        F.lag("revenue").over(w).alias("prev_rev"),
-    )
-    return lagged.select(
-        "week",
-        "revenue",
-        "n_events",
-        "active_users",
-        F.round(F.col("revenue") - F.col("prev_rev"), 4).alias("wow_delta"),
-        F.round(
-            (F.col("revenue") - F.col("prev_rev"))
-            / F.nullif(F.col("prev_rev"), F.lit(0)),
-            6,
-        ).alias("wow_pct"),
-    ).orderBy("week")
 
 
 @register(

@@ -408,63 +408,37 @@ def bench_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q15_YEAR = "1996"
 
 
-@register(
+# TPC-H Q15 shape (top supplier): the supplier(s) whose revenue
+# EQUALS the maximum, per quarter of {_Q15_YEAR} (per-quarter keeps the
+# result non-trivial at small SF; classic Q15 is the single-group
+# case). The defining shape is max-EQUALITY against a reaggregation of
+# the same view — not a top-k sort.
+#
+# Plan properties: the revenue view is ONE two-phase agg of the
+# date-pruned fact; the per-quarter max reaggregates the tiny
+# (quarter × supplier) result, broadcasts 4 rows back, and supplier
+# (a dimension) broadcasts into the equality survivors. At 100 TB the
+# fact is read and shuffled exactly once; everything after operates on
+# agg-sized data. Ties surface ALL max suppliers — semantics a
+# row_number() rewrite would silently break.
+register_sql(
     "bench_q15_top_supplier",
     f"""
     WITH revenue AS (
       SELECT QUARTER(l_shipdate) AS qtr, l_suppkey,
              SUM(l_extendedprice * (1 - l_discount)) AS total_revenue
-      FROM lineitem
+      FROM {{lineitem}}
       WHERE l_shipdate >= DATE '{_Q15_YEAR}-01-01'
         AND l_shipdate < DATE '{int(_Q15_YEAR) + 1}-01-01'
       GROUP BY QUARTER(l_shipdate), l_suppkey)
     SELECT r.qtr, s.s_suppkey, s.s_name,
            ROUND(r.total_revenue, 4) AS total_revenue
-    FROM revenue r JOIN supplier s ON s.s_suppkey = r.l_suppkey
+    FROM revenue r JOIN {{supplier}} s ON s.s_suppkey = r.l_suppkey
     WHERE r.total_revenue = (SELECT MAX(r2.total_revenue)
                              FROM revenue r2 WHERE r2.qtr = r.qtr)
     ORDER BY r.qtr, s.s_suppkey
     """,
 )
-def bench_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape (top supplier): the supplier(s) whose revenue
-    EQUALS the maximum, per quarter of {_Q15_YEAR} (per-quarter keeps the
-    result non-trivial at small SF; classic Q15 is the single-group
-    case). The defining shape is max-EQUALITY against a reaggregation of
-    the same view — not a top-k sort.
-
-    Plan properties: the revenue view is ONE two-phase agg of the
-    date-pruned fact; the per-quarter max reaggregates the tiny
-    (quarter × supplier) result, broadcasts 4 rows back, and supplier
-    (a dimension) broadcasts into the equality survivors. At 100 TB the
-    fact is read and shuffled exactly once; everything after operates on
-    agg-sized data. Ties surface ALL max suppliers — semantics a
-    row_number() rewrite would silently break."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit(f"{_Q15_YEAR}-01-01").cast("date"))
-        & (F.col("l_shipdate") < F.lit(f"{int(_Q15_YEAR) + 1}-01-01").cast("date"))
-    )
-    revenue = li.groupBy(
-        F.quarter("l_shipdate").alias("qtr"), "l_suppkey"
-    ).agg(
-        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "total_revenue"
-        )
-    )
-    qmax = revenue.groupBy("qtr").agg(F.max("total_revenue").alias("max_rev"))
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        revenue.join(qmax, "qtr")
-        .filter(F.col("total_revenue") == F.col("max_rev"))
-        .join(s, revenue.l_suppkey == s.s_suppkey)
-        .select(
-            "qtr",
-            "s_suppkey",
-            "s_name",
-            F.round("total_revenue", 4).alias("total_revenue"),
-        )
-        .orderBy("qtr", "s_suppkey")
-    )
 
 
 _Q17_BRAND = "Brand#13"
@@ -982,62 +956,34 @@ _Q9_NAME_FRAGMENT = "red"
 _Q9_COST_FRACTION = 0.4
 
 
-@register(
+# TPC-H Q9 shape (product-type profit): profit per supplier-nation
+# per year over parts whose name contains a fragment. The fixture has
+# no partsupp, so supply cost is a fixed fraction of p_retailprice —
+# the shape (5-way join with a substring part filter, profit as a
+# compound expression, nation×year rollup) is Q9's.
+#
+# Plan properties: the part filter (non-sargable LIKE '%..%' — read
+# but filtered early) shrinks part to a broadcast; supplier and
+# nation broadcast; the fact shuffles on partkey then orderkey; the
+# agg is two-phase over ~175 groups. At 100 TB the substring filter
+# runs vectorized in the scan stage and drops ~2/3 of the fact before
+# any exchange.
+register_sql(
     "bench_q9_product_profit",
     f"""
     SELECT n.n_name AS nation, YEAR(o.o_orderdate) AS o_year,
            ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)
                      - {_Q9_COST_FRACTION} * p.p_retailprice * l.l_quantity),
                  4) AS sum_profit
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-                    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                    JOIN orders o ON o.o_orderkey = l.l_orderkey
-                    JOIN nation n ON n.n_nationkey = s.s_nationkey
+    FROM {{lineitem}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
+                    JOIN {{supplier}} s ON s.s_suppkey = l.l_suppkey
+                    JOIN {{orders}} o ON o.o_orderkey = l.l_orderkey
+                    JOIN {{nation}} n ON n.n_nationkey = s.s_nationkey
     WHERE p.p_name LIKE '%{_Q9_NAME_FRAGMENT}%'
     GROUP BY n.n_name, YEAR(o.o_orderdate)
     ORDER BY nation, o_year DESC
     """,
 )
-def bench_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (product-type profit): profit per supplier-nation
-    per year over parts whose name contains a fragment. The fixture has
-    no partsupp, so supply cost is a fixed fraction of p_retailprice —
-    the shape (5-way join with a substring part filter, profit as a
-    compound expression, nation×year rollup) is Q9's.
-
-    Plan properties: the part filter (non-sargable LIKE '%..%' — read
-    but filtered early) shrinks part to a broadcast; supplier and
-    nation broadcast; the fact shuffles on partkey then orderkey; the
-    agg is two-phase over ~175 groups. At 100 TB the substring filter
-    runs vectorized in the scan stage and drops ~2/3 of the fact before
-    any exchange."""
-    p = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").contains(_Q9_NAME_FRAGMENT))
-        .select("p_partkey", "p_retailprice")
-    )
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey",
-        "l_extendedprice", "l_discount", "l_quantity",
-    )
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(
-        _Q9_COST_FRACTION
-    ) * F.col("p_retailprice") * F.col("l_quantity")
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(n, F.col("s_nationkey") == n.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("o_year"),
-        )
-        .agg(F.round(F.sum(profit), 4).alias("sum_profit"))
-        .orderBy("nation", F.col("o_year").desc())
-    )
 
 
 _Q10_START, _Q10_END = "1996-10-01", "1997-01-01"
@@ -1171,12 +1117,26 @@ def bench_q12_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q13_EXCLUDED_PRIORITY = "4-NOT SPECIFIED"
 
 
-@register(
+# TPC-H Q13 shape (customer order-count distribution): how many
+# customers placed 0, 1, 2, ... qualifying orders. The fixture has no
+# o_comment, so the qualifying filter excludes one order priority —
+# the defining shape (LEFT join with the filter INSIDE the join
+# condition so zero-order customers survive with count 0, then a
+# second aggregation OF the first's counts) is Q13's.
+#
+# Plan properties: the priority filter prunes orders BEFORE the join
+# (legal inside an outer-join condition, and Catalyst pushes it to
+# the orders scan); the join + first agg share one custkey shuffle
+# layout; the distribution agg reaggregates customer-sized data on a
+# small-domain key. At 100 TB the histogram agg is the cheap half —
+# the custkey shuffle of orders dominates, and COUNT(o_orderkey) (not
+# COUNT(*)) is what makes the 0-bucket correct.
+register_sql(
     "bench_q13_order_count_dist",
     f"""
     WITH c_orders AS (
       SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-      FROM customer c LEFT JOIN orders o
+      FROM {{customer}} c LEFT JOIN {{orders}} o
         ON c.c_custkey = o.o_custkey
        AND o.o_orderpriority <> '{_Q13_EXCLUDED_PRIORITY}'
       GROUP BY c.c_custkey)
@@ -1186,35 +1146,6 @@ _Q13_EXCLUDED_PRIORITY = "4-NOT SPECIFIED"
     ORDER BY custdist DESC, c_count DESC
     """,
 )
-def bench_q13_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape (customer order-count distribution): how many
-    customers placed 0, 1, 2, ... qualifying orders. The fixture has no
-    o_comment, so the qualifying filter excludes one order priority —
-    the defining shape (LEFT join with the filter INSIDE the join
-    condition so zero-order customers survive with count 0, then a
-    second aggregation OF the first's counts) is Q13's.
-
-    Plan properties: the priority filter prunes orders BEFORE the join
-    (legal inside an outer-join condition, and Catalyst pushes it to
-    the orders scan); the join + first agg share one custkey shuffle
-    layout; the distribution agg reaggregates customer-sized data on a
-    small-domain key. At 100 TB the histogram agg is the cheap half —
-    the custkey shuffle of orders dominates, and COUNT(o_orderkey) (not
-    COUNT(*)) is what makes the 0-bucket correct."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != _Q13_EXCLUDED_PRIORITY
-    ).select("o_custkey", "o_orderkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
 
 
 _Q14_START, _Q14_END = "1996-09-01", "1996-10-01"

@@ -20,58 +20,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import load_table
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
-@register(
+# DELETE FROM lineitem WHERE l_quantity < 5, as copy-on-write: the
+# surviving relation is the negated-predicate filter (pushed to the
+# parquet reader), profiled per returnflag so the oracle compares the
+# whole surviving content cheaply. In a real ACID table only files
+# containing hits are rewritten; the anti-predicate scan is identical.
+register_sql(
     "dml_delete_rewrite",
     """
     SELECT l_returnflag, count(*) AS n_rows, ROUND(SUM(l_quantity), 6) AS sum_qty
-    FROM lineitem
+    FROM {lineitem}
     WHERE NOT (l_quantity < 5)
     GROUP BY l_returnflag
     """,
 )
-def dml_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETE FROM lineitem WHERE l_quantity < 5, as copy-on-write: the
-    surviving relation is the negated-predicate filter (pushed to the
-    parquet reader), profiled per returnflag so the oracle compares the
-    whole surviving content cheaply. In a real ACID table only files
-    containing hits are rewritten; the anti-predicate scan is identical."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(~(F.col("l_quantity") < 5))
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-        )
-    )
 
 
-@register(
+# UPDATE orders SET o_orderpriority='0-URGENT' WHERE o_totalprice >
+# 400000, as copy-on-write: a CASE projection over the snapshot. The
+# non-updated columns pass through untouched — at scale the rewrite
+# touches only files whose zone-map says the predicate can hit.
+register_sql(
     "dml_update_rewrite",
     """
     SELECT o_orderkey,
            CASE WHEN o_totalprice > 400000 THEN '0-URGENT' ELSE o_orderpriority END
              AS o_orderpriority,
            o_totalprice
-    FROM orders
+    FROM {orders}
     """,
 )
-def dml_update_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE orders SET o_orderpriority='0-URGENT' WHERE o_totalprice >
-    400000, as copy-on-write: a CASE projection over the snapshot. The
-    non-updated columns pass through untouched — at scale the rewrite
-    touches only files whose zone-map says the predicate can hit."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.when(F.col("o_totalprice") > 400000, F.lit("0-URGENT"))
-        .otherwise(F.col("o_orderpriority"))
-        .alias("o_orderpriority"),
-        "o_totalprice",
-    )
 
 
 _MERGE_SRC_SQL = """

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_test_spark.io import SCRATCH_DIR, land, load_table, materialize, scratch_dir
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 from hive_test_spark.session import scoped_confs
 
 
@@ -676,40 +676,30 @@ def scale_cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     return by_flag.unionAll(by_supp)
 
 
-@register(
+# AQE post-shuffle partition coalescing [Spark-public:
+# spark.sql.adaptive.coalescePartitions, SPARK-28177] — the fourth
+# AQE pillar demonstrated in this engine (with skew-split
+# `scale_aqe_skew`, DPP `scale_dpp`, runtime bloom
+# `scale_bloom_filter`): a 5-group rollup shuffles into the session's
+# 32 configured partitions, but at runtime the map-output statistics
+# show a few KB per partition, so AQE coalesces the reducer side down
+# to ~1 task (AQEShuffleRead coalesced — asserted post-execution in
+# tests). At 100 TB this is what makes one global
+# `spark.sql.shuffle.partitions` setting livable: over-partitioned
+# stages shrink to match their true output instead of scheduling
+# thousands of empty reducers; under-skew the same machinery splits
+# (the two are one feature with two directions).
+register_sql(
     "scale_aqe_coalesce",
     """
     SELECT o_orderpriority,
            COUNT(*) AS n_orders,
            ROUND(SUM(o_totalprice), 4) AS total_price
-    FROM orders
+    FROM {orders}
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
 )
-def scale_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AQE post-shuffle partition coalescing [Spark-public:
-    spark.sql.adaptive.coalescePartitions, SPARK-28177] — the fourth
-    AQE pillar demonstrated in this engine (with skew-split
-    `scale_aqe_skew`, DPP `scale_dpp`, runtime bloom
-    `scale_bloom_filter`): a 5-group rollup shuffles into the session's
-    32 configured partitions, but at runtime the map-output statistics
-    show a few KB per partition, so AQE coalesces the reducer side down
-    to ~1 task (AQEShuffleRead coalesced — asserted post-execution in
-    tests). At 100 TB this is what makes one global
-    `spark.sql.shuffle.partitions` setting livable: over-partitioned
-    stages shrink to match their true output instead of scheduling
-    thousands of empty reducers; under-skew the same machinery splits
-    (the two are one feature with two directions)."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 4).alias("total_price"),
-        )
-        .orderBy("o_orderpriority")
-    )
 
 
 @register(

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hive_test_spark.io import land, load_table, materialize
-from hive_test_spark.registry import register
+from hive_test_spark.registry import register, register_sql
 
 
 def _sf_tag(sf_dir: str) -> str:
@@ -41,22 +41,16 @@ def _land_orders_by_status(spark: SparkSession, sf_dir: str, name: str) -> str:
     return land(sf_dir, name, orders.write.partitionBy("o_orderstatus").parquet)
 
 
-@register(
+# Vectorized columnar parquet scan: reads exactly 2 columns
+# (ReadSchema pruning) regardless of table width.
+register_sql(
     "scan_parquet",
     """
     SELECT l_returnflag, COUNT(*) AS n, ROUND(SUM(l_extendedprice), 6) AS total
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY l_returnflag
     """,
 )
-def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized columnar parquet scan: reads exactly 2 columns
-    (ReadSchema pruning) regardless of table width."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("l_extendedprice"), 6).alias("total"),
-    )
 
 
 CUSTOMER_SCHEMA = T.StructType(

@@ -192,14 +192,21 @@ def _run_to_memory(
     source's log is created lazily on the stream thread, after the scope
     has closed, with the session's confs of that moment (hence the
     checkpoint manager is a ``session._RUNTIME_CONFS`` entry)."""
+    spark = df.sparkSession
     writer, name = _memory_writer(df, output_mode)
     no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    _run_available_now(writer, confs={} if final_watermark_batch else no_data)
-    return df.sparkSession.table(name)
+    try:
+        _run_available_now(writer, confs={} if final_watermark_batch else no_data)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def _memory_writer(df: DataFrame, output_mode: str) -> tuple[DataStreamWriter, str]:
-    """A writer of ``df`` into a fresh memory sink, and the sink's name."""
+    """A writer of ``df`` into a fresh memory sink, and the sink's name.
+    The sink registers a temp view of that name at ``start()``; a frame
+    resolved from it keeps the sink's rows once the view is dropped, and
+    callers drop it so that a long-lived session gains no view per run."""
     name = f"hts_mem_{uuid.uuid4().hex[:12]}"
     return df.writeStream.format("memory").queryName(name).outputMode(output_mode), name
 
@@ -404,10 +411,14 @@ def stream_sink_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts["foreach_batch"] += batch_df.count()
 
-    _run_available_now(
-        *(writer for writer, _ in sinks.values()), ev.writeStream.foreachBatch(sink_batch)
-    )
-    rows = [(mode, spark.table(name).count()) for mode, (_, name) in sinks.items()]
+    try:
+        _run_available_now(
+            *(writer for writer, _ in sinks.values()), ev.writeStream.foreachBatch(sink_batch)
+        )
+        rows = [(mode, spark.table(name).count()) for mode, (_, name) in sinks.items()]
+    finally:
+        for _, name in sinks.values():
+            spark.catalog.dropTempView(name)
     rows.append(("foreach_batch", counts["foreach_batch"]))
     return values(spark, rows, "mode string, rows_emitted long")
 
@@ -733,7 +744,9 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                     os.path.join(hdir, f), os.path.join(src, f"{side}_{f}")
                 )
 
-    def _run_once(qname: str) -> None:
+    sinks: list[str] = []
+
+    def _run_once() -> str:
         raw = spark.readStream.schema(schema).parquet(src)
         agg = (
             _normalize_stream_ts(raw)
@@ -743,20 +756,22 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 6).alias("total_value"),
             )
         )
-        _run_available_now(
-            agg.writeStream.format("memory").queryName(qname).outputMode("complete"), ckpt=ckpt
-        )
+        writer, name = _memory_writer(agg, "complete")
+        sinks.append(name)
+        _run_available_now(writer, ckpt=ckpt)
+        return name
 
     try:
         _copy_half("a")
-        _run_once(f"hts_rec1_{os.path.basename(src)}")  # run #1: half A only
+        _run_once()  # run #1: half A only
         _copy_half("b")
-        name2 = f"hts_rec2_{os.path.basename(src)}"
-        _run_once(name2)  # run #2: same checkpoint, recovers A's state
-        # Materialize before the source dir is removed (memory sink rows
-        # are already driver-side, but keep the contract obvious).
-        return spark.table(name2)
+        name = _run_once()  # run #2: same checkpoint, recovers A's state
+        # The frame outlives the source directory: its rows live in the
+        # driver-side memory sink, not in the files the stream read.
+        return spark.table(name)
     finally:
+        for sink in sinks:
+            spark.catalog.dropTempView(sink)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(src, ignore_errors=True)
 

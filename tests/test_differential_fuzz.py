@@ -4,8 +4,8 @@ fixtures; each spec is rendered TWICE — once through the DataFrame API
 (the engine under test) and once as ANSI SQL for DuckDB — and the results
 are compared with the same canonicalizer the driver-mirror gate uses.
 
-This covers the combinatorial space BETWEEN the 270 hand-written oracle
-pairs: random predicate/aggregate combinations that no fixed key
+This covers the combinatorial space BETWEEN the registry's 515
+oracle-checked keys: random predicate/aggregate combinations that no fixed key
 exercises, catching wiring bugs (wrong null semantics, precision drift,
 filter/projection mix-ups) where both renderings must agree.
 

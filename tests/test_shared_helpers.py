@@ -106,7 +106,7 @@ def test_sql_text_keys_leave_no_temp_view(spark, registry):
     qs, _ = registry
     sql_keys = [k for k, fn in qs.items() if fn.__module__ == register_sql.__module__]
     front = [k for k, fn in qs.items() if fn.__module__.endswith(".sqlfront")]
-    assert len(sql_keys) >= 50 and len(front) >= 20
+    assert len(sql_keys) >= 68 and len(front) >= 20
     before = _temp_views(spark)
     for key in sql_keys + front + OWN_TEXT_KEYS:
         qs[key](spark, SF_DIR)

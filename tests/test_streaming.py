@@ -141,6 +141,23 @@ def test_a_failed_start_stops_every_started_stream(spark):
     assert set(os.listdir(ckpts)) == before
 
 
+def test_stream_keys_leave_no_temp_view(spark, registry):
+    """A memory sink's temp view is dropped once the key's frame is
+    resolved: building stream keys leaves the session's temp views as
+    they were, and each returned frame still collects the sink's rows."""
+    qs, _ = registry
+
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    keys = ("stream_dedup", "stream_sink_modes", "stream_checkpoint_recovery")
+    frames = {key: qs[key](spark, SF_DIR) for key in keys}
+    assert temp_views() == before
+    for key, df in frames.items():
+        assert df.collect(), key
+
+
 def test_checkpoints_rename_through_the_file_system_with_checksums(spark, tmp_path):
     """A tuned session's checkpoint manager renames with
     ``FileSystem.rename`` (no ``readlink`` fork per rename on a local
